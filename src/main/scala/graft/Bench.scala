@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** Per-query resource telemetry, accumulated from task-end events +
@@ -76,13 +75,8 @@ object Bench {
       sys.props("java.io.tmpdir"),
       s"graft-bench-local-${ProcessHandle.current().pid()}")
     localDir.mkdirs()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = LocalSession.builder(cpus.toInt)
       .config("spark.local.dir", localDir.getAbsolutePath)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val telemetry = new QueryTelemetry

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.Composite
+import graft.core.{CacheRegistry, Composite}
 import graft.operators._
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
@@ -960,7 +960,7 @@ object SparkEntry {
       // so the df-capped inverted-index pipeline runs once, not twice
       // (no ReusedExchange fires across the readout subtrees)
       val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 2, 0.5, 100)
-        .select(col("id_a"), col("id_b")).localCheckpoint(true)
+        .select(col("id_a"), col("id_b")).transform(CacheRegistry.checkpoint(_))
       val found = Dedup.minhashPairs(docs, "doc_id", "text", 2, 64, 16, 0.5)
         .select(col("id_a"), col("id_b"))
       exact.agg(count(lit(1)).as("n_exact"))
@@ -979,7 +979,7 @@ object SparkEntry {
       val key = Seq("id_a", "id_b")
       // same shared-leg checkpoint discipline as q_dedup_minhash
       val exact = Dedup.ngramJaccardPairs(docs, "doc_id", "text", 2, 0.5, 100)
-        .select(col("id_a"), col("id_b")).localCheckpoint(true)
+        .select(col("id_a"), col("id_b")).transform(CacheRegistry.checkpoint(_))
       val found = Dedup.simhashPairs(docs, "doc_id", "text", 3)
         .select(col("id_a"), col("id_b"))
       exact.agg(count(lit(1)).as("n_exact"))
@@ -1002,7 +1002,7 @@ object SparkEntry {
         .join(e.select(col("vec_id").as("id_b"), col("embedding").as("v_b")),
           col("id_a") < col("id_b"))
         .where(cosine(col("v_a"), col("v_b")) >= 0.35)
-        .select(col("id_a"), col("id_b")).localCheckpoint(true)
+        .select(col("id_a"), col("id_b")).transform(CacheRegistry.checkpoint(_))
       // knownCount from the RAW parquet read — a metadata-only count
       // (no scan, no shuffle); counting `e` would replan t()'s
       // hash repartition and run a real job at query-build time
@@ -1011,7 +1011,7 @@ object SparkEntry {
       // checkpoint so the n²/2 sweep and the LSH pipeline run once
       val found = Dedup.embeddingCosinePairs(e, "vec_id", "embedding", 0.35, tables = 4,
         knownCount = Some(s.read.parquet(s"$d/embeddings.parquet").count()))
-        .select(col("id_a"), col("id_b")).localCheckpoint(true)
+        .select(col("id_a"), col("id_b")).transform(CacheRegistry.checkpoint(_))
       exact.agg(count(lit(1)).as("n_exact"))
         .crossJoin(found.join(exact, key, "left_anti").agg(count(lit(1)).as("_extra")))
         .crossJoin(found.join(exact, key, "left_semi").agg(count(lit(1)).as("_hit")))
@@ -1040,9 +1040,9 @@ object SparkEntry {
         .join(e.select(col("vec_id").as("id_b"), col("embedding").as("v_b")),
           col("id_a") < col("id_b"))
         .where(cosine(col("v_a"), col("v_b")) >= 0.35)
-        .select(col("id_b")).distinct().localCheckpoint(true)
+        .select(col("id_b")).distinct().transform(CacheRegistry.checkpoint(_))
       val found = Dedup.semanticPairs(e, "vec_id", "embedding", 0.35, nlist = 16)
-        .select(col("id_b")).distinct().localCheckpoint(true)
+        .select(col("id_b")).distinct().transform(CacheRegistry.checkpoint(_))
       e.agg(count(lit(1)).as("n_total"))
         .crossJoin(exact.agg(count(lit(1)).as("n_dropped_exact")))
         .crossJoin(found.join(exact, Seq("id_b"), "left_anti").agg(count(lit(1)).as("_extra")))
@@ -1066,14 +1066,14 @@ object SparkEntry {
         .join(e.select(col("vec_id").as("id_b"), col("embedding").as("v_b")),
           col("id_a") < col("id_b"))
         .where(cosine(col("v_a"), col("v_b")) >= 0.35)
-        .select(col("id_b")).distinct().localCheckpoint(true)
+        .select(col("id_b")).distinct().transform(CacheRegistry.checkpoint(_))
       val kept = Dedup.semanticDedupViaKnnGraph(
         e, "vec_id", "embedding", 0.35, k = 8, nlist = 16, nprobe = 4)
       // exact feeds 3 readout legs and found 2 — checkpoint the tiny id
       // sets so the n²/2 sweep and the kNN-graph dedup run once each
       val found = e.select(col("vec_id").as("id_b"))
         .join(kept.select(col("vec_id").as("id_b")), Seq("id_b"), "left_anti")
-        .localCheckpoint(true)
+        .transform(CacheRegistry.checkpoint(_))
       e.agg(count(lit(1)).as("n_total"))
         .crossJoin(exact.agg(count(lit(1)).as("n_dropped_exact")))
         .crossJoin(found.join(exact, Seq("id_b"), "left_anti").agg(count(lit(1)).as("_extra")))
@@ -1101,7 +1101,7 @@ object SparkEntry {
       // brute feeds both readout legs — checkpoint the tiny top-k set
       // so the exact sweep runs once (no cross-subtree reuse otherwise)
       val brute = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", 5)
-        .select(col("query_id"), col("neighbor_id")).localCheckpoint(true)
+        .select(col("query_id"), col("neighbor_id")).transform(CacheRegistry.checkpoint(_))
       val lsh = Similarity.lshTopK(q, e, "vec_id", "embedding", 5, bits = 3, tables = 8)
         .select(col("query_id"), col("neighbor_id"))
       brute.agg(count(lit(1)).as("n_brute"))
@@ -1118,7 +1118,7 @@ object SparkEntry {
       // brute feeds both readout legs — checkpoint the tiny top-k set
       // so the exact sweep runs once (no cross-subtree reuse otherwise)
       val brute = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", 5)
-        .select(col("query_id"), col("neighbor_id")).localCheckpoint(true)
+        .select(col("query_id"), col("neighbor_id")).transform(CacheRegistry.checkpoint(_))
       // nprobe 10/16: the 0.6 recall pin must hold at BOTH gate scales
       // (the quantizer trains on a deterministic layout-INVARIANT
       // content-hash sample since round 13, so the recall level is a
@@ -1144,7 +1144,7 @@ object SparkEntry {
       // brute feeds both readout legs — checkpoint the tiny top-k set
       // so the exact sweep runs once (no cross-subtree reuse otherwise)
       val brute = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", 5)
-        .select(col("query_id"), col("neighbor_id")).localCheckpoint(true)
+        .select(col("query_id"), col("neighbor_id")).transform(CacheRegistry.checkpoint(_))
       val ivfpq = Similarity.ivfPqTopK(q, e, "vec_id", "embedding", 5,
         nlist = 16, nprobe = 8, m = 16, kSub = 64, rerank = 25)
         .select(col("query_id"), col("neighbor_id"))
@@ -1166,7 +1166,7 @@ object SparkEntry {
       // brute feeds both readout legs — checkpoint the tiny top-k set
       // so the exact sweep runs once (no cross-subtree reuse otherwise)
       val brute = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", 5)
-        .select(col("query_id"), col("neighbor_id")).localCheckpoint(true)
+        .select(col("query_id"), col("neighbor_id")).transform(CacheRegistry.checkpoint(_))
       val pq = Similarity.pqTopK(q, e, "vec_id", "embedding", 5,
         m = 16, kSub = 64, rerank = 25)
         .select(col("query_id"), col("neighbor_id"))
@@ -1901,11 +1901,10 @@ object SparkEntry {
       // skip them but the oracle's bucket join silently drops them —
       // filtering here keeps the parity structural, not accidental);
       // persisted because the frame feeds two jobs (sketch, keys).
-      val keysDf = graft.core.CacheRegistry.persist(
+      val keysDf = CacheRegistry.persist(
         t(s, dd, "documents")
           .select(concat(col("lang"), lit(":"), col("source")).as("key"))
-          .where(col("key").isNotNull),
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .where(col("key").isNotNull))
       val sketch = keysDf.as[String]
         .select(graft.functions.TypedAggregators.countMin(d, w).toColumn)
         .head()
@@ -2071,12 +2070,11 @@ object SparkEntry {
     // agree, top-weighted — rankings via the distributed prefix-sum
     // rank (never a global window), exact dyadic ppm floors.
     "q_rbo" -> ((s, d) => {
-      val per = graft.core.CacheRegistry.persist(
+      val per = CacheRegistry.persist(
         t(s, d, "lineitem").groupBy(col("l_suppkey"))
           .agg(sum(expr(
             "CAST(CAST(l_extendedprice AS DECIMAL(18,2)) * 100 AS BIGINT)"))
-            .as("_rev"), count(lit(1)).as("_cnt")),
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            .as("_rev"), count(lit(1)).as("_cnt")))
       def top(metric: Column) = Relational
         .prefixSum(per, Seq(-metric, col("l_suppkey")), lit(1L), "rank")
         .where(col("rank") <= 20L)
@@ -2219,7 +2217,7 @@ object SparkEntry {
       // fires across separate actions (the r16 shared-leg discipline)
       val dir = fwd.unionAll(
         pairs.select(col("item_b").as("u"), col("item_a").as("v"), w))
-        .localCheckpoint(true)
+        .transform(CacheRegistry.checkpoint(_))
       val srcs = dir.select(col("u").as("n")).distinct().where(col("n") % 50 === 0)
       graft.operators.Graph.shortestPaths(
         dir, col("u"), col("v"), col("w"), srcs, col("n"), rounds = 4)
@@ -2705,7 +2703,7 @@ object SparkEntry {
         .select((col("doc_id") + 100000L).as("doc_id"), col("text"))
       val plantedSrc = old.where(col("doc_id") % 50 === 3)
         .where(size(graft.functions.TextFunctions.words(col("text"))) >= 20)
-        .localCheckpoint(true) // feeds clones AND the shingle audit leg
+        .transform(CacheRegistry.checkpoint(_)) // feeds clones AND the shingle audit leg
       val clones = plantedSrc.select(
         (col("doc_id") + 200000L).as("doc_id"),
         concat(lit("zq zq "), col("text")).as("text"))
@@ -2714,17 +2712,13 @@ object SparkEntry {
       // clone filter — checkpoint the assembled batch once
       val newBatch = docs.where(col("doc_id") % 5 === 0)
         .select(col("doc_id"), col("text")).unionAll(copies).unionAll(clones)
-        .localCheckpoint(true)
+        .transform(CacheRegistry.checkpoint(_))
       // index and kept each feed multiple gate legs — persist so the
       // 64-hash/16-band index build and the anti-join pipeline run
       // once, not once per leg (the edgeIncidentLabels lesson).
-      val index = graft.core.CacheRegistry.persist(
-        Dedup.buildDedupIndex(old, "doc_id", "text", 2, 64, 16),
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val index = CacheRegistry.persist(Dedup.buildDedupIndex(old, "doc_id", "text", 2, 64, 16))
       val kept = Dedup.dropAgainstIndex(newBatch, index, "doc_id", "text", 2, 64, 16)
-      val keptIds = graft.core.CacheRegistry.persist(
-        kept.select(col("doc_id")),
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val keptIds = CacheRegistry.persist(kept.select(col("doc_id")))
 
       val newFp = newBatch.select(col("doc_id"), fingerprint(col("text")).as("fp"))
       val oldFp = old.select(fingerprint(col("text")).as("fp")).distinct()
@@ -2732,7 +2726,7 @@ object SparkEntry {
       // checkpoint the tiny id sets so the fingerprint semi-join and
       // the planted-pair shingle verification run once each
       val exactDupIds = newFp.join(oldFp, Seq("fp"), "left_semi").select(col("doc_id"))
-        .localCheckpoint(true)
+        .transform(CacheRegistry.checkpoint(_))
       // measured planted-pair jaccard: shingle originals and clones
       // only, join each clone to its origin on the shifted id
       val shOrig = Dedup.shingleDocs(plantedSrc, "doc_id", "text", 2)
@@ -2743,7 +2737,7 @@ object SparkEntry {
         .where(size(array_intersect(col("_sha"), col("_shb"))).cast("double") /
           size(array_union(col("_sha"), col("_shb"))) >= 0.8d)
         .select(col("doc_id"))
-        .localCheckpoint(true)
+        .transform(CacheRegistry.checkpoint(_))
       newBatch.agg(count(lit(1)).as("n_new"))
         .crossJoin(exactDupIds.agg(count(lit(1)).as("n_exact_dup")))
         .crossJoin(exactDupIds.join(keptIds, Seq("doc_id"), "left_semi")
@@ -2770,16 +2764,14 @@ object SparkEntry {
         .select((col("doc_id") + 100000L).as("doc_id"), col("text"))
       val newBatch = docs.where(col("doc_id") % 5 === 0)
         .select(col("doc_id"), col("text")).unionAll(copies)
-        .localCheckpoint(true) // shared by index/fingerprint/readout legs
-      val index = graft.core.CacheRegistry.persist(
-        Dedup.buildDedupIndex(old, "doc_id", "text", 2, 64, 16),
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .transform(CacheRegistry.checkpoint(_)) // shared by index/fingerprint/readout legs
+      val index = CacheRegistry.persist(Dedup.buildDedupIndex(old, "doc_id", "text", 2, 64, 16))
       val kept = Dedup.dropAgainstIndex(newBatch, index, "doc_id", "text", 2, 64, 16)
       val newFp = newBatch.select(col("doc_id"), fingerprint(col("text")).as("fp"))
       val oldFp = old.select(fingerprint(col("text")).as("fp")).distinct()
       // feeds two readout legs — checkpoint (q_dedup_incremental note)
       val exactDupIds = newFp.join(oldFp, Seq("fp"), "left_semi").select(col("doc_id"))
-        .localCheckpoint(true)
+        .transform(CacheRegistry.checkpoint(_))
       newBatch.agg(count(lit(1)).as("n_new"))
         .crossJoin(exactDupIds.agg(count(lit(1)).as("n_exact_dup")))
         .crossJoin(exactDupIds.join(kept.select(col("doc_id")), Seq("doc_id"), "left_semi")
@@ -3761,7 +3753,7 @@ object SparkEntry {
       val tr = e.where(col("vec_id") >= 20)
       val te = e.where(col("vec_id") < 20)
       val exact = Similarity.knnShapley(tr, te, "vec_id", "embedding",
-        "label", k = 5, topN = 50).localCheckpoint(true)
+        "label", k = 5, topN = 50).transform(CacheRegistry.checkpoint(_))
       // ONE IVF build serves both probe widths (identical nlist/seed ⇒
       // identical index ⇒ identical outputs to the per-leg builds, but
       // the deterministic sample + local Lloyd's + assignment persist
@@ -3772,7 +3764,7 @@ object SparkEntry {
       // frame so the full-probe ANN pipeline runs once, not twice
       val full = Similarity.knnShapleyAnn(tr, te, "vec_id", "embedding",
         "label", k = 5, topN = 50, nlist = 16, nprobe = 16,
-        sharedIndex = Some(annIx)).localCheckpoint(true)
+        sharedIndex = Some(annIx)).transform(CacheRegistry.checkpoint(_))
       val work = Similarity.knnShapleyAnn(tr, te, "vec_id", "embedding",
         "label", k = 5, topN = 50, nlist = 16, nprobe = 8,
         sharedIndex = Some(annIx))
@@ -4801,7 +4793,7 @@ object SparkEntry {
           datediff(col("ts").cast("date"), lit("1970-01-01"))
             .cast("long").as("day"))
         .agg(sum(expr("CAST(round(value * 100) AS BIGINT)")).as("cents"))
-        .localCheckpoint(true)
+        .transform(CacheRegistry.checkpoint(_))
       Seq(1, 2, 3, 7).map { k =>
         Analytics.lagAutocorrExact(daily, col("event_type"), Seq(col("day")),
             col("cents"), k = k)

@@ -18,8 +18,8 @@ trait Component extends (Flow => Flow) {
   def |>(next: Component): Composite = Composite(Seq(this, next))
 }
 
-/** One flow run's mutable bookkeeping: the DataFrames its components
-  * persisted, its `no_wait` stream marks, and its pending async sinks.
+/** One flow run's mutable bookkeeping: the frames its components
+  * materialized, its `no_wait` stream marks, and its pending async sinks.
   * Every registry below reads the ACTIVE scope, so two pipelines that
   * reuse stream names — or that drain at different times — cannot
   * interfere once each runs inside [[RunScope.scoped]]:
@@ -34,8 +34,11 @@ trait Component extends (Flow => Flow) {
   * call `CacheRegistry.unpersistAll()` to sweep it).
   */
 final class RunScope {
-  private[graft] val persisted =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+  /** Each materialized frame with the call that releases its blocks
+    * (`blocking` as argument).
+    */
+  private[graft] val materialized =
+    new java.util.concurrent.ConcurrentLinkedQueue[(DataFrame, Boolean => Unit)]()
   private[graft] val noWaitMarks =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private[graft] val pendingSinks =
@@ -64,32 +67,67 @@ object RunScope {
   def withScope[A](s: RunScope)(body: => A): A = current.withValue(s)(body)
 }
 
-/** Registry of DataFrames persisted by components (cache=true
-  * Splitters, multi-leg dedup/similarity operators), so callers can
-  * release cached blocks deterministically instead of leaking them
-  * until session end. `Sink.drain()` calls [[unpersistAll]] after
-  * awaiting async sinks. Scoped per flow run via [[RunScope]].
+/** The only way graft materializes a frame. Every persist (multi-leg
+  * operators, cache=true Splitters) and every `localCheckpoint`
+  * (iterative rounds, lineage cuts) goes through here and is
+  * registered with the active [[RunScope]], so callers release cached
+  * blocks deterministically instead of leaking them until session end.
+  * `Sink.drain()` calls [[unpersistAll]] after awaiting async sinks;
+  * Bench and Verify call it after each query.
   */
 object CacheRegistry {
-  def persist(df: DataFrame, level: org.apache.spark.storage.StorageLevel): DataFrame = {
+  import org.apache.spark.sql.classic
+  import org.apache.spark.sql.execution.LogicalRDD
+
+  /** Spill to local disk rather than drop and recompute: every frame
+    * graft materializes feeds more than one reader.
+    */
+  private val level = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+
+  def persist(df: DataFrame): DataFrame = {
     val p = df.persist(level)
-    RunScope.active.persisted.add(p)
+    RunScope.active.materialized.add((p, b => { p.unpersist(b); () }))
     p
   }
 
-  /** Release every frame the active scope persisted. `blocking = true`
-    * waits for the executor-side block drops to finish — the bench's
-    * isolation barrier needs that (an async drain races the NEXT timed
-    * run's re-persist of the same frames: re-put vs in-flight removal
-    * churns storage memory and shows up as "Block rdd_* already
-    * exists" warnings and inflated back-to-back timings); pipeline
-    * sinks keep the non-blocking default, where drain latency matters
-    * and a lingering block merely drops later.
+  /** `localCheckpoint`: truncates the lineage and pins the rows in
+    * executor blocks. `eager = false` defers the materializing job to the
+    * frame's first action (a caller whose next step is an action anyway
+    * saves a job). `Dataset.unpersist` does not reach the RDD the
+    * checkpoint reads, so the registration releases that RDD itself.
+    */
+  def checkpoint(df: DataFrame, eager: Boolean = true): DataFrame = {
+    val cp = df.localCheckpoint(eager)
+    val rdd = cp.asInstanceOf[classic.Dataset[_]].queryExecution.logical match {
+      case r: LogicalRDD => r.rdd
+    }
+    RunScope.active.materialized.add((cp, b => { rdd.unpersist(b); () }))
+    cp
+  }
+
+  /** Release one frame now and forget it: a loop's round frame once the
+    * next round is materialized. A frame this scope did not materialize
+    * is left alone.
+    */
+  def release(df: DataFrame): Unit = {
+    val q = RunScope.active.materialized
+    q.forEach(m => if ((m._1 eq df) && q.remove(m)) m._2(false))
+  }
+
+  /** Release every frame the active scope materialized, persists and
+    * checkpoints alike. `blocking = true` waits for the executor-side
+    * block drops to finish — the bench's isolation barrier needs that
+    * (an async drain races the NEXT timed run's re-persist of the same
+    * frames: re-put vs in-flight removal churns storage memory and shows
+    * up as "Block rdd_* already exists" warnings and inflated
+    * back-to-back timings); pipeline sinks keep the non-blocking
+    * default, where drain latency matters and a lingering block merely
+    * drops later.
     */
   def unpersistAll(blocking: Boolean = false): Unit = {
-    val q = RunScope.active.persisted
-    var df = q.poll()
-    while (df != null) { df.unpersist(blocking); df = q.poll() }
+    val q = RunScope.active.materialized
+    var m = q.poll()
+    while (m != null) { m._2(blocking); m = q.poll() }
   }
 }
 
@@ -237,7 +275,7 @@ final case class Composite(components: Seq[Component]) extends Component {
 final case class LocalCheckpoint(eager: Boolean = true) extends Component {
   def apply(flow: Flow): Flow =
     flow.map { case (n, df) =>
-      n -> (if (df.isStreaming) df else df.localCheckpoint(eager))
+      n -> (if (df.isStreaming) df else CacheRegistry.checkpoint(df, eager))
     }
 }
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.CacheRegistry
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -555,13 +556,12 @@ object Analytics {
   def eventuallyFollows(df: DataFrame, userCol: Column, stateCol: Column,
       tsCol: Column, idCol: Column): DataFrame = {
     val us = unix_micros(tsCol.cast("timestamp"))
-    val per = graft.core.CacheRegistry.persist(
+    val per = CacheRegistry.persist(
       df.where(userCol.isNotNull && stateCol.isNotNull &&
           tsCol.isNotNull && idCol.isNotNull)
         .groupBy(userCol.as("_u"), stateCol.as("_a"))
         .agg(min(struct(us.as("t"), idCol.as("i"))).as("_first"),
-          max(struct(us.as("t"), idCol.as("i"))).as("_last")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          max(struct(us.as("t"), idCol.as("i"))).as("_last")))
     val l = per.select(col("_u"), col("_a"), col("_first"))
     val r = per.select(col("_u"), col("_a").as("_b"),
       col("_last").as("_lastb"))
@@ -934,10 +934,9 @@ object Analytics {
       .agg(
         sum(when(col("_g") === a, 1L).otherwise(0L)).as("_ca"),
         sum(when(col("_g") === b, 1L).otherwise(0L)).as("_cb"))
-    val cums = graft.core.CacheRegistry.persist(
+    val cums = CacheRegistry.persist(
       Relational.prefixSums(perValue, Seq(col("_v")),
-        Seq(col("_ca") -> "_cumA", col("_cb") -> "_cumB", lit(1L) -> "_r")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        Seq(col("_ca") -> "_cumA", col("_cb") -> "_cumB", lit(1L) -> "_r")))
     val totals = perValue.agg(
       sum(col("_ca")).as("n_a"), sum(col("_cb")).as("n_b"),
       count(lit(1)).as("support"))
@@ -988,10 +987,9 @@ object Analytics {
       .agg(
         sum(when(col("_g") === a, 1L).otherwise(0L)).as("_ca"),
         sum(when(col("_g") === b, 1L).otherwise(0L)).as("_cb"))
-    val cums = graft.core.CacheRegistry.persist(
+    val cums = CacheRegistry.persist(
       Relational.prefixSums(perValue, Seq(col("_v")),
-        Seq(col("_ca") -> "_cumA", col("_cb") -> "_cumB", lit(1L) -> "_r")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        Seq(col("_ca") -> "_cumA", col("_cb") -> "_cumB", lit(1L) -> "_r")))
     val totals = perValue.agg(
       sum(col("_ca")).as("n_a"), sum(col("_cb")).as("n_b"),
       count(lit(1)).as("support"))
@@ -1080,10 +1078,9 @@ object Analytics {
       .where(valueCol.isNotNull)
       .select(valueCol.cast("long").as("_v"))
       .groupBy(col("_v")).agg(count(lit(1)).as("_c"))
-    val cums = graft.core.CacheRegistry.persist(
+    val cums = CacheRegistry.persist(
       Relational.prefixSums(perValue, Seq(col("_v")),
-        Seq(col("_c") -> "_cum", lit(1L) -> "_r")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        Seq(col("_c") -> "_cum", lit(1L) -> "_r")))
     val totals = perValue.agg(
       coalesce(sum(col("_c")), lit(0L)).as("n"),
       coalesce(sum(dec(col("_v")) * col("_c")), dec(lit(0L))).as("_sx"),
@@ -1254,11 +1251,10 @@ object Analytics {
     */
   def kendallTauB(df: DataFrame, xCol: Column, yCol: Column): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val cells = graft.core.CacheRegistry.persist(
+    val cells = CacheRegistry.persist(
       df.where(xCol.isNotNull && yCol.isNotNull)
         .groupBy(xCol.cast("long").as("_x"), yCol.cast("long").as("_y"))
-        .agg(count(lit(1)).as("_c")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .agg(count(lit(1)).as("_c")))
     val a = cells.select(col("_x").as("_xa"), col("_y").as("_ya"), col("_c").as("_ca"))
     val b = cells.select(col("_x").as("_xb"), col("_y").as("_yb"), col("_c").as("_cb"))
     val s2 = a.crossJoin(b)
@@ -1322,12 +1318,11 @@ object Analytics {
   def jonckheereTerpstra(df: DataFrame, groupOrdCol: Column,
       valueCol: Column): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val cells = graft.core.CacheRegistry.persist(
+    val cells = CacheRegistry.persist(
       df.where(groupOrdCol.isNotNull && valueCol.isNotNull)
         .groupBy(groupOrdCol.cast("long").as("_g"),
           valueCol.cast("long").as("_v"))
-        .agg(count(lit(1)).as("_c")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .agg(count(lit(1)).as("_c")))
     val a = cells.select(col("_g").as("_ga"), col("_v").as("_va"),
       col("_c").as("_ca"))
     val b = cells.select(col("_g").as("_gb"), col("_v").as("_vb"),
@@ -1426,11 +1421,10 @@ object Analytics {
       armA: String, armB: String): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val x = valueCol.cast("long")
-    val cells = graft.core.CacheRegistry.persist(
+    val cells = CacheRegistry.persist(
       df.where(armCol.cast("string").isin(armA, armB) && x.isNotNull)
         .groupBy((armCol.cast("string") === armA).as("_isA"), x.as("_v"))
-        .agg(count(lit(1)).as("_c")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .agg(count(lit(1)).as("_c")))
     val a = cells.where(col("_isA"))
       .select(col("_v").as("_va"), col("_c").as("_ca"))
     val b = cells.where(!col("_isA"))
@@ -1705,11 +1699,10 @@ object Analytics {
     */
   def moodMedian(df: DataFrame, groupCol: Column,
       valueCol: Column): DataFrame = {
-    val cells = graft.core.CacheRegistry.persist(
+    val cells = CacheRegistry.persist(
       df.where(groupCol.isNotNull && valueCol.isNotNull)
         .groupBy(groupCol.as("_g"), valueCol.cast("long").as("_v"))
-        .agg(count(lit(1)).as("_c")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .agg(count(lit(1)).as("_c")))
     val cums = Relational.prefixSum(cells, Seq(col("_v"), col("_g")),
       col("_c"), "_B")
     val n = cells.agg(sum(col("_c")).as("_n"))
@@ -1862,11 +1855,10 @@ object Analytics {
       .agg(max(dateCol).as("_last"), count(lit(1)).as("_f"),
         sum(amountCents).as("_m"))
     val anchor = per.agg(max(col("_last")).as("_anchor"))
-    val based = graft.core.CacheRegistry.persist(
+    val based = CacheRegistry.persist(
       per.crossJoin(broadcast(anchor))
         .select(col("k"), datediff(col("_anchor"), col("_last")).as("_r"),
-          col("_f"), col("_m")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          col("_f"), col("_m")))
     val nDf = based.agg(count(lit(1)).as("_n"))
     // ntile(b) from a 1-based global rank r over n rows, closed form:
     // q = n div b, rem = n mod b; r <= rem*(q+1) -> (r+q) div (q+1),
@@ -1998,7 +1990,7 @@ object Analytics {
     val cells = pairs.select(xCol.as("_x"), yCol.as("_y"))
       .where(col("_x").isNotNull && col("_y").isNotNull)
       .groupBy(col("_x"), col("_y")).agg(count(lit(1)).as("_nxy"))
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     val marg = cells.groupBy(col("_x")).agg(sum(col("_nxy")).as("_nx"))
     cells.join(marg, Seq("_x"))
       .select(col("_nxy"),
@@ -2065,10 +2057,9 @@ object Analytics {
     * (group, value, rank_ppm, normalized).
     */
   def quantileNormalize(df: DataFrame, groupCol: Column, valueCol: Column): DataFrame = {
-    val base = graft.core.CacheRegistry.persist(
+    val base = CacheRegistry.persist(
       df.select(groupCol.as("_g"), valueCol.cast("long").as("_v"))
-        .where(col("_v").isNotNull),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .where(col("_v").isNotNull))
     val gc = base.groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_c"))
     val wg = Window.partitionBy(col("_g")).orderBy(col("_v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -2083,7 +2074,7 @@ object Analytics {
     val tcdf = Relational.prefixSum(tc, Seq(col("_gv")), col("_c"), "_cumt")
       .crossJoin(broadcast(tn))
       .select(col("_gv"), expr("_cumt * 1000000 div _nt").as("_gppm"))
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     gcdf.join(tcdf, col("_gppm") >= col("rank_ppm"))
       .groupBy(col("_g").as("group"), col("_v").as("value"), col("rank_ppm"))
       .agg(min(col("_gv")).as("normalized"))
@@ -2145,11 +2136,10 @@ object Analytics {
       s"groupedWinsorizedMean: need 0 < pLo < pHi < 1, got $pLo/$pHi")
     // one row-scale scan; clamp sums ride the bounded cell frame
     // (Σ clamp(v)·c), weighted — see [[cellQuantiles]]
-    val cells = graft.core.CacheRegistry.persist(
+    val cells = CacheRegistry.persist(
       df.select(groupCol.as("_g"), valueCol.cast("long").as("_v"))
         .where(col("_v").isNotNull)
-        .groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_c")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_c")))
     val fences = cellQuantiles(cells, Seq(pLo, pHi))
       .select(col("_g"), col("_n"), col("_q0").as("_lo"), col("_q1").as("_hi"))
     cells.join(fences, Seq("_g"))
@@ -2288,11 +2278,10 @@ object Analytics {
       fencePct: Long = 150L): DataFrame = {
     require(fencePct >= 0, s"iqrOutliers: fencePct must be >= 0, got $fencePct")
     // bounded by groups × distinct values — the only row-scale scan
-    val cells = graft.core.CacheRegistry.persist(
+    val cells = CacheRegistry.persist(
       df.select(groupCol.as("_g"), valueCol.cast("long").as("_v"))
         .where(col("_v").isNotNull)
-        .groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_c")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_c")))
     val fenced = cellQuantiles(cells, Seq(0.25, 0.75))
       .select(col("_g"), col("_n"), col("_q0").as("q1"), col("_q1").as("q3"))
       .select(col("_g"), col("_n"), col("q1"), col("q3"),
@@ -2319,11 +2308,10 @@ object Analytics {
     * Output: (group, n, median, mad).
     */
   def robustStats(df: DataFrame, groupCol: Column, valueCol: Column): DataFrame = {
-    val cells = graft.core.CacheRegistry.persist(
+    val cells = CacheRegistry.persist(
       df.select(groupCol.as("_g"), valueCol.cast("long").as("_v"))
         .where(col("_v").isNotNull)
-        .groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_c")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_c")))
     val med = cellQuantiles(cells, Seq(0.5))
       .select(col("_g"), col("_n"), col("_q0").as("_med"))
     // deviation CELLS: |v − med| can collide (v = med ± d), so
@@ -2415,10 +2403,9 @@ object Analytics {
     require(lags.distinct.size == lags.size,
       s"crossCorr: duplicate lags in $lags")
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val base = graft.core.CacheRegistry.persist(
+    val base = CacheRegistry.persist(
       df.select(tickCol.cast("long").as("_t"),
-        xCol.cast("long").as("_x"), yCol.cast("long").as("_y")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        xCol.cast("long").as("_x"), yCol.cast("long").as("_y")))
     val a = base.where(col("_x").isNotNull && col("_t").isNotNull)
       .select(col("_t").as("_ta"), col("_x"))
     val b = base.where(col("_y").isNotNull && col("_t").isNotNull)
@@ -2461,7 +2448,7 @@ object Analytics {
     val act = df.select(keyCol.as("_k"), tickCol.cast("long").as("_t"))
       .where(col("_k").isNotNull && col("_t").isNotNull).distinct()
       .withColumn("_p", expr(s"_t div ${ticksPerPeriod}L"))
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     val perTick = act.groupBy(col("_p"), col("_t")).agg(count(lit(1)).as("_dau"))
       .groupBy(col("_p"))
       .agg(count(lit(1)).as("n_ticks"), sum(col("_dau")).as("sum_tick_actives"))
@@ -2487,7 +2474,7 @@ object Analytics {
   def churnMatrix(df: DataFrame, keyCol: Column, periodCol: Column): DataFrame = {
     val act = df.select(keyCol.as("_k"), periodCol.cast("long").as("_p"))
       .where(col("_k").isNotNull && col("_p").isNotNull).distinct()
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     val nxt = act.select(col("_k"), (col("_p") - 1L).as("_p"), lit(1).as("_r"))
     val maxP = act.agg(max(col("_p")).as("_maxp"))
     act.join(nxt, Seq("_k", "_p"), "left")
@@ -2689,12 +2676,11 @@ object Analytics {
     */
   def hodgesLehmann(df: DataFrame, groupCol: Column, dayCol: Column,
       centsCol: Column): DataFrame = {
-    val daily = graft.core.CacheRegistry.persist(
+    val daily = CacheRegistry.persist(
       df.select(groupCol.as("_g"), dayCol.cast("long").as("_d"),
           centsCol.as("_x"))
         .where(col("_d").isNotNull && col("_x").isNotNull)
-        .groupBy(col("_g"), col("_d")).agg(sum(col("_x")).as("_xs")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .groupBy(col("_g"), col("_d")).agg(sum(col("_x")).as("_xs")))
     val lo = daily.select(col("_g"), col("_d").as("_d1"), col("_xs").as("_x1"))
     val hi = daily.select(col("_g"), col("_d").as("_d2"), col("_xs").as("_x2"))
     val walsh = lo.join(hi, Seq("_g"))
@@ -2723,12 +2709,11 @@ object Analytics {
     */
   def mannKendall(df: DataFrame, groupCol: Column, dayCol: Column,
       centsCol: Column): DataFrame = {
-    val daily = graft.core.CacheRegistry.persist(
+    val daily = CacheRegistry.persist(
       df.select(groupCol.as("_g"), dayCol.cast("long").as("_d"),
           centsCol.as("_x"))
         .where(col("_d").isNotNull && col("_x").isNotNull)
-        .groupBy(col("_g"), col("_d")).agg(sum(col("_x")).as("_xs")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .groupBy(col("_g"), col("_d")).agg(sum(col("_x")).as("_xs")))
     val lo = daily.select(col("_g"), col("_d").as("_d1"), col("_xs").as("_x1"))
     val hi = daily.select(col("_g"), col("_d").as("_d2"), col("_xs").as("_x2"))
     val s = lo.join(hi, Seq("_g"))
@@ -2775,14 +2760,13 @@ object Analytics {
     */
   def seasonalMannKendall(df: DataFrame, groupCol: Column,
       seasonCol: Column, dayCol: Column, centsCol: Column): DataFrame = {
-    val daily = graft.core.CacheRegistry.persist(
+    val daily = CacheRegistry.persist(
       df.select(groupCol.as("_g"), seasonCol.cast("long").as("_q"),
           dayCol.cast("long").as("_d"), centsCol.as("_x"))
         .where(col("_q").isNotNull && col("_d").isNotNull &&
           col("_x").isNotNull)
         .groupBy(col("_g"), col("_q"), col("_d"))
-        .agg(sum(col("_x")).as("_xs")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .agg(sum(col("_x")).as("_xs")))
     val lo = daily.select(col("_g"), col("_q"), col("_d").as("_d1"),
       col("_xs").as("_x1"))
     val hi = daily.select(col("_g"), col("_q"), col("_d").as("_d2"),
@@ -2824,7 +2808,7 @@ object Analytics {
         centsCol.as("_x"))
       .where(col("_d").isNotNull && col("_x").isNotNull)
       .groupBy(col("_g"), col("_d")).agg(sum(col("_x")).as("_xs"))
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     val lo = daily.select(col("_g"), col("_d").as("_d1"), col("_xs").as("_x1"))
     val hi = daily.select(col("_g"), col("_d").as("_d2"), col("_xs").as("_x2"))
     val slopes = lo.join(hi, Seq("_g"))
@@ -2850,12 +2834,11 @@ object Analytics {
     */
   def siegelSlope(df: DataFrame, groupCol: Column, dayCol: Column,
       centsCol: Column): DataFrame = {
-    val daily = graft.core.CacheRegistry.persist(
+    val daily = CacheRegistry.persist(
       df.select(groupCol.as("_g"), dayCol.cast("long").as("_d"),
           centsCol.as("_x"))
         .where(col("_d").isNotNull && col("_x").isNotNull)
-        .groupBy(col("_g"), col("_d")).agg(sum(col("_x")).as("_xs")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .groupBy(col("_g"), col("_d")).agg(sum(col("_x")).as("_xs")))
     val lo = daily.select(col("_g"), col("_d").as("_d1"), col("_xs").as("_x1"))
     val hi = daily.select(col("_g"), col("_d").as("_d2"), col("_xs").as("_x2"))
     val slopes = lo.join(hi, Seq("_g"))
@@ -2961,11 +2944,10 @@ object Analytics {
     // the caller's whole subject-derivation pipeline — no
     // ReusedExchange fires across separate aggregates (the r16
     // shared-leg rule); two longs per subject, bounded by |subjects|
-    val base = graft.core.CacheRegistry.persist(
+    val base = CacheRegistry.persist(
       df.select(durationCol.cast("long").as("_t"),
           eventCol.cast("long").as("_e"))
-        .where(col("_t").isNotNull && col("_e").isNotNull),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .where(col("_t").isNotNull && col("_e").isNotNull))
     val agg = base.groupBy(col("_t"))
       .agg(sum(col("_e")).as("_d"), sum(lit(1L) - col("_e")).as("_c"))
     val n = base.agg(count(lit(1)).as("_n"))
@@ -2995,20 +2977,16 @@ object Analytics {
     // persist the narrow subject projection: the KM curve and the
     // subject count below otherwise each re-run the caller's whole
     // derivation pipeline (third run counting riskFrame's own n)
-    val subj = graft.core.CacheRegistry.persist(
-      df.select(durationCol.as("_dur"), eventCol.as("_ev")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val km = graft.core.CacheRegistry.persist(
+    val subj = CacheRegistry.persist(df.select(durationCol.as("_dur"), eventCol.as("_ev")))
+    val km = CacheRegistry.persist(
       kaplanMeier(subj, col("_dur"), col("_ev"))
-        .select(col("t"), col("survival")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("t"), col("survival")))
     val meta = km.agg(min(col("t")).as("_t0"))
     val n = subj.where(col("_dur").isNotNull && col("_ev").isNotNull)
       .agg(count(lit(1)).as("n"))
-    val ranked = graft.core.CacheRegistry.persist(
+    val ranked = CacheRegistry.persist(
       Relational.prefixSum(km.where(col("t") < tau), Seq(col("t")),
-        lit(1L), "_rk"),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        lit(1L), "_rk"))
     val nxt = ranked.select((col("_rk") - 1L).as("_rk"), col("t").as("_tn"))
     val steps = ranked.join(nxt, Seq("_rk"), "left")
       .select(col("survival"),
@@ -3320,11 +3298,10 @@ object Analytics {
   def chatterjeeXi(df: DataFrame, idCol: Column, xCol: Column,
       yCol: Column): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val base = graft.core.CacheRegistry.persist(
+    val base = CacheRegistry.persist(
       df.where(idCol.isNotNull && xCol.isNotNull && yCol.isNotNull)
         .select(idCol.as("_id"), xCol.cast("long").as("_x"),
-          yCol.cast("long").as("_y")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          yCol.cast("long").as("_y")))
     val ycells = base.groupBy(col("_y")).agg(count(lit(1)).as("_c"))
     val n = base.agg(count(lit(1)).as("_n"))
     val ycdf = Relational.prefixSum(ycells, Seq(col("_y")), col("_c"),
@@ -3501,10 +3478,9 @@ object Analytics {
         weightCol.isNotNull)
       .groupBy(tickCol.cast("long").as("_t"), keyCol.as("_k"))
       .agg(sum(weightCol.cast("long")).as("_w"))
-    val top = graft.core.CacheRegistry.persist(
+    val top = CacheRegistry.persist(
       Relational.topKPerGroup(weekly, Seq(col("_t")),
-        Seq(col("_w").desc, col("_k")), k).select(col("_t"), col("_k")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        Seq(col("_w").desc, col("_k")), k).select(col("_t"), col("_k")))
     val sizes = top.groupBy(col("_t")).agg(count(lit(1)).as("_n"))
     val prevSizes = sizes.select((col("_t") + 1L).as("_t"),
       col("_n").as("k_prev"))
@@ -3542,11 +3518,10 @@ object Analytics {
       p: Double = 0.95): DataFrame = {
     require(p > 0.0 && p < 1.0, s"cvar: p must be in (0,1), got $p")
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val cells = graft.core.CacheRegistry.persist(
+    val cells = CacheRegistry.persist(
       df.where(groupCol.isNotNull && valueCol.isNotNull)
         .groupBy(groupCol.as("_g"), valueCol.cast("long").as("_v"))
-        .agg(count(lit(1)).as("_c")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .agg(count(lit(1)).as("_c")))
     val q = cellQuantiles(cells, Seq(p))
       .select(col("_g"), col("_n"), col("_q0"))
     cells.join(broadcast(q), Seq("_g"))
@@ -3940,7 +3915,7 @@ object Analytics {
       .where(col("_b").isNotNull && col("_i").isNotNull).distinct()
     val sizes = items.groupBy(col("_b")).agg(count(lit(1)).as("_sz"))
       .where(col("_sz").between(2, maxBasketSize))
-    val kept = items.join(sizes.select(col("_b")), Seq("_b")).localCheckpoint(true)
+    val kept = CacheRegistry.checkpoint(items.join(sizes.select(col("_b")), Seq("_b")))
     // count baskets off the CHECKPOINTED frame: kept holds exactly the
     // baskets passing the size filter, so |distinct _b| = |sizes rows|
     // — deriving the 1-row total from `sizes` instead re-ran the whole
@@ -4022,12 +3997,11 @@ object Analytics {
   def theilIndex(df: DataFrame, groupCol: Column,
       valueCol: Column): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val cells = graft.core.CacheRegistry.persist(
+    val cells = CacheRegistry.persist(
       df.where(groupCol.isNotNull && valueCol.isNotNull &&
           valueCol.cast("long") > 0L)
         .groupBy(groupCol.as("_g"), valueCol.cast("long").as("_v"))
-        .agg(count(lit(1)).as("_c")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .agg(count(lit(1)).as("_c")))
     val perGroup = cells.groupBy(col("_g"))
       .agg(sum(col("_c")).as("_ng"), sum(dec(col("_v")) * col("_c")).as("_xg"))
     val tot = perGroup.agg(sum(col("_ng")).as("_n"),
@@ -4117,7 +4091,7 @@ object Analytics {
     val mx = cells.groupBy(col("x")).agg(sum(col("n_xy")).as("n_x"))
     val my = cells.groupBy(col("y")).agg(sum(col("n_xy")).as("n_y"))
     val n = cells.agg(sum(col("n_xy")).as("_n"))
-    val terms = graft.core.CacheRegistry.persist(
+    val terms = CacheRegistry.persist(
       cells
         .join(broadcast(mx), Seq("x"))
         .join(broadcast(my), Seq("y"))
@@ -4126,8 +4100,7 @@ object Analytics {
           round(col("n_xy").cast("double") *
             log((col("n_xy").cast("double") * col("_n").cast("double")) /
               (col("n_x").cast("double") * col("n_y").cast("double"))), 6)
-            .cast("decimal(18,6)")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            .cast("decimal(18,6)")))
     // order-proof DECIMAL sum of the terms, same as the old window
     // total, but via a 1-row aggregate + broadcast — no one-task stage
     val total = terms.agg(sum(col("term")).as("_tsum"))
@@ -4251,7 +4224,7 @@ object Analytics {
   def spearman(df: DataFrame, xCol: Column, yCol: Column): DataFrame = {
     val base = df.select(xCol.cast("long").as("_x"), yCol.cast("long").as("_y"))
       .where(col("_x").isNotNull && col("_y").isNotNull)
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     def ranks2(c: String): DataFrame = {
       val counts = base.groupBy(col(c).as("_v")).agg(count(lit(1)).as("_c"))
       Relational.prefixSum(counts, Seq(col("_v")), col("_c"), "_cum")
@@ -4402,11 +4375,10 @@ object Analytics {
     */
   def grubbs(df: DataFrame, valueCol: Column): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val cells = graft.core.CacheRegistry.persist(
+    val cells = CacheRegistry.persist(
       df.where(valueCol.isNotNull)
         .groupBy(valueCol.cast("long").as("_v"))
-        .agg(count(lit(1)).as("_c")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .agg(count(lit(1)).as("_c")))
     val mom = cells.agg(sum(col("_c")).as("_n"),
       sum(dec(col("_v")) * col("_c")).as("_sx"),
       sum(dec(col("_v")) * col("_v") * col("_c")).as("_qx"))
@@ -4615,11 +4587,10 @@ object Analytics {
   def groupedMoments(df: DataFrame, groupCol: Column,
       valueCol: Column): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val cells = graft.core.CacheRegistry.persist(
+    val cells = CacheRegistry.persist(
       df.where(groupCol.isNotNull && valueCol.isNotNull)
         .groupBy(groupCol.as("_g"), valueCol.cast("long").as("_v"))
-        .agg(count(lit(1)).as("_c")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .agg(count(lit(1)).as("_c")))
     val mu = cells.groupBy(col("_g"))
       .agg(sum(col("_c")).as("_n"), sum(dec(col("_v")) * col("_c")).as("_sx"))
       .select(col("_g"), col("_n"), expr("_sx div _n").cast("long").as("_mu"),
@@ -4760,10 +4731,9 @@ object Analytics {
     */
   def blandAltman(df: DataFrame, xCol: Column, yCol: Column): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val d = graft.core.CacheRegistry.persist(
+    val d = CacheRegistry.persist(
       df.where(xCol.isNotNull && yCol.isNotNull)
-        .select((xCol.cast("long") - yCol.cast("long")).as("_d")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select((xCol.cast("long") - yCol.cast("long")).as("_d")))
     val m = d.agg(count(lit(1)).as("n"), coalesce(sum(dec(col("_d"))),
         dec(lit(0L))).as("_sd1"),
       coalesce(sum(dec(col("_d")) * col("_d")), dec(lit(0L))).as("_sd2"))
@@ -4811,11 +4781,10 @@ object Analytics {
       yCol: Column, k: Int = 10): DataFrame = {
     require(k >= 1, s"mahalanobisOutliers: k must be >= 1, got $k")
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val base = graft.core.CacheRegistry.persist(
+    val base = CacheRegistry.persist(
       df.where(idCol.isNotNull && xCol.isNotNull && yCol.isNotNull)
         .select(idCol.as("id"), xCol.cast("long").as("x"),
-          yCol.cast("long").as("y")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          yCol.cast("long").as("y")))
     val m = base.agg(count(lit(1)).as("_n"),
       sum(dec(col("x"))).as("_sx"), sum(dec(col("y"))).as("_sy"),
       sum(dec(col("x")) * col("x")).as("_sxx"),
@@ -5083,12 +5052,11 @@ object Analytics {
       outcomeCol: Column): DataFrame = {
     // persisted: the bin frame feeds the totals row and the term pass —
     // unpersisted each consumer would re-scan the fact table
-    val bins = graft.core.CacheRegistry.persist(
+    val bins = CacheRegistry.persist(
       df.where(pPpmCol.isNotNull && outcomeCol.isNotNull)
         .select(pPpmCol.cast("long").as("_p"), outcomeCol.cast("long").as("_y"))
         .groupBy(col("_p"))
-        .agg(count(lit(1)).as("_n"), sum(col("_y")).as("_pos")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .agg(count(lit(1)).as("_n"), sum(col("_y")).as("_pos")))
     val tot = bins.agg(sum(col("_n")).as("n"), sum(col("_pos")).as("_npos"),
       count(lit(1)).as("n_bins"))
     val p = col("_p").cast("double") / lit(1000000.0d)
@@ -5251,7 +5219,7 @@ object Analytics {
         centsCol.as("_c"))
       .where(col("_d").isNotNull && col("_c").isNotNull)
       .groupBy(col("_g"), col("_d")).agg(sum(col("_c")).as("_x"))
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     def maeLeg(lag: Int, nAs: String, sumAs: String) =
       daily.as("cur")
         .join(daily.as("prev"),
@@ -5335,11 +5303,10 @@ object Analytics {
     * Output one row: (k, n, f, eta_sq), F null on degenerate input.
     */
   def brownForsythe(df: DataFrame, groupCol: Column, valueCol: Column): DataFrame = {
-    val cells = graft.core.CacheRegistry.persist(
+    val cells = CacheRegistry.persist(
       df.where(groupCol.isNotNull && valueCol.isNotNull)
         .select(groupCol.as("_g"), valueCol.cast("long").as("_v"))
-        .groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_c")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_c")))
     val med = cellQuantiles(cells, Seq(0.5)).select(col("_g"), col("_q0").as("_med"))
     val per = cells.join(med, Seq("_g"))
       .withColumn("_z", abs(col("_v") - col("_med")))
@@ -5367,22 +5334,20 @@ object Analytics {
     * tie (C = 0).
     */
   def kruskalWallis(df: DataFrame, groupCol: Column, valueCol: Column): DataFrame = {
-    val base = graft.core.CacheRegistry.persist(
+    val base = CacheRegistry.persist(
       df.where(groupCol.isNotNull && valueCol.isNotNull)
         .select(groupCol.as("_g"), valueCol.cast("long").as("_v"))
-        .groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_cgv")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_cgv")))
     val vcounts = base.groupBy(col("_v")).agg(sum(col("_cgv")).as("_c"))
     // doubled midrank per distinct value + the tie term t³−t;
     // persisted — the rank frame feeds both the per-group sum and the
     // tie total, and the prefix-sum pass should run once
-    val ranked = graft.core.CacheRegistry.persist(
+    val ranked = CacheRegistry.persist(
       Relational.prefixSum(vcounts, Seq(col("_v")), col("_c"), "_cum")
         .select(col("_v"),
           (lit(2L) * (col("_cum") - col("_c")) + col("_c") + 1L).as("_mr2"),
           (col("_c").cast("decimal(38,0)") * col("_c") * col("_c") - col("_c"))
-            .as("_tie")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            .as("_tie")))
     val perGroup = base.join(ranked, Seq("_v"))
       .groupBy(col("_g"))
       .agg(sum(col("_cgv")).as("_n"),
@@ -5428,18 +5393,16 @@ object Analytics {
     */
   def dunnTest(df: DataFrame, groupCol: Column, valueCol: Column): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val base = graft.core.CacheRegistry.persist(
+    val base = CacheRegistry.persist(
       df.where(groupCol.isNotNull && valueCol.isNotNull)
         .select(groupCol.cast("string").as("_g"), valueCol.cast("long").as("_v"))
-        .groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_cgv")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .groupBy(col("_g"), col("_v")).agg(count(lit(1)).as("_cgv")))
     val vcounts = base.groupBy(col("_v")).agg(sum(col("_cgv")).as("_c"))
-    val ranked = graft.core.CacheRegistry.persist(
+    val ranked = CacheRegistry.persist(
       Relational.prefixSum(vcounts, Seq(col("_v")), col("_c"), "_cum")
         .select(col("_v"),
           (lit(2L) * (col("_cum") - col("_c")) + col("_c") + 1L).as("_mr2"),
-          (dec(col("_c")) * col("_c") * col("_c") - col("_c")).as("_tie")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          (dec(col("_c")) * col("_c") * col("_c") - col("_c")).as("_tie")))
     val perGroup = base.join(ranked, Seq("_v"))
       .groupBy(col("_g"))
       .agg(sum(col("_cgv")).as("_n"),
@@ -5543,10 +5506,9 @@ object Analytics {
       .agg(sum(valueCol.cast("long")).as("_v"))
     val k = cells.select(col("_t")).distinct()
     val withK = cells.crossJoin(broadcast(k.agg(count(lit(1)).as("_k"))))
-    val sized = graft.core.CacheRegistry.persist(
+    val sized = CacheRegistry.persist(
       withK.withColumn("_bn",
-        count(lit(1)).over(Window.partitionBy(col("_b")))),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        count(lit(1)).over(Window.partitionBy(col("_b")))))
     // incomplete blocks reported, never silently dropped — lazily, no
     // driver-side action inside the operator
     val dropAgg = sized.agg(
@@ -5608,16 +5570,13 @@ object Analytics {
       .agg(sum(valueCol.cast("long")).as("_v"))
     val k = cells.select(col("_t")).distinct()
     val withK = cells.crossJoin(broadcast(k.agg(count(lit(1)).as("_k"))))
-    val sized = graft.core.CacheRegistry.persist(
+    val sized = CacheRegistry.persist(
       withK.withColumn("_bn",
-        count(lit(1)).over(Window.partitionBy(col("_b")))),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        count(lit(1)).over(Window.partitionBy(col("_b")))))
     val dropAgg = sized.agg(
       count_distinct(when(col("_bn") =!= col("_k"), col("_b")))
         .as("n_dropped"))
-    val kept = graft.core.CacheRegistry.persist(
-      sized.where(col("_bn") === col("_k")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val kept = CacheRegistry.persist(sized.where(col("_bn") === col("_k")))
     val ranked = kept
       .withColumn("_rk",
         rank().over(Window.partitionBy(col("_b")).orderBy(col("_v"))))
@@ -5677,10 +5636,9 @@ object Analytics {
       .agg(sum(valueCol.cast("long")).as("_v"))
     val k = cells.select(col("_t")).distinct()
     val withK = cells.crossJoin(broadcast(k.agg(count(lit(1)).as("_k"))))
-    val sized = graft.core.CacheRegistry.persist(
+    val sized = CacheRegistry.persist(
       withK.withColumn("_bn",
-        count(lit(1)).over(Window.partitionBy(col("_b")))),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        count(lit(1)).over(Window.partitionBy(col("_b")))))
     val dropAgg = sized.agg(
       count_distinct(when(col("_bn") =!= col("_k"), col("_b")))
         .as("n_dropped"))
@@ -5744,10 +5702,9 @@ object Analytics {
       .agg(sum(valueCol.cast("long")).as("_v"))
     val k = cells.select(col("_t")).distinct()
     val withK = cells.crossJoin(broadcast(k.agg(count(lit(1)).as("_k"))))
-    val sized = graft.core.CacheRegistry.persist(
+    val sized = CacheRegistry.persist(
       withK.withColumn("_bn",
-        count(lit(1)).over(Window.partitionBy(col("_b")))),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        count(lit(1)).over(Window.partitionBy(col("_b")))))
     val dropAgg = sized.agg(
       count_distinct(when(col("_bn") =!= col("_k"), col("_b")))
         .as("n_dropped"))
@@ -5811,9 +5768,8 @@ object Analytics {
       s"bhFdr: qPpm must be in (0, 1e6], got $qPpm")
     val base = df.where(idCol.isNotNull && pMicrosCol.isNotNull)
       .select(idCol.as("id"), pMicrosCol.cast("long").as("p_micros"))
-    val ranked = graft.core.CacheRegistry.persist(
-      Relational.prefixSum(base, Seq(col("p_micros"), col("id")), lit(1L), "rank"),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val ranked = CacheRegistry.persist(
+      Relational.prefixSum(base, Seq(col("p_micros"), col("id")), lit(1L), "rank"))
     val n = ranked.agg(count(lit(1)).as("_n"))
     // p/1e6 <= r·q/1e6/N  <=>  p·N <= r·q_ppm (exact integers)
     val cutoff = ranked.crossJoin(broadcast(n))
@@ -5844,10 +5800,9 @@ object Analytics {
       s"holmBonferroni: alphaMicros must be in (0, 1e6], got $alphaMicros")
     val base = df.where(idCol.isNotNull && pMicrosCol.isNotNull)
       .select(idCol.as("id"), pMicrosCol.cast("long").as("p_micros"))
-    val ranked = graft.core.CacheRegistry.persist(
+    val ranked = CacheRegistry.persist(
       Relational.prefixSum(base, Seq(col("p_micros"), col("id")), lit(1L),
-        "rank"),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        "rank"))
     val n = ranked.agg(count(lit(1)).as("_n"))
     val firstFail = ranked.crossJoin(broadcast(n))
       .where(col("p_micros") * (col("_n") - col("rank") + 1L) >
@@ -6275,13 +6230,12 @@ object Analytics {
   def pettitt(df: DataFrame, groupCol: Column, dayCol: Column,
       centsCol: Column): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val daily = graft.core.CacheRegistry.persist(
+    val daily = CacheRegistry.persist(
       df.select(groupCol.cast("string").as("_g"), dayCol.cast("long").as("_d"),
           centsCol.as("_x"))
         .where(col("_g").isNotNull && col("_d").isNotNull &&
           col("_x").isNotNull)
-        .groupBy(col("_g"), col("_d")).agg(sum(col("_x")).as("_xs")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .groupBy(col("_g"), col("_d")).agg(sum(col("_x")).as("_xs")))
     // doubled midranks over the per-group value domain
     val cells = daily.groupBy(col("_g"), col("_xs")).agg(count(lit(1)).as("_c"))
     val wv = Window.partitionBy(col("_g")).orderBy(col("_xs"))
@@ -6334,11 +6288,10 @@ object Analytics {
       orderCols: Seq[Column]): DataFrame = {
     require(orderCols.nonEmpty, "bowker: orderCols must be non-empty")
     val key = struct(orderCols: _*)
-    val per = graft.core.CacheRegistry.persist(
+    val per = CacheRegistry.persist(
       df.where(unitCol.isNotNull && catCol.isNotNull)
         .groupBy(unitCol.as("_u"))
-        .agg(min_by(catCol, key).as("_a"), max_by(catCol, key).as("_b")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .agg(min_by(catCol, key).as("_a"), max_by(catCol, key).as("_b")))
     val nUnits = per.agg(count(lit(1)).as("n_units"))
     val cells = per.where(col("_a") =!= col("_b"))
       .groupBy(least(col("_a"), col("_b")).as("_x"),
@@ -6385,8 +6338,7 @@ object Analytics {
         round((dec(col("_n")) * col("_sxx") - col("_sx") * col("_sx"))
             .cast("double") / col("_n").cast("double"), 6)
           .cast("decimal(38,6)").as("_w"))
-    val persisted = graft.core.CacheRegistry.persist(per,
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val persisted = CacheRegistry.persist(per)
     val tot = persisted.agg(sum(col("_w")).as("_ssw"),
       sum(col("_n")).as("_N"), count(lit(1)).as("_k"))
     val a = persisted.select(col("_g").as("g1"), col("_n").as("n1"),
@@ -6430,13 +6382,12 @@ object Analytics {
     */
   def runsTest(df: DataFrame, groupCol: Column, dayCol: Column,
       centsCol: Column): DataFrame = {
-    val daily = graft.core.CacheRegistry.persist(
+    val daily = CacheRegistry.persist(
       df.select(groupCol.cast("string").as("_g"), dayCol.cast("long").as("_d"),
           centsCol.as("_x"))
         .where(col("_g").isNotNull && col("_d").isNotNull &&
           col("_x").isNotNull)
-        .groupBy(col("_g"), col("_d")).agg(sum(col("_x")).as("_xs")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .groupBy(col("_g"), col("_d")).agg(sum(col("_x")).as("_xs")))
     val med = groupedExactQuantiles(daily, col("_g"), col("_xs"), Seq(0.5))
       .select(col("group").as("_g"), col("value").as("_med"))
     val w = Window.partitionBy(col("_g")).orderBy(col("_d"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.CacheRegistry
 import graft.functions.VectorFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -126,7 +127,7 @@ object Clustering {
     val sci = ev.groupBy(col("_c"), col("_i"))
       .agg(sum(round(col("_v"), 10).cast("decimal(38,10)")).as("_s"))
       .join(broadcast(nc), Seq("_c"))
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     val q2c = ev.groupBy(col("_c"))
       .agg(sum(round(col("_v") * col("_v"), 10).cast("decimal(38,10)"))
         .as("_q2"))
@@ -180,7 +181,7 @@ object Clustering {
       .select(col("_c"), col("_i"), col("_e").cast("double").as("_v"))
     val sci = ev.groupBy(col("_c"), col("_i"))
       .agg(sum(round(col("_v"), 10).cast("decimal(38,10)")).as("_s"))
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     val q = ev.agg(sum(round(col("_v") * col("_v"), 10).cast("decimal(38,10)"))
       .as("_q2"))
     val nc = df.where(labelCol.isNotNull && vecCol.isNotNull)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.CacheRegistry
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -110,9 +111,7 @@ object Dedup {
     // docs feeds banding plus BOTH verification join-backs (different
     // join keys, so ReuseExchange can't help) — persist so tokenization
     // and shingling run once, as ngramJaccardPairs already does.
-    val docs = graft.core.CacheRegistry.persist(
-      shingleDocs(df, idCol, textCol, shingleSize),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val docs = CacheRegistry.persist(shingleDocs(df, idCol, textCol, shingleSize))
 
     // Banding carries only (id, band, bucket) through the shuffle — the
     // shingle arrays rejoin AFTER candidate pairs are deduped, so a
@@ -121,12 +120,11 @@ object Dedup {
     // (id, band, bucket) persisted: with the cap on it feeds both the
     // bucket-population agg and the anti-join — don't re-run the
     // signature kernel for the second pass
-    val bandedAll = graft.core.CacheRegistry.persist(
+    val bandedAll = CacheRegistry.persist(
       docs
         .withColumn("sig", graft.functions.HashFunctions.minhashSignatureFused(col("sh"), numHashes))
         .select(col("id"), explode(bandKeys(col("sig"), bands, rows)).as("bb"))
-        .select(col("id"), col("bb.band"), col("bb.bucket")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("id"), col("bb.band"), col("bb.bucket")))
 
     // hot-bucket cap: the over-cap (band, bucket) keys are few by
     // construction — broadcast semi/anti-joins route rows, no extra
@@ -314,12 +312,8 @@ object Dedup {
     // blocks release via CacheRegistry.unpersistAll() / Sink.drain();
     // at corpus scale this is the stage a real pipeline would write to
     // scratch storage anyway.
-    val docs = graft.core.CacheRegistry.persist(
-      shingleDocs(df, idCol, textCol, shingleSize),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val postings = graft.core.CacheRegistry.persist(
-      docs.select(col("id"), explode(col("sh")).as("g")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val docs = CacheRegistry.persist(shingleDocs(df, idCol, textCol, shingleSize))
+    val postings = CacheRegistry.persist(docs.select(col("id"), explode(col("sh")).as("g")))
     val rare = postings
       .groupBy("g").agg(count(lit(1)).as("df"))
       .where(col("df") <= maxDocFreq && col("df") >= 2)
@@ -359,11 +353,9 @@ object Dedup {
       maxDocFreq: Int = 1000): DataFrame = {
     require(thresholdsPpm.nonEmpty && thresholdsPpm.forall(t => t >= 0 && t <= 1000000L),
       s"jaccardSweep: thresholds must be ppm in [0, 1e6], got $thresholdsPpm")
-    val docs = graft.core.CacheRegistry.persist(
-      shingleDocs(df, idCol, textCol, shingleSize),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val docs = CacheRegistry.persist(shingleDocs(df, idCol, textCol, shingleSize))
     val postings = docs.select(col("id"), explode(col("sh")).as("g"))
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     val rare = postings
       .groupBy("g").agg(count(lit(1)).as("df"))
       .where(col("df") <= maxDocFreq && col("df") >= 2)
@@ -378,7 +370,7 @@ object Dedup {
       .select((size(array_intersect(col("sh_a"), col("sh_b"))).cast("long") * 1000000L /
         size(array_union(col("sh_a"), col("sh_b"))).cast("long")).cast("long")
         .as("_jppm"))
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     thresholdsPpm.map { t =>
       jac.where(col("_jppm") >= t)
         .agg(coalesce(count(lit(1)), lit(0L)).as("n_pairs"))
@@ -422,9 +414,12 @@ object Dedup {
     // the full upstream pair-generation pipeline would re-run per round.
     val sym = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
       .unionAll(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     var labels = nodes.select(col(idCol).as("id"), col(idCol).as("component"))
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
+    // the latest round checkpoint, released once the next one is
+    // materialized
+    var lastCp = labels
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
@@ -453,10 +448,13 @@ object Dedup {
           col("id"),
           jumped.as("component"),
           (jumped =!= col("_old")).as("_chg"))
-        .localCheckpoint(eager = false) // materialized by the probe below
+        // lazy: materialized by the probe below
+        .transform(CacheRegistry.checkpoint(_, eager = false))
       val changed = next
         .agg(coalesce(sum(when(col("_chg"), 1L).otherwise(0L)), lit(0L)))
         .first().getLong(0)
+      CacheRegistry.release(lastCp)
+      lastCp = next
       labels = next.select(col("id"), col("component"))
       converged = changed == 0L
       i += 1
@@ -498,11 +496,11 @@ object Dedup {
       idCol: String,
       textCol: String,
       shingleSize: Int = 3): DataFrame = {
-    val grams = graft.core.CacheRegistry.persist(
+    val grams = CacheRegistry.persist(
       df.select(col(idCol).as("id"), words(col(textCol)).as("_ws"))
         .where(size(col("_ws")) > 0)
-        .select(col("id"), explode(array_distinct(wordShinglesFromWords(col("_ws"), shingleSize))).as("g")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("id"),
+          explode(array_distinct(wordShinglesFromWords(col("_ws"), shingleSize))).as("g")))
     val owner = grams.groupBy(col("g")).agg(min(col("id")).as("first_id"))
     grams.join(owner, "g")
       .groupBy(col("id"))
@@ -546,15 +544,13 @@ object Dedup {
       textCol: String,
       n: Int = 5): DataFrame = {
     require(n >= 2, s"removeDuplicateSpans: n must be >= 2, got $n")
-    val docs = graft.core.CacheRegistry.persist(
+    val docs = CacheRegistry.persist(
       df.select(col(idCol).as("id"), words(col(textCol)).as("_ws"))
-        .where(size(col("_ws")) > 0),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val grams = graft.core.CacheRegistry.persist(
+        .where(size(col("_ws")) > 0))
+    val grams = CacheRegistry.persist(
       docs.where(size(col("_ws")) >= n)
         .select(col("id"),
-          posexplode(wordShinglesFromWords(col("_ws"), n)).as(Seq("pos", "g"))),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          posexplode(wordShinglesFromWords(col("_ws"), n)).as(Seq("pos", "g"))))
     val owner = grams.groupBy(col("g")).agg(min(col("id")).as("_owner"))
     val covered = grams.join(owner, "g")
       .where(col("_owner") < col("id"))
@@ -601,14 +597,11 @@ object Dedup {
       maxDocFreq: Int = 1000): DataFrame = {
     // filter on the materialized word array so the regex tokenizer
     // runs once per doc, not once in the filter + once in shingling
-    val docs = graft.core.CacheRegistry.persist(
+    val docs = CacheRegistry.persist(
       df.select(col(idCol).as("id"), words(col(textCol)).as("_ws"))
         .where(size(col("_ws")) > 0)
-        .select(col("id"), array_distinct(wordShinglesFromWords(col("_ws"), shingleSize)).as("sh")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val postings = graft.core.CacheRegistry.persist(
-      docs.select(col("id"), explode(col("sh")).as("g")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("id"), array_distinct(wordShinglesFromWords(col("_ws"), shingleSize)).as("sh")))
+    val postings = CacheRegistry.persist(docs.select(col("id"), explode(col("sh")).as("g")))
     val rare = postings
       .groupBy("g").agg(count(lit(1)).as("df"))
       .where(col("df") <= maxDocFreq && col("df") >= 2)
@@ -667,13 +660,12 @@ object Dedup {
     // Each side's value and gram frames feed three consumers apiece
     // (gram order, prefix join, short-value fallback) — persist so the
     // distinct and the shingle explode run once, not per leg.
-    import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-    val lv = graft.core.CacheRegistry.persist(vals(left, leftCol, "left_val"), MEMORY_AND_DISK)
-    val rv = graft.core.CacheRegistry.persist(vals(right, rightCol, "right_val"), MEMORY_AND_DISK)
+    val lv = CacheRegistry.persist(vals(left, leftCol, "left_val"))
+    val rv = CacheRegistry.persist(vals(right, rightCol, "right_val"))
     def grams(values: DataFrame, as: String) =
       values.select(col(as), explode(array_distinct(charShingles(col(as), q))).as("g"))
-    val lg = graft.core.CacheRegistry.persist(grams(lv, "left_val"), MEMORY_AND_DISK)
-    val rg = graft.core.CacheRegistry.persist(grams(rv, "right_val"), MEMORY_AND_DISK)
+    val lg = CacheRegistry.persist(grams(lv, "left_val"))
+    val rg = CacheRegistry.persist(grams(rv, "right_val"))
     // One global gram order for BOTH sides: ascending df, gram tiebreak.
     val dfOrder = lg.select(col("g")).unionAll(rg.select(col("g")))
       .groupBy("g").agg(count(lit(1)).as("_df"))
@@ -905,7 +897,7 @@ object Dedup {
       pairs: DataFrame,
       aCol: String = "id_a",
       bCol: String = "id_b"): DataFrame = {
-    val p = pairs.localCheckpoint(true)
+    val p = CacheRegistry.checkpoint(pairs)
     val nodes = p.select(col(aCol).as("id"))
       .unionAll(p.select(col(bCol).as("id"))).distinct()
     connectedComponents(nodes, "id", p, aCol, bCol)
@@ -985,9 +977,8 @@ object Dedup {
       shingleSize: Int = 3,
       numHashes: Int = 64,
       bands: Int = 16): DataFrame = {
-    val newIdx = graft.core.CacheRegistry.persist(
-      buildDedupIndex(newDocs, idCol, textCol, shingleSize, numHashes, bands),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val newIdx = CacheRegistry.persist(
+      buildDedupIndex(newDocs, idCol, textCol, shingleSize, numHashes, bands))
     // fp check on one-row-per-doc projections (the index is band-
     // exploded — joining it raw would shuffle bands× the needed rows)
     val hitFp = newIdx.select(col("id"), col("fp")).distinct()
@@ -1040,12 +1031,11 @@ object Dedup {
       seed: Long = 42L): DataFrame = {
     import graft.functions.VectorFunctions._
     val cents = Similarity.trainCentroids(df, vecCol, nlist, trainSample, seed)
-    val assigned = graft.core.CacheRegistry.persist(
+    val assigned = CacheRegistry.persist(
       df.select(
         col(idCol).as("id"), col(vecCol).as("v"),
         explode(nearestCentroids(col(vecCol), cents, math.min(probes, cents.length)))
-          .as("cell")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .as("cell")))
     val a = assigned.select(col("cell"), col("id").as("id_a"), col("v").as("v_a"))
     val b = assigned.select(col("cell"), col("id").as("id_b"), col("v").as("v_b"))
     // verify-THEN-dedup: cosine is deterministic per (id_a, id_b), so
@@ -1276,7 +1266,7 @@ object Dedup {
       .distinct()
       .repartitionByRange(p, col("_t"))
       .sortWithinPartitions(col("_t"))
-      .localCheckpoint(true) // pin the partition layout the repair map keys on
+      .transform(CacheRegistry.checkpoint(_)) // pin the partition layout the repair map keys on
     // Local-successor pairing in ONE narrow pass: the data is already
     // range-partitioned AND sorted, so a streaming mapPartitions pairs
     // each text with its in-partition successor. A `lead` window here
@@ -1344,7 +1334,7 @@ object Dedup {
     val postings = df
       .select(groupCol.as("_g"), explode(wordShingles(textCol, n)).as("_sh"))
       .distinct()
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     val totals = postings.groupBy(col("_g")).agg(count(lit(1)).as("_tot"))
     val capped = postings.join(
       postings.groupBy(col("_sh")).agg(count(lit(1)).as("_df"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.CacheRegistry
 import graft.functions.TypedAggregators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -287,9 +288,7 @@ object Diagnostics {
     */
   def profile(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "profile: need at least one column")
-    val pruned = graft.core.CacheRegistry.persist(
-      df.select(cols.map(col): _*),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pruned = CacheRegistry.persist(df.select(cols.map(col): _*))
     val plainAggs = cols.zipWithIndex.flatMap { case (c, i) =>
       Seq(
         count(col(c)).as(s"_nn$i"),

@@ -1,8 +1,8 @@
 package graft.operators
 
+import graft.core.CacheRegistry
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
 /** Link-analysis operators for corpus quality scoring. Web-scale
   * training-data pipelines rank pages by link structure before
@@ -177,7 +177,7 @@ object Graph {
     // aggregate AND the contrib self-join all plan onto the same
     // partitioning with no further shuffle (the old shape paid a
     // distinct exchange on (src, dst) plus an explicit repartition).
-    val e = graft.core.CacheRegistry.persist(
+    val e = CacheRegistry.persist(
       weightCol match {
         case None =>
           srcEdgeLayout(edges
@@ -190,41 +190,41 @@ object Graph {
             .select(col(srcCol).as("src"), col(dstCol).as("dst"),
               col(wc).cast("long").as("w"))
             .where(col("src").isNotNull && col("dst").isNotNull && col("w") > 0))
-      },
-      MEMORY_AND_DISK)
+      })
     // (src, dst, deg|wsum) is loop-invariant: compute the out-degree /
     // out-weight totals once; e's cached src layout serves the degree
     // aggregate and the self-join directly, and the join output keeps
     // it, so every iteration's score join lands on the cached layout
     // without a fresh edge shuffle.
-    val contrib = graft.core.CacheRegistry.persist(
+    val contrib = CacheRegistry.persist(
       weightCol match {
         case None =>
           e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
         case Some(_) =>
           e.join(e.groupBy("src").agg(sum(col("w")).as("wsum")), "src")
-      },
-      MEMORY_AND_DISK)
+      })
     // verts carries the teleport mask: is_seed ∈ {0, 1}, all-1 for
     // plain PageRank — one loop body serves both variants exactly.
     val vertBase = e.select(col("src").as("node")).union(e.select(col("dst").as("node"))).distinct()
-    val verts = graft.core.CacheRegistry.persist(
+    val verts = CacheRegistry.persist(
       seeds match {
         case None => vertBase.select(col("node"), lit(1L).as("is_seed"))
         case Some(sd) =>
           val s = sd.where(col("node").isNotNull).distinct().select(col("node"), lit(1L).as("_s"))
           vertBase.join(s, Seq("node"), "left")
             .select(col("node"), coalesce(col("_s"), lit(0L)).as("is_seed"))
-      },
-      MEMORY_AND_DISK)
+      })
     // materialize both loop-invariant caches (e fills on the first,
     // the second reuses it), then drop the now-redundant edge cache —
     // the loop must not hold THREE copies of the edge list
     contrib.count()
     verts.count()
-    e.unpersist()
+    CacheRegistry.release(e)
     val base = scale * (dampDen - dampNum) / dampDen
     var scores = verts.select(col("node"), (lit(scale) * col("is_seed")).as("score"))
+    // the latest round checkpoint, released once the next one is
+    // materialized (the seed frame above is not registered: a no-op)
+    var lastCp = scores
     val contribExpr =
       if (weightCol.isDefined) "(score * w) div wsum" else "score div deg"
     for (i <- 1 to iters) {
@@ -239,7 +239,11 @@ object Graph {
           (lit(base) * col("is_seed") +
             expr(s"($dampNum * coalesce(inflow, 0L)) div $dampDen"))
             .as("score"))
-      if (i % checkpointIters == 0 && i < iters) scores = scores.localCheckpoint(true)
+      if (i % checkpointIters == 0 && i < iters) {
+        scores = CacheRegistry.checkpoint(scores)
+        CacheRegistry.release(lastCp)
+        lastCp = scores
+      }
     }
     scores
   }
@@ -272,17 +276,16 @@ object Graph {
       seedCol: String,
       maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"hopDistance: maxHops must be >= 0, got $maxHops")
-    val e = graft.core.CacheRegistry.persist(
+    val e = CacheRegistry.persist(
       edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
         .where(col("src").isNotNull && col("dst").isNotNull)
         // srcEdgeLayout: one exchange establishes the loop layout
         // (dedup clusters on the src hash); the conf-gated prededup
         // form is the skew insurance for raw duplicated edge lists
-        .transform(srcEdgeLayout),
-      MEMORY_AND_DISK)
+        .transform(srcEdgeLayout))
     var visited = seeds.select(col(seedCol).as("node")).where(col("node").isNotNull)
       .distinct().select(col("node"), lit(0).as("dist"))
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     var frontier = visited
     var hop = 0
     while (hop < maxHops && !frontier.isEmpty) {
@@ -291,7 +294,7 @@ object Graph {
         .select(col("dst").as("node")).distinct()
         .join(visited.select("node"), Seq("node"), "left_anti")
         .select(col("node"), lit(hop).as("dist"))
-        .localCheckpoint(true) // the round's one materializing action
+        .transform(CacheRegistry.checkpoint(_)) // the round's one materializing action
       // visited stays a union chain of checkpointed deltas: lineage is
       // O(hops) and SHALLOW (each leg a cached-block scan), so no
       // re-materialization of the full visited set per round
@@ -325,14 +328,13 @@ object Graph {
       nSeeds: Int = 8, maxHops: Int = 3, k: Int = 50): DataFrame = {
     require(nSeeds >= 1 && maxHops >= 1 && k >= 1,
       s"harmonicCentrality: nSeeds/maxHops/k must be >= 1")
-    val e = graft.core.CacheRegistry.persist(
+    val e = CacheRegistry.persist(
       edges.select(srcCol.as("src"), dstCol.as("dst"))
         .where(col("src").isNotNull && col("dst").isNotNull)
         // srcEdgeLayout: one exchange establishes the loop layout
         // (dedup clusters on the src hash); the conf-gated prededup
         // form is the skew insurance for raw duplicated edge lists
-        .transform(srcEdgeLayout),
-      MEMORY_AND_DISK)
+        .transform(srcEdgeLayout))
     val verts = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
     val seeds = verts
@@ -340,7 +342,7 @@ object Graph {
       .limit(nSeeds)
     var dist = seeds
       .select(col("node").as("seed"), col("node"), lit(0).as("dist"))
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     var frontier = dist
     // maxHops is small and FIXED, so no per-round isEmpty probe — an
     // exhausted frontier makes the remaining rounds cheap no-op joins,
@@ -351,7 +353,7 @@ object Graph {
         .select(col("seed"), col("dst").as("node")).distinct()
         .join(dist.select("seed", "node"), Seq("seed", "node"), "left_anti")
         .select(col("seed"), col("node"), lit(hop).as("dist"))
-        .localCheckpoint(true) // the round's one materializing action
+        .transform(CacheRegistry.checkpoint(_)) // the round's one materializing action
       dist = dist.union(next)
       frontier = next
     }
@@ -424,7 +426,7 @@ object Graph {
       .select(least(srcCol, dstCol).as("_u"), greatest(srcCol, dstCol).as("_v"))
       .where(col("_u") < col("_v"))
       .distinct()
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     var n = e.count()
     var round = 0
     var converged = false
@@ -443,9 +445,10 @@ object Graph {
       val next = e
         .join(keep, col("_u") === col("_n"), "left_semi")
         .join(keep, col("_v") === col("_n"), "left_semi")
-        .localCheckpoint(true)
+        .transform(CacheRegistry.checkpoint(_))
       val n2 = next.count()
       converged = n2 == n
+      CacheRegistry.release(e)
       e = next; n = n2; round += 1
     }
     e.select(col("_u").as("node")).unionAll(e.select(col("_v").as("node")))
@@ -490,11 +493,10 @@ object Graph {
     // Node keys keep the caller's column type: a (long-encoded) key
     // shuffles as 8 fixed bytes where a decorated string would carry
     // 10-20 variable bytes through every join of every round.
-    val e = graft.core.CacheRegistry.persist(
+    val e = CacheRegistry.persist(
       edges.select(srcCol.as("_s"), dstCol.as("_d"))
         .where(col("_s").isNotNull && col("_d").isNotNull)
-        .distinct(),
-      MEMORY_AND_DISK)
+        .distinct())
     // Per half-round: ONE materializing job — the edge⋈score join +
     // partial-sum agg, checkpointed eagerly (superstep discipline).
     // The max needed for the exact floor-division rescale is then a
@@ -503,17 +505,23 @@ object Graph {
     // the next half-round's join consumes in place. The previous shape
     // (crossJoin over a broadcast max of the UNcheckpointed aggregate)
     // recomputed the heavy join twice per half-round.
+    // The two latest half-rounds' checkpoints (the readout joins both);
+    // an older one is superseded, so it is released.
+    val live = scala.collection.mutable.Queue.empty[DataFrame]
     def step(scores: DataFrame, joinKey: String, outKey: String,
              valIn: String, valOut: String): DataFrame = {
       val raw = e.join(scores, e(joinKey) === scores("node"))
         .groupBy(col(outKey)).agg(sum(col(valIn)).as("_raw"))
-        .localCheckpoint(true)
+        .transform(CacheRegistry.checkpoint(_))
+      live.enqueue(raw)
+      if (live.size > 2) CacheRegistry.release(live.dequeue())
       val mx = raw.agg(max(col("_raw"))).head().getLong(0)
       raw.select(col(outKey).as("node"),
         expr(s"(_raw * ${scale}L) div ${mx}L").as(valOut))
     }
-    var hubs = e.select(col("_s").as("node")).distinct()
-      .select(col("node"), lit(scale).as("h")).localCheckpoint(true)
+    var hubs = CacheRegistry.checkpoint(e.select(col("_s").as("node")).distinct()
+      .select(col("node"), lit(scale).as("h")))
+    live.enqueue(hubs)
     var auths: DataFrame = null
     for (_ <- 1 to rounds) {
       auths = step(hubs, "_s", "_d", "h", "a")
@@ -561,20 +569,22 @@ object Graph {
     // the per-round join broadcasts the |V|-row label side, so the
     // big side never shuffled to begin with. +1 job, seconds flat.)
     val und = e.unionAll(e.select(col("_v").as("_u"), col("_u").as("_v")))
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     var labels = und.select(col("_u").as("node"))
       .distinct()
       .select(col("node"), col("node").as("lbl"))
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     for (_ <- 1 to rounds) {
       val counts = und.join(labels, und("_v") === labels("node"))
         .groupBy(col("_u"), col("lbl")).agg(count(lit(1)).as("_c"))
       // arg-max with min-label tie-break in one agg: max of
       // (count, -label) lexicographic struct order, then un-negate
+      val prev = labels
       labels = counts.groupBy(col("_u"))
         .agg(max(struct(col("_c"), (-col("lbl")).as("_nl"))).as("_m"))
         .select(col("_u").as("node"), (-col("_m._nl")).as("lbl"))
-        .localCheckpoint(true)
+        .transform(CacheRegistry.checkpoint(_))
+      CacheRegistry.release(prev)
     }
     labels.select(col("node"), col("lbl").as("community"))
   }
@@ -618,24 +628,11 @@ object Graph {
         weightCol.cast("long").as("_w"))
       .where(col("_s").isNotNull && col("_d").isNotNull && col("_w") >= 0)
       .repartition(col("_s"))
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     var dist = sources.select(sourceCol.cast("long").as("node"))
       .where(col("node").isNotNull).distinct()
       .select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    // TWO relaxations per materializing action: under AQE every query
-    // stage is a job submission, so the per-round checkpoint made the
-    // scheduling floor (not the data) the cost at small frontiers. The
-    // intermediate round's min-agg stays LAZY inside the fused plan —
-    // its two consumers (the next relax join's probe side and the
-    // union branch of the next min-agg) canonicalize to the same
-    // exchange, so the subtree runs once (ReusedExchange; at small
-    // sizes AQE may instead broadcast the join probe, re-running only
-    // the cheap |V|-row aggregate, never the |E|-row join below it).
-    // min is associative/idempotent, so relax∘relax with a single
-    // trailing checkpoint computes the identical pinned-horizon
-    // distances — the min over candidate paths of ≤ r edges does not
-    // care where the lineage was cut.
+      .transform(CacheRegistry.checkpoint(_))
     // TWO relaxations per materializing action: under AQE every query
     // stage is a job submission, so a checkpoint per round made the
     // scheduling floor (not the data) the dominant cost at small
@@ -664,7 +661,9 @@ object Graph {
           .groupBy(col("node")).agg(min(col("dist")).as("dist"))
         i += 1
       }
-      dist = cur.localCheckpoint(true)
+      val prev = dist
+      dist = CacheRegistry.checkpoint(cur)
+      CacheRegistry.release(prev)
       done += step
     }
     dist
@@ -759,7 +758,7 @@ object Graph {
       .select(least(srcCol, dstCol).as("_u"), greatest(srcCol, dstCol).as("_v"))
       .where(col("_u") < col("_v"))
       .distinct()
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     val deg = e.select(col("_u").as("_n")).unionAll(e.select(col("_v").as("_n")))
       .groupBy(col("_n")).agg(count(lit(1)).as("_d"))
     val withDeg = e
@@ -770,7 +769,7 @@ object Graph {
     val ori = withDeg.select(
         when(uFirst, col("_u")).otherwise(col("_v")).as("_s"),
         when(uFirst, col("_v")).otherwise(col("_u")).as("_t"))
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     val tri = ori.as("e1")
       .join(ori.as("e2"), col("e1._t") === col("e2._s"))
       .join(ori.as("e3"),
@@ -815,12 +814,11 @@ object Graph {
       .select(least(srcCol, dstCol).as("_u"), greatest(srcCol, dstCol).as("_v"))
       .where(col("_u") < col("_v"))
       .distinct()
-      .localCheckpoint(true)
-    val deg = graft.core.CacheRegistry.persist(
+      .transform(CacheRegistry.checkpoint(_))
+    val deg = CacheRegistry.persist(
       e.select(col("_u").as("node")).unionAll(
           e.select(col("_v").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("_d")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .groupBy(col("node")).agg(count(lit(1)).as("_d")))
     val withDeg = e
       .join(deg.select(col("node").as("_u"), col("_d").as("_du")), Seq("_u"))
       .join(deg.select(col("node").as("_v"), col("_d").as("_dv")), Seq("_v"))
@@ -829,7 +827,7 @@ object Graph {
     val ori = withDeg.select(
         when(uFirst, col("_u")).otherwise(col("_v")).as("_s"),
         when(uFirst, col("_v")).otherwise(col("_u")).as("_t"))
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     val tri = ori.as("e1")
       .join(ori.as("e2"), col("e1._t") === col("e2._s"))
       .join(ori.as("e3"),
@@ -892,12 +890,11 @@ object Graph {
     val vals = values.where(nodeCol.isNotNull && valueCol.isNotNull)
       .groupBy(nodeCol.as("_n")).agg(max(valueCol.cast("long")).as("_x"))
     val tot = vals.agg(count(lit(1)).as("n"), sum(dec(col("_x"))).as("_s"))
-    val z = graft.core.CacheRegistry.persist(
+    val z = CacheRegistry.persist(
       vals.crossJoin(broadcast(tot))
         .select(col("_n"), col("n"), col("_x"),
           (dec(col("n")) * col("_x") - col("_s")).cast("decimal(38,0)")
-            .as("_z")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            .as("_z")))
     val den = z.agg(first(col("n")).as("n"),
       coalesce(sum(col("_z") * col("_z")), dec(lit(0L))).as("_q"))
     val num = e
@@ -945,12 +942,11 @@ object Graph {
       .select(least(srcCol, dstCol).as("_u"), greatest(srcCol, dstCol).as("_v"))
       .where(col("_u") < col("_v"))
       .distinct()
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     // consumed three times (node ladder + both endpoint joins)
-    val deg = graft.core.CacheRegistry.persist(
+    val deg = CacheRegistry.persist(
       e.select(col("_u").as("_n")).unionAll(e.select(col("_v").as("_n")))
-        .groupBy(col("_n")).agg(count(lit(1)).as("_d")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .groupBy(col("_n")).agg(count(lit(1)).as("_d")))
     val nAgg = deg.agg(
       thresholds.zipWithIndex.map { case (r, i) =>
         sum(when(col("_d") > r, 1L).otherwise(0L)).as(s"_n$i")
@@ -1067,9 +1063,7 @@ object Graph {
       salt: String = "w"): DataFrame = {
     require(steps >= 1 && steps <= 128,
       s"hashWalks: steps must be in [1,128], got $steps")
-    val e = graft.core.CacheRegistry.persist(
-      edges.select(srcCol.as("_src"), dstCol.as("_dst")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val e = CacheRegistry.persist(edges.select(srcCol.as("_src"), dstCol.as("_dst")))
     var walk = starts.select(startCol.as("start")).distinct()
       .select(col("start"), col("start").as("cur"),
         col("start").cast("string").as("path"))
@@ -1118,7 +1112,7 @@ object Graph {
     require(k >= 1, s"commonNeighborPairs: k must be >= 1, got $k")
     val adj = edges.select(srcCol.as("_s"), dstCol.as("_d"))
       .where(col("_s").isNotNull && col("_d").isNotNull).distinct()
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     val deg = adj.groupBy(col("_s")).agg(count(lit(1)).as("_deg"))
     val keep = adj.join(
       adj.groupBy(col("_d")).agg(count(lit(1)).as("_in"))
@@ -1166,7 +1160,7 @@ object Graph {
     require(k >= 1, s"adamicAdarPairs: k must be >= 1, got $k")
     val adj = edges.select(srcCol.as("_s"), dstCol.as("_d"))
       .where(col("_s").isNotNull && col("_d").isNotNull).distinct()
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     val inDeg = adj.groupBy(col("_d")).agg(count(lit(1)).as("_in"))
       .where(col("_in") >= 2 && col("_in") <= maxDeg)
       .select(col("_d"),
@@ -1242,14 +1236,13 @@ object Graph {
       nSeeds: Int = 8, maxHops: Int = 3): DataFrame = {
     require(nSeeds >= 1 && maxHops >= 1,
       s"distanceSummary: nSeeds/maxHops must be >= 1, got $nSeeds/$maxHops")
-    val e = graft.core.CacheRegistry.persist(
+    val e = CacheRegistry.persist(
       edges.select(srcCol.as("src"), dstCol.as("dst"))
         .where(col("src").isNotNull && col("dst").isNotNull)
         // srcEdgeLayout: one exchange establishes the loop layout
         // (dedup clusters on the src hash); the conf-gated prededup
         // form is the skew insurance for raw duplicated edge lists
-        .transform(srcEdgeLayout),
-      MEMORY_AND_DISK)
+        .transform(srcEdgeLayout))
     val verts = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
     val seeds = verts
@@ -1257,14 +1250,14 @@ object Graph {
       .limit(nSeeds)
     var dist = seeds
       .select(col("node").as("seed"), col("node"), lit(0).as("dist"))
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     var frontier = dist
     for (hop <- 1 to maxHops) {
       val next = e.join(frontier, col("src") === col("node"))
         .select(col("seed"), col("dst").as("node")).distinct()
         .join(dist.select("seed", "node"), Seq("seed", "node"), "left_anti")
         .select(col("seed"), col("node"), lit(hop).as("dist"))
-        .localCheckpoint(true) // the round's one materializing action
+        .transform(CacheRegistry.checkpoint(_)) // the round's one materializing action
       dist = dist.union(next)
       frontier = next
     }
@@ -1274,7 +1267,7 @@ object Graph {
     // as separate full-frame aggregates
     val byd = dist.where(col("dist") > 0)
       .groupBy(col("dist")).agg(count(lit(1)).as("_c"))
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     val tot = byd.agg(
       sum(col("_c")).as("n_pairs"),
       max(col("dist")).cast("long").as("diameter_lb"),
@@ -1340,14 +1333,13 @@ object Graph {
     require(nSeeds >= 2 && maxHops >= 1 && k >= 1,
       s"betweennessSampled: need nSeeds >= 2, maxHops >= 1, k >= 1; " +
         s"got $nSeeds/$maxHops/$k")
-    val e = graft.core.CacheRegistry.persist(
+    val e = CacheRegistry.persist(
       edges.select(srcCol.as("src"), dstCol.as("dst"))
         .where(col("src").isNotNull && col("dst").isNotNull)
         // srcEdgeLayout: one exchange establishes the loop layout
         // (dedup clusters on the src hash); the conf-gated prededup
         // form is the skew insurance for raw duplicated edge lists
-        .transform(srcEdgeLayout),
-      MEMORY_AND_DISK)
+        .transform(srcEdgeLayout))
     val verts = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct()
     val seeds = verts
@@ -1356,7 +1348,7 @@ object Graph {
     var bfs = seeds
       .select(col("node").as("seed"), col("node"), lit(0).as("dist"),
         lit(1L).cast("decimal(38,0)").as("cnt"))
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     var frontier = bfs
     for (hop <- 1 to maxHops) {
       // σ recurrence: every shortest path to a dist-`hop` node extends
@@ -1370,7 +1362,7 @@ object Graph {
         .select(col("seed"), col("dst").as("node"), lit(hop).as("dist"),
           col("cnt"))
         .join(bfs.select("seed", "node"), Seq("seed", "node"), "left_anti")
-        .localCheckpoint(true) // the round's one materializing action
+        .transform(CacheRegistry.checkpoint(_)) // the round's one materializing action
       bfs = bfs.union(next)
       frontier = next
     }

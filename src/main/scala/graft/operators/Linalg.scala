@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.CacheRegistry
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -84,10 +85,9 @@ object Linalg {
 
   private def prepared(df: DataFrame, vecCol: String): (DataFrame, Int) = {
     val dim = graft.core.VecDim.probe(df, vecCol, "Linalg.prepared")
-    val x = graft.core.CacheRegistry.persist(
+    val x = CacheRegistry.persist(
       df.select(col(vecCol).cast("array<double>").as("_x"))
-        .where(size(col("_x")) === dim),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .where(size(col("_x")) === dim))
     (x, dim)
   }
 
@@ -191,11 +191,10 @@ object Linalg {
     val dim = graft.core.VecDim.probe(df, vecCol, "linearCka")
     require(prefixDims >= 1 && prefixDims < dim,
       s"linearCka: prefixDims must be in [1, dim=$dim), got $prefixDims")
-    val fx = graft.core.CacheRegistry.persist(
+    val fx = CacheRegistry.persist(
       df.where(size(col(vecCol)) === dim)
         .select(transform(col(vecCol).cast("array<double>"),
-          v => floor(v * lit(1000.0))).as("_v")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          v => floor(v * lit(1000.0))).as("_v")))
     val n = fx.count()
     val s = fx.select(posexplode(col("_v")))
       .select((col("pos") + 1).as("_i"), col("col").as("_xl"))

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Flow
-import graft.core.Component
+import graft.core.{CacheRegistry, Component}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Feedback cycle (reference: lib/loop.ex:4-67): a named queue used as
@@ -45,7 +45,7 @@ final case class Loop(
       // not restartable) vs. durable parquet staging (survives driver
       // restarts, debuggable per-iteration artifacts).
       val materialized =
-        if (ephemeral) frontier.localCheckpoint(true)
+        if (ephemeral) CacheRegistry.checkpoint(frontier)
         else {
           val stage = s"$stagingPath/iter_$i"
           frontier.write.mode("overwrite").parquet(stage)

@@ -1,10 +1,9 @@
 package graft.operators
 
 import graft.Flow
-import graft.core.{Component, FlowOps}
+import graft.core.{CacheRegistry, Component, FlowOps}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** N named streams → 1 stream, bag union (reference: lib/mixer.ex:29-34).
   * The reference's arrival order is declared nondeterministic (its tests
@@ -66,7 +65,7 @@ final case class Splitter(
     val src0 = flow.getOrElse(
       input, throw new IllegalArgumentException(s"Splitter: missing stream '$input'"))
     val src =
-      if (cache) graft.core.CacheRegistry.persist(src0, StorageLevel.MEMORY_AND_DISK) else src0
+      if (cache) CacheRegistry.persist(src0) else src0
     val outs = outputs.map { case (n, pred) => n -> pred.fold(src)(src.filter) }
     FlowOps.rewire(flow, Seq(input), outs)
   }

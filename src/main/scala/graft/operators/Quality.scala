@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.CacheRegistry
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -330,12 +331,11 @@ object Quality {
       .groupBy(tokenCol.as("_tok")).agg(count(lit(1)).as(cnt))
     // persisted: the vocab frame feeds both the totals row and the term
     // sum — without it each corpus is scanned and tokenized twice
-    val joined = graft.core.CacheRegistry.persist(
+    val joined = CacheRegistry.persist(
       counted(a, "_ca").join(counted(b, "_cb"), Seq("_tok"), "full_outer")
         .select(col("_tok"),
           coalesce(col("_ca"), lit(0L)).as("_ca"),
-          coalesce(col("_cb"), lit(0L)).as("_cb")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          coalesce(col("_cb"), lit(0L)).as("_cb")))
     val totals = joined.agg(sum(col("_ca")).as("n_a"), sum(col("_cb")).as("n_b"),
       count(lit(1)).as("n_tokens"))
     val p = col("_ca").cast("double") / col("n_a").cast("double")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.CacheRegistry
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -34,10 +35,9 @@ object Ranking {
       b: Double = 0.75): DataFrame = {
     // tf is read by three consumers (score join, doc length, doc
     // frequency) — persist so the tokenize+explode runs once.
-    val tf = graft.core.CacheRegistry.persist(
+    val tf = CacheRegistry.persist(
       df.select(col(idCol).as("_id"), explode(words(col(textCol))).as("term"))
-        .groupBy(col("_id"), col("term")).agg(count(lit(1)).as("tf")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .groupBy(col("_id"), col("term")).agg(count(lit(1)).as("tf")))
     val dl = tf.groupBy(col("_id")).agg(sum(col("tf")).as("dl"))
     val dfreq = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
     val stats = broadcast(dl.agg(count(lit(1)).as("n"), avg(col("dl")).as("avgdl")))
@@ -658,12 +658,11 @@ object Ranking {
       .groupBy(tokenCol.as("term")).agg(count(lit(1)).as(cnt))
     // persisted: feeds both the totals row and the scored frame —
     // without it each corpus is scanned and tokenized twice
-    val joined = graft.core.CacheRegistry.persist(
+    val joined = CacheRegistry.persist(
       counted(a, "_ya").join(counted(b, "_yb"), Seq("term"), "full_outer")
         .select(col("term"),
           coalesce(col("_ya"), lit(0L)).as("n_a"),
-          coalesce(col("_yb"), lit(0L)).as("n_b")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          coalesce(col("_yb"), lit(0L)).as("n_b")))
     val tot = joined.agg(sum(col("n_a")).as("_n1"), sum(col("n_b")).as("_n2"))
     val n1 = col("_n1").cast("double")
     val n2 = col("_n2").cast("double")
@@ -698,11 +697,10 @@ object Ranking {
     * (n_docs, n_tokens, vocab, beta, ln_k).
     */
   def heapsFit(df: DataFrame, idCol: Column, textCol: Column): DataFrame = {
-    val docs = graft.core.CacheRegistry.persist(
+    val docs = CacheRegistry.persist(
       df.select(idCol.as("_id"), words(textCol).as("_ws"))
         .where(size(col("_ws")) > 0)
-        .select(col("_id"), col("_ws"), size(col("_ws")).cast("long").as("_nt")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .select(col("_id"), col("_ws"), size(col("_ws")).cast("long").as("_nt")))
     val firstSeen = docs
       .select(col("_id"), explode(col("_ws")).as("_w"))
       .groupBy(col("_w")).agg(min(col("_id")).as("_fd"))
@@ -814,7 +812,7 @@ object Ranking {
   def confusionStats(df: DataFrame, goldCol: Column, predCol: Column): DataFrame = {
     val cells = df.where(goldCol.isNotNull && predCol.isNotNull)
       .groupBy(goldCol.as("_g"), predCol.as("_p")).agg(count(lit(1)).as("_n"))
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     val goldTot = cells.groupBy(col("_g").as("cls")).agg(sum(col("_n")).as("n_gold"))
     val predTot = cells.groupBy(col("_p").as("cls")).agg(sum(col("_n")).as("n_pred"))
     val tp = cells.where(col("_g") === col("_p"))
@@ -870,12 +868,11 @@ object Ranking {
   def weightedKappa(df: DataFrame, goldOrdCol: Column,
       predOrdCol: Column): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val cells = graft.core.CacheRegistry.persist(
+    val cells = CacheRegistry.persist(
       df.where(goldOrdCol.isNotNull && predOrdCol.isNotNull)
         .groupBy(goldOrdCol.cast("long").as("_g"),
           predOrdCol.cast("long").as("_p"))
-        .agg(count(lit(1)).as("_c")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .agg(count(lit(1)).as("_c")))
     val gold = cells.groupBy(col("_g")).agg(sum(col("_c")).as("_rg"))
     val pred = cells.groupBy(col("_p")).agg(sum(col("_c")).as("_cp"))
     val obs = cells.agg(sum(col("_c")).as("_n"),
@@ -896,10 +893,9 @@ object Ranking {
   }
 
   def agreementStats(df: DataFrame, goldCol: Column, predCol: Column): DataFrame = {
-    val cells = graft.core.CacheRegistry.persist(
+    val cells = CacheRegistry.persist(
       df.where(goldCol.isNotNull && predCol.isNotNull)
-        .groupBy(goldCol.as("_g"), predCol.as("_p")).agg(count(lit(1)).as("_n")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .groupBy(goldCol.as("_g"), predCol.as("_p")).agg(count(lit(1)).as("_n")))
     val gold = cells.groupBy(col("_g")).agg(sum(col("_n")).as("_tg"))
     val pred = cells.groupBy(col("_p")).agg(sum(col("_n")).as("_tp"))
     val margins = gold
@@ -984,10 +980,9 @@ object Ranking {
     val cells = df.where(unitCol.isNotNull && categoryCol.isNotNull)
       .groupBy(unitCol.as("_u"), categoryCol.as("_c"))
       .agg(count(lit(1)).as("_o"))
-    val sized = graft.core.CacheRegistry.persist(
+    val sized = CacheRegistry.persist(
       cells.withColumn("_m",
-        sum(col("_o")).over(Window.partitionBy(col("_u")))),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        sum(col("_o")).over(Window.partitionBy(col("_u")))))
     val dropAgg = sized.agg(
       count_distinct(when(col("_m") < 2L, col("_u"))).as("n_dropped"))
     val kept = sized.where(col("_m") >= 2L)
@@ -1043,10 +1038,9 @@ object Ranking {
     val cells = df.where(itemCol.isNotNull && categoryCol.isNotNull)
       .groupBy(itemCol.as("_i"), categoryCol.as("_c"))
       .agg(count(lit(1)).as("_o"))
-    val sized = graft.core.CacheRegistry.persist(
+    val sized = CacheRegistry.persist(
       cells.withColumn("_m",
-        sum(col("_o")).over(Window.partitionBy(col("_i")))),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        sum(col("_o")).over(Window.partitionBy(col("_i")))))
     val dropAgg = sized.agg(
       count_distinct(when(col("_m") =!= raters.toLong, col("_i")))
         .as("n_dropped"))
@@ -1089,10 +1083,9 @@ object Ranking {
     val cells = df.where(itemCol.isNotNull && categoryCol.isNotNull)
       .groupBy(itemCol.as("_i"), categoryCol.as("_c"))
       .agg(count(lit(1)).as("_o"))
-    val sized = graft.core.CacheRegistry.persist(
+    val sized = CacheRegistry.persist(
       cells.withColumn("_m",
-        sum(col("_o")).over(Window.partitionBy(col("_i")))),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        sum(col("_o")).over(Window.partitionBy(col("_i")))))
     val dropAgg = sized.agg(
       count_distinct(when(col("_m") =!= raters.toLong, col("_i")))
         .as("n_dropped"))
@@ -1185,23 +1178,19 @@ object Ranking {
     val toks = df.where(sourceCol.isNotNull && textCol.isNotNull)
       .select(sourceCol.cast("string").as("_s"),
         explode(graft.functions.TextFunctions.words(textCol)).as("_w"))
-    val counts = graft.core.CacheRegistry.persist(
-      toks.groupBy(col("_s"), col("_w")).agg(count(lit(1)).as("_c")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val srcTot = graft.core.CacheRegistry.persist(
-      counts.groupBy(col("_s")).agg(sum(col("_c")).as("_n")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val counts = CacheRegistry.persist(
+      toks.groupBy(col("_s"), col("_w")).agg(count(lit(1)).as("_c")))
+    val srcTot = CacheRegistry.persist(counts.groupBy(col("_s")).agg(sum(col("_c")).as("_n")))
     val top = Relational.prefixSum(
       counts.groupBy(col("_w")).agg(sum(col("_c")).as("_t"))
         .select(col("_w"), (-col("_t")).as("_nt")),
       Seq(col("_nt"), col("_w")), lit(1L), "_rank")
       .where(col("_rank") <= k).select(col("_w"))
-    val dense = graft.core.CacheRegistry.persist(
+    val dense = CacheRegistry.persist(
       srcTot.crossJoin(broadcast(top))
         .join(counts, Seq("_s", "_w"), "left")
         .select(col("_s"), col("_w"),
-          expr("coalesce(_c, 0) * 1000000 div _n").as("_r")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          expr("coalesce(_c, 0) * 1000000 div _n").as("_r")))
     val nSrc = srcTot.agg(count(lit(1)).as("_ns"))
     val stats = dense.groupBy(col("_w"))
       .agg(sum(dec(col("_r"))).as("_sr"),
@@ -1254,12 +1243,11 @@ object Ranking {
   def cronbachAlpha(df: DataFrame, unitCol: Column, itemCol: Column,
       scoreCol: Column): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val cells = graft.core.CacheRegistry.persist(
+    val cells = CacheRegistry.persist(
       df.where(unitCol.isNotNull && itemCol.isNotNull &&
           scoreCol.isNotNull)
         .groupBy(unitCol.as("_u"), itemCol.as("_i"))
-        .agg(sum(scoreCol.cast("long")).as("_x")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .agg(sum(scoreCol.cast("long")).as("_x")))
     val nk = cells.agg(count_distinct(col("_u")).as("_n"),
       count_distinct(col("_i")).as("_k"))
     val items = cells.groupBy(col("_i"))
@@ -1307,13 +1295,12 @@ object Ranking {
     require(raters >= 2, s"iccOneWay: raters must be >= 2, got $raters")
     val dec = (c: Column) => c.cast("decimal(38,0)")
     val k = raters.toLong
-    val per = graft.core.CacheRegistry.persist(
+    val per = CacheRegistry.persist(
       df.where(unitCol.isNotNull && ratingCol.isNotNull)
         .groupBy(unitCol.as("_u"))
         .agg(count(lit(1)).as("_m"), sum(ratingCol.cast("long")).as("_t"),
           sum(dec(ratingCol.cast("long")) * ratingCol.cast("long"))
-            .as("_q")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            .as("_q")))
     val dropAgg = per.agg(
       count_distinct(when(col("_m") =!= k, col("_u"))).as("n_dropped"))
     val kept = per.where(col("_m") === k)

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.CacheRegistry
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -619,11 +620,6 @@ object Relational {
       cumCol: String = "cum"): DataFrame =
     prefixSums(df, orderBy, Seq(sumCol -> cumCol))
 
-  /** Multi-column [[prefixSum]]: all running totals ride ONE range
-    * sort and one narrow pass (a CDF comparison needs two cumulative
-    * counts over the same order — sorting twice would double the
-    * dominant cost).
-    */
   /** The local/distributed routing gate of [[prefixSums]], split out so
     * the path-equality spec can pin the decision itself. Local iff the
     * plan-stats size estimate is under `spark.graft.prefixSum.localBytes`
@@ -653,6 +649,20 @@ object Relational {
     !hasGenerate && plan.stats.sizeInBytes <= localBytes
   }
 
+  /** Multi-column [[prefixSum]]: all running totals ride ONE range
+    * sort and one narrow pass (a CDF comparison needs two cumulative
+    * counts over the same order — sorting twice would double the
+    * dominant cost).
+    *
+    * Row-reuse contract: the result is an internal-row pass
+    * ([[org.apache.spark.sql.GraftBridge.mapPartitionsInternal]]) that
+    * emits ONE reused `UnsafeRow` per partition, overwritten by every
+    * `next()`. Spark's own operators copy what they keep, so any
+    * DataFrame use is safe; code that reads the result's internal RDD
+    * (`queryExecution.toRdd`) must `copy()` each row it retains. The
+    * sorted input is persisted through `CacheRegistry`, so
+    * `CacheRegistry.unpersistAll` releases it.
+    */
   def prefixSums(df: DataFrame, orderBy: Seq[Column],
       sums: Seq[(Column, String)]): DataFrame = {
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -684,11 +694,10 @@ object Relational {
     // canonicalize, so without the cache every consumer would re-run
     // the sort + scan pass (measured: job count doubled on the gains/
     // lorenz shapes when the local path skipped the persist)
-    val sorted = graft.core.CacheRegistry.persist(
+    val sorted = CacheRegistry.persist(
       if (local) projected.repartition(1).sortWithinPartitions(orderBy: _*)
       else projected.repartitionByRange(orderBy: _*)
-        .sortWithinPartitions(orderBy: _*),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .sortWithinPartitions(orderBy: _*))
     val zero = Array.fill(tmp.size)(0L)
     val offsets: IndexedSeq[Array[Long]] = if (local) IndexedSeq(zero) else {
       // bounded driver state: |partitions| × |sums| longs
@@ -872,11 +881,10 @@ object Relational {
     */
   def paretoFrontier2d(df: DataFrame, xCol: Column,
       yCol: Column): DataFrame = {
-    val xy = graft.core.CacheRegistry.persist(
+    val xy = CacheRegistry.persist(
       df.where(xCol.isNotNull && yCol.isNotNull)
         .groupBy(xCol.cast("long").as("_x"), yCol.cast("long").as("_y"))
-        .agg(count(lit(1)).as("_n")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .agg(count(lit(1)).as("_n")))
     val ym = xy.groupBy(col("_x")).agg(max(col("_y")).as("_ym"))
     val dominated = ym.as("a").join(ym.as("b"),
       col("b._x") > col("a._x") && col("b._ym") >= col("a._ym"),

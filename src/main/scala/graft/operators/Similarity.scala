@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.CacheRegistry
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -73,7 +74,7 @@ object Similarity {
         s"vacuous perfect overlap); got $prefixDims")
     val full = bruteForceTopK(queries, corpus, idCol, vecCol, k)
       .select(col("query_id"), col("neighbor_id"))
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     val base = full.agg(count_distinct(col("query_id")).as("n_queries"),
       count(lit(1)).as("_slots"))
     prefixDims.map { p =>
@@ -114,7 +115,7 @@ object Similarity {
   def mutualKnnGraph(vectors: DataFrame, idCol: String, vecCol: String,
       k: Int): DataFrame = {
     val topk = bruteForceTopK(vectors, vectors, idCol, vecCol, k)
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     val lo = topk.where(col("query_id") < col("neighbor_id"))
       .select(col("query_id").as("a"), col("neighbor_id").as("b"),
         col("cosine"), col("rank").as("rank_a"))
@@ -158,7 +159,7 @@ object Similarity {
         round(col("cosine"), 4).as("cosine"), col("rank"))
     if (!mutual) topk
     else {
-      val cp = topk.localCheckpoint(true)
+      val cp = CacheRegistry.checkpoint(topk)
       val lo = cp.where(col("query_id") < col("neighbor_id"))
         .select(col("query_id").as("a"), col("neighbor_id").as("b"),
           col("cosine"), col("rank").as("rank_a"))
@@ -786,11 +787,10 @@ object Similarity {
       centroidArr: Array[Array[Double]]): IvfIndex = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    val assigned = graft.core.CacheRegistry.persist(
+    val assigned = CacheRegistry.persist(
       corpus.select(
         col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"),
-        nearestCentroid(col(vecCol), centroidArr).as("cell")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        nearestCentroid(col(vecCol), centroidArr).as("cell")))
     // centroids kept as double; the query side is cast to match so the
     // probe works for both array<float> and array<double> vectors.
     val centroids = centroidArr.zipWithIndex.toSeq
@@ -1048,13 +1048,12 @@ object Similarity {
     // on tiny corpora — rebuild kSub from what training produced.
     val kEff = codebooks(0).length
     val normLut = codebooks.flatMap(_.map(cw => cw.map(x => x * x).sum)).toSeq
-    val codes = graft.core.CacheRegistry.persist(
+    val codes = CacheRegistry.persist(
       corpus.select(
         col(idCol).as("neighbor_id"),
         pqEncode(col(vecCol), codebooks).as("codes"))
         .withColumn("c_norm",
-          sqrt(codeLookupSum(col("codes"), typedLit(normLut), kEff))),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          sqrt(codeLookupSum(col("codes"), typedLit(normLut), kEff))))
     PqIndex(codebooks, codes, m, kEff)
   }
 
@@ -1174,18 +1173,17 @@ object Similarity {
     val codebooks = trainPqCodebooksFromSample(sampleRaw, m, kSub, seed)
     val kEff = codebooks(0).length
     val normLut = codebooks.flatMap(_.map(cw => cw.map(x => x * x).sum)).toSeq
-    val codes = graft.core.CacheRegistry.persist(
+    val codes = CacheRegistry.persist(
       ivf.assigned.select(
         col("cell"), col("neighbor_id"),
         pqEncode(col("c_vec"), codebooks).as("codes"))
-        .withColumn("c_norm", sqrt(codeLookupSum(col("codes"), typedLit(normLut), kEff))),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .withColumn("c_norm", sqrt(codeLookupSum(col("codes"), typedLit(normLut), kEff))))
     // Materialize the codes once, then release the full-float assigned
     // cache: IVF-PQ exists to avoid holding raw vectors, so keeping
     // `assigned` resident for the run would negate the compression
-    // memory-wise. (unpersist here is idempotent vs the scope's drain.)
+    // memory-wise.
     codes.count()
-    ivf.assigned.unpersist()
+    CacheRegistry.release(ivf.assigned)
     IvfPqIndex(ivf.centroids, codebooks, codes, ivf.nlist, m, kEff)
   }
 

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.CacheRegistry
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -46,11 +47,10 @@ object Sketches {
     // aggregate (= one extra scan of the raw table per level at 100
     // TB, unless AQE exchange reuse happens to fire). The frame is
     // |deepest groups| sketch rows — tiny.
-    val base = graft.core.CacheRegistry.persist(
+    val base = CacheRegistry.persist(
       df.select(levels.map { case (n, c) => c.as(n) } :+ value.as("_v"): _*)
         .groupBy(names.map(col): _*)
-        .agg(hll_sketch_agg(col("_v"), lgK).as("_sk")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .agg(hll_sketch_agg(col("_v"), lgK).as("_sk")))
     val types = names.map(n => base.schema(n).dataType)
     def finish(fr: DataFrame, depth: Int): DataFrame =
       fr.select(names.map(col) :+ lit(depth).as("depth") :+
@@ -194,9 +194,8 @@ object Sketches {
   def amsF2(df: DataFrame, keyCol: Column, replicates: Int = 9): DataFrame = {
     require(replicates >= 1 && replicates % 2 == 1 && replicates <= 99,
       s"amsF2: replicates must be odd in [1,99], got $replicates")
-    val keys = graft.core.CacheRegistry.persist(
-      df.select(keyCol.cast("string").as("_k")).where(col("_k").isNotNull),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val keys = CacheRegistry.persist(
+      df.select(keyCol.cast("string").as("_k")).where(col("_k").isNotNull))
     val dec = (c: Column) => c.cast("decimal(38,0)")
     // R signed counters: explode×R then ONE hash-agg keyed by the
     // replicate id — the shuffle carries R rows regardless of input

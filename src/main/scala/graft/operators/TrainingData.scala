@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.CacheRegistry
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -482,9 +483,7 @@ object TrainingData {
     // The train postings feed both the df-cap aggregate and the overlap
     // join — persist so the corpus is shingled once, not twice (same
     // contract as ngramJaccardPairs; released by CacheRegistry).
-    val tg = graft.core.CacheRegistry.persist(
-      grams(train, "train_id"),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val tg = CacheRegistry.persist(grams(train, "train_id"))
     val rare = tg.groupBy("g").agg(count(lit(1)).as("df")).where(col("df") <= maxDocFreq)
     tg.join(rare, "g")
       .join(grams(bench, "bench_id"), "g")
@@ -728,10 +727,9 @@ object TrainingData {
     require(budget >= 0L, s"budgetSelect: budget must be >= 0, got $budget")
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val spark = df.sparkSession
-    val sorted = graft.core.CacheRegistry.persist(
+    val sorted = CacheRegistry.persist(
       df.withColumn("_tok", tokensCol.cast("long"))
-        .repartitionByRange(orderBy: _*).sortWithinPartitions(orderBy: _*),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .repartitionByRange(orderBy: _*).sortWithinPartitions(orderBy: _*))
     // bounded driver state: one (pid, token total) per partition
     val totals = sorted
       .groupBy(spark_partition_id().as("_pid"))
@@ -927,7 +925,7 @@ object TrainingData {
     require(minCount >= 1, s"oovRate: minCount must be >= 1, got $minCount")
     val toks = df.select(idCol.as("_id"),
         explode(graft.functions.TextFunctions.words(textCol)).as("_w"))
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     val vocab = toks.groupBy(col("_w")).agg(count(lit(1)).as("_c"))
       .where(col("_c") >= minCount).select(col("_w"), lit(1).as("_in"))
     toks.join(vocab, Seq("_w"), "left")
@@ -1012,7 +1010,7 @@ object TrainingData {
       .withColumn("_bounds",
         concat(array(lit(0)), bpos, array(length(col("_t")))))
       .select(col("_id"), explode(chunks).as("_h"))
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     val perHash = pairs.groupBy(col("_h"))
       .agg(count(lit(1)).as("_n"), count_distinct(col("_id")).as("_nd"))
     val shared = perHash.where(col("_nd") >= 2)
@@ -1121,12 +1119,11 @@ object TrainingData {
     require(0 < aPpm && aPpm < bPpm && bPpm <= 1000000L,
       s"abcClasses: need 0 < aPpm < bPpm <= 1e6, got $aPpm, $bPpm")
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val per = graft.core.CacheRegistry.persist(
+    val per = CacheRegistry.persist(
       df.where(keyCol.isNotNull && weightCol.isNotNull)
         .groupBy(keyCol.cast("string").as("_k"))
         .agg(sum(weightCol.cast("long")).as("_w"))
-        .where(col("_w") > 0),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .where(col("_w") > 0))
     val tot = per.agg(sum(dec(col("_w"))).as("_tw"))
     val ranked = Relational.prefixSum(
       per.select(col("_k"), col("_w"), (-col("_w")).as("_nw")),
@@ -1168,20 +1165,18 @@ object TrainingData {
       total: Long): DataFrame = {
     require(total >= 0, s"apportion: total must be >= 0, got $total")
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val per = graft.core.CacheRegistry.persist(
+    val per = CacheRegistry.persist(
       df.where(keyCol.isNotNull && weightCol.isNotNull)
         .groupBy(keyCol.cast("string").as("key"))
         .agg(sum(weightCol.cast("long")).as("weight"))
-        .where(col("weight") > 0),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .where(col("weight") > 0))
     val w = per.agg(sum(dec(col("weight"))).as("_W"))
-    val based = graft.core.CacheRegistry.persist(
+    val based = CacheRegistry.persist(
       per.crossJoin(broadcast(w))
         .withColumn("_tw", (dec(col("weight")) * total).cast("decimal(38,0)"))
         .withColumn("base", expr("CAST(_tw div _W AS BIGINT)"))
         .withColumn("_rem", (col("_tw") - dec(col("base")) * col("_W"))
-          .cast("decimal(38,0)")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          .cast("decimal(38,0)")))
     val leftover = based.agg((lit(total) - sum(col("base"))).as("_R"))
     val ranked = Relational.prefixSum(
       based.select(col("key"), col("weight"), col("base"),
@@ -1272,14 +1267,13 @@ object TrainingData {
       s"mmrRerank: lamPpm must be in [0, 1000000], got $lamPpm")
     val spark = df.sparkSession
     val dim = graft.core.VecDim.probe(df, vecCol, "mmrRerank")
-    val fx = graft.core.CacheRegistry.persist(
+    val fx = CacheRegistry.persist(
       df.where(size(col(vecCol)) === dim && col(idCol).isNotNull &&
           col(relCol).isNotNull)
         .select(col(idCol).cast("long").as("_id"),
           transform(col(vecCol).cast("array<double>"),
             v => floor(v * lit(1000.0))).as("_v"),
-          col(relCol).cast("long").as("_rel")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          col(relCol).cast("long").as("_rel")))
     // headOption: the dim probe guarantees a non-empty vector EXISTS,
     // but the id/rel null filters can still empty the candidate frame —
     // fail with the operator's name, not a bare NoSuchElementException
@@ -1295,6 +1289,9 @@ object TrainingData {
     var cur = fx.where(col("_id") =!= first.getLong(0))
       .select(col("_id"), col("_v"), col("_rel"),
         lit(Long.MaxValue).as("_md"))
+    // the latest round checkpoint, released once the next one is
+    // materialized (the seed frame above is not registered: a no-op)
+    var lastCp = cur
     var step = 2
     var exhausted = false
     while (step <= m && !exhausted) {
@@ -1303,7 +1300,9 @@ object TrainingData {
         least(col("_md"),
           aggregate(zip_with(col("_v"), cLit, (a, b) => (a - b) * (a - b)),
             lit(0L), (acc, y) => acc + y)).as("_md"))
-        .localCheckpoint(true) // the round's one materializing action
+        .transform(CacheRegistry.checkpoint(_)) // the round's one materializing action
+      CacheRegistry.release(lastCp)
+      lastCp = cur
       // m beyond the candidate count stops cleanly with the realized
       // prefix instead of a head() crash
       cur.orderBy((lit(lamPpm) * col("_rel") +
@@ -1334,12 +1333,11 @@ object TrainingData {
     require(k >= 1 && k <= 64, s"kcenterSelect: k must be in [1,64], got $k")
     val spark = df.sparkSession
     val dim = graft.core.VecDim.probe(df, vecCol, "kcenterSelect")
-    val fx = graft.core.CacheRegistry.persist(
+    val fx = CacheRegistry.persist(
       df.where(size(col(vecCol)) === dim && col(idCol).isNotNull)
         .select(col(idCol).cast("long").as("_id"),
           transform(col(vecCol).cast("array<double>"),
-            v => floor(v * lit(1000.0))).as("_v")),
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+            v => floor(v * lit(1000.0))).as("_v")))
     // headOption, mirroring mmrRerank: the id null filter can empty the
     // frame even when the dim probe found a non-empty vector
     val first = fx
@@ -1355,6 +1353,9 @@ object TrainingData {
     // (md DESC, id) argmax could otherwise re-pick a chosen id
     var cur = fx.where(col("_id") =!= first.getLong(0))
       .select(col("_id"), col("_v"), lit(Long.MaxValue).as("_md"))
+    // the latest round checkpoint, released once the next one is
+    // materialized (the seed frame above is not registered: a no-op)
+    var lastCp = cur
     var step = 2
     var exhausted = false
     while (step <= k && !exhausted) {
@@ -1363,7 +1364,9 @@ object TrainingData {
         least(col("_md"),
           aggregate(zip_with(col("_v"), cLit, (a, b) => (a - b) * (a - b)),
             lit(0L), (acc, y) => acc + y)).as("_md"))
-        .localCheckpoint(true) // the round's one materializing action
+        .transform(CacheRegistry.checkpoint(_)) // the round's one materializing action
+      CacheRegistry.release(lastCp)
+      lastCp = cur
       // k beyond the candidate count stops cleanly with the realized
       // prefix (every point is a center) instead of a head() crash
       cur.orderBy(col("_md").desc, col("_id").asc).limit(1)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.{CacheRegistry, RunScope}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -209,7 +210,7 @@ object CrawlIngest {
     }
     // one materialization feeds both writes (recomputing the plan
     // twice would re-read the index and re-shuffle the anti-joins)
-    val surv = survivors.localCheckpoint(true)
+    val surv = CacheRegistry.checkpoint(survivors)
     // an all-duplicate (or all-unparseable) micro-batch writes NOTHING:
     // a zero-row partitioned write would create the corpus/index dirs
     // with only _SUCCESS, and the NEXT batch's schema inference over
@@ -281,7 +282,7 @@ object CrawlIngest {
     // frontier anti-join) with only batch_id pruning as protection.
     val capped = graft.operators.TrainingData.capPerGroup(
       fresh, Seq(col("host")), Seq(col("url")), perHostCap)
-      .localCheckpoint(true)
+      .transform(CacheRegistry.checkpoint(_))
     if (!capped.isEmpty)
       capped.select(col("host"), col("url"), col("n_refs"), col("rank"))
         .withColumn("batch_id", lit(batchId))
@@ -332,32 +333,38 @@ object CrawlIngest {
     routed.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // one materialization feeds stats + images + frontier + the
-        // dedup leg (foreachBatch re-executes the source plan per
-        // action otherwise — one read of every landing file per sink)
-        val b = if (statsDir != null || imageDir != null || frontierDir != null)
-          batch.localCheckpoint(true) else batch
-        if (statsDir != null) writeRouteStats(b, batchId, statsDir)
-        if (frontierDir != null)
-          frontierBatch(b, batchId, frontierDir,
-            if (robots != null) robots
-            else spark.emptyDataFrame
-              .withColumn("host", lit(null).cast("string"))
-              .withColumn("robots_txt", lit(null).cast("string")),
-            agent, perHostCap)
-        if (imageDir != null) {
-          val images = b.where(col("route") === "image")
-            .select(col("path"), col("record_idx"), col("url"),
-              col("mime"), col("image"))
-          if (!images.isEmpty)
-            images.withColumn("batch_id", lit(batchId))
-              .write.mode("overwrite").options(dynamic)
-              .partitionBy("batch_id").parquet(imageDir)
+        // the batch's checkpoints are released when it ends: the
+        // query's own scope is not drained while the query runs
+        RunScope.scoped {
+          try {
+            // one materialization feeds stats + images + frontier + the
+            // dedup leg (foreachBatch re-executes the source plan per
+            // action otherwise — one read of every landing file per sink)
+            val b = if (statsDir != null || imageDir != null || frontierDir != null)
+              CacheRegistry.checkpoint(batch) else batch
+            if (statsDir != null) writeRouteStats(b, batchId, statsDir)
+            if (frontierDir != null)
+              frontierBatch(b, batchId, frontierDir,
+                if (robots != null) robots
+                else spark.emptyDataFrame
+                  .withColumn("host", lit(null).cast("string"))
+                  .withColumn("robots_txt", lit(null).cast("string")),
+                agent, perHostCap)
+            if (imageDir != null) {
+              val images = b.where(col("route") === "image")
+                .select(col("path"), col("record_idx"), col("url"),
+                  col("mime"), col("image"))
+              if (!images.isEmpty)
+                images.withColumn("batch_id", lit(batchId))
+                  .write.mode("overwrite").options(dynamic)
+                  .partitionBy("batch_id").parquet(imageDir)
+            }
+            ingestBatch(
+              b.where(col("route").isin("html", "text"))
+                .select(col("path"), col("record_idx"), col("url"), col("body")),
+              batchId, corpusDir, indexDir, shingleSize, numHashes, bands)
+          } finally CacheRegistry.unpersistAll()
         }
-        ingestBatch(
-          b.where(col("route").isin("html", "text"))
-            .select(col("path"), col("record_idx"), col("url"), col("body")),
-          batchId, corpusDir, indexDir, shingleSize, numHashes, bands)
       }
       .start()
   }

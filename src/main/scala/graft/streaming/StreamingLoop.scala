@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.{CacheRegistry, RunScope}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Live feedback cycle — the STREAMING half of [[graft.operators.Loop]]
@@ -71,19 +72,20 @@ object StreamingLoop {
     // same protocol, same replay-skip spec coverage
     val guarded = StreamSink.idempotentForeachBatch("loop", s"$dir/_commits") {
       (batch: DataFrame, _: Long) =>
-        batch.persist()
-        try {
-          batch.write.mode("append").parquet(out)
-          // persist + count so body(batch) is evaluated exactly ONCE:
-          // a bare isEmpty-then-write would run the body twice per
-          // iteration, and a non-deterministic body could pass the
-          // emptiness check yet write a different (or empty) generation
-          val next = body(batch).persist()
+        // the batch's frames are released when it ends: the query's own
+        // scope is not drained while the query runs
+        RunScope.scoped {
           try {
+            CacheRegistry.persist(batch).write.mode("append").parquet(out)
+            // persist + count so body(batch) is evaluated exactly ONCE:
+            // a bare isEmpty-then-write would run the body twice per
+            // iteration, and a non-deterministic body could pass the
+            // emptiness check yet write a different (or empty) generation
+            val next = CacheRegistry.persist(body(batch))
             // an empty next writes NO file -> the queue goes idle -> halt
             if (next.count() > 0L) next.write.mode("append").parquet(queue)
-          } finally { next.unpersist(); () }
-        } finally { batch.unpersist(); () }
+          } finally CacheRegistry.unpersistAll()
+        }
     }
     val query = guarded
       .build(spark.readStream.schema(schema).options(options).parquet(queue))

@@ -23,9 +23,16 @@ object GraftBridge {
     * of every row twice (InternalRow → Row on the way out, Row →
     * InternalRow through the encoder on the way back). The function
     * receives each partition's index and its InternalRow iterator and
-    * must emit rows matching `out` (produce UnsafeRows via an
-    * `UnsafeProjection` — consumers follow the usual contract that
-    * scan rows may be reused between `next()` calls).
+    * must emit rows matching `out` as UnsafeRows (via an
+    * `UnsafeProjection`).
+    *
+    * Row-reuse contract, both ways: an input row may be overwritten by
+    * the iterator's next `next()` (scans and cached reads reuse one
+    * buffer), so `f` must copy any value it keeps past the current row;
+    * `f` may likewise emit one reused row (an `UnsafeProjection`
+    * returns the same buffer each call), because Spark's operators copy
+    * what they retain. Code that reads the returned frame's internal
+    * RDD directly must `copy()` each row it keeps.
     *
     * Same access pattern as the Column/Expression shims above: only
     * `private[sql]` plumbing (`QueryExecution.toRdd`,

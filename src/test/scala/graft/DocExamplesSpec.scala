@@ -113,8 +113,7 @@ class DocExamplesSpec extends SparkSpec {
 
   test("doc: scoped run — drain releases only this run's caches") {
     RunScope.scoped {
-      val cached = graft.core.CacheRegistry.persist(
-        Seq(1).toDF("v"), org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val cached = graft.core.CacheRegistry.persist(Seq(1).toDF("v"))
       cached.count()
       Sink.drain() // awaits this run's async sinks, frees this run's caches
       assert(cached.storageLevel == org.apache.spark.storage.StorageLevel.NONE)

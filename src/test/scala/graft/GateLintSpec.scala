@@ -18,6 +18,10 @@ package graft
   * training) legitimately run bounded driver-side actions while
   * CONSTRUCTING the frame, so this spec costs a small multiple of
   * analysis time at sf0.001, not a full gate run.
+  *
+  * The same loop pins the materialization contract: every persist and
+  * checkpoint a query builder makes goes through `CacheRegistry`, so
+  * no RDD it persisted survives `CacheRegistry.unpersistAll()`.
   */
 class GateLintSpec extends SparkSpec {
 
@@ -26,7 +30,10 @@ class GateLintSpec extends SparkSpec {
   test("all gate queries: no global window, no trivially-true join predicate") {
     val bad = scala.collection.mutable.ArrayBuffer.empty[String]
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
+    val leaked = scala.collection.mutable.ArrayBuffer.empty[String]
+    val sc = spark.sparkContext
     SparkEntry.queries.foreach { case (name, fn) =>
+      val before = sc.getPersistentRDDs.keySet
       try {
         val findings = graft.operators.Diagnostics.planLint(fn(spark, sfDir))
           .collect()
@@ -38,10 +45,21 @@ class GateLintSpec extends SparkSpec {
           bad += s"$name: ${r.getString(0)} -> ${r.getString(2)}")
       } catch {
         case e: Throwable => failed += s"$name: ${e.getClass.getSimpleName}: ${e.getMessage}"
-      } finally graft.core.CacheRegistry.unpersistAll()
+      } finally {
+        graft.core.CacheRegistry.unpersistAll()
+        // every persist and checkpoint a builder makes must be released
+        // by the registry sweep; drop survivors so they cannot pile up
+        val survivors = sc.getPersistentRDDs.filter { case (id, _) => !before(id) }
+        if (survivors.nonEmpty) {
+          leaked += s"$name: ${survivors.size} RDD(s)"
+          survivors.values.foreach(_.unpersist())
+        }
+      }
     }
     assert(failed.isEmpty, s"queries failed to construct:\n${failed.mkString("\n")}")
     assert(bad.isEmpty, s"plan lint errors:\n${bad.mkString("\n")}")
+    assert(leaked.isEmpty,
+      s"persisted RDDs left after unpersistAll:\n${leaked.mkString("\n")}")
   }
 
   test("every driver-side collect/takeSample in src/main is visibly bounded") {

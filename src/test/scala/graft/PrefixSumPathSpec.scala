@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The r16 optimization added a size-adaptive local path to
   * Relational.prefixSums (single round-robin partition below
@@ -10,14 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * pins byte-identical output — the same forced-both-ways discipline
   * every size-gated switch in the repo carries.
   */
-class PrefixSumPathSpec extends AnyFunSuite {
-  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class PrefixSumPathSpec extends SparkSpec {
   private def withThreshold[A](bytes: Long)(f: => A): A = {
     spark.conf.set("spark.graft.prefixSum.localBytes", bytes.toString)
     try f finally spark.conf.unset("spark.graft.prefixSum.localBytes")

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Relational
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev probe for the r17 InternalRow emit pass in Relational.prefixSums:
@@ -13,10 +12,7 @@ import org.apache.spark.sql.functions._
 object PrefixSumScaleProbe {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val n = sys.env.getOrElse("PROBE_N", "20000000").toLong
     val df = spark.range(n).select(

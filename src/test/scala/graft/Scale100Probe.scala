@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.{Analytics, Dedup, Graph, Similarity}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** 100× scale probe (round-11 verdict #1): the 10× [[ScaleProbe]]
@@ -35,12 +35,8 @@ object Scale100Probe {
   def main(args: Array[String]): Unit = {
     val enabled: String => Boolean =
       fam => args.isEmpty || args.contains(fam)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 64)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir", "/tmp/graft_scale100_local")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession.builder(32).config("spark.sql.shuffle.partitions", 64)
+      .config("spark.local.dir", "/tmp/graft_scale100_local").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.1"
     val tmp = "/tmp/graft_scale100_tmp"
@@ -126,8 +122,7 @@ object Scale100Probe {
         .select(col("doc_id"), col("text")).unionAll(copies)
       val t0 = System.nanoTime()
       val index = graft.core.CacheRegistry.persist(
-        Dedup.buildDedupIndex(old, "doc_id", "text", 2, 64, 16),
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        Dedup.buildDedupIndex(old, "doc_id", "text", 2, 64, 16))
       val nIdx = index.count()
       val tIdx = (System.nanoTime() - t0) / 1e9
       val kept = Dedup.dropAgainstIndex(newBatch, index, "doc_id", "text", 2, 64, 16)

@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Dedup, Relational, Similarity, TrainingData}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** 10× scale probe: replicate sf0.1 documents/embeddings tenfold and
@@ -10,11 +9,7 @@ import org.apache.spark.sql.functions._
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession.builder(32).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.1"
 

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Constrained-heap probe (round-12 verdict #4): every bench telemetry
@@ -48,12 +47,8 @@ object SpillProbe {
     // local[8], 16 shuffle partitions: fewer, fatter tasks concentrate
     // per-task working sets so the 4g execution pool is actually
     // contended (32 thin tasks would tiptoe under it).
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 16)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.local.dir", "/tmp/graft_spill_local")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = LocalSession.builder(8).config("spark.sql.shuffle.partitions", 16)
+      .config("spark.local.dir", "/tmp/graft_spill_local").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val tel = new SpillTelemetry
     spark.sparkContext.addSparkListener(tel)

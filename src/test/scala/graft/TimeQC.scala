@@ -9,12 +9,7 @@ package graft
 object TimeQC {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val b = LocalSession.builder(cpus.toInt)
     sys.env.get("PROBE_CONF").foreach { s =>
       s.split(";").filter(_.contains("=")).foreach { kv =>
         val Array(k, v) = kv.split("=", 2)

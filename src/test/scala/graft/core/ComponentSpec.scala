@@ -313,8 +313,7 @@ class ComponentSpec extends SparkSpec {
     @volatile var bSawOwnMark = false
     @volatile var aSawForeignMark = true
     val a = new Thread(() => RunScope.scoped {
-      val cached = CacheRegistry.persist(
-        Seq(1, 2).toDF("v"), StorageLevel.MEMORY_AND_DISK)
+      val cached = CacheRegistry.persist(Seq(1, 2).toDF("v"))
       cached.count()
       barrier.await() // B has marked "s" in ITS scope by now
       aSawForeignMark = NoWait.consume("s") // must NOT see B's mark
@@ -322,8 +321,7 @@ class ComponentSpec extends SparkSpec {
       barrier.await() // let B check its cache survived A's drain
     })
     val b = new Thread(() => RunScope.scoped {
-      bCache = CacheRegistry.persist(
-        Seq(3, 4).toDF("v"), StorageLevel.MEMORY_AND_DISK)
+      bCache = CacheRegistry.persist(Seq(3, 4).toDF("v"))
       bCache.count()
       NoWait.mark("s")
       barrier.await()
@@ -336,6 +334,24 @@ class ComponentSpec extends SparkSpec {
     assert(bCache.storageLevel != StorageLevel.NONE,
       "flow A's drain released flow B's cache")
     bCache.unpersist()
+  }
+
+  test("CacheRegistry releases checkpoints, eager and lazy, with the persists") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    def held = (sc.getPersistentRDDs.keySet -- before).size
+    RunScope.scoped {
+      val eager = CacheRegistry.checkpoint(Seq(1, 2, 3).toDF("v"))
+      val deferred = CacheRegistry.checkpoint(Seq(4, 5).toDF("v"), eager = false)
+      assert(deferred.count() == 2L)
+      CacheRegistry.persist(Seq(6).toDF("v")).count()
+      assert(held == 3)
+      CacheRegistry.release(eager) // a superseded loop round
+      assert(held == 2)
+      CacheRegistry.release(eager) // already released: a no-op
+      CacheRegistry.unpersistAll()
+      assert(held == 0)
+    }
   }
 
   test("Source.binaryFiles: on-disk media -> binary rows -> real decode round-trip") {

@@ -16,11 +16,8 @@ import graft.operators.Transformer
   */
 object RetryProbe {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[2, 2]")
+    val spark = graft.LocalSession.builder(2).master("local[2, 2]")
       .appName("graft-retry-probe")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

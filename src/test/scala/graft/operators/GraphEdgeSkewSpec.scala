@@ -1,7 +1,7 @@
 package graft.operators
 
+import graft.SparkSpec
 import org.apache.spark.sql.functions._
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Skew insurance for the iterative graph operators' src-hash edge
   * layout (r16 verdict "What's wrong #3"): the default one-exchange
@@ -12,14 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * per-partition rows by the hub's UNIQUE out-degree — and the
   * operator results must be bit-identical either way.
   */
-class GraphEdgeSkewSpec extends AnyFunSuite {
-  private lazy val spark = org.apache.spark.sql.SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", 4)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class GraphEdgeSkewSpec extends SparkSpec {
   private def withPrededup[A](on: Boolean)(f: => A): A = {
     spark.conf.set("spark.graft.graph.prededupEdges", on.toString)
     try f finally spark.conf.unset("spark.graft.graph.prededupEdges")

@@ -226,6 +226,20 @@ class StreamingSpec extends SparkSpec {
     assert(markers != null && markers.exists(_.matches("loop-batch-\\d+\\.committed")))
   }
 
+  test("streaming Loop: each micro-batch releases what it persisted") {
+    import java.nio.file.Files
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val dir = Files.createTempDirectory("graft_sloop_release_").toString
+    val out = StreamingLoop.run(spark, Seq(3L, 7L, 60L).toDF("v"),
+      df => df.select((col("v") * 2).as("v")).where(col("v") <= 100), dir)
+    assert(out.count() == 11L)
+    // one batch per doubling generation, each persisting two frames
+    assert(new java.io.File(s"$dir/_commits").list().length > 1)
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"RDDs still persisted after the loop: $left")
+  }
+
   test("streaming Loop: kill-and-restart replay deduplicated by the commit markers") {
     // the exactly-once contract under failure (reference: a Loop
     // restart must not re-emit already-delivered events): crash
