@@ -777,6 +777,21 @@ object Analytics {
       .toDF("id", "key", "cusum", "alarm")
   }
 
+  /** The pooled per-value frame every two-sample CDF test here starts
+    * from: one row per distinct non-null value `_v` of `valueCol`
+    * (cast to long when `asLong`) among the rows of samples `a` and
+    * `b`, with each sample's count there as `_ca` and `_cb`.
+    */
+  private def pooledCounts(df: DataFrame, groupCol: Column, valueCol: Column,
+      a: String, b: String, asLong: Boolean = false): DataFrame =
+    df.where(groupCol.isin(a, b) && valueCol.isNotNull)
+      .select((if (asLong) valueCol.cast("long") else valueCol).as("_v"),
+        groupCol.as("_g"))
+      .groupBy(col("_v"))
+      .agg(
+        sum(when(col("_g") === a, 1L).otherwise(0L)).as("_ca"),
+        sum(when(col("_g") === b, 1L).otherwise(0L)).as("_cb"))
+
   /** EXACT two-sample Kolmogorov-Smirnov statistic — the continuous
     * distribution-drift test next to the chi-square one ([[graft
     * .operators.Quality]]'s drift monitor bins; KS needs no binning).
@@ -790,13 +805,7 @@ object Analytics {
     */
   def ksTest(df: DataFrame, groupCol: Column, valueCol: Column,
       a: String, b: String): DataFrame = {
-    val perValue = df
-      .where(groupCol.isin(a, b) && valueCol.isNotNull)
-      .select(valueCol.as("_v"), groupCol.as("_g"))
-      .groupBy(col("_v"))
-      .agg(
-        sum(when(col("_g") === a, 1L).otherwise(0L)).as("_ca"),
-        sum(when(col("_g") === b, 1L).otherwise(0L)).as("_cb"))
+    val perValue = pooledCounts(df, groupCol, valueCol, a, b)
     val cums = Relational.prefixSums(perValue, Seq(col("_v")),
       Seq(col("_ca") -> "_cumA", col("_cb") -> "_cumB"))
     val totals = perValue.agg(
@@ -876,13 +885,7 @@ object Analytics {
     */
   def kuiperTest(df: DataFrame, groupCol: Column, valueCol: Column,
       a: String, b: String): DataFrame = {
-    val perValue = df
-      .where(groupCol.isin(a, b) && valueCol.isNotNull)
-      .select(valueCol.as("_v"), groupCol.as("_g"))
-      .groupBy(col("_v"))
-      .agg(
-        sum(when(col("_g") === a, 1L).otherwise(0L)).as("_ca"),
-        sum(when(col("_g") === b, 1L).otherwise(0L)).as("_cb"))
+    val perValue = pooledCounts(df, groupCol, valueCol, a, b)
     val cums = Relational.prefixSums(perValue, Seq(col("_v")),
       Seq(col("_ca") -> "_cumA", col("_cb") -> "_cumB"))
     val totals = perValue.agg(
@@ -927,13 +930,7 @@ object Analytics {
   def wasserstein1(df: DataFrame, groupCol: Column, valueCol: Column,
       a: String, b: String): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val perValue = df
-      .where(groupCol.isin(a, b) && valueCol.isNotNull)
-      .select(valueCol.cast("long").as("_v"), groupCol.as("_g"))
-      .groupBy(col("_v"))
-      .agg(
-        sum(when(col("_g") === a, 1L).otherwise(0L)).as("_ca"),
-        sum(when(col("_g") === b, 1L).otherwise(0L)).as("_cb"))
+    val perValue = pooledCounts(df, groupCol, valueCol, a, b, asLong = true)
     val cums = CacheRegistry.persist(
       Relational.prefixSums(perValue, Seq(col("_v")),
         Seq(col("_ca") -> "_cumA", col("_cb") -> "_cumB", lit(1L) -> "_r")))
@@ -980,13 +977,7 @@ object Analytics {
   def energyDistance(df: DataFrame, groupCol: Column, valueCol: Column,
       a: String, b: String): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val perValue = df
-      .where(groupCol.isin(a, b) && valueCol.isNotNull)
-      .select(valueCol.cast("long").as("_v"), groupCol.as("_g"))
-      .groupBy(col("_v"))
-      .agg(
-        sum(when(col("_g") === a, 1L).otherwise(0L)).as("_ca"),
-        sum(when(col("_g") === b, 1L).otherwise(0L)).as("_cb"))
+    val perValue = pooledCounts(df, groupCol, valueCol, a, b, asLong = true)
     val cums = CacheRegistry.persist(
       Relational.prefixSums(perValue, Seq(col("_v")),
         Seq(col("_ca") -> "_cumA", col("_cb") -> "_cumB", lit(1L) -> "_r")))
@@ -1133,13 +1124,7 @@ object Analytics {
   def brunnerMunzel(df: DataFrame, groupCol: Column, valueCol: Column,
       a: String, b: String): DataFrame = {
     val dec = (c: Column) => c.cast("decimal(38,0)")
-    val perValue = df
-      .where(groupCol.isin(a, b) && valueCol.isNotNull)
-      .select(valueCol.cast("long").as("_v"), groupCol.as("_g"))
-      .groupBy(col("_v"))
-      .agg(
-        sum(when(col("_g") === a, 1L).otherwise(0L)).as("_ca"),
-        sum(when(col("_g") === b, 1L).otherwise(0L)).as("_cb"))
+    val perValue = pooledCounts(df, groupCol, valueCol, a, b, asLong = true)
     val cums = Relational.prefixSums(perValue, Seq(col("_v")),
       Seq(col("_ca") -> "_cumA", col("_cb") -> "_cumB"))
     val q2a = lit(2L) * (col("_cumB") - col("_cb")) + col("_cb")
@@ -1581,13 +1566,7 @@ object Analytics {
     */
   def cramerVonMises(df: DataFrame, groupCol: Column, valueCol: Column,
       a: String, b: String): DataFrame = {
-    val perValue = df
-      .where(groupCol.isin(a, b) && valueCol.isNotNull)
-      .select(valueCol.as("_v"), groupCol.as("_g"))
-      .groupBy(col("_v"))
-      .agg(
-        sum(when(col("_g") === a, 1L).otherwise(0L)).as("_ca"),
-        sum(when(col("_g") === b, 1L).otherwise(0L)).as("_cb"))
+    val perValue = pooledCounts(df, groupCol, valueCol, a, b)
     val cums = Relational.prefixSums(perValue, Seq(col("_v")),
       Seq(col("_ca") -> "_cumA", col("_cb") -> "_cumB"))
     val totals = perValue.agg(
@@ -1637,13 +1616,7 @@ object Analytics {
     */
   def andersonDarling(df: DataFrame, groupCol: Column, valueCol: Column,
       a: String, b: String): DataFrame = {
-    val perValue = df
-      .where(groupCol.isin(a, b) && valueCol.isNotNull)
-      .select(valueCol.as("_v"), groupCol.as("_g"))
-      .groupBy(col("_v"))
-      .agg(
-        sum(when(col("_g") === a, 1L).otherwise(0L)).as("_ca"),
-        sum(when(col("_g") === b, 1L).otherwise(0L)).as("_cb"))
+    val perValue = pooledCounts(df, groupCol, valueCol, a, b)
     val cums = Relational.prefixSums(perValue, Seq(col("_v")),
       Seq(col("_ca") -> "_cumA", col("_cb") -> "_cumB"))
     val totals = perValue.agg(
@@ -4042,8 +4015,8 @@ object Analytics {
     *
     * Exact until the final division: per-key totals are one shuffle
     * (map-side partial), the global rank i comes from
-    * [[Relational.globalIndex]] (range-partitioned sort +
-    * partition-local indexing — NEVER a single-partition window; the
+    * [[Relational.globalIndex]] (a running count over
+    * [[Relational.prefixSums]] — NEVER a single-partition window; the
     * ranked frame is |keys|, not |rows|), and Σi·xᵢ accumulates in
     * DECIMAL(38,0) (rank × total can pass 2^63). Returns one row:
     * (n_keys, sum_val, weighted_sum, gini).

@@ -147,6 +147,28 @@ object Graph {
       edges.repartition(col("src"))
         .groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
 
+  /** The persisted edge frame every BFS loop here joins its frontier
+    * against: non-null `(src, dst)` pairs in [[srcEdgeLayout]] (one
+    * exchange establishes the loop layout, dedup clusters on the src
+    * hash; the conf-gated prededup form is the skew insurance for raw
+    * duplicated edge lists).
+    */
+  private def bfsEdges(edges: DataFrame, srcCol: Column, dstCol: Column): DataFrame =
+    CacheRegistry.persist(
+      edges.select(srcCol.as("src"), dstCol.as("dst"))
+        .where(col("src").isNotNull && col("dst").isNotNull)
+        .transform(srcEdgeLayout))
+
+  /** The `nSeeds` smallest nodes of `e` in (md5(node), node) order —
+    * the reproducible no-RNG uniform seed draw of the sampled BFS
+    * operators.
+    */
+  private def md5Seeds(e: DataFrame, nSeeds: Int): DataFrame =
+    e.select(col("src").as("node"))
+      .union(e.select(col("dst").as("node"))).distinct()
+      .orderBy(md5(col("node").cast("string")), col("node"))
+      .limit(nSeeds)
+
   private def prededupEdges(df: DataFrame): Boolean =
     df.sparkSession.conf.getOption("spark.graft.graph.prededupEdges")
       .exists(_.trim.equalsIgnoreCase("true"))
@@ -276,13 +298,7 @@ object Graph {
       seedCol: String,
       maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"hopDistance: maxHops must be >= 0, got $maxHops")
-    val e = CacheRegistry.persist(
-      edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-        .where(col("src").isNotNull && col("dst").isNotNull)
-        // srcEdgeLayout: one exchange establishes the loop layout
-        // (dedup clusters on the src hash); the conf-gated prededup
-        // form is the skew insurance for raw duplicated edge lists
-        .transform(srcEdgeLayout))
+    val e = bfsEdges(edges, col(srcCol), col(dstCol))
     var visited = seeds.select(col(seedCol).as("node")).where(col("node").isNotNull)
       .distinct().select(col("node"), lit(0).as("dist"))
       .transform(CacheRegistry.checkpoint(_))
@@ -328,18 +344,8 @@ object Graph {
       nSeeds: Int = 8, maxHops: Int = 3, k: Int = 50): DataFrame = {
     require(nSeeds >= 1 && maxHops >= 1 && k >= 1,
       s"harmonicCentrality: nSeeds/maxHops/k must be >= 1")
-    val e = CacheRegistry.persist(
-      edges.select(srcCol.as("src"), dstCol.as("dst"))
-        .where(col("src").isNotNull && col("dst").isNotNull)
-        // srcEdgeLayout: one exchange establishes the loop layout
-        // (dedup clusters on the src hash); the conf-gated prededup
-        // form is the skew insurance for raw duplicated edge lists
-        .transform(srcEdgeLayout))
-    val verts = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    val seeds = verts
-      .orderBy(md5(col("node").cast("string")), col("node"))
-      .limit(nSeeds)
+    val e = bfsEdges(edges, srcCol, dstCol)
+    val seeds = md5Seeds(e, nSeeds)
     var dist = seeds
       .select(col("node").as("seed"), col("node"), lit(0).as("dist"))
       .transform(CacheRegistry.checkpoint(_))
@@ -1236,18 +1242,8 @@ object Graph {
       nSeeds: Int = 8, maxHops: Int = 3): DataFrame = {
     require(nSeeds >= 1 && maxHops >= 1,
       s"distanceSummary: nSeeds/maxHops must be >= 1, got $nSeeds/$maxHops")
-    val e = CacheRegistry.persist(
-      edges.select(srcCol.as("src"), dstCol.as("dst"))
-        .where(col("src").isNotNull && col("dst").isNotNull)
-        // srcEdgeLayout: one exchange establishes the loop layout
-        // (dedup clusters on the src hash); the conf-gated prededup
-        // form is the skew insurance for raw duplicated edge lists
-        .transform(srcEdgeLayout))
-    val verts = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    val seeds = verts
-      .orderBy(md5(col("node").cast("string")), col("node"))
-      .limit(nSeeds)
+    val e = bfsEdges(edges, srcCol, dstCol)
+    val seeds = md5Seeds(e, nSeeds)
     var dist = seeds
       .select(col("node").as("seed"), col("node"), lit(0).as("dist"))
       .transform(CacheRegistry.checkpoint(_))
@@ -1333,18 +1329,8 @@ object Graph {
     require(nSeeds >= 2 && maxHops >= 1 && k >= 1,
       s"betweennessSampled: need nSeeds >= 2, maxHops >= 1, k >= 1; " +
         s"got $nSeeds/$maxHops/$k")
-    val e = CacheRegistry.persist(
-      edges.select(srcCol.as("src"), dstCol.as("dst"))
-        .where(col("src").isNotNull && col("dst").isNotNull)
-        // srcEdgeLayout: one exchange establishes the loop layout
-        // (dedup clusters on the src hash); the conf-gated prededup
-        // form is the skew insurance for raw duplicated edge lists
-        .transform(srcEdgeLayout))
-    val verts = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-    val seeds = verts
-      .orderBy(md5(col("node").cast("string")), col("node"))
-      .limit(nSeeds)
+    val e = bfsEdges(edges, srcCol, dstCol)
+    val seeds = md5Seeds(e, nSeeds)
     var bfs = seeds
       .select(col("node").as("seed"), col("node"), lit(0).as("dist"),
         lit(1L).cast("decimal(38,0)").as("cnt"))

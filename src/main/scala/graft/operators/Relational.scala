@@ -14,22 +14,13 @@ object Relational {
 
   /** Dense 1-based global row index over an explicit total order — the
     * scale-safe replacement for a no-partition `row_number()` window
-    * (which collapses to ONE task): range-partition on the order keys,
-    * sort within partitions, then offset per-partition local indexes by
-    * prefix counts via RDD `zipWithIndex` (one extra lightweight count
-    * job, partition count stays at spark.sql.shuffle.partitions).
-    * Requires `orderBy` to be a total order for a deterministic result.
+    * (which collapses to ONE task): a running count of 1 over
+    * [[prefixSums]], so it takes that operator's size-gated route and
+    * its persisted sort. Adds `indexCol` (non-null long). Requires
+    * `orderBy` to be a total order for a deterministic result.
     */
-  def globalIndex(df: DataFrame, orderBy: Seq[Column], indexCol: String = "_rn"): DataFrame = {
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val spark = df.sparkSession
-    val sorted = df.repartitionByRange(orderBy: _*).sortWithinPartitions(orderBy: _*)
-    val schema = StructType(sorted.schema.fields :+ StructField(indexCol, LongType, nullable = false))
-    val indexed = sorted.rdd.zipWithIndex().map { case (r, i) =>
-      org.apache.spark.sql.Row.fromSeq(r.toSeq :+ (i + 1L))
-    }
-    spark.createDataFrame(indexed, schema)
-  }
+  def globalIndex(df: DataFrame, orderBy: Seq[Column], indexCol: String = "_rn"): DataFrame =
+    prefixSums(df, orderBy, Seq(lit(1L) -> indexCol))
 
   /** Tumbling count-window aggregation (reference:
     * test/examples/window_test.exs:7-32): global row order chopped into
@@ -608,9 +599,10 @@ object Relational {
     * destroys clusters with on big data. Range-partition + local sort
     * gives the global order; per-partition totals (|partitions| longs
     * through the driver) become start offsets; one narrow
-    * mapPartitions emits each row's inclusive running total. The same
-    * machinery `budgetSelect` and `globalIndex` use, exposed as the
-    * reusable operator (CDF/quantile/budget shapes all reduce to it).
+    * mapPartitions emits each row's inclusive running total. It is the
+    * one ordered scan in the engine: [[globalIndex]],
+    * `TrainingData.budgetSelect` and the CDF/quantile shapes all reduce
+    * to it.
     *
     * `orderBy` must be a total order or tied rows' cumulative values
     * are shuffle-dependent. Nulls in `sumCol` add zero. Adds `cumCol`
@@ -620,9 +612,26 @@ object Relational {
       cumCol: String = "cum"): DataFrame =
     prefixSums(df, orderBy, Seq(sumCol -> cumCol))
 
+  /** Plan-stats size estimate at or under which [[prefixSums]] sorts
+    * in one partition: 128 MB of ESTIMATED bytes (Catalyst stats
+    * over-estimate 3-5x vs on-wire).
+    */
+  private val PrefixSumLocalBytes: Long = 128L * 1024 * 1024
+
+  private val forcedPrefixSumRoute = new scala.util.DynamicVariable[Option[Boolean]](None)
+
+  /** Test seam: every [[prefixSums]] BUILT inside `f` on this thread
+    * (including through [[globalIndex]] and `budgetSelect`) takes the
+    * one-partition route if `local`, else the range-partitioned one,
+    * whatever its size estimate. Lets the path-equality spec and the
+    * scale probe pin a route.
+    */
+  private[graft] def withPrefixSumRoute[A](local: Boolean)(f: => A): A =
+    forcedPrefixSumRoute.withValue(Some(local))(f)
+
   /** The local/distributed routing gate of [[prefixSums]], split out so
     * the path-equality spec can pin the decision itself. Local iff the
-    * plan-stats size estimate is under `spark.graft.prefixSum.localBytes`
+    * plan-stats size estimate is under `PrefixSumLocalBytes`
     * AND the optimized plan contains no Generate: in size-only
     * estimation Filter/Join/Aggregate never under-state (filters pass
     * the child size through, joins multiply), but Generate (explode)
@@ -633,20 +642,10 @@ object Relational {
     * Compile-time only: the guard costs zero jobs.
     */
   private[graft] def prefixSumRoutesLocal(projected: DataFrame): Boolean = {
-    val confKey = "spark.graft.prefixSum.localBytes"
-    val localBytes = projected.sparkSession.conf.getOption(confKey)
-      .map { v =>
-        try v.trim.toLong
-        catch {
-          case e: NumberFormatException => throw new IllegalArgumentException(
-            s"$confKey must be a plain long byte count, got '$v'", e)
-        }
-      }
-      .getOrElse(128L * 1024 * 1024)
     val plan = projected.queryExecution.optimizedPlan
     val hasGenerate = plan.exists(
       _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Generate])
-    !hasGenerate && plan.stats.sizeInBytes <= localBytes
+    !hasGenerate && plan.stats.sizeInBytes <= PrefixSumLocalBytes
   }
 
   /** Multi-column [[prefixSum]]: all running totals ride ONE range
@@ -673,11 +672,10 @@ object Relational {
       acc.withColumn(t, c.cast("long"))
     }
     // SIZE-ADAPTIVE layout (derive partitioning from input size, never
-    // a constant): below `spark.graft.prefixSum.localBytes` (plan-stats
-    // estimate — compile-time, no job; default 128 MB of ESTIMATED
-    // bytes, and Catalyst stats over-estimate 3-5x vs on-wire) the
+    // a constant): below `PrefixSumLocalBytes` (plan-stats estimate —
+    // compile-time, no job; 128 MB of ESTIMATED bytes) the
     // global sort runs in ONE round-robin partition — no range-sampling
-    // job, no per-partition totals collect, no persist; the offsets are
+    // job, no per-partition totals collect; the offsets are
     // trivially zero and the same narrow pass below emits the running
     // totals. The broadcast-threshold argument: a one-task sort of tens
     // of real MB beats a range-sampled distributed sort at ANY cluster
@@ -688,7 +686,7 @@ object Relational {
     // this form keeps the lint's guarantee intact.) The gate lives in
     // [[prefixSumRoutesLocal]] (with its Generate mis-estimate guard)
     // so the path-equality spec can pin the routing decision directly.
-    val local = prefixSumRoutesLocal(projected)
+    val local = forcedPrefixSumRoute.value.getOrElse(prefixSumRoutesLocal(projected))
     // both paths persist the sorted frame: callers fan the cum frame
     // into several readouts, and the RDD bridge below does not
     // canonicalize, so without the cache every consumer would re-run

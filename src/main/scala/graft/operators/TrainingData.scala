@@ -674,12 +674,12 @@ object TrainingData {
   /** Deterministic global shuffle for training order: every row gets a
     * stable position from the md5 of (seed : key) — reproducible
     * across engines, retries, and partition layouts, unlike
-    * `orderBy(rand())`. Implemented with the range-partitioned
-    * [[Relational.globalIndex]] (sort + per-partition zipWithIndex),
-    * NOT a single-partition window — the sort distributes and the
-    * index assignment is partition-local, so it scales like any global
-    * sort. At 100 TB you would usually keep only the sorted write and
-    * skip the explicit position column.
+    * `orderBy(rand())`. Implemented with [[Relational.globalIndex]]
+    * (a running count over [[Relational.prefixSums]]), NOT a
+    * single-partition window — above its size gate the sort
+    * distributes and the index is offset per partition, so it scales
+    * like any global sort. At 100 TB you would usually keep only the
+    * sorted write and skip the explicit position column.
     *
     * `keyCol` must be a UNIQUE, non-null row key (a doc id): the
     * md5(seed:key) is the entire sort order, so duplicate or null keys
@@ -707,15 +707,11 @@ object TrainingData {
     * `orderBy` must be a TOTAL order (include a unique id tiebreak) or
     * the boundary document is arbitrary.
     *
-    * Scale shape: one range repartition gives the global order; the
-    * running total is per-partition prefix sums shifted by the
-    * partition totals — |partitions| longs through the driver, the
-    * [[Relational.globalIndex]] pattern — NEVER a single-partition
-    * running-sum window. The budget cut is then one comparison per
-    * row, and partitions whose offset already exceeds the budget
-    * contribute nothing (at 100 TB the cut prunes them wholesale; a
-    * cluster job would push `offset <= budget` into a partition-level
-    * skip).
+    * Scale shape: the running total is one [[Relational.prefixSum]]
+    * (a range-partitioned sort with |partitions| longs through the
+    * driver, or one partition under its size gate) — NEVER a
+    * single-partition running-sum window. The budget cut is then one
+    * comparison per row.
     */
   def budgetSelect(
       df: DataFrame,
@@ -725,34 +721,7 @@ object TrainingData {
       cumCol: String = "cum_tokens"): DataFrame = {
     require(orderBy.nonEmpty, "budgetSelect: orderBy must be non-empty")
     require(budget >= 0L, s"budgetSelect: budget must be >= 0, got $budget")
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val spark = df.sparkSession
-    val sorted = CacheRegistry.persist(
-      df.withColumn("_tok", tokensCol.cast("long"))
-        .repartitionByRange(orderBy: _*).sortWithinPartitions(orderBy: _*))
-    // bounded driver state: one (pid, token total) per partition
-    val totals = sorted
-      .groupBy(spark_partition_id().as("_pid"))
-      // all-null partitions sum to NULL — coalesce, like the row loop below
-      .agg(coalesce(sum(col("_tok")), lit(0L)).as("_t"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val nPart = sorted.rdd.getNumPartitions
-    val offsets = (0 until nPart).scanLeft(0L)((acc, p) => acc + totals.getOrElse(p, 0L))
-    val schema = StructType(sorted.schema.fields :+ StructField(cumCol, LongType, nullable = false))
-    val tokIdx = sorted.schema.fieldIndex("_tok")
-    val withCum = sorted.rdd.mapPartitionsWithIndex { (pid, it) =>
-      var acc = offsets(pid)
-      // a partition starting past the budget emits nothing — one check,
-      // not one per row
-      if (acc > budget) Iterator.empty
-      else it.map { r =>
-        acc += (if (r.isNullAt(tokIdx)) 0L else r.getLong(tokIdx))
-        org.apache.spark.sql.Row.fromSeq(r.toSeq :+ acc)
-      }
-    }
-    spark.createDataFrame(withCum, schema)
-      .where(col(cumCol) <= budget)
-      .drop("_tok")
+    Relational.prefixSum(df, orderBy, tokensCol, cumCol).where(col(cumCol) <= budget)
   }
 
   /** DSIR-style importance weights for data selection (Xie et al.,

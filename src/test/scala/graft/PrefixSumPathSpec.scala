@@ -1,82 +1,97 @@
 package graft
 
+import graft.core.CacheRegistry
+import graft.operators.{Relational, TrainingData}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
-/** The r16 optimization added a size-adaptive local path to
-  * Relational.prefixSums (single round-robin partition below
-  * spark.graft.prefixSum.localBytes; range-partitioned offsets above).
-  * This spec forces the threshold BOTH ways over the same input and
-  * pins byte-identical output — the same forced-both-ways discipline
-  * every size-gated switch in the repo carries.
+/** Relational.prefixSums routes by size: one round-robin partition at
+  * or under its plan-stats threshold, range-partitioned offsets above.
+  * This spec forces BOTH routes (through `Relational.withPrefixSumRoute`)
+  * over the same input and pins identical output — for prefixSums and
+  * for the operators built on it — the same forced-both-ways
+  * discipline every size-gated switch in the repo carries.
   */
 class PrefixSumPathSpec extends SparkSpec {
-  private def withThreshold[A](bytes: Long)(f: => A): A = {
-    spark.conf.set("spark.graft.prefixSum.localBytes", bytes.toString)
-    try f finally spark.conf.unset("spark.graft.prefixSum.localBytes")
+  /** Builds `f` on the forced route, collects it, releases its cache. */
+  private def onRoute(local: Boolean)(f: => DataFrame): Array[Row] = {
+    val rows = Relational.withPrefixSumRoute(local)(f).collect()
+    CacheRegistry.unpersistAll()
+    rows
   }
 
-  test("local and distributed prefix-sum paths emit identical rows") {
+  // keys with duplicates-by-value (ties), nulls in the sum column,
+  // negative values, and enough rows to spread over 4 partitions
+  private lazy val input: DataFrame = {
     import spark.implicits._
-    // keys with duplicates-by-value (ties), nulls in the sum column,
-    // negative values, and enough rows to spread over 4 partitions
-    val df = (1 to 5000).map { i =>
+    (1 to 5000).map { i =>
       (i % 977, i.toLong, if (i % 13 == 0) None else Some((i % 59 - 29).toLong))
     }.toDF("k", "id", "v").repartition(4)
-    val order = Seq(col("k"), col("id"))
-    def run(bytes: Long): Array[String] = withThreshold(bytes) {
-      val out = graft.operators.Relational.prefixSums(
-        df, order, Seq(col("v") -> "cum", lit(1L) -> "rk"))
-      val rows = out.select(col("k"), col("id"), col("cum"), col("rk"))
-        .collect().map(_.toString).sorted
-      graft.core.CacheRegistry.unpersistAll()
-      rows
-    }
-    val local = run(Long.MaxValue)      // force the one-partition path
-    val distributed = run(0L)           // force the range-offset path
-    assert(local.length == 5000 && distributed.length == 5000)
-    assert(local.sameElements(distributed),
-      "local vs distributed prefix-sum outputs diverge")
   }
+  private val order = Seq(col("k"), col("id"))
+
+  /** Each ordered scan over [[input]], with a check of its own that
+    * must hold on either route.
+    */
+  private val scans: Seq[(String, () => DataFrame, Array[Row] => Unit)] = Seq(
+    ("prefix-sum", () => Relational.prefixSums(
+        input, order, Seq(col("v") -> "cum", lit(1L) -> "rk")),
+      rows => assert(rows.length == 5000)),
+    ("globalIndex", () => Relational.globalIndex(input, order, "rn"), { rows =>
+      // exactly 1..n, assigned in (k, id) order
+      val byIndex = rows.sortBy(_.getAs[Long]("rn"))
+      assert(byIndex.map(_.getAs[Long]("rn")).toSeq == (1L to 5000L))
+      val keys = byIndex.map(r => (r.getAs[Int]("k"), r.getAs[Long]("id"))).toSeq
+      assert(keys == keys.sorted, "globalIndex does not follow the order")
+    }),
+    ("budgetSelect", () => TrainingData.budgetSelect(
+        input, order, abs(col("v")), 30000L, "cum"), { rows =>
+      // a proper, non-empty prefix of the order, within the budget
+      assert(rows.nonEmpty && rows.length < 5000)
+      assert(rows.forall(_.getAs[Long]("cum") <= 30000L))
+    }))
+
+  for ((name, build, check) <- scans)
+    test(s"local and distributed $name paths emit identical rows") {
+      val local = onRoute(local = true)(build())
+      val distributed = onRoute(local = false)(build())
+      check(local)
+      check(distributed)
+      assert(local.map(_.toString).sorted.sameElements(distributed.map(_.toString).sorted),
+        s"local vs distributed $name outputs diverge")
+    }
 
   test("all-null prefix keeps the nulls-add-zero contract on both paths") {
     import spark.implicits._
     val df = Seq((1L, None: Option[Long]), (2L, None), (3L, Some(7L)))
       .toDF("id", "v")
-    def run(bytes: Long) = withThreshold(bytes) {
-      val out = graft.operators.Relational
-        .prefixSum(df, Seq(col("id")), col("v"), "cum")
-        .orderBy("id").select("cum").as[Long].collect().toSeq
-      graft.core.CacheRegistry.unpersistAll()
-      out
-    }
-    assert(run(Long.MaxValue) == Seq(0L, 0L, 7L))
-    assert(run(0L) == Seq(0L, 0L, 7L))
+    def run(local: Boolean) = onRoute(local)(
+      Relational.prefixSum(df, Seq(col("id")), col("v"), "cum").orderBy("id").select("cum"))
+      .map(_.getLong(0)).toSeq
+    assert(run(local = true) == Seq(0L, 0L, 7L))
+    assert(run(local = false) == Seq(0L, 0L, 7L))
   }
 
   test("a mis-estimated exploded frame never routes onto the local path") {
     import spark.implicits._
     // Generate (explode) stats scale only by row width — blind to
     // multiplicity — so a tiny base exploding 100000x estimates far
-    // under any sane local threshold while actually being huge. The
+    // under the local threshold while actually being huge. The
     // routing gate must refuse the single-task sort for it (r16
     // verdict "What's wrong #2": the silent scale cliff), while a
     // same-estimate non-exploding frame still routes local.
     val base = Seq(1L, 2L, 3L).toDF("id")
     val exploded = base
       .withColumn("v", explode(sequence(lit(1L), lit(100000L))))
-    withThreshold(Long.MaxValue) {
-      assert(!graft.operators.Relational.prefixSumRoutesLocal(exploded),
-        "exploded frame with a width-only size estimate routed local")
-      assert(graft.operators.Relational.prefixSumRoutesLocal(base),
-        "plain small frame should route local")
-    }
+    assert(!Relational.prefixSumRoutesLocal(exploded),
+      "exploded frame with a width-only size estimate routed local")
+    assert(Relational.prefixSumRoutesLocal(base),
+      "plain small frame should route local")
     // and the distributed path it lands on is still correct end-to-end
-    withThreshold(Long.MaxValue) {
-      val out = graft.operators.Relational.prefixSum(
-          exploded.where(col("v") <= 3), Seq(col("id"), col("v")), col("v"))
-        .orderBy("id", "v").select("cum").as[Long].collect().toSeq
-      graft.core.CacheRegistry.unpersistAll()
-      assert(out == Seq(1L, 3L, 6L, 7L, 9L, 12L, 13L, 15L, 18L))
-    }
+    val out = Relational.prefixSum(
+        exploded.where(col("v") <= 3), Seq(col("id"), col("v")), col("v"))
+      .orderBy("id", "v").select("cum").as[Long].collect().toSeq
+    CacheRegistry.unpersistAll()
+    assert(out == Seq(1L, 3L, 6L, 7L, 9L, 12L, 13L, 15L, 18L))
   }
 }

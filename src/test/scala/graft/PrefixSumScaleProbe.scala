@@ -20,12 +20,12 @@ object PrefixSumScaleProbe {
       (col("id") % 9973).as("k"),
       (col("id") % 101 - 50).as("v"),
       concat(lit("payload-"), col("id")).as("s"))
-    // force the distributed path regardless of estimate
-    spark.conf.set("spark.graft.prefixSum.localBytes", "0")
     for (i <- 1 to 4) {
       val t0 = System.nanoTime()
-      val out = Relational.prefixSums(df, Seq(col("k"), col("id")),
-        Seq(col("v") -> "cum", lit(1L) -> "rk"))
+      // force the distributed path regardless of estimate
+      val out = Relational.withPrefixSumRoute(local = false)(
+        Relational.prefixSums(df, Seq(col("k"), col("id")),
+          Seq(col("v") -> "cum", lit(1L) -> "rk")))
       val c = out.agg(sum(col("cum")), sum(col("rk"))).collect()(0)
       graft.core.CacheRegistry.unpersistAll(blocking = true)
       spark.catalog.clearCache()
