@@ -1,7 +1,10 @@
 package graft.operators
 
+import scala.reflect.runtime.universe.TypeTag
+
 import graft.core.CacheRegistry
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders, Row}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
@@ -26,9 +29,10 @@ import org.apache.spark.sql.types._
   */
 object Analytics {
 
-  // Public: Catalyst's generated (de)serializers must reach these.
-  case class FunnelEvent(u: Long, tsUs: Long, et: String)
+  // Public: Catalyst's generated serializers must reach these.
   case class FunnelRow(user_id: Long, steps_done: Int,
+      t0_us: java.lang.Long, t_end_us: java.lang.Long)
+  case class KeyedFunnelRow(key: String, steps_done: Int,
       t0_us: java.lang.Long, t_end_us: java.lang.Long)
 
   /** Ordered strict funnel: for each user, greedily match `steps` in
@@ -52,44 +56,9 @@ object Analytics {
     * microseconds; null when no step matched).
     */
   def funnel(df: DataFrame, user: Column, ts: Column, eventType: Column,
-      steps: Seq[String], maxSpanUs: Long = Long.MaxValue): DataFrame = {
-    require(steps.nonEmpty, "funnel: steps must be non-empty")
-    require(maxSpanUs > 0L, s"funnel: maxSpanUs must be positive, got $maxSpanUs")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val n = steps.length
-    val stepArr = steps.toArray
-    val events = df
-      .select(user.cast("long").as("u"), unix_micros(ts.cast("timestamp")).as("tsUs"),
-        eventType.cast("string").as("et"))
-      // null/uncastable user or timestamp can anchor no step — and
-      // would crash the non-nullable FunnelEvent encoder outright
-      .where(col("u").isNotNull && col("tsUs").isNotNull)
-      .as[FunnelEvent]
-    events
-      .groupByKey(_.u)
-      .flatMapSortedGroups($"tsUs") { (u: Long, it: Iterator[FunnelEvent]) =>
-        var done = 0
-        var t0 = -1L
-        var tLast = -1L
-        it.foreach { e =>
-          if (done < n && e.et == stepArr(done) && (done == 0 || e.tsUs > tLast) &&
-            (done == 0 || maxSpanUs == Long.MaxValue || e.tsUs - t0 <= maxSpanUs)) {
-            if (done == 0) t0 = e.tsUs
-            tLast = e.tsUs
-            done += 1
-          }
-        }
-        Iterator.single(FunnelRow(u, done,
-          if (done == 0) null else java.lang.Long.valueOf(t0),
-          if (done == 0) null else java.lang.Long.valueOf(tLast)))
-      }
-      .toDF()
-  }
-
-  case class KeyedFunnelEvent(k: String, tsUs: Long, et: String)
-  case class KeyedFunnelRow(key: String, steps_done: Int,
-      t0_us: java.lang.Long, t_end_us: java.lang.Long)
+      steps: Seq[String], maxSpanUs: Long = Long.MaxValue): DataFrame =
+    funnelFold[Long, FunnelRow]("funnel", df, user, "long", ts, eventType,
+      steps, maxSpanUs)(FunnelRow)
 
   /** [[funnel]] for NON-NUMERIC or composite keys: the fold is keyed by
     * an arbitrary string (`concat(user, '#', session_id)` gives a
@@ -97,31 +66,58 @@ object Analytics {
     * sorted-group plan; output column is `key`.
     */
   def funnelBy(df: DataFrame, key: Column, ts: Column, eventType: Column,
-      steps: Seq[String], maxSpanUs: Long = Long.MaxValue): DataFrame = {
-    require(steps.nonEmpty, "funnelBy: steps must be non-empty")
-    require(maxSpanUs > 0L, s"funnelBy: maxSpanUs must be positive, got $maxSpanUs")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val n = steps.length
+      steps: Seq[String], maxSpanUs: Long = Long.MaxValue): DataFrame =
+    funnelFold[String, KeyedFunnelRow]("funnelBy", df, key, "string", ts,
+      eventType, steps, maxSpanUs)(KeyedFunnelRow)
+
+  /** The funnel's match step, shared by [[funnel]], [[funnelBy]] and
+    * `graft.streaming.StreamFunnel`: does an event of type `et` at
+    * `tsUs` match the next step of a key that has matched `done` of
+    * `steps`, anchored at `t0Us` and last matched at `tLastUs`? Step 0
+    * matches on type alone; a later step needs a STRICTLY later
+    * timestamp and, under `maxSpanUs`, one within that span of the
+    * anchor.
+    */
+  private[graft] def funnelStepMatches(steps: Array[String], maxSpanUs: Long,
+      done: Int, t0Us: Long, tLastUs: Long, et: String, tsUs: Long): Boolean =
+    done < steps.length && et == steps(done) &&
+      (done == 0 || (tsUs > tLastUs &&
+        (maxSpanUs == Long.MaxValue || tsUs - t0Us <= maxSpanUs)))
+
+  /** The keyed fold behind [[funnel]] and [[funnelBy]]: ONE shuffle on
+    * the key (cast to `keyType`), the events secondary-sorted by time
+    * inside it and matched greedily through [[funnelStepMatches]] with
+    * O(1) state per key. `row` builds the key's output row from (key,
+    * steps done, anchor µs, last-matched µs); both times are null when
+    * no step matched.
+    */
+  private def funnelFold[K: TypeTag, R <: Product : TypeTag](
+      name: String, df: DataFrame, key: Column, keyType: String, ts: Column,
+      eventType: Column, steps: Seq[String], maxSpanUs: Long)(
+      row: (K, Int, java.lang.Long, java.lang.Long) => R): DataFrame = {
+    require(steps.nonEmpty, s"$name: steps must be non-empty")
+    require(maxSpanUs > 0L, s"$name: maxSpanUs must be positive, got $maxSpanUs")
+    import df.sparkSession.implicits._
     val stepArr = steps.toArray
-    df.select(key.cast("string").as("k"), unix_micros(ts.cast("timestamp")).as("tsUs"),
+    df.select(key.cast(keyType).as("k"), unix_micros(ts.cast("timestamp")).as("tsUs"),
         eventType.cast("string").as("et"))
+      // a null/uncastable key or timestamp can anchor no step — and
+      // would crash the non-nullable event encoder outright
       .where(col("k").isNotNull && col("tsUs").isNotNull)
-      .as[KeyedFunnelEvent]
-      .groupByKey(_.k)
-      .flatMapSortedGroups($"tsUs") { (k: String, it: Iterator[KeyedFunnelEvent]) =>
+      .as[(K, Long, String)]
+      .groupByKey(_._1)(ExpressionEncoder[K]())
+      .flatMapSortedGroups($"tsUs") { (k: K, it: Iterator[(K, Long, String)]) =>
         var done = 0
         var t0 = -1L
         var tLast = -1L
-        it.foreach { e =>
-          if (done < n && e.et == stepArr(done) && (done == 0 || e.tsUs > tLast) &&
-            (done == 0 || maxSpanUs == Long.MaxValue || e.tsUs - t0 <= maxSpanUs)) {
-            if (done == 0) t0 = e.tsUs
-            tLast = e.tsUs
+        it.foreach { case (_, tsUs, et) =>
+          if (funnelStepMatches(stepArr, maxSpanUs, done, t0, tLast, et, tsUs)) {
+            if (done == 0) t0 = tsUs
+            tLast = tsUs
             done += 1
           }
         }
-        Iterator.single(KeyedFunnelRow(k, done,
+        Iterator.single(row(k, done,
           if (done == 0) null else java.lang.Long.valueOf(t0),
           if (done == 0) null else java.lang.Long.valueOf(tLast)))
       }
@@ -690,10 +686,12 @@ object Analytics {
     * OOM the task, and 100 TB of events is still exactly one exchange
     * of narrow (key, id, value, order) rows.
     *
-    * Null keys are dropped (no sequence identity); a null value emits
-    * a null smoothed row and leaves the accumulator untouched, so one
-    * missing reading neither poisons nor resets the trend. Output:
-    * `id, key, ewma` (key/id cast to long, value to double).
+    * The step is [[Recurrences.ewma]], shared with the stream twin
+    * `graft.streaming.StreamEwma`. Null keys are dropped (no sequence
+    * identity); a null value emits a null smoothed row and leaves the
+    * accumulator untouched, so one missing reading neither poisons nor
+    * resets the trend. Output: `id, key, ewma` (key/id cast to long,
+    * value to double).
     */
   def ewma(
       df: DataFrame,
@@ -703,31 +701,11 @@ object Analytics {
       value: Column,
       alpha: Double): DataFrame = {
     require(alpha > 0.0 && alpha <= 1.0, s"ewma: need 0 < alpha <= 1, got $alpha")
-    // 1.0 - alpha here and `(1 - <alpha>)` in an oracle SQL round to
-    // the same double for the same literal, keeping the chains aligned.
-    val beta = 1.0 - alpha
-    val spark = df.sparkSession
-    import spark.implicits._
-    val ordCols = orderBy.zipWithIndex.map { case (c, i) => c.as(s"_o$i") }
-    val proj = df
-      .where(key.isNotNull)
-      .select(key.cast("long").as("_k") +: id.cast("long").as("_id") +:
-        value.cast("double").as("_v") +: ordCols: _*)
-    proj.groupByKey(_.getLong(0))
-      .flatMapSortedGroups(orderBy.indices.map(i => col(s"_o$i")): _*) {
-        (k: Long, rows: Iterator[org.apache.spark.sql.Row]) =>
-          var s = 0.0
-          var seeded = false
-          rows.map { r =>
-            if (r.isNullAt(2)) (r.getLong(1), k, None: Option[Double])
-            else {
-              val x = r.getDouble(2)
-              s = if (!seeded) { seeded = true; x } else alpha * x + beta * s
-              (r.getLong(1), k, Some(s))
-            }
-          }
-      }
-      .toDF("id", "key", "ewma")
+    import df.sparkSession.implicits._
+    keyedOrderedFold(df, key, orderBy, id, value) { k =>
+      val st = Recurrences.EwmaState()
+      (i, x, _) => (i, k, Recurrences.ewma(st, x, alpha))
+    }.toDF("id", "key", "ewma")
   }
 
   /** One-sided (upper) CUSUM change detection per key — the classic
@@ -739,10 +717,10 @@ object Analytics {
     *
     * Same engine as [[ewma]]: one shuffle on the key, the fold runs
     * over shuffle-sorted rows (`flatMapSortedGroups`), O(1) state. The
-    * clamp is written `if (t > 0) t else 0.0` — NOT max() — so a
-    * signed-zero never leaks into the output and the recursive-CTE
-    * oracle can mirror the exact branch. Null values emit a null
-    * cusum row and leave state untouched (the ewma contract). Output:
+    * step is [[Recurrences.cusum]], shared with the stream twin
+    * `graft.streaming.StreamCusum`: its clamp is the explicit branch
+    * the recursive-CTE oracle mirrors. Null values emit a null cusum
+    * row and leave state untouched (the ewma contract). Output:
     * id, key, cusum, alarm.
     */
   def cusum(
@@ -754,27 +732,47 @@ object Analytics {
       drift: Double,
       threshold: Double): DataFrame = {
     require(threshold > 0.0, s"cusum: threshold must be > 0, got $threshold")
-    val spark = df.sparkSession
-    import spark.implicits._
+    import df.sparkSession.implicits._
+    keyedOrderedFold(df, key, orderBy, id, value) { k =>
+      val st = Recurrences.CusumState()
+      (i, x, _) =>
+        val c = Recurrences.cusum(st, x, drift)
+        (i, k, c, c.exists(_ > threshold))
+    }.toDF("id", "key", "cusum", "alarm")
+  }
+
+  /** The sorted-group fold [[ewma]], [[cusum]], [[holt]] and
+    * [[holtWinters]] share. Rows with a null key (or a null `pos`, when
+    * given) drop; the rest are projected to (key long, id long, value
+    * double, pos int) and stream per key through one shuffle on the key
+    * in `orderBy` order (`flatMapSortedGroups` secondary-sorts inside
+    * that shuffle, so a hot key never buffers on the heap). `perKey`
+    * runs once per key, allocating the key's accumulator, and returns
+    * the function applied to each row's (id, value or None when null,
+    * pos or 0 without `pos`).
+    */
+  private def keyedOrderedFold[T: Encoder](
+      df: DataFrame,
+      key: Column,
+      orderBy: Seq[Column],
+      id: Column,
+      value: Column,
+      pos: Option[Column] = None)(
+      perKey: Long => (Long, Option[Double], Int) => T): Dataset[T] = {
     val ordCols = orderBy.zipWithIndex.map { case (c, i) => c.as(s"_o$i") }
-    val proj = df
-      .where(key.isNotNull)
+    val hasPos = pos.isDefined
+    df.where(pos.foldLeft(key.isNotNull)(_ && _.isNotNull))
       .select(key.cast("long").as("_k") +: id.cast("long").as("_id") +:
-        value.cast("double").as("_v") +: ordCols: _*)
-    proj.groupByKey(_.getLong(0))
+        value.cast("double").as("_v") +:
+        (pos.map(_.cast("int").as("_p")).toSeq ++ ordCols): _*)
+      .groupByKey(_.getLong(0))(Encoders.scalaLong)
       .flatMapSortedGroups(orderBy.indices.map(i => col(s"_o$i")): _*) {
-        (k: Long, rows: Iterator[org.apache.spark.sql.Row]) =>
-          var s = 0.0
-          rows.map { r =>
-            if (r.isNullAt(2)) (r.getLong(1), k, None: Option[Double], false)
-            else {
-              val t = s + (r.getDouble(2) - drift)
-              s = if (t > 0.0) t else 0.0
-              (r.getLong(1), k, Some(s), s > threshold)
-            }
-          }
+        (k: Long, rows: Iterator[Row]) =>
+          val f = perKey(k)
+          rows.map(r => f(r.getLong(1),
+            if (r.isNullAt(2)) None else Some(r.getDouble(2)),
+            if (hasPos) r.getInt(3) else 0))
       }
-      .toDF("id", "key", "cusum", "alarm")
   }
 
   /** The pooled per-value frame every two-sample CDF test here starts
@@ -3724,8 +3722,10 @@ object Analytics {
     *
     * Same engine and contracts as [[ewma]]/[[cusum]]: one key
     * shuffle, sorted-group fold, O(1) two-double state, the exact
-    * IEEE chains mirrored by a recursive-CTE oracle. Output:
-    * (id, key, level, trend, forecast = level + trend).
+    * IEEE chains mirrored by a recursive-CTE oracle. The step is
+    * [[Recurrences.holt]], shared with the stream twin
+    * `graft.streaming.StreamHolt`. Output: (id, key, level, trend,
+    * forecast = level + trend).
     */
   def holt(
       df: DataFrame,
@@ -3737,45 +3737,21 @@ object Analytics {
       beta: Double): DataFrame = {
     require(alpha > 0.0 && alpha <= 1.0, s"holt: need 0 < alpha <= 1, got $alpha")
     require(beta >= 0.0 && beta <= 1.0, s"holt: need 0 <= beta <= 1, got $beta")
-    val a2 = 1.0 - alpha
-    val b2 = 1.0 - beta
-    val spark = df.sparkSession
-    import spark.implicits._
-    val ordCols = orderBy.zipWithIndex.map { case (c, i) => c.as(s"_o$i") }
-    val proj = df
-      .where(key.isNotNull)
-      .select(key.cast("long").as("_k") +: id.cast("long").as("_id") +:
-        value.cast("double").as("_v") +: ordCols: _*)
-    proj.groupByKey(_.getLong(0))
-      .flatMapSortedGroups(orderBy.indices.map(i => col(s"_o$i")): _*) {
-        (k: Long, rows: Iterator[org.apache.spark.sql.Row]) =>
-          var l = 0.0
-          var b = 0.0
-          var seeded = false
-          rows.map { r =>
-            if (r.isNullAt(2))
-              (r.getLong(1), k, None: Option[Double], None: Option[Double],
-                None: Option[Double])
-            else {
-              val x = r.getDouble(2)
-              if (!seeded) { l = x; b = 0.0; seeded = true }
-              else {
-                val lNew = alpha * x + a2 * (l + b)
-                b = beta * (lNew - l) + b2 * b
-                l = lNew
-              }
-              (r.getLong(1), k, Some(l), Some(b), Some(l + b))
-            }
-          }
-      }
-      .toDF("id", "key", "level", "trend", "forecast")
+    import df.sparkSession.implicits._
+    keyedOrderedFold(df, key, orderBy, id, value) { k =>
+      val st = Recurrences.HoltState()
+      (i, x, _) =>
+        val (l, b, f) = Recurrences.holt(st, x, alpha, beta)
+        (i, k, l, b, f)
+    }.toDF("id", "key", "level", "trend", "forecast")
   }
 
   /** Holt-Winters additive triple smoothing — level + trend +
     * SEASONALITY, the member of the family ([[ewma]] → [[holt]] → this)
     * that can track a weekly rhythm instead of lagging through it.
     * Per key, in `orderBy` order with an EXPLICIT caller-supplied
-    * season position (`pos` ∈ [0, period)):
+    * season position (`pos`, wrapped into [0, period), so a negative
+    * position counts back from the period's end):
     *
     * {{{
     * l' = α(x − s[pos]) + (1−α)(l + b)
@@ -3788,6 +3764,8 @@ object Analytics {
     * profile online rather than assuming a warm-up window. Null values
     * emit null rows and leave state untouched ([[holt]]'s contract).
     * Same sorted-group fold engine: one key shuffle, O(period) state.
+    * The step is [[Recurrences.holtWinters]], shared with the stream
+    * twin `graft.streaming.StreamHoltWinters`.
     * Output: (id, key, level, trend, seasonal) — seasonal is s[pos]
     * AFTER the update.
     */
@@ -3806,42 +3784,13 @@ object Analytics {
     require(alpha > 0.0 && alpha <= 1.0, s"holtWinters: need 0 < alpha <= 1, got $alpha")
     require(beta >= 0.0 && beta <= 1.0, s"holtWinters: need 0 <= beta <= 1, got $beta")
     require(gamma >= 0.0 && gamma <= 1.0, s"holtWinters: need 0 <= gamma <= 1, got $gamma")
-    val a2 = 1.0 - alpha
-    val b2 = 1.0 - beta
-    val g2 = 1.0 - gamma
-    val spark = df.sparkSession
-    import spark.implicits._
-    val ordCols = orderBy.zipWithIndex.map { case (c, i) => c.as(s"_o$i") }
-    val proj = df
-      .where(key.isNotNull && pos.isNotNull)
-      .select(key.cast("long").as("_k") +: id.cast("long").as("_id") +:
-        value.cast("double").as("_v") +: pos.cast("int").as("_p") +: ordCols: _*)
-    proj.groupByKey(_.getLong(0))
-      .flatMapSortedGroups(orderBy.indices.map(i => col(s"_o$i")): _*) {
-        (k: Long, rows: Iterator[org.apache.spark.sql.Row]) =>
-          var l = 0.0
-          var b = 0.0
-          val s = Array.fill(period)(0.0)
-          var seeded = false
-          rows.map { r =>
-            if (r.isNullAt(2))
-              (r.getLong(1), k, None: Option[Double], None: Option[Double],
-                None: Option[Double])
-            else {
-              val x = r.getDouble(2)
-              val p = r.getInt(3) % period
-              if (!seeded) { l = x; b = 0.0; seeded = true }
-              else {
-                val lNew = alpha * (x - s(p)) + a2 * (l + b)
-                b = beta * (lNew - l) + b2 * b
-                s(p) = gamma * (x - lNew) + g2 * s(p)
-                l = lNew
-              }
-              (r.getLong(1), k, Some(l), Some(b), Some(s(p)))
-            }
-          }
-      }
-      .toDF("id", "key", "level", "trend", "seasonal")
+    import df.sparkSession.implicits._
+    keyedOrderedFold(df, key, orderBy, id, value, Some(pos)) { k =>
+      val st = Recurrences.holtWintersState(period)
+      (i, x, p) =>
+        val (l, b, s) = Recurrences.holtWinters(st, x, p, alpha, beta, gamma)
+        (i, k, l, b, s)
+    }.toDF("id", "key", "level", "trend", "seasonal")
   }
 
   /** Frequent pairwise co-occurrence (market-basket / Apriori level-2):

@@ -131,7 +131,7 @@ object Graph {
     * the input's duplication ratio, not the exchange count, is the
     * scale risk. [[GraphEdgeSkewSpec]] pins both properties.
     */
-  private def srcEdgeLayout(edges: DataFrame): DataFrame =
+  private[operators] def srcEdgeLayout(edges: DataFrame): DataFrame =
     if (prededupEdges(edges)) edges.dropDuplicates("src", "dst").repartition(col("src"))
     else edges.repartition(col("src")).dropDuplicates("src", "dst")
 
@@ -139,7 +139,7 @@ object Graph {
     * duplicate edges merge by summing weight; same conf, same
     * identical-output contract (sum is order-free).
     */
-  private def srcWeightLayout(edges: DataFrame): DataFrame =
+  private[operators] def srcWeightLayout(edges: DataFrame): DataFrame =
     if (prededupEdges(edges))
       edges.groupBy(col("src"), col("dst")).agg(sum(col("w")).as("w"))
         .repartition(col("src"))

@@ -1,28 +1,23 @@
 package graft.streaming
 
+import graft.operators.Recurrences
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming CUSUM — the unbounded twin of [[graft.operators
   * .Analytics.cusum]]: Page's one-sided drift alarm over an endless
   * per-key stream with O(1) state (the running statistic + high-water
   * mark).
   *
-  * Arithmetic is IDENTICAL to the batch fold — `t = s + (x − drift)`
-  * then the explicit `if (t > 0) t else 0.0` branch (never max(), so
-  * signed zero cannot diverge the twins) — and an in-order feed
-  * reproduces the batch output BIT-EXACTLY (spec-pinned). Ordering/
-  * late-row contract shared with [[StreamEwma]]/[[StreamZscore]]:
-  * per-key seq, late or replayed seqs are dropped and flagged (a
-  * cumulative statistic cannot rewind). Null values emit a null row
-  * and leave state untouched.
+  * The step is the batch fold's own, [[graft.operators.Recurrences
+  * .cusum]], so an in-order feed reproduces the batch output
+  * BIT-EXACTLY (spec-pinned). Null values emit a null row and leave
+  * state untouched. Ordering and late-row contract: [[SeqFold]] (a
+  * cumulative statistic cannot rewind).
   */
 object StreamCusum {
 
   case class CRow(key: Long, seq: Long, cusum: Option[Double],
       alarm: Boolean, late: Boolean)
-
-  private[streaming] case class CState(s: Double, maxSeq: Long)
 
   def apply(
       events: Dataset[(Long, Long, Option[Double])], // (key, seq, x)
@@ -30,36 +25,10 @@ object StreamCusum {
       threshold: Double): Dataset[CRow] = {
     require(threshold > 0.0, s"StreamCusum: threshold must be > 0, got $threshold")
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (key: Long, it: Iterator[(Long, Long, Option[Double])],
-            state: GroupState[CState]) => process(key, it, state, drift, threshold))
-  }
-
-  private[streaming] def process(
-      key: Long,
-      it: Iterator[(Long, Long, Option[Double])],
-      state: GroupState[CState],
-      drift: Double,
-      threshold: Double): Iterator[CRow] = {
-    var st = state.getOption.getOrElse(CState(0.0, Long.MinValue))
-    val out = Vector.newBuilder[CRow]
-    it.toVector.sortBy(_._2).foreach { case (_, seq, xOpt) =>
-      if (seq <= st.maxSeq) out += CRow(key, seq, None, alarm = false, late = true)
-      else
-        xOpt match {
-          case None =>
-            out += CRow(key, seq, None, alarm = false, late = false)
-            st = st.copy(maxSeq = seq)
-          case Some(x) =>
-            val t = st.s + (x - drift) // same IEEE chain as the batch fold
-            val s = if (t > 0.0) t else 0.0
-            out += CRow(key, seq, Some(s), alarm = s > threshold, late = false)
-            st = CState(s, seq)
-        }
+    SeqFold(events, () => Recurrences.CusumState())(_._1, _._2)(
+      (k, _, e) => CRow(k, e._2, None, alarm = false, late = true)) { (k, st, e) =>
+      val s = Recurrences.cusum(st, e._3, drift)
+      (st, CRow(k, e._2, s, alarm = s.exists(_ > threshold), late = false))
     }
-    state.update(st)
-    out.result().iterator
   }
 }

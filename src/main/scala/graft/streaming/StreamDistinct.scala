@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming per-key running DISTINCT count — the unbounded twin of
   * [[graft.operators.Analytics.expandingDistinct]]. The batch rewrite
@@ -20,11 +19,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * .kmvInsert]] — the SAME routine as the batch kmv aggregator's
   * reduce, so cap/duplicate handling cannot diverge between the twins.
   *
-  * Ordering contract (shared with [[StreamEwma]]/[[StreamZscore]]):
-  * rows carry a per-key `seq`; each micro-batch's slice folds in seq
-  * order, and a seq at or below the high-water mark is DROPPED and
-  * surfaced with `late = true` (a running count cannot be rewound;
-  * the late row's value may or may not already be in the sketch).
+  * Ordering and late-row contract: [[SeqFold]] (a running count
+  * cannot be rewound; the late row's value may or may not already be
+  * in the sketch).
   *
   * Scale shape: one stateful exchange on the key; state is ≤ k longs
   * per key FOREVER — the entire point vs. the batch operator's
@@ -39,16 +36,15 @@ object StreamDistinct {
   case class DRow(key: Long, seq: Long, distinct_count: Double,
       exact: Boolean, late: Boolean)
 
-  private[streaming] case class DState(sketch: Array[Long], maxSeq: Long)
-
   def apply(events: Dataset[(Long, Long, Long)], k: Int = 256): Dataset[DRow] = {
     require(k >= 16, s"StreamDistinct: k must be >= 16, got $k")
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (key: Long, it: Iterator[(Long, Long, Long)],
-            state: GroupState[DState]) => process(key, it, state, k))
+    SeqFold(events, () => Array.empty[Long])(_._1, _._2)(
+      (key, _, e) => DRow(key, e._2, 0.0, exact = false, late = true)) { (key, sketch, e) =>
+      val sk = graft.functions.TypedAggregators.kmvInsert(sketch, e._3, k)
+      val (est, isExact) = estimate(sk, k)
+      (sk, DRow(key, e._2, est, isExact, late = false))
+    }
   }
 
   private def estimate(sketch: Array[Long], k: Int): (Double, Boolean) =
@@ -58,24 +54,4 @@ object StreamDistinct {
       val uTheta = (theta.toDouble - Long.MinValue.toDouble) / math.pow(2.0, 64)
       ((k - 1).toDouble / uTheta, false)
     }
-
-  private[streaming] def process(
-      key: Long,
-      it: Iterator[(Long, Long, Long)],
-      state: GroupState[DState],
-      k: Int): Iterator[DRow] = {
-    var st = state.getOption.getOrElse(DState(Array.empty, Long.MinValue))
-    val out = Vector.newBuilder[DRow]
-    it.toVector.sortBy(_._2).foreach { case (_, seq, h) =>
-      if (seq <= st.maxSeq) out += DRow(key, seq, 0.0, exact = false, late = true)
-      else {
-        val sk = graft.functions.TypedAggregators.kmvInsert(st.sketch, h, k)
-        val (est, isExact) = estimate(sk, k)
-        out += DRow(key, seq, est, isExact, late = false)
-        st = DState(sk, seq)
-      }
-    }
-    state.update(st)
-    out.result().iterator
-  }
 }

@@ -1,71 +1,33 @@
 package graft.streaming
 
+import graft.operators.Recurrences
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming EWMA — the unbounded twin of [[graft.operators.Analytics
   * .ewma]]: per-key exponential smoothing over an endless stream with
   * O(1) state per key (the current smoothed value — no ring buffer at
   * all, the entire history is folded into one double).
   *
-  * Arithmetic is IDENTICAL to the batch operator — the same
-  * `α·x + (1−α)·s` IEEE multiply-add in per-key seq order, seeded at
-  * the first value — so an in-order feed reproduces the batch output
+  * The step is the batch operator's own, [[graft.operators.Recurrences
+  * .ewma]], so an in-order feed reproduces the batch output
   * BIT-EXACTLY (spec-pinned). A null value emits a null smoothed row
-  * and leaves state untouched, exactly like the batch fold.
+  * and leaves state untouched.
   *
-  * Ordering contract (shared with [[StreamZscore]]): rows carry a
-  * per-key `seq`; each batch's slice is sorted by it before folding,
-  * and batches must arrive in per-key seq order. A seq at or below
-  * the state's high-water mark is DROPPED and surfaced with a null
-  * ewma and `late = true` — EWMA state cannot be rewound, so silently
-  * folding a stale row would corrupt every later value.
-  *
-  * Scale shape: one stateful exchange on the key; state per key is
-  * (double, boolean, long) regardless of stream length — strictly
-  * smaller than any windowed aggregate, which is why EWMA is the
-  * classic streaming smoother.
+  * Ordering and late-row contract: [[SeqFold]]. A late row carries a
+  * null ewma.
   */
 object StreamEwma {
 
   case class ERow(key: Long, seq: Long, ewma: Option[Double], late: Boolean)
-
-  private[streaming] case class EState(s: Double, seeded: Boolean, maxSeq: Long)
 
   def apply(
       events: Dataset[(Long, Long, Option[Double])], // (key, seq, x)
       alpha: Double): Dataset[ERow] = {
     require(alpha > 0.0 && alpha <= 1.0, s"StreamEwma: need 0 < alpha <= 1, got $alpha")
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (key: Long, it: Iterator[(Long, Long, Option[Double])],
-            state: GroupState[EState]) => process(key, it, state, alpha))
-  }
-
-  private[streaming] def process(
-      key: Long,
-      it: Iterator[(Long, Long, Option[Double])],
-      state: GroupState[EState],
-      alpha: Double): Iterator[ERow] = {
-    val beta = 1.0 - alpha // same literal chain as the batch operator
-    var st = state.getOption.getOrElse(EState(0.0, seeded = false, Long.MinValue))
-    val out = Vector.newBuilder[ERow]
-    it.toVector.sortBy(_._2).foreach { case (_, seq, xOpt) =>
-      if (seq <= st.maxSeq) out += ERow(key, seq, None, late = true)
-      else
-        xOpt match {
-          case None =>
-            out += ERow(key, seq, None, late = false)
-            st = st.copy(maxSeq = seq)
-          case Some(x) =>
-            val s = if (!st.seeded) x else alpha * x + beta * st.s
-            out += ERow(key, seq, Some(s), late = false)
-            st = EState(s, seeded = true, maxSeq = seq)
-        }
+    SeqFold(events, () => Recurrences.EwmaState())(_._1, _._2)(
+      (k, _, e) => ERow(k, e._2, None, late = true)) { (k, st, e) =>
+      (st, ERow(k, e._2, Recurrences.ewma(st, e._3, alpha), late = false))
     }
-    state.update(st)
-    out.result().iterator
   }
 }

@@ -1,11 +1,13 @@
 package graft.streaming
 
+import graft.operators.Analytics
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming ordered funnel — the unbounded twin of
   * [[graft.operators.Analytics.funnel]], keyed state per user via
-  * `flatMapGroupsWithState`.
+  * `flatMapGroupsWithState`. Its match predicate is the batch funnel's
+  * own, [[graft.operators.Analytics.funnelStepMatches]].
   *
   * Semantics: events are greedily matched against `steps` in event-time
   * order WITHIN each micro-batch (batch contents are sorted before the
@@ -61,15 +63,10 @@ object StreamFunnel {
     }
     var s = state.getOption.getOrElse(FunnelState(0, -1L, -1L))
     val before = s.done
-    val batch = it.toArray.sortBy(_.tsUs)
-    var i = 0
-    while (i < batch.length && s.done < steps.length) {
-      val e = batch(i)
-      if (e.et == steps(s.done) && (s.done == 0 || e.tsUs > s.tLastUs) &&
-        (s.done == 0 || maxSpanUs == Long.MaxValue || e.tsUs - s.t0Us <= maxSpanUs)) {
+    it.toArray.sortBy(_.tsUs).foreach { e =>
+      if (Analytics.funnelStepMatches(steps, maxSpanUs, s.done, s.t0Us, s.tLastUs,
+          e.et, e.tsUs))
         s = FunnelState(s.done + 1, if (s.done == 0) e.tsUs else s.t0Us, e.tsUs)
-      }
-      i += 1
     }
     state.update(s)
     if (stateTimeoutMs > 0) state.setTimeoutDuration(stateTimeoutMs)

@@ -1,7 +1,7 @@
 package graft.streaming
 
+import graft.operators.Recurrences
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming Holt smoothing — the unbounded twin of
   * [[graft.operators.Analytics.holt]]: per-key level+trend double
@@ -10,31 +10,18 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * which is exactly why Holt is the streaming forecaster of choice
   * over windowed fits).
   *
-  * Arithmetic is IDENTICAL to the batch operator — the same
-  * `l' = α·x + (1−α)(l+b); b' = β(l'−l) + (1−β)b` IEEE chain in
-  * per-key seq order, seeded (l = first x, b = 0) at the first value
-  * — so an in-order feed reproduces the batch output BIT-EXACTLY
-  * (spec-pinned). A null value emits a null row and leaves the
-  * smoothing state untouched, exactly like the batch fold.
+  * The step is the batch operator's own, [[graft.operators.Recurrences
+  * .holt]], so an in-order feed reproduces the batch output
+  * BIT-EXACTLY (spec-pinned). A null value emits a null row and leaves
+  * the smoothing state untouched.
   *
-  * Ordering contract (shared with [[StreamEwma]] / [[StreamZscore]]):
-  * rows carry a per-key `seq`; each batch's slice is sorted by it
-  * before folding, and batches must arrive in per-key seq order. A
-  * seq at or below the state's high-water mark is DROPPED and
-  * surfaced with null outputs and `late = true` — fold state cannot
-  * be rewound, so silently folding a stale row would corrupt every
-  * later value.
-  *
-  * Scale shape: one stateful exchange on the key; state per key is
-  * (double, double, boolean, long) regardless of stream length.
+  * Ordering and late-row contract: [[SeqFold]]. A late row carries
+  * null outputs.
   */
 object StreamHolt {
 
   case class HRow(key: Long, seq: Long, level: Option[Double],
       trend: Option[Double], forecast: Option[Double], late: Boolean)
-
-  private[streaming] case class HState(l: Double, b: Double,
-      seeded: Boolean, maxSeq: Long)
 
   def apply(
       events: Dataset[(Long, Long, Option[Double])], // (key, seq, x)
@@ -42,42 +29,10 @@ object StreamHolt {
     require(alpha > 0.0 && alpha <= 1.0, s"StreamHolt: need 0 < alpha <= 1, got $alpha")
     require(beta >= 0.0 && beta <= 1.0, s"StreamHolt: need 0 <= beta <= 1, got $beta")
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (key: Long, it: Iterator[(Long, Long, Option[Double])],
-            state: GroupState[HState]) => process(key, it, state, alpha, beta))
-  }
-
-  private[streaming] def process(
-      key: Long,
-      it: Iterator[(Long, Long, Option[Double])],
-      state: GroupState[HState],
-      alpha: Double, beta: Double): Iterator[HRow] = {
-    val a2 = 1.0 - alpha // same literal chain as the batch operator
-    val b2 = 1.0 - beta
-    var st = state.getOption.getOrElse(
-      HState(0.0, 0.0, seeded = false, Long.MinValue))
-    val out = Vector.newBuilder[HRow]
-    it.toVector.sortBy(_._2).foreach { case (_, seq, xOpt) =>
-      if (seq <= st.maxSeq) out += HRow(key, seq, None, None, None, late = true)
-      else
-        xOpt match {
-          case None =>
-            out += HRow(key, seq, None, None, None, late = false)
-            st = st.copy(maxSeq = seq)
-          case Some(x) =>
-            if (!st.seeded) st = HState(x, 0.0, seeded = true, maxSeq = seq)
-            else {
-              val lNew = alpha * x + a2 * (st.l + st.b)
-              val bNew = beta * (lNew - st.l) + b2 * st.b
-              st = HState(lNew, bNew, seeded = true, maxSeq = seq)
-            }
-            out += HRow(key, seq, Some(st.l), Some(st.b),
-              Some(st.l + st.b), late = false)
-        }
+    SeqFold(events, () => Recurrences.HoltState())(_._1, _._2)(
+      (k, _, e) => HRow(k, e._2, None, None, None, late = true)) { (k, st, e) =>
+      val (l, b, f) = Recurrences.holt(st, e._3, alpha, beta)
+      (st, HRow(k, e._2, l, b, f, late = false))
     }
-    state.update(st)
-    out.result().iterator
   }
 }

@@ -1,7 +1,7 @@
 package graft.streaming
 
+import graft.operators.Recurrences
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming Holt-Winters — the unbounded twin of
   * [[graft.operators.Analytics.holtWinters]]: per-key additive triple
@@ -11,21 +11,16 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * through it; the third member of the
   * [[StreamEwma]] → [[StreamHolt]] → this state-fold family.
   *
-  * Arithmetic is IDENTICAL to the batch operator — the same
-  * l'/b'/s[pos]' IEEE chain in per-key seq order, the same pinned
-  * seed (l = first x, b = 0, seasonals all 0) — so an in-order feed
-  * reproduces the batch output BIT-EXACTLY (spec-pinned). Null values
-  * emit null rows and leave state untouched; the shared ordering
-  * contract applies (per-batch sort by seq, monotone batches, stale
-  * seqs surfaced with `late = true`, never folded).
+  * The step is the batch operator's own, [[graft.operators.Recurrences
+  * .holtWinters]] (same seed, same `pos` wrap into [0, period)), so an
+  * in-order feed reproduces the batch output BIT-EXACTLY
+  * (spec-pinned). Null values emit null rows and leave state
+  * untouched. Ordering and late-row contract: [[SeqFold]].
   */
 object StreamHoltWinters {
 
   case class WRow(key: Long, seq: Long, level: Option[Double],
       trend: Option[Double], seasonal: Option[Double], late: Boolean)
-
-  private[streaming] case class WState(l: Double, b: Double, s: List[Double],
-      seeded: Boolean, maxSeq: Long)
 
   def apply(
       events: Dataset[(Long, Long, Option[Double], Int)], // (key, seq, x, pos)
@@ -35,50 +30,10 @@ object StreamHoltWinters {
     require(beta >= 0.0 && beta <= 1.0, s"StreamHoltWinters: need 0 <= beta <= 1, got $beta")
     require(gamma >= 0.0 && gamma <= 1.0, s"StreamHoltWinters: need 0 <= gamma <= 1, got $gamma")
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (key: Long, it: Iterator[(Long, Long, Option[Double], Int)],
-            state: GroupState[WState]) =>
-          process(key, it, state, period, alpha, beta, gamma))
-  }
-
-  private[streaming] def process(
-      key: Long,
-      it: Iterator[(Long, Long, Option[Double], Int)],
-      state: GroupState[WState],
-      period: Int, alpha: Double, beta: Double, gamma: Double): Iterator[WRow] = {
-    val a2 = 1.0 - alpha // same literal chain as the batch operator
-    val b2 = 1.0 - beta
-    val g2 = 1.0 - gamma
-    var st = state.getOption.getOrElse(
-      WState(0.0, 0.0, List.fill(period)(0.0), seeded = false, Long.MinValue))
-    var l = st.l
-    var b = st.b
-    val s = st.s.toArray
-    var seeded = st.seeded
-    var maxSeq = st.maxSeq
-    val out = Vector.newBuilder[WRow]
-    it.toVector.sortBy(_._2).foreach { case (_, seq, xOpt, posRaw) =>
-      if (seq <= maxSeq) out += WRow(key, seq, None, None, None, late = true)
-      else {
-        maxSeq = seq
-        xOpt match {
-          case None => out += WRow(key, seq, None, None, None, late = false)
-          case Some(x) =>
-            val p = ((posRaw % period) + period) % period
-            if (!seeded) { l = x; b = 0.0; seeded = true }
-            else {
-              val lNew = alpha * (x - s(p)) + a2 * (l + b)
-              b = beta * (lNew - l) + b2 * b
-              s(p) = gamma * (x - lNew) + g2 * s(p)
-              l = lNew
-            }
-            out += WRow(key, seq, Some(l), Some(b), Some(s(p)), late = false)
-        }
-      }
+    SeqFold(events, () => Recurrences.holtWintersState(period))(_._1, _._2)(
+      (k, _, e) => WRow(k, e._2, None, None, None, late = true)) { (k, st, e) =>
+      val (l, b, s) = Recurrences.holtWinters(st, e._3, e._4, alpha, beta, gamma)
+      (st, WRow(k, e._2, l, b, s, late = false))
     }
-    state.update(WState(l, b, s.toList, seeded, maxSeq))
-    out.result().iterator
   }
 }

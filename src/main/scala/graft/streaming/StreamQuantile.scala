@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming running QUANTILE per key — the unbounded twin of
   * [[graft.operators.Analytics.exactQuantiles]]: each arriving value
@@ -17,7 +16,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * definition — and `exact = false` flags the estimate regime past it.
   *
   * State per key: ≤ k (hash, value) pairs + count + high-water mark,
-  * forever. Ordering/late contract shared with the other twins.
+  * forever. Ordering and late-row contract: [[SeqFold]]; a late row
+  * carries the current count and a null quantile.
   */
 object StreamQuantile {
 
@@ -25,7 +25,7 @@ object StreamQuantile {
       exact: Boolean, late: Boolean)
 
   private[streaming] case class QState(
-      hashes: Array[Long], values: Array[Double], n: Long, maxSeq: Long)
+      hashes: Array[Long], values: Array[Double], n: Long)
 
   /** md5-derived 64-bit row hash — reproducible, no RNG state. */
   private[streaming] def rowHash(key: Long, seq: Long): Long = {
@@ -42,38 +42,12 @@ object StreamQuantile {
     require(p > 0.0 && p <= 1.0, s"StreamQuantile: p must be in (0,1], got $p")
     require(k >= 16, s"StreamQuantile: k must be >= 16, got $k")
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (key: Long, it: Iterator[(Long, Long, Option[Double])],
-            state: GroupState[QState]) => process(key, it, state, p, k))
-  }
-
-  /** Type-1 (lower) quantile of the sample — the batch definition. */
-  private def sampleQuantile(values: Array[Double], p: Double): Double = {
-    val sorted = values.clone()
-    java.util.Arrays.sort(sorted)
-    val rank = math.ceil(p * sorted.length).toLong.toInt.max(1)
-    sorted(rank - 1)
-  }
-
-  private[streaming] def process(
-      key: Long,
-      it: Iterator[(Long, Long, Option[Double])],
-      state: GroupState[QState],
-      p: Double,
-      k: Int): Iterator[QRow] = {
-    var st = state.getOption.getOrElse(
-      QState(Array.empty, Array.empty, 0L, Long.MinValue))
-    val out = Vector.newBuilder[QRow]
-    it.toVector.sortBy(_._2).foreach { case (_, seq, xOpt) =>
-      if (seq <= st.maxSeq)
-        out += QRow(key, seq, st.n, None, exact = false, late = true)
-      else
-        xOpt match {
-          case None =>
-            out += QRow(key, seq, st.n, None, exact = st.n <= k, late = false)
-            st = st.copy(maxSeq = seq)
+    SeqFold(events, () => QState(Array.empty, Array.empty, 0L))(_._1, _._2)(
+      (key, st, e) => QRow(key, e._2, st.n, None, exact = false, late = true)) {
+      (key, st, e) =>
+        val seq = e._2
+        e._3 match {
+          case None => (st, QRow(key, seq, st.n, None, exact = st.n <= k, late = false))
           case Some(x) =>
             val h = rowHash(key, seq)
             val pos = java.util.Arrays.binarySearch(st.hashes, h)
@@ -91,12 +65,17 @@ object StreamQuantile {
                 (nh, nv)
               }
             val n = st.n + 1
-            st = QState(hs, vs, n, seq)
-            out += QRow(key, seq, n, Some(sampleQuantile(vs, p)),
-              exact = n <= k, late = false)
+            (QState(hs, vs, n), QRow(key, seq, n, Some(sampleQuantile(vs, p)),
+              exact = n <= k, late = false))
         }
     }
-    state.update(st)
-    out.result().iterator
+  }
+
+  /** Type-1 (lower) quantile of the sample — the batch definition. */
+  private def sampleQuantile(values: Array[Double], p: Double): Double = {
+    val sorted = values.clone()
+    java.util.Arrays.sort(sorted)
+    val rank = math.ceil(p * sorted.length).toLong.toInt.max(1)
+    sorted(rank - 1)
   }
 }

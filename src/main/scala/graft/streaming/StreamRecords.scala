@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming running-record detector — the live twin of
   * [[graft.operators.Analytics.runningRecords]]: per key, O(1) state
@@ -11,13 +10,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * monitor you want live rather than in the nightly batch — state is
   * three longs per key no matter how long the stream runs.
   *
-  * Ordering contract (the [[StreamZscore]] discipline): rows carry a
-  * per-key tick; each batch's slice is sorted by it before folding
-  * (the group iterator arrives unordered), and a tick at or below
-  * the high-water mark is DROPPED and surfaced with `late = true`
-  * rather than silently corrupting the record sequence. On an
-  * in-order feed the final per-key (n, n_records, last_record_tick,
-  * max_value) equals the batch operator exactly (spec-pinned).
+  * Ordering and late-row contract: [[SeqFold]], with the tick as the
+  * seq — a late tick is surfaced with `late = true` rather than
+  * silently corrupting the record sequence. On an in-order feed the
+  * final per-key (n, n_records, last_record_tick, max_value) equals
+  * the batch operator exactly (spec-pinned).
   *
   * Emits one row per INPUT row: (key, tick, value, record, nRecords,
   * maxValue, late).
@@ -27,32 +24,17 @@ object StreamRecords {
   case class RRow(key: String, tick: Long, value: Long, record: Boolean,
       nRecords: Long, maxValue: Long, late: Boolean)
 
-  private[streaming] case class RState(max: Long, nRec: Long, hwm: Long)
+  private[streaming] case class RState(max: Long, nRec: Long)
 
   def apply(events: Dataset[(String, Long, Long)]): Dataset[RRow] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (key: String, it: Iterator[(String, Long, Long)],
-         state: GroupState[RState]) => process(key, it, state))
-  }
-
-  private[streaming] def process(
-      key: String,
-      it: Iterator[(String, Long, Long)],
-      state: GroupState[RState]): Iterator[RRow] = {
-    var st = state.getOption.getOrElse(RState(Long.MinValue, 0L, Long.MinValue))
-    val out = it.toVector.sortBy(_._2).map { case (_, t, v) =>
-      if (t <= st.hwm) {
-        RRow(key, t, v, record = false, st.nRec, st.max, late = true)
-      } else {
+    SeqFold(events, () => RState(Long.MinValue, 0L))(_._1, _._2)(
+      (key, st, e) => RRow(key, e._2, e._3, record = false, st.nRec, st.max, late = true)) {
+      (key, st, e) =>
+        val (t, v) = (e._2, e._3)
         val isRec = v > st.max || st.nRec == 0L
-        st = RState(math.max(st.max, v), st.nRec + (if (isRec) 1L else 0L), t)
-        RRow(key, t, v, isRec, st.nRec, st.max, late = false)
-      }
+        val next = RState(math.max(st.max, v), st.nRec + (if (isRec) 1L else 0L))
+        (next, RRow(key, t, v, isRec, next.nRec, next.max, late = false))
     }
-    state.update(st)
-    out.iterator
   }
 }

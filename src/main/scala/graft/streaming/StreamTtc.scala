@@ -12,10 +12,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * State is O(1) per key forever: (anchor µs, converted flag,
   * high-water µs). On an in-order feed the emitted (from_us, to_us,
   * delay_s) triple equals the batch operator's row bit-for-bit
-  * (spec-pinned). The ordering contract matches the other fold twins:
-  * rows per batch are sorted by timestamp before folding and batches
-  * arrive in per-key time order; a row at or below the high-water
-  * mark is surfaced with `late = true` and NOT folded — a late
+  * (spec-pinned). The ordering contract is [[SeqFold]]'s with one
+  * difference, which is why this twin keeps its own fold: rows sort
+  * by (µs, kind) and only a row strictly BELOW the high-water mark is
+  * late, so a from-event and a to-event at the same instant both fold.
+  * A late row is surfaced with `late = true` and NOT folded — a late
   * earlier from-event could only have moved the anchor backward, and
   * conversion rows, once emitted, are immutable facts downstream.
   */

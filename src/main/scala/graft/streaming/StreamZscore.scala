@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.Dataset
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming trailing-window z-score — the unbounded twin of
   * [[graft.operators.Analytics.rollingZscore]]: flag each value
@@ -14,13 +13,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * min-periods and zero-variance decided in integers — so an in-order
   * feed reproduces the batch output BIT-EXACTLY (spec-pinned).
   *
-  * Ordering contract: rows carry a per-key `seq`; each batch's slice
-  * is sorted by it before folding (flatMapGroupsWithState hands the
-  * group iterator unordered), and batches must arrive in per-key seq
-  * order. A seq at or below the state's high-water mark (a late or
-  * duplicate row) is DROPPED and surfaced with a null z and
-  * `late = true` rather than silently re-anchoring history — the same
-  * explicitly-pinned late-data divergence as [[StreamFunnel]].
+  * Ordering and late-row contract: [[SeqFold]]. A late or duplicate
+  * row is surfaced with a null z and never enters the window, rather
+  * than silently re-anchoring history.
   *
   * Scale shape: one stateful exchange on the key; state per key is the
   * ring buffer + two running sums (updated O(1) per event, never
@@ -36,8 +31,8 @@ object StreamZscore {
   case class ZRow(key: String, seq: Long, x: Long, n: Long,
       z: Option[Double], isAnomaly: Boolean, late: Boolean)
 
-  private[streaming] case class ZState(
-      ring: Vector[Long], s: Long, q: Long, maxSeq: Long)
+  /** The trailing ring buffer and its exact running sums Σx, Σx². */
+  private[streaming] case class ZState(ring: Vector[Long], s: Long, q: Long)
 
   def apply(
       events: Dataset[(String, Long, Long)], // (key, seq, x)
@@ -49,29 +44,11 @@ object StreamZscore {
       s"StreamZscore: need 2 <= minPeriods <= window, got $minPeriods")
     require(threshold > 0, s"StreamZscore: threshold must be > 0, got $threshold")
     import events.sparkSession.implicits._
-    events
-      .filter((e: (String, Long, Long)) => e._1 != null)
-      .groupByKey(_._1)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        (key: String, it: Iterator[(String, Long, Long)], state: GroupState[ZState]) =>
-          process(key, it, state, window, minPeriods, threshold))
-  }
-
-  private[streaming] def process(
-      key: String,
-      it: Iterator[(String, Long, Long)],
-      state: GroupState[ZState],
-      window: Int,
-      minPeriods: Int,
-      threshold: Double): Iterator[ZRow] = {
-    var st = state.getOption.getOrElse(ZState(Vector.empty, 0L, 0L, Long.MinValue))
-    val out = Vector.newBuilder[ZRow]
-    // the group iterator is unordered; the batch slice is bounded by
-    // the trigger's batch size, so an in-memory sort is safe
-    it.toVector.sortBy(_._2).foreach { case (_, seq, x) =>
-      if (seq <= st.maxSeq) {
-        out += ZRow(key, seq, x, 0L, None, isAnomaly = false, late = true)
-      } else {
+    val keyed = events.filter((e: (String, Long, Long)) => e._1 != null)
+    SeqFold(keyed, () => ZState(Vector.empty, 0L, 0L))(_._1, _._2)(
+      (k, _, e) => ZRow(k, e._2, e._3, 0L, None, isAnomaly = false, late = true)) {
+      (k, st, e) =>
+        val x = e._3
         val n = st.ring.size.toLong
         val z =
           if (n >= minPeriods && n * st.q - st.s * st.s > 0)
@@ -80,18 +57,14 @@ object StreamZscore {
               math.sqrt((n * st.q - st.s * st.s).toDouble * n.toDouble /
                 (n - 1).toDouble))
           else None
-        out += ZRow(key, seq, x, n, z,
-          isAnomaly = z.exists(v => math.abs(v) > threshold), late = false)
         val grown = st.ring :+ x
-        val (ring, s, q) =
+        val next =
           if (grown.size > window)
-            (grown.tail, st.s + x - grown.head,
+            ZState(grown.tail, st.s + x - grown.head,
               st.q + x * x - grown.head * grown.head)
-          else (grown, st.s + x, st.q + x * x)
-        st = ZState(ring, s, q, seq)
-      }
+          else ZState(grown, st.s + x, st.q + x * x)
+        (next, ZRow(k, e._2, x, n, z,
+          isAnomaly = z.exists(v => math.abs(v) > threshold), late = false))
     }
-    state.update(st)
-    out.result().iterator
   }
 }

@@ -19,12 +19,13 @@ class GraphEdgeSkewSpec extends SparkSpec {
   }
 
   // one hub node whose 40 distinct edges are duplicated 500x each
-  // (20000 skewed rows) + a sparse remainder
+  // (20000 skewed rows) + a sparse remainder; the weight `w` varies
+  // across a hub edge's duplicates, so merging them must sum it
   private def hubEdges() = {
     import spark.implicits._
-    val hub = (1 to 40).flatMap(d => Seq.fill(500)((0L, d.toLong)))
-    val rest = (1 to 200).map(i => (i.toLong, (i % 97 + 1).toLong))
-    (hub ++ rest).toDF("s", "d").repartition(4)
+    val hub = (1 to 40).flatMap(d => (1 to 500).map(j => (0L, d.toLong, (j % 3 + 1).toLong)))
+    val rest = (1 to 200).map(i => (i.toLong, (i % 97 + 1).toLong, (i % 5 + 1).toLong))
+    (hub ++ rest).toDF("s", "d", "w").repartition(4)
   }
 
   test("pageRank identical with and without the prededup layout") {
@@ -38,6 +39,19 @@ class GraphEdgeSkewSpec extends SparkSpec {
     val off = run(false); val on = run(true)
     assert(off.nonEmpty && off.sameElements(on),
       "prededup layout changed pageRank output")
+  }
+
+  test("weighted pageRank identical with and without the prededup layout") {
+    val e = hubEdges()
+    def run(on: Boolean): Array[String] = withPrededup(on) {
+      val r = Graph.pageRankWeighted(e, "s", "d", "w", iters = 2)
+        .collect().map(_.toString).sorted
+      graft.core.CacheRegistry.unpersistAll()
+      r
+    }
+    val off = run(false); val on = run(true)
+    assert(off.nonEmpty && off.sameElements(on),
+      "prededup layout changed weighted pageRank output")
   }
 
   test("hopDistance identical with and without the prededup layout") {
@@ -55,24 +69,31 @@ class GraphEdgeSkewSpec extends SparkSpec {
   }
 
   test("prededup plans the dedup BELOW the src repartition, spread over (src, dst)") {
-    val e = hubEdges().select(col("s").as("src"), col("d").as("dst"))
-    def plan(on: Boolean): String = withPrededup(on) {
-      val out =
-        if (on) e.dropDuplicates("src", "dst").repartition(col("src"))
-        else e.repartition(col("src")).dropDuplicates("src", "dst")
-      out.queryExecution.executedPlan.toString
-    }
-    val guarded = plan(true)
+    val e = hubEdges().select(col("s").as("src"), col("d").as("dst"), col("w"))
     // the dedup aggregate's exchange must key on BOTH src and dst —
     // that spread is exactly what bounds a duplicated hub's partition
     val dedupExchange =
       """hashpartitioning\(src#\d+L, dst#\d+L""".r
-    assert(dedupExchange.findFirstIn(guarded).isDefined,
-      s"no (src, dst) exchange in the guarded plan:\n$guarded")
-    // map-side partial aggregation before that exchange (the
-    // pre-shuffle reduction that shrinks the duplicated hub)
-    assert(guarded.contains("partial_first") || guarded.split("\n")
-        .exists(l => l.contains("HashAggregate") && l.contains("keys=[src")),
-      s"no partial dedup aggregate in the guarded plan:\n$guarded")
+    Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      "srcEdgeLayout" -> (df => Graph.srcEdgeLayout(df.drop("w"))),
+      "srcWeightLayout" -> (df => Graph.srcWeightLayout(df))
+    ).foreach { case (name, layout) =>
+      def plan(on: Boolean): String = withPrededup(on) {
+        layout(e).queryExecution.executedPlan.toString
+      }
+      val guarded = plan(true)
+      assert(dedupExchange.findFirstIn(guarded).isDefined,
+        s"$name: no (src, dst) exchange in the guarded plan:\n$guarded")
+      // map-side partial aggregation before that exchange (the
+      // pre-shuffle reduction that shrinks the duplicated hub)
+      assert(guarded.contains("partial_first") || guarded.split("\n")
+          .exists(l => l.contains("HashAggregate") && l.contains("keys=[src")),
+        s"$name: no partial dedup aggregate in the guarded plan:\n$guarded")
+      // the default layout is ONE exchange on src: its dedup plans onto
+      // that partitioning with no (src, dst) exchange
+      val default = plan(false)
+      assert(dedupExchange.findFirstIn(default).isEmpty,
+        s"$name: the default layout shuffles on (src, dst):\n$default")
+    }
   }
 }

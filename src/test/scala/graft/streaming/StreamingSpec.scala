@@ -1173,6 +1173,32 @@ class StreamingSpec extends SparkSpec {
     assert(bySeq(3L).isEmpty)
     // seq 4 folds onto (15, 1.5): l = .5*30 + .5*16.5 = 23.25
     assert(bySeq(4L).contains(23.25))
+
+    // Holt-Winters through the same driver: a stale seq (2) and a
+    // duplicate of the high-water mark (3) are flagged with null
+    // outputs and never folded
+    import graft.streaming.StreamHoltWinters
+    val inW = MemoryStream[(Long, Long, Option[Double], Int)]
+    val qW = StreamHoltWinters(inW.toDS(), period = 2, alpha = 0.5, beta = 0.5, gamma = 0.5)
+      .writeStream.format("memory").queryName("hw_late").outputMode("append").start()
+    inW.addData(Seq((9L, 1L, Some(10.0), 0), (9L, 2L, Some(20.0), 1)))
+    qW.processAllAvailable()
+    inW.addData(Seq((9L, 2L, Some(999.0), 1), (9L, 3L, Some(30.0), 0)))
+    qW.processAllAvailable()
+    inW.addData(Seq((9L, 3L, Some(-999.0), 0), (9L, 4L, Some(40.0), 1)))
+    qW.processAllAvailable(); qW.stop()
+    val rowsW = spark.table("hw_late").as[StreamHoltWinters.WRow].collect()
+    val lateW = rowsW.filter(_.late)
+    assert(lateW.map(_.seq).sorted.toSeq == Seq(2L, 3L) &&
+      lateW.forall(r => r.level.isEmpty && r.trend.isEmpty && r.seasonal.isEmpty))
+    // seed l=10; seq2: l=15 b=2.5 s1=2.5; seq3: l=23.75 b=5.625 s0=3.125;
+    // seq4 folds onto seq 3, not onto either replay
+    assert(rowsW.filterNot(_.late).map(r => r.seq -> ((r.level, r.trend, r.seasonal)))
+      .toMap == Map(
+        1L -> ((Some(10.0), Some(0.0), Some(0.0))),
+        2L -> ((Some(15.0), Some(2.5), Some(2.5))),
+        3L -> ((Some(23.75), Some(5.625), Some(3.125))),
+        4L -> ((Some(33.4375), Some(7.65625), Some(4.53125)))))
   }
 
   test("streaming EWMA: late seqs are flagged, nulls skip without resetting state") {
@@ -1337,6 +1363,24 @@ class StreamingSpec extends SparkSpec {
     // estimates never decrease on a pure-insert feed... not guaranteed for KMV
     // (theta only moves when a smaller hash lands), but they must stay positive
     assert(tail.forall(_.distinct_count > 0))
+
+    // the sampled-quantile twin through the same driver: a stale seq
+    // (3) and a duplicate of the high-water mark (5) are flagged, carry
+    // no quantile, and never enter the sample
+    import graft.streaming.StreamQuantile
+    val inQ = MemoryStream[(Long, Long, Option[Double])]
+    val qQ = StreamQuantile(inQ.toDS(), p = 0.5, k = 16)
+      .writeStream.format("memory").queryName("sq_late").outputMode("append").start()
+    inQ.addData((1 to 5).map(i => (7L, i.toLong, Some(i.toDouble))))
+    qQ.processAllAvailable()
+    inQ.addData(Seq((7L, 3L, Some(1000.0)), (7L, 5L, Some(1000.0)), (7L, 6L, Some(6.0))))
+    qQ.processAllAvailable(); qQ.stop()
+    val rowsQ = spark.table("sq_late").as[StreamQuantile.QRow].collect()
+    val lateQ = rowsQ.filter(_.late)
+    assert(lateQ.map(_.seq).sorted.toSeq == Seq(3L, 5L) && lateQ.forall(_.quantile.isEmpty))
+    // seq 6: lower median of 1..6, as if the replays never arrived
+    val r6 = rowsQ.find(r => r.seq == 6L && !r.late).get
+    assert(r6.n == 6L && r6.quantile.contains(3.0) && r6.exact)
   }
 
   test("HotSwap: in-flight transform rewrite — same runId, no restart, batch-boundary handoff") {
@@ -1604,28 +1648,33 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.functions.col
     implicit val sqlCtx = spark.sqlContext
     val rnd = new scala.util.Random(21)
-    val data = (0 until 20).map(i =>
-      (1L, i.toLong, Some(rnd.nextDouble() * 30), i % 7))
-    val in = MemoryStream[(Long, Long, Option[Double], Int)]
-    val q = StreamHoltWinters(in.toDS(), period = 7,
-        alpha = 0.5, beta = 0.25, gamma = 0.5)
-      .writeStream.format("memory").queryName("hw_out").outputMode("append").start()
-    val (b1, b2) = data.partition(_._2 <= 9) // split mid-history
-    in.addData(b1); q.processAllAvailable()
-    in.addData(b2); q.processAllAvailable(); q.stop()
-    val streamed = spark.table("hw_out").as[StreamHoltWinters.WRow].collect()
-      .map(r => r.seq -> ((r.level, r.trend, r.seasonal))).toMap
-    val batch = graft.operators.Analytics.holtWinters(
-        data.map(t => (t._1, t._2, t._3.get, t._4)).toDF("k", "seq", "x", "p"),
-        col("k"), Seq(col("seq")), col("seq"), col("x"), col("p"),
-        period = 7, alpha = 0.5, beta = 0.25, gamma = 0.5)
-      .collect().map(r => r.getLong(0) ->
-        ((r.getDouble(2), r.getDouble(3), r.getDouble(4)))).toMap
-    assert(streamed.size == data.size)
-    data.foreach { case (_, i, _, _) =>
-      val (sl, st_, ss) = streamed(i)
-      assert(sl.contains(batch(i)._1) && st_.contains(batch(i)._2) &&
-        ss.contains(batch(i)._3), s"seq $i") // == on doubles
+    val xs = (0 until 20).map(_ => rnd.nextDouble() * 30)
+    // season positions in [0, period), then negative ones: both twins
+    // wrap a position into [0, period) the same way
+    Seq[(String, Int => Int)]("hw_out" -> (_ % 7), "hw_neg" -> (_ - 30)).foreach {
+      case (name, posOf) =>
+        val data = xs.zipWithIndex.map { case (x, i) => (1L, i.toLong, Some(x), posOf(i)) }
+        val in = MemoryStream[(Long, Long, Option[Double], Int)]
+        val q = StreamHoltWinters(in.toDS(), period = 7,
+            alpha = 0.5, beta = 0.25, gamma = 0.5)
+          .writeStream.format("memory").queryName(name).outputMode("append").start()
+        val (b1, b2) = data.partition(_._2 <= 9) // split mid-history
+        in.addData(b1); q.processAllAvailable()
+        in.addData(b2); q.processAllAvailable(); q.stop()
+        val streamed = spark.table(name).as[StreamHoltWinters.WRow].collect()
+          .map(r => r.seq -> ((r.level, r.trend, r.seasonal))).toMap
+        val batch = graft.operators.Analytics.holtWinters(
+            data.map(t => (t._1, t._2, t._3.get, t._4)).toDF("k", "seq", "x", "p"),
+            col("k"), Seq(col("seq")), col("seq"), col("x"), col("p"),
+            period = 7, alpha = 0.5, beta = 0.25, gamma = 0.5)
+          .collect().map(r => r.getLong(0) ->
+            ((r.getDouble(2), r.getDouble(3), r.getDouble(4)))).toMap
+        assert(streamed.size == data.size && batch.size == data.size, name)
+        data.foreach { case (_, i, _, _) =>
+          val (sl, st_, ss) = streamed(i)
+          assert(sl.contains(batch(i)._1) && st_.contains(batch(i)._2) &&
+            ss.contains(batch(i)._3), s"$name seq $i") // == on doubles
+        }
     }
   }
 
