@@ -687,8 +687,9 @@ object Analytics {
     * of narrow (key, id, value, order) rows.
     *
     * The step is [[Recurrences.ewma]], shared with the stream twin
-    * `graft.streaming.StreamEwma`. Null keys are dropped (no sequence
-    * identity); a null value emits a null smoothed row and leaves the
+    * `graft.streaming.StreamEwma`. Rows with a null key or a null id
+    * are dropped (no sequence identity, nothing to emit); a null value
+    * emits a null smoothed row and leaves the
     * accumulator untouched, so one missing reading neither poisons nor
     * resets the trend. Output: `id, key, ewma` (key/id cast to long,
     * value to double).
@@ -719,8 +720,9 @@ object Analytics {
     * over shuffle-sorted rows (`flatMapSortedGroups`), O(1) state. The
     * step is [[Recurrences.cusum]], shared with the stream twin
     * `graft.streaming.StreamCusum`: its clamp is the explicit branch
-    * the recursive-CTE oracle mirrors. Null values emit a null cusum
-    * row and leave state untouched (the ewma contract). Output:
+    * the recursive-CTE oracle mirrors. Null-key and null-id rows drop;
+    * null values emit a null cusum row and leave state untouched (the
+    * ewma contract). Output:
     * id, key, cusum, alarm.
     */
   def cusum(
@@ -742,8 +744,9 @@ object Analytics {
   }
 
   /** The sorted-group fold [[ewma]], [[cusum]], [[holt]] and
-    * [[holtWinters]] share. Rows with a null key (or a null `pos`, when
-    * given) drop; the rest are projected to (key long, id long, value
+    * [[holtWinters]] share. Rows with a null key, a null id (the output
+    * `id` is non-nullable, and such a row has no identity to emit) or a
+    * null `pos`, when given, drop in one filter; the rest are projected to (key long, id long, value
     * double, pos int) and stream per key through one shuffle on the key
     * in `orderBy` order (`flatMapSortedGroups` secondary-sorts inside
     * that shuffle, so a hot key never buffers on the heap). `perKey`
@@ -761,7 +764,7 @@ object Analytics {
       perKey: Long => (Long, Option[Double], Int) => T): Dataset[T] = {
     val ordCols = orderBy.zipWithIndex.map { case (c, i) => c.as(s"_o$i") }
     val hasPos = pos.isDefined
-    df.where(pos.foldLeft(key.isNotNull)(_ && _.isNotNull))
+    df.where(pos.foldLeft(key.isNotNull && id.isNotNull)(_ && _.isNotNull))
       .select(key.cast("long").as("_k") +: id.cast("long").as("_id") +:
         value.cast("double").as("_v") +:
         (pos.map(_.cast("int").as("_p")).toSeq ++ ordCols): _*)
@@ -3724,7 +3727,8 @@ object Analytics {
     * shuffle, sorted-group fold, O(1) two-double state, the exact
     * IEEE chains mirrored by a recursive-CTE oracle. The step is
     * [[Recurrences.holt]], shared with the stream twin
-    * `graft.streaming.StreamHolt`. Output: (id, key, level, trend,
+    * `graft.streaming.StreamHolt`. Null-key and null-id rows drop (the
+    * ewma contract). Output: (id, key, level, trend,
     * forecast = level + trend).
     */
   def holt(
@@ -3761,8 +3765,9 @@ object Analytics {
     *
     * Seed convention (pinned, engine-reproducible): the first value
     * seeds l = x, b = 0 and ALL seasonals at 0 — the model learns the
-    * profile online rather than assuming a warm-up window. Null values
-    * emit null rows and leave state untouched ([[holt]]'s contract).
+    * profile online rather than assuming a warm-up window. Rows with a
+    * null key, id or pos drop; null values emit null rows and leave
+    * state untouched ([[holt]]'s contract).
     * Same sorted-group fold engine: one key shuffle, O(period) state.
     * The step is [[Recurrences.holtWinters]], shared with the stream
     * twin `graft.streaming.StreamHoltWinters`.

@@ -330,7 +330,7 @@ object CrawlIngest {
       .load(landingDir)
     val routed = routeRecords(Warc.warcRecords(stream, "path", "content"))
     val dynamic = Map("partitionOverwriteMode" -> "dynamic")
-    routed.writeStream
+    val writer = routed.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // the batch's checkpoints are released when it ends: the
@@ -366,6 +366,6 @@ object CrawlIngest {
           } finally CacheRegistry.unpersistAll()
         }
       }
-      .start()
+    StreamSink.start(spark, writer)
   }
 }

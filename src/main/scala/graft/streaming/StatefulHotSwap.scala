@@ -88,21 +88,18 @@ final class StatefulHotSwap(
     * in-memory `committed` reference alone would lose the pointer on a
     * driver restart even though the parquet versions survive; the
     * marker makes a RECONSTRUCTED handle resume from the accumulated
-    * state — the reference's supervision-restart story. Written
-    * tmp-then-rename; recovery falls back to the tmp if a crash lands
-    * between delete and rename (both point at a fully-written commit:
-    * the marker is only ever written AFTER its version committed).
+    * state — the reference's supervision-restart story. Written as one
+    * atomic overwrite through the session's checkpoint file manager, so
+    * once written the marker is never missing (it is only ever written
+    * AFTER its version committed). Recovery still falls back to a
+    * `_latest.tmp` that the earlier tmp/delete/rename writer could
+    * leave, so pointers written before keep resuming.
     */
-  private def writeMarker(fs: org.apache.hadoop.fs.FileSystem,
-      stateDir: String, path: String, batchId: Long,
-      prev: Option[String]): Unit = {
-    val (m, tmp) = markerPaths(stateDir)
-    val out = fs.create(tmp, true)
-    try out.write(s"$batchId\n$path\n${prev.getOrElse("-")}\n".getBytes("UTF-8"))
-    finally out.close()
-    if (fs.exists(m)) fs.delete(m, false)
-    fs.rename(tmp, m)
-    ()
+  private def writeMarker(spark: SparkSession, stateDir: String, path: String,
+      batchId: Long, prev: Option[String]): Unit = {
+    val m = markerPaths(stateDir)._1
+    LocalCheckpointFiles.writeAtomic(LocalCheckpointFiles.manager(spark, m.getParent), m,
+      s"$batchId\n$path\n${prev.getOrElse("-")}\n")
   }
 
   /** Recover the committed pointer from the durable `_latest` marker.
@@ -115,22 +112,20 @@ final class StatefulHotSwap(
     if (committed.get().isEmpty) {
       val dir = new org.apache.hadoop.fs.Path(stateDir)
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // the marker is read through the manager that writes it
+      val fm = LocalCheckpointFiles.manager(spark, dir)
       val (m, tmp) = markerPaths(stateDir)
-      val src =
-        if (fs.exists(m)) Some(m) else if (fs.exists(tmp)) Some(tmp) else None
-      src.foreach { p =>
-        val in = fs.open(p)
-        val txt =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
+      val marker =
+        LocalCheckpointFiles.readText(fm, m).orElse(LocalCheckpointFiles.readText(fm, tmp))
+      marker.foreach { txt =>
         // A crash mid-write of the tmp can leave ANY line garbled (a
         // non-numeric batch id, an empty or invalid path — new Path("")
         // itself throws); an unparseable marker must behave like a
         // MISSING one (fall back to init / on-disk versions), not wedge
         // every runBatch. But ONLY the parse rides the Try: an
         // IOException from fs.exists is a retryable infra error, not a
-        // garbled marker — it must propagate (like the sibling
-        // fs.exists(m)/fs.exists(tmp) calls above) so the batch fails
+        // garbled marker — it must propagate (like an error from the
+        // marker reads above) so the batch fails
         // retryably instead of silently discarding committed state.
         txt.split("\n").toList match {
           case bid :: path :: prev :: _ =>
@@ -186,9 +181,9 @@ final class StatefulHotSwap(
       case None                            => None
     }
     committed.set(Some(Committed(versionPath, batchId, prevPath)))
+    writeMarker(spark, stateDir, versionPath, batchId, prevPath)
     val dir = new org.apache.hadoop.fs.Path(stateDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    writeMarker(fs, stateDir, versionPath, batchId, prevPath)
     write(out, batchId)
     // GC: keep only the committed version and its predecessor (the
     // predecessor backs a possible retry of THIS batch)

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.Flow
 import graft.core.Component
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -204,6 +204,15 @@ object StreamDedup {
   * the flow (reference: lib/sink.ex:69-91 — sync:true blocks, async
   * returns; here sync means "process everything currently available,
   * then stop", the batch-test-friendly trigger).
+  *
+  * Checkpoints: every query graft starts ([[StreamSink.start]]) writes
+  * its checkpoint files — offsets, commits, source and sink logs,
+  * state-store deltas — through [[LocalCheckpointFiles]], which starts
+  * no process on a local path. A value the user set for
+  * `spark.sql.streaming.checkpointFileManagerClass` always wins. The
+  * value graft sets stays on the session, so later queries of that
+  * session, graft-started or not, use the manager too. The sink's own
+  * data files still go through Hadoop's filesystem.
   */
 final case class StreamSink(
     name: String,
@@ -220,7 +229,7 @@ final case class StreamSink(
     // mark left behind on a failed start (or when the sink already has
     // noWait=true) would poison the NEXT query on this stream name.
     val marked = graft.core.NoWait.consume(name)
-    val query = build(df).start()
+    val query = StreamSink.start(df.sparkSession, build(df))
     StreamSink.register(name, query)
     if (noWait || marked)
       StreamSink.awaitAnyInputDrained(query, noWaitTimeoutMs)
@@ -237,6 +246,24 @@ object StreamSink {
   private val registry = scala.collection.mutable.ArrayBuffer.empty[(String, StreamingQuery)]
   private def register(name: String, q: StreamingQuery): Unit =
     registry.synchronized { registry += (name -> q); () }
+
+  private val CheckpointFileManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
+
+  /** Start `writer`'s query on `spark` — the one place graft starts a
+    * streaming query. It first installs [[LocalCheckpointFiles]] as the
+    * session's checkpoint file manager, unless the session or its Hadoop
+    * configuration already names one: a user-set value wins. The value
+    * stays on the session after the query starts (the source's log is
+    * made on the query's own thread after `start` returns, so putting
+    * the old value back would race it), and every later query of the
+    * session uses the manager as well.
+    */
+  private[graft] def start(spark: SparkSession, writer: DataStreamWriter[Row]): StreamingQuery = {
+    if (spark.conf.getOption(CheckpointFileManagerKey).isEmpty &&
+        spark.sparkContext.hadoopConfiguration.get(CheckpointFileManagerKey) == null)
+      spark.conf.set(CheckpointFileManagerKey, classOf[LocalCheckpointFiles].getName)
+    writer.start()
+  }
 
   /** Remove and return the entries matching the predicate. */
   private def take(p: ((String, StreamingQuery)) => Boolean): Seq[(String, StreamingQuery)] =
@@ -374,8 +401,8 @@ object StreamSink {
     * wrapper makes the side effect idempotent with the standard
     * commit-marker protocol: a `$name-batch-$batchId` marker is written
     * to `commitDir` AFTER `f` succeeds; replays of an already-marked
-    * batch are skipped. Markers go through the Hadoop FileSystem API
-    * resolved from the session, so `commitDir` can (and SHOULD) live
+    * batch are skipped. Markers go through the session's checkpoint
+    * file manager (written atomically), so `commitDir` can (and SHOULD) live
     * next to the checkpoint on the same fault-tolerant store — a
     * driver-local path would lose the markers exactly when failover
     * replays batches. Marker-then-crash replays skip (correct — f
@@ -394,17 +421,15 @@ object StreamSink {
       f: (DataFrame, Long) => Unit): StreamSink = {
     require(retainBatches > 0, "retainBatches must be positive")
     val guarded: (DataFrame, Long) => Unit = (df, batchId) => {
-      val conf = df.sparkSession.sparkContext.hadoopConfiguration
       val dir = new org.apache.hadoop.fs.Path(commitDir)
-      val fs = dir.getFileSystem(conf)
-      fs.mkdirs(dir)
+      val fm = LocalCheckpointFiles.manager(df.sparkSession, dir)
+      fm.mkdirs(dir)
       val marker = new org.apache.hadoop.fs.Path(dir, s"$name-batch-$batchId.committed")
-      if (!fs.exists(marker)) {
+      if (!fm.exists(marker)) {
         f(df, batchId)
-        fs.create(marker, true).close()
-        val expired = new org.apache.hadoop.fs.Path(
-          dir, s"$name-batch-${batchId - retainBatches}.committed")
-        if (fs.exists(expired)) { val _ = fs.delete(expired, false) }
+        LocalCheckpointFiles.writeAtomic(fm, marker, "")
+        fm.delete(new org.apache.hadoop.fs.Path(
+          dir, s"$name-batch-${batchId - retainBatches}.committed"))
       }
     }
     StreamSink(name, _.writeStream.foreachBatch(guarded))
@@ -419,8 +444,9 @@ object StreamSink {
     * table format's MERGE does, composed from the batch operator:
     *
     *  - each batch writes a NEW version directory
-    *    `tablePath/v=<batchId>` and then flips a `_LATEST` pointer —
-    *    readers never observe a half-written table, and the merge
+    *    `tablePath/v=<batchId>` and then flips a `_LATEST` pointer in
+    *    one atomic overwrite — readers never observe a half-written
+    *    table nor a missing pointer, and the merge
     *    never reads the directory it is writing;
     *  - wrapped in [[idempotentForeachBatch]], so a replayed batch
     *    (sink-side at-least-once) is a no-op — exactly-once downstream;
@@ -446,15 +472,10 @@ object StreamSink {
         hist, feed, keyCols, attrCols, asOf = batchId, closeMissing = false)
         .select(outCols.map(col): _*)
       merged.write.mode("overwrite").parquet(s"$tablePath/v=$batchId")
-      val conf = spark.sparkContext.hadoopConfiguration
       val root = new org.apache.hadoop.fs.Path(tablePath)
-      val fs = root.getFileSystem(conf)
-      val tmp = new org.apache.hadoop.fs.Path(root, s"_LATEST.$batchId.tmp")
-      val out = fs.create(tmp, true)
-      out.write(batchId.toString.getBytes("UTF-8")); out.close()
-      val marker = new org.apache.hadoop.fs.Path(root, "_LATEST")
-      fs.delete(marker, false)
-      fs.rename(tmp, marker)
+      LocalCheckpointFiles.writeAtomic(LocalCheckpointFiles.manager(spark, root),
+        new org.apache.hadoop.fs.Path(root, "_LATEST"), batchId.toString)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       // prune versions older than the newest retainVersions
       val keep = versionIds(fs, root).sorted.takeRight(retainVersions).toSet
       versionIds(fs, root).filterNot(keep).foreach(v =>
@@ -467,15 +488,9 @@ object StreamSink {
     */
   def readLatest(spark: SparkSession, tablePath: String): Option[DataFrame] = {
     val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val marker = new org.apache.hadoop.fs.Path(root, "_LATEST")
-    if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      Some(spark.read.parquet(s"$tablePath/v=$v"))
-    }
+    LocalCheckpointFiles.readText(LocalCheckpointFiles.manager(spark, root),
+      new org.apache.hadoop.fs.Path(root, "_LATEST"))
+      .map(v => spark.read.parquet(s"$tablePath/v=${v.trim}"))
   }
 
   private def versionIds(

@@ -87,10 +87,9 @@ object StreamingLoop {
           } finally CacheRegistry.unpersistAll()
         }
     }
-    val query = guarded
+    val query = StreamSink.start(spark, guarded
       .build(spark.readStream.schema(schema).options(options).parquet(queue))
-      .option("checkpointLocation", s"$dir/_checkpoint")
-      .start()
+      .option("checkpointLocation", s"$dir/_checkpoint"))
     StreamSink.awaitAnyInputDrained(query, idleTimeoutMs)
     spark.read.schema(schema).parquet(out)
   }

@@ -322,12 +322,13 @@ class AnalyticsSpec extends SparkSpec {
 
   test("ewma: hand-checked fold, null values skip without resetting state") {
     val rows = Seq(
-      (Some(1L), 1L, 10L, Some(8.0)),
-      (Some(1L), 2L, 20L, Some(4.0)),
-      (Some(1L), 3L, 30L, None),        // gap: emits null, state unchanged
-      (Some(1L), 4L, 40L, Some(12.0)),
-      (Some(2L), 5L, 10L, Some(5.0)),   // second key: independent seed
-      (None, 6L, 10L, Some(1.0)))       // null key dropped
+      (Some(1L), Some(1L), 10L, Some(8.0)),
+      (Some(1L), Some(2L), 20L, Some(4.0)),
+      (Some(1L), Some(3L), 30L, None),        // gap: emits null, state unchanged
+      (Some(1L), None, 35L, Some(100.0)),     // null id dropped: no identity to emit
+      (Some(1L), Some(4L), 40L, Some(12.0)),
+      (Some(2L), Some(5L), 10L, Some(5.0)),   // second key: independent seed
+      (None, Some(6L), 10L, Some(1.0)))       // null key dropped
     val df = rows.toDF("k", "id", "o", "v")
     val out = Analytics.ewma(df.repartition(4), col("k"), Seq(col("o")),
         col("id"), col("v"), alpha = 0.25)
