@@ -141,12 +141,18 @@ object CacheRegistry {
 object VecDim {
   def probe(df: DataFrame, vecCol: String, opName: String): Int = {
     import org.apache.spark.sql.functions.{col, size}
-    val d = df.select(size(col(vecCol)).as("_d")).where(col("_d") > 0)
-      .limit(1).collect().headOption.map(_.getInt(0))
-    require(d.isDefined,
+    checked(df.select(size(col(vecCol)).as("_d")).where(col("_d") > 0)
+      .limit(1).collect().headOption.map(_.getInt(0)), vecCol, opName)
+  }
+
+  /** The probe's requirement on an already-read first non-empty width
+    * (an operator that collects its rows anyway reads it for free).
+    */
+  def checked(first: Option[Int], vecCol: String, opName: String): Int = {
+    require(first.isDefined,
       s"$opName: input has no non-empty '$vecCol' vectors to infer the " +
         s"embedding dim from (empty frame, or every vector is empty/null)")
-    d.get
+    first.get
   }
 }
 

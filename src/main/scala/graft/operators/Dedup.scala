@@ -1208,28 +1208,6 @@ object Dedup {
       .dropDuplicates("id_a", "id_b")
   }
 
-  /** EXACT strict-prefix dedup: rows whose text is a strict prefix of
-    * some OTHER document's text (truncated re-crawls, cut-off
-    * generations, partial mirrors — near-dups that shingle-based
-    * methods only catch probabilistically).
-    *
-    * One sort, no self-join. Key fact: among the DISTINCT texts in
-    * lexicographic order, x is a strict prefix of SOME text iff x is a
-    * prefix of its immediate successor succ(x) — any z with
-    * x < z < y (y = an x-prefixed text) must itself start with x
-    * (z's first |x| chars can be neither < x nor > x without
-    * contradicting x < z < y). So the whole corpus needs exactly one
-    * `lead()` pass.
-    *
-    * Scale shape: a global sort would force the naive
-    * `Window.orderBy(text)` into ONE partition, so instead the
-    * distinct texts are range-partitioned + locally sorted, `lead` runs
-    * per partition, and the |partitions| boundary rows are repaired
-    * with a collected (bounded: one row per partition) first-text map
-    * broadcast back — the standard distributed-adjacency pattern.
-    * Returns the input rows whose text is a strict prefix (semi-join
-    * on text), original schema preserved.
-    */
   /** MinHash-LSH parameter plan: given a signature budget and a
     * target jaccard threshold, pick the (bands, rows) split whose
     * S-curve inflection (1/b)^(1/r) lands closest to the target, and
@@ -1256,13 +1234,58 @@ object Dedup {
     LshPlan(b, r, inf, capture)
   }
 
+  /** EXACT strict-prefix dedup: rows whose text is a strict prefix of
+    * some OTHER document's text (truncated re-crawls, cut-off
+    * generations, partial mirrors — near-dups that shingle-based
+    * methods only catch probabilistically).
+    *
+    * One sort, no self-join. Key fact: among the DISTINCT texts in
+    * lexicographic order, x is a strict prefix of SOME text iff x is a
+    * prefix of its immediate successor succ(x) — any z with
+    * x < z < y (y = an x-prefixed text) must itself start with x
+    * (z's first |x| chars can be neither < x nor > x without
+    * contradicting x < z < y). So the whole corpus needs exactly one
+    * successor pass.
+    *
+    * Scale shape, two routes behind `Relational.prefixSumRoutesLocal`
+    * (the plan-stats size gate of `Relational.prefixSums`; no job):
+    *  - at or under the gate (read on the non-empty rows, since they
+    *    are what it moves), the rows are sorted by text in ONE
+    *    partition (`coalesce(1)`, so no exchange) and one lazy narrow
+    *    pass keeps each run of equal texts that prefixes the next
+    *    distinct text: no distinct and no join back to the rows.
+    *    Nothing runs before the action.
+    *  - above it, a global sort would force the naive
+    *    `Window.orderBy(text)` into one partition, so instead the
+    *    distinct texts are range-partitioned + locally sorted and
+    *    checkpointed, a narrow pass pairs each text with its
+    *    in-partition successor, and the |partitions| boundary rows are repaired with a collected
+    *    (bounded: one row per partition) first-text map broadcast back —
+    *    the standard distributed-adjacency pattern.
+    * `partitions` (default `spark.sql.shuffle.partitions`) sizes the
+    * range partitioning of the distributed route. Returns the input
+    * rows whose text is a strict prefix (on the distributed route a
+    * semi-join on text), original schema preserved.
+    */
   def prefixDups(df: DataFrame, textCol: Column, partitions: Int = 0): DataFrame = {
     val spark = df.sparkSession
-    val p =
+    // one filter for every use of `df` (a null or empty text is never a
+    // prefix), so on the distributed route the optimizer pushes
+    // identical predicates into both and a shared upstream exchange is
+    // reused instead of run twice
+    val nonEmpty = df.where(length(textCol) > 0)
+    if (Relational.prefixSumRoutesLocal(nonEmpty)) localPrefixDups(nonEmpty, textCol)
+    else rangePrefixDups(nonEmpty, textCol,
       if (partitions > 0) partitions
-      else spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val texts = df.select(textCol.as("_t"))
-      .where(col("_t").isNotNull && length(col("_t")) > 0)
+      else spark.conf.get("spark.sql.shuffle.partitions").toInt)
+  }
+
+  /** Above-gate route of [[prefixDups]] over its non-empty rows, in `p`
+    * range partitions.
+    */
+  private def rangePrefixDups(nonEmpty: DataFrame, textCol: Column, p: Int): DataFrame = {
+    val spark = nonEmpty.sparkSession
+    val texts = nonEmpty.select(textCol.as("_t"))
       .distinct()
       .repartitionByRange(p, col("_t"))
       .sortWithinPartitions(col("_t"))
@@ -1309,7 +1332,37 @@ object Dedup {
         length(col("_t")) < length(col("_succ")) &&
         col("_succ").startsWith(col("_t")))
       .select(col("_t"))
-    df.join(prefixes, textCol === col("_t"), "left_semi")
+    nonEmpty.join(prefixes, textCol === col("_t"), "left_semi")
+  }
+
+  /** Gate-scale route of [[prefixDups]]: the rows themselves, not their
+    * distinct texts, are sorted by text in ONE partition (`coalesce(1)`,
+    * no exchange), and one lazy narrow pass reads them a run of equal
+    * texts at a time, keeping a run when the next distinct text starts
+    * with it. No distinct, no join back to the rows.
+    */
+  private def localPrefixDups(nonEmpty: DataFrame, textCol: Column): DataFrame = {
+    val keyed = nonEmpty.select(col("*"), textCol.as("_prefix_t"))
+    val ti = keyed.schema.fieldIndex("_prefix_t")
+    keyed.coalesce(1).sortWithinPartitions(col("_prefix_t"))
+      .mapPartitions { rows =>
+        new Iterator[List[org.apache.spark.sql.Row]] {
+          private var ahead = if (rows.hasNext) rows.next() else null
+          def hasNext: Boolean = ahead != null
+          // one run of equal texts: kept iff the next (different) text
+          // starts with it, so is longer — a strict prefix
+          def next(): List[org.apache.spark.sql.Row] = {
+            val t = ahead.getString(ti)
+            val run = List.newBuilder[org.apache.spark.sql.Row]
+            while (ahead != null && ahead.getString(ti) == t) {
+              run += ahead
+              ahead = if (rows.hasNext) rows.next() else null
+            }
+            if (ahead != null && ahead.getString(ti).startsWith(t)) run.result() else Nil
+          }
+        }.flatten
+      }(org.apache.spark.sql.Encoders.row(keyed.schema))
+      .drop("_prefix_t")
   }
 
   /** Cross-group shingle overlap matrix — corpus governance: which

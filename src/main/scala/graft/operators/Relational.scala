@@ -618,35 +618,46 @@ object Relational {
     */
   private val PrefixSumLocalBytes: Long = 128L * 1024 * 1024
 
-  private val forcedPrefixSumRoute = new scala.util.DynamicVariable[Option[Boolean]](None)
+  private val forcedRoute = new scala.util.DynamicVariable[Option[Boolean]](None)
 
-  /** Test seam: every [[prefixSums]] BUILT inside `f` on this thread
-    * (including through [[globalIndex]] and `budgetSelect`) takes the
-    * one-partition route if `local`, else the range-partitioned one,
-    * whatever its size estimate. Lets the path-equality spec and the
-    * scale probe pin a route.
+  /** Test seam: every size-gated route BUILT inside `f` on this thread
+    * takes its one-partition or driver-side local form if `local`, else
+    * its distributed form, whatever the size estimate. It forces
+    * [[prefixSums]] (including through [[globalIndex]] and
+    * `budgetSelect`), `Dedup.prefixDups` and the greedy pickers
+    * `TrainingData.kcenterSelect`/`mmrRerank`, so the path-equality
+    * specs and the scale probe can pin a route.
     */
-  private[graft] def withPrefixSumRoute[A](local: Boolean)(f: => A): A =
-    forcedPrefixSumRoute.withValue(Some(local))(f)
+  private[graft] def withLocalRoute[A](local: Boolean)(f: => A): A =
+    forcedRoute.withValue(Some(local))(f)
 
-  /** The local/distributed routing gate of [[prefixSums]], split out so
-    * the path-equality spec can pin the decision itself. Local iff the
-    * plan-stats size estimate is under `PrefixSumLocalBytes`
-    * AND the optimized plan contains no Generate: in size-only
-    * estimation Filter/Join/Aggregate never under-state (filters pass
-    * the child size through, joins multiply), but Generate (explode)
-    * scales only by ROW WIDTH — blind to multiplicity — so it is the
-    * one node class that systematically under-estimates, and a
-    * mis-estimated exploded frame routed local would serialize onto a
-    * single-task sort (the silent scale cliff the r16 verdict flagged).
-    * Compile-time only: the guard costs zero jobs.
+  /** The one local/distributed gate, unless [[withLocalRoute]] forces
+    * the route (then `maxBytes` is not evaluated): local iff the
+    * plan-stats size estimate is at or under `maxBytes` AND the optimized plan
+    * contains no Generate. In size-only estimation
+    * Filter/Join/Aggregate never under-state (filters pass the child
+    * size through, joins multiply), but Generate (explode) scales only
+    * by ROW WIDTH — blind to multiplicity — so it is the one node class
+    * that systematically under-estimates, and a mis-estimated exploded
+    * frame routed local would serialize onto a single task or the
+    * driver (the silent scale cliff the r16 verdict flagged).
+    * Compile-time only: the gate costs zero jobs (a caller's `maxBytes`
+    * may run one).
     */
-  private[graft] def prefixSumRoutesLocal(projected: DataFrame): Boolean = {
-    val plan = projected.queryExecution.optimizedPlan
-    val hasGenerate = plan.exists(
-      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Generate])
-    !hasGenerate && plan.stats.sizeInBytes <= PrefixSumLocalBytes
-  }
+  private[graft] def routesLocal(df: DataFrame, maxBytes: => Long): Boolean =
+    forcedRoute.value.getOrElse {
+      val plan = df.queryExecution.optimizedPlan
+      val hasGenerate = plan.exists(
+        _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Generate])
+      !hasGenerate && plan.stats.sizeInBytes <= maxBytes
+    }
+
+  /** The gate of [[prefixSums]] and `Dedup.prefixDups`: [[routesLocal]]
+    * at `PrefixSumLocalBytes`, split out so the path-equality spec can
+    * pin the decision itself.
+    */
+  private[graft] def prefixSumRoutesLocal(projected: DataFrame): Boolean =
+    routesLocal(projected, PrefixSumLocalBytes)
 
   /** Multi-column [[prefixSum]]: all running totals ride ONE range
     * sort and one narrow pass (a CDF comparison needs two cumulative
@@ -684,9 +695,9 @@ object Relational {
     // global-window formulation would be fewer moving parts still, but
     // the repo-wide plan lint rightly rejects empty-partition Windows —
     // this form keeps the lint's guarantee intact.) The gate lives in
-    // [[prefixSumRoutesLocal]] (with its Generate mis-estimate guard)
-    // so the path-equality spec can pin the routing decision directly.
-    val local = forcedPrefixSumRoute.value.getOrElse(prefixSumRoutesLocal(projected))
+    // [[routesLocal]] (with its Generate mis-estimate guard) so the
+    // path-equality spec can pin the routing decision directly.
+    val local = prefixSumRoutesLocal(projected)
     // both paths persist the sorted frame: callers fan the cum frame
     // into several readouts, and the RDD bridge below does not
     // canonicalize, so without the cache every consumer would re-run

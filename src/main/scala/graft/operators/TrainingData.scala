@@ -1172,37 +1172,6 @@ object TrainingData {
           .as("waste_ppm"))
   }
 
-  /** Greedy k-center (Gonzalez farthest-point) selection over an
-    * embedding column — the diversity-first coreset draw: each round
-    * picks the point FARTHEST from everything already chosen, so k
-    * picks cover the corpus within twice the optimal k-center radius
-    * (the classic 2-approximation). The complement of quality-ranked
-    * selection ([[budgetSelect]] keeps the best-scoring mass;
-    * k-center keeps the SPREAD — the standard seed set for
-    * diversity-aware curation and embedding-space audits).
-    *
-    * Determinism discipline: components are fixed-pointed to integer
-    * milli-units and distances are EXACT integer squared-euclidean
-    * sums (long — 64 dims of milli-unit gaps peak ~2.6·10⁸ per pair),
-    * so the per-round argmax is a total order on (dist DESC, id ASC)
-    * with no float anywhere; the first center is the md5-smallest id
-    * (the [[hashSample]] no-RNG draw). Identical picks on any engine,
-    * any partitioning.
-    *
-    * Scale shape: the fixed-point frame is persisted once; each of
-    * the k rounds is (a) one map-only zip_with distance projection
-    * folded with `least` into the running min-distance column, (b)
-    * one eager localCheckpoint (the superstep discipline — O(1)
-    * expression depth per round instead of an O(k)-deep recompute
-    * chain), and (c) one TakeOrdered(1) argmax reduce (the round's
-    * bounded driver readout: a single row, whose vector becomes the
-    * next round's broadcast literal, exactly [[Linalg.topComponents]]'
-    * deflation pattern). Total: k map-passes over n rows — the
-    * algorithm's inherent cost; no shuffle of vectors ever.
-    * Output: (step ∈ 1..k, picked id, d2_pick = the pick's exact
-    * squared distance to the prior centers; 0 for step 1) — the
-    * non-increasing d2_pick sequence IS the coverage-radius curve.
-    */
   /** Maximal Marginal Relevance re-ranking (Carbonell & Goldstein,
     * SIGIR 1998) — the retrieval-diversity classic: greedily pick the
     * item maximizing λ·relevance − (1−λ)·similarity-to-already-picked,
@@ -1221,140 +1190,330 @@ object TrainingData {
     * {{{ score_i = lamPpm·rel_i + (10⁶ − lamPpm)·minD2_i }}}
     *
     * — exact longs, ties to the smaller id, no float anywhere. Round
-    * 1 is pure relevance (MMR's S = ∅ convention).
+    * 1 is pure relevance (MMR's S = ∅ convention). A NULL min_d2 (see
+    * the null-element rule on [[kcenterSelect]]) makes the score NULL,
+    * and NULL scores rank last.
     *
-    * Scale shape: identical to [[kcenterSelect]] — k map-only
-    * zip_with passes over the persisted fixed-point frame, one eager
-    * localCheckpoint + one TakeOrdered(1) per round, the pick's
-    * vector broadcast as the next round's literal; vectors never ride
-    * a shuffle. Output: (step ∈ 1..m, picked id, rel, min_d2 at pick).
+    * Scale shape: identical to [[kcenterSelect]], behind the same
+    * 10 MB gate — at or under it one collect and every round on the
+    * driver, above it m map-only
+    * zip_with passes with one checkpoint + one TakeOrdered(1) per
+    * round; vectors never ride a shuffle. Output: (step ∈ 1..m, picked
+    * id, rel, min_d2 at pick; 0 for step 1).
     */
   def mmrRerank(df: DataFrame, idCol: String, vecCol: String,
       relCol: String, m: Int, lamPpm: Long = 500000L): DataFrame = {
     require(m >= 1 && m <= 64, s"mmrRerank: m must be in [1,64], got $m")
     require(lamPpm >= 0L && lamPpm <= 1000000L,
       s"mmrRerank: lamPpm must be in [0, 1000000], got $lamPpm")
-    val spark = df.sparkSession
-    val dim = graft.core.VecDim.probe(df, vecCol, "mmrRerank")
-    val fx = CacheRegistry.persist(
-      df.where(size(col(vecCol)) === dim && col(idCol).isNotNull &&
-          col(relCol).isNotNull)
-        .select(col(idCol).cast("long").as("_id"),
-          transform(col(vecCol).cast("array<double>"),
-            v => floor(v * lit(1000.0))).as("_v"),
-          col(relCol).cast("long").as("_rel")))
-    // headOption: the dim probe guarantees a non-empty vector EXISTS,
-    // but the id/rel null filters can still empty the candidate frame —
-    // fail with the operator's name, not a bare NoSuchElementException
-    val first = fx.orderBy(col("_rel").desc, col("_id").asc)
-      .limit(1).collect().headOption.getOrElse(
-        throw new IllegalArgumentException(
-          "mmrRerank: no candidates after the id/rel null filters"))
-    val picks = Vector.newBuilder[(Int, Long, Long, Long)]
-    picks += ((1, first.getLong(0), first.getLong(2), 0L))
-    var center: Seq[Long] = first.getSeq[Long](1)
-    // picked items leave the candidate frame — with rel dominating, a
-    // picked item's 0-distance score could otherwise win again
-    var cur = fx.where(col("_id") =!= first.getLong(0))
-      .select(col("_id"), col("_v"), col("_rel"),
-        lit(Long.MaxValue).as("_md"))
-    // the latest round checkpoint, released once the next one is
-    // materialized (the seed frame above is not registered: a no-op)
-    var lastCp = cur
-    var step = 2
-    var exhausted = false
-    while (step <= m && !exhausted) {
-      val cLit = array(center.map(lit): _*)
-      cur = cur.select(col("_id"), col("_v"), col("_rel"),
-        least(col("_md"),
-          aggregate(zip_with(col("_v"), cLit, (a, b) => (a - b) * (a - b)),
-            lit(0L), (acc, y) => acc + y)).as("_md"))
-        .transform(CacheRegistry.checkpoint(_)) // the round's one materializing action
-      CacheRegistry.release(lastCp)
-      lastCp = cur
-      // m beyond the candidate count stops cleanly with the realized
-      // prefix instead of a head() crash
-      cur.orderBy((lit(lamPpm) * col("_rel") +
-          lit(1000000L - lamPpm) * col("_md")).desc, col("_id").asc)
-        .limit(1).collect().headOption match {
-        case Some(pick) =>
-          picks += ((step, pick.getLong(0), pick.getLong(2), pick.getLong(3)))
-          center = pick.getSeq[Long](1)
-          cur = cur.where(col("_id") =!= pick.getLong(0))
-          step += 1
-        case None => exhausted = true
-      }
-    }
     import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        picks.result().map(p =>
-          org.apache.spark.sql.Row(p._1, p._2, p._3, p._4)), 1),
+    val picks = greedyPicks("mmrRerank", df, idCol, vecCol, m,
+      Some(Mmr(relCol, lamPpm)))
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(picks.map(p =>
+        org.apache.spark.sql.Row(p.step, p.id, p.rel, p.d2)): _*),
       StructType(Seq(
         StructField("step", IntegerType, nullable = false),
         StructField("vec_id", LongType, nullable = false),
         StructField("rel", LongType, nullable = false),
-        StructField("min_d2", LongType, nullable = false))))
+        StructField("min_d2", LongType))))
   }
 
+  /** Greedy k-center (Gonzalez farthest-point) selection over an
+    * embedding column — the diversity-first coreset draw: each round
+    * picks the point FARTHEST from everything already chosen, so k
+    * picks cover the corpus within twice the optimal k-center radius
+    * (the classic 2-approximation). The complement of quality-ranked
+    * selection ([[budgetSelect]] keeps the best-scoring mass;
+    * k-center keeps the SPREAD — the standard seed set for
+    * diversity-aware curation and embedding-space audits).
+    *
+    * Determinism discipline: components are fixed-pointed to integer
+    * milli-units and distances are EXACT integer squared-euclidean
+    * sums (long — 64 dims of milli-unit gaps peak ~2.6·10⁸ per pair;
+    * an overflow raises under ANSI arithmetic), so the per-round
+    * argmax is a total order on (dist DESC, id ASC) with no float
+    * anywhere; the first center is the md5-smallest id (the
+    * [[hashSample]] no-RNG draw). Identical picks on any engine, any
+    * partitioning.
+    *
+    * Null-element rule (the oracle SQL's): a distance that touches a
+    * NULL vector element is NULL; the running min-distance skips NULLs
+    * (`least`), so it stays NULL only while every distance so far was
+    * NULL; the argmax ranks a NULL distance last. A pick whose
+    * distance is still NULL reports a NULL d2_pick.
+    *
+    * Scale shape, two routes behind `Relational.routesLocal` at a
+    * private 10 MB bound on the candidate frame's plan-stats bytes (the
+    * default of Spark's own broadcast bound), read at no job cost; a
+    * plan sized from a row count, which counts each vector at one
+    * element, has the bound divided by the vector width (one dim probe):
+    *  - at or under it, ONE job collects the candidates (id, fixed-point
+    *    vector and md5 key computed by Spark) into primitive arrays, the
+    *    dim is read from the first one, and all k rounds run on the
+    *    driver with the same exact long arithmetic (`Math.*Exact` under
+    *    ANSI), raising where Spark's would;
+    *  - above it, the fixed-point frame is persisted once; each of the
+    *    k rounds is (a) one map-only zip_with distance projection folded
+    *    with `least` into the running min-distance column, (b) one eager
+    *    localCheckpoint (the superstep discipline — O(1) expression
+    *    depth per round instead of an O(k)-deep recompute chain), and
+    *    (c) one TakeOrdered(1) argmax reduce (the round's bounded driver
+    *    readout: a single row, whose vector becomes the next round's
+    *    literal, exactly [[Linalg.topComponents]]' deflation pattern).
+    *    Total: k map-passes over n rows — the algorithm's inherent
+    *    cost; no shuffle of vectors ever.
+    * Output: (step ∈ 1..k, picked id, d2_pick = the pick's exact
+    * squared distance to the prior centers; 0 for step 1) — the
+    * non-increasing d2_pick sequence IS the coverage-radius curve.
+    */
   def kcenterSelect(df: DataFrame, idCol: String, vecCol: String,
       k: Int): DataFrame = {
     require(k >= 1 && k <= 64, s"kcenterSelect: k must be in [1,64], got $k")
-    val spark = df.sparkSession
-    val dim = graft.core.VecDim.probe(df, vecCol, "kcenterSelect")
-    val fx = CacheRegistry.persist(
-      df.where(size(col(vecCol)) === dim && col(idCol).isNotNull)
-        .select(col(idCol).cast("long").as("_id"),
-          transform(col(vecCol).cast("array<double>"),
-            v => floor(v * lit(1000.0))).as("_v")))
-    // headOption, mirroring mmrRerank: the id null filter can empty the
-    // frame even when the dim probe found a non-empty vector
-    val first = fx
-      .orderBy(md5(col("_id").cast("string")), col("_id"))
+    import org.apache.spark.sql.types._
+    val picks = greedyPicks("kcenterSelect", df, idCol, vecCol, k, None)
+    df.sparkSession.createDataFrame(
+      java.util.Arrays.asList(picks.map(p =>
+        org.apache.spark.sql.Row(p.step, p.id, p.d2)): _*),
+      StructType(Seq(
+        StructField("step", IntegerType, nullable = false),
+        StructField("vec_id", LongType, nullable = false),
+        StructField("d2_pick", LongType))))
+  }
+
+  /** What MMR adds to k-center: a relevance column (the first pick's
+    * order and a score term) and λ in ppm.
+    */
+  private final case class Mmr(relCol: String, lamPpm: Long)
+
+  /** One greedy pick: `rel` is 0 for k-center; `d2` is the pick's
+    * running min squared distance (0 at step 1, null when unknown).
+    */
+  private final case class Pick(step: Int, id: Long, rel: Long, d2: java.lang.Long)
+
+  /** The greedy pickers' local-route bound on the candidate frame's
+    * plan-stats bytes: 10 MB, the default of Spark's own "small enough
+    * to hold whole" bound, kept as a constant so a join setting does
+    * not move the pickers' route.
+    */
+  private val PickerLocalBytes: Long = 10L * 1024 * 1024
+
+  /** The candidate frame both routes pick from: `_id`, the fixed-point
+    * vector `_v = floor(v·1000)` and `_key`, the first pick's order
+    * (the md5 of the id for k-center, the relevance for MMR), over the
+    * rows with a non-empty vector.
+    */
+  private[graft] def pickerCandidates(df: DataFrame, idCol: String,
+      vecCol: String, relCol: Option[String]): DataFrame = {
+    val id = col(idCol).cast("long")
+    val key = relCol.fold(md5(id.cast("string")))(r => col(r).cast("long"))
+    df.where(size(col(vecCol)) > 0).select(id.as("_id"),
+      transform(col(vecCol).cast("array<double>"),
+        v => floor(v * lit(1000.0))).as("_v"),
+      key.as("_key"))
+  }
+
+  /** The greedy pickers' gate: [[Relational.routesLocal]] at
+    * [[PickerLocalBytes]]. A leaf sized from a row count (a local
+    * relation, a range, a CBO-analyzed table) counts each array at ONE
+    * element, so under such a leaf the bound shrinks by the vector
+    * width, read with one dim probe; a file-sized plan counts the
+    * stored bytes, vectors included, and probes nothing.
+    */
+  private[graft] def pickersRouteLocal(df: DataFrame, cands: DataFrame,
+      vecCol: String, op: String): Boolean =
+    Relational.routesLocal(cands,
+      if (cands.queryExecution.optimizedPlan.collectLeaves()
+          .exists(_.stats.rowCount.isDefined))
+        PickerLocalBytes / graft.core.VecDim.probe(df, vecCol, op)
+      else PickerLocalBytes)
+
+  /** The greedy loop behind [[kcenterSelect]] (`mmr` = None) and
+    * [[mmrRerank]]: the first pick is the md5-smallest id or the most
+    * relevant candidate, every later pick the argmax of the running
+    * min-distance or the MMR score, ties to the smaller id, picked ids
+    * leaving the candidates. Routed by size; see [[kcenterSelect]].
+    */
+  private def greedyPicks(op: String, df: DataFrame, idCol: String,
+      vecCol: String, n: Int, mmr: Option[Mmr]): Seq[Pick] = {
+    val cands = pickerCandidates(df, idCol, vecCol, mmr.map(_.relCol))
+    val none = s"$op: no candidates after the " +
+      mmr.fold("id null filter")(_ => "id/rel null filters")
+    if (pickersRouteLocal(df, cands, vecCol, op))
+      driverPicks(op, cands, vecCol, n, mmr, none,
+        df.sparkSession.sessionState.conf.ansiEnabled)
+    else clusterPicks(op, df, cands, vecCol, n, mmr, none)
+  }
+
+  /** The collected candidates as primitives: candidate i's element j
+    * sits at `vecs(i * dim + j)`, with bit `i * dim + j` of `nulls` set
+    * when it is NULL; `first` is the first pick's index.
+    */
+  private final class Collected(val dim: Int, val ids: Array[Long],
+      val rel: Array[Long], val vecs: Array[Long],
+      val nulls: java.util.BitSet, val first: Int)
+
+  /** One collect of the candidates, unpacked into primitives; the
+    * collected rows are garbage once this returns. The dim is
+    * `VecDim.probe`'s (the first non-empty vector's width, in partition
+    * order), and the same null and width filters as the distributed
+    * route keep the candidates. The first pick is the smallest md5 key
+    * (k-center) or the largest relevance (MMR), ties to the smaller id.
+    */
+  private def collectCandidates(op: String, cands: DataFrame,
+      vecCol: String, mmr: Boolean): Collected = {
+    // bounded: pickersRouteLocal held the candidates' plan-stats size,
+    // vectors at their real width, at or under PickerLocalBytes
+    val all = cands.collect()
+    val dim = graft.core.VecDim.checked(
+      all.headOption.map(_.getSeq[AnyRef](1).size), vecCol, op)
+    val rows = all.filter(r => !r.isNullAt(0) && !r.isNullAt(2) &&
+      r.getSeq[AnyRef](1).size == dim)
+    val ids = new Array[Long](rows.length)
+    val rel = new Array[Long](rows.length)
+    val vecs = new Array[Long](rows.length * dim)
+    val nulls = new java.util.BitSet
+    var first = -1
+    for (i <- rows.indices) {
+      val r = rows(i)
+      ids(i) = r.getLong(0)
+      if (mmr) rel(i) = r.getLong(2)
+      val v = r.getSeq[java.lang.Long](1)
+      for (j <- 0 until dim) {
+        val x = v(j)
+        if (x == null) nulls.set(i * dim + j) else vecs(i * dim + j) = x
+      }
+      // (rel DESC | md5 key ASC, id ASC)
+      val c = if (first < 0) -1
+        else if (mmr) java.lang.Long.compare(rel(first), rel(i))
+        else r.getString(2).compareTo(rows(first).getString(2))
+      if (c < 0 || (c == 0 && ids(i) < ids(first))) first = i
+    }
+    new Collected(dim, ids, rel, vecs, nulls, first)
+  }
+
+  /** Gate-scale route of [[greedyPicks]]: one collect, every round on
+    * the driver. Each expression the distributed route evaluates per
+    * row is evaluated here too, in the same null and overflow
+    * semantics: a squared term per non-null element pair, the sum NULL
+    * from its first NULL term on, the score's λ·rel term even when
+    * min_d2 is NULL.
+    */
+  private def driverPicks(op: String, cands: DataFrame, vecCol: String,
+      n: Int, mmr: Option[Mmr], none: String, ansi: Boolean): Seq[Pick] = {
+    def add(a: Long, b: Long) = if (ansi) Math.addExact(a, b) else a + b
+    def sub(a: Long, b: Long) = if (ansi) Math.subtractExact(a, b) else a - b
+    def mul(a: Long, b: Long) = if (ansi) Math.multiplyExact(a, b) else a * b
+    val c = collectCandidates(op, cands, vecCol, mmr.isDefined)
+    if (c.ids.isEmpty) throw new IllegalArgumentException(none)
+    val (dim, ids, vecs, nulls) = (c.dim, c.ids, c.vecs, c.nulls)
+    val alive = Array.fill(ids.length)(true)
+    // the running min-distance; md(i) is NULL (no known distance yet)
+    // until mdKnown(i)
+    val md = new Array[Long](ids.length)
+    val mdKnown = new Array[Boolean](ids.length)
+    val picks = Vector.newBuilder[Pick]
+    picks += Pick(1, ids(c.first), c.rel(c.first), 0L)
+    var center = c.first
+    var step = 2
+    while (step <= n && center >= 0) {
+      val cid = ids(center)
+      for (i <- ids.indices if ids(i) == cid) alive(i) = false
+      var best = -1
+      var bestKnown = false
+      var bestScore = 0L
+      for (i <- ids.indices if alive(i)) {
+        // d² to the center as Spark evaluates
+        // aggregate(zip_with(v, center, (x, y) -> (x - y) * (x - y)), 0L, +)
+        var sum = 0L
+        var known = true
+        for (j <- 0 until dim) {
+          val a = i * dim + j
+          val b = center * dim + j
+          if (nulls.get(a) || nulls.get(b)) known = false
+          else {
+            val d = sub(vecs(a), vecs(b))
+            val sq = mul(d, d)
+            if (known) sum = add(sum, sq)
+          }
+        }
+        if (known && (!mdKnown(i) || sum < md(i))) { md(i) = sum; mdKnown(i) = true }
+        // the argmax score, NULL while min_d2 is
+        val score = mmr match {
+          case Some(m) =>
+            val r = mul(m.lamPpm, c.rel(i))
+            if (mdKnown(i)) add(r, mul(1000000L - m.lamPpm, md(i))) else 0L
+          case None => md(i)
+        }
+        // (score DESC NULLS LAST, id ASC)
+        val better = best < 0 || (
+          if (mdKnown(i) != bestKnown) mdKnown(i)
+          else if (!mdKnown(i)) ids(i) < ids(best)
+          else score > bestScore || (score == bestScore && ids(i) < ids(best)))
+        if (better) { best = i; bestKnown = mdKnown(i); bestScore = score }
+      }
+      // n beyond the candidate count stops with the realized prefix
+      if (best >= 0) picks += Pick(step, ids(best), c.rel(best),
+        if (mdKnown(best)) java.lang.Long.valueOf(md(best)) else null)
+      center = best
+      step += 1
+    }
+    picks.result()
+  }
+
+  /** Above-gate route of [[greedyPicks]]: the persisted fixed-point
+    * frame, one checkpointed distance pass and one TakeOrdered(1)
+    * argmax per round.
+    */
+  private def clusterPicks(op: String, df: DataFrame, cands: DataFrame,
+      vecCol: String, n: Int, mmr: Option[Mmr], none: String): Seq[Pick] = {
+    val dim = graft.core.VecDim.probe(df, vecCol, op)
+    val fx = CacheRegistry.persist(cands.where(size(col("_v")) === dim &&
+      col("_id").isNotNull && col("_key").isNotNull))
+    val firstOrder = if (mmr.isDefined) col("_key").desc else col("_key").asc
+    // headOption: the dim probe guarantees a non-empty vector EXISTS,
+    // but the null filters can still empty the candidate frame — fail
+    // with the operator's name, not a bare NoSuchElementException
+    val first = fx.orderBy(firstOrder, col("_id").asc)
       .limit(1).collect().headOption.getOrElse(
-        throw new IllegalArgumentException(
-          "kcenterSelect: no candidates after the id null filter"))
-    val picks = Vector.newBuilder[(Int, Long, Long)]
-    picks += ((1, first.getLong(0), 0L))
-    var center: Seq[Long] = first.getSeq[Long](1)
+        throw new IllegalArgumentException(none))
+    def rel(r: org.apache.spark.sql.Row) = if (mmr.isDefined) r.getLong(2) else 0L
+    val score = mmr.fold(col("_md"))(m =>
+      lit(m.lamPpm) * col("_key") + lit(1000000L - m.lamPpm) * col("_md"))
+    val picks = Vector.newBuilder[Pick]
+    picks += Pick(1, first.getLong(0), rel(first), 0L)
+    var center = first.getSeq[java.lang.Long](1)
     // picked ids leave the candidate frame: on a corpus with exact
-    // duplicate vectors every min-distance can reach 0, and the
-    // (md DESC, id) argmax could otherwise re-pick a chosen id
+    // duplicate vectors every min-distance can reach 0, and the argmax
+    // could otherwise re-pick a chosen id. The NULL seed is `least`'s
+    // identity (it skips NULLs).
     var cur = fx.where(col("_id") =!= first.getLong(0))
-      .select(col("_id"), col("_v"), lit(Long.MaxValue).as("_md"))
+      .withColumn("_md", lit(null).cast("long"))
     // the latest round checkpoint, released once the next one is
     // materialized (the seed frame above is not registered: a no-op)
     var lastCp = cur
     var step = 2
     var exhausted = false
-    while (step <= k && !exhausted) {
-      val cLit = array(center.map(lit): _*)
-      cur = cur.select(col("_id"), col("_v"),
-        least(col("_md"),
+    while (step <= n && !exhausted) {
+      val cLit = array(center.map(x => lit(x).cast("long")): _*)
+      cur = cur.withColumn("_md", least(col("_md"),
           aggregate(zip_with(col("_v"), cLit, (a, b) => (a - b) * (a - b)),
-            lit(0L), (acc, y) => acc + y)).as("_md"))
+            lit(0L), (acc, y) => acc + y)))
         .transform(CacheRegistry.checkpoint(_)) // the round's one materializing action
       CacheRegistry.release(lastCp)
       lastCp = cur
-      // k beyond the candidate count stops cleanly with the realized
-      // prefix (every point is a center) instead of a head() crash
-      cur.orderBy(col("_md").desc, col("_id").asc).limit(1)
-        .collect().headOption match {
+      // n beyond the candidate count stops cleanly with the realized
+      // prefix instead of a head() crash
+      cur.orderBy(score.desc, col("_id").asc).limit(1).collect().headOption match {
         case Some(pick) =>
-          picks += ((step, pick.getLong(0), pick.getLong(2)))
-          center = pick.getSeq[Long](1)
+          picks += Pick(step, pick.getLong(0), rel(pick),
+            if (pick.isNullAt(3)) null else pick.getLong(3))
+          center = pick.getSeq[java.lang.Long](1)
           cur = cur.where(col("_id") =!= pick.getLong(0))
           step += 1
         case None => exhausted = true
       }
     }
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(
-        picks.result().map(p => org.apache.spark.sql.Row(p._1, p._2, p._3)), 1),
-      StructType(Seq(
-        StructField("step", IntegerType, nullable = false),
-        StructField("vec_id", LongType, nullable = false),
-        StructField("d2_pick", LongType, nullable = false))))
+    picks.result()
   }
 }

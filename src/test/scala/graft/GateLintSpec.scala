@@ -22,10 +22,58 @@ package graft
   * The same loop pins the materialization contract: every persist and
   * checkpoint a query builder makes goes through `CacheRegistry`, so
   * no RDD it persisted survives `CacheRegistry.unpersistAll()`.
+  *
+  * Build-job budgets are pinned here too: the Spark jobs a query
+  * builder launches between the start and the end of
+  * `queries(q)(spark, dir)`, table opens included (each parquet open
+  * infers its schema in one job). A query builder that turns eager again
+  * fails instead of only slowing the bench. Queries whose job count
+  * depends on AQE stage timing (q_adamic, q_betweenness) are left out:
+  * their counts differ between passes of the same code.
   */
 class GateLintSpec extends SparkSpec {
 
   private val sfDir = "/root/testdata/sf0.001"
+
+  /** query -> build jobs: the table opens plus the query builder's own jobs.
+    * `embeddings` loads hash-repartitioned, so each action over it is
+    * two jobs under AQE: the shuffle-map stage and the result.
+    */
+  private val buildJobBudget = Map(
+    // one open + the driver-side picker's one candidate collect
+    "q_kcenter" -> 3,
+    // one open + the query-vector head() + the candidate collect
+    "q_mmr" -> 5,
+    // one open; the one-partition pairing runs inside the action
+    "q_prefix_dup" -> 1)
+
+  test("per-round operators keep their pinned build-job budget") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tagKey = "graft.buildBudget"
+    val jobs = new java.util.concurrent.ConcurrentHashMap[String,
+      java.util.concurrent.atomic.AtomicInteger]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty(tagKey))).foreach(q =>
+          jobs.computeIfAbsent(q, _ => new java.util.concurrent.atomic.AtomicInteger)
+            .incrementAndGet())
+    }
+    sc.addSparkListener(listener)
+    try {
+      val counts = buildJobBudget.keys.toSeq.sorted.map { q =>
+        sc.setLocalProperty(tagKey, q)
+        try SparkEntry.queries(q)(spark, sfDir)
+        finally {
+          sc.setLocalProperty(tagKey, null)
+          graft.core.CacheRegistry.unpersistAll()
+        }
+        org.apache.spark.GraftListenerBridge.waitUntilEmpty(sc, 10000L)
+        q -> Option(jobs.get(q)).fold(0)(_.get)
+      }.toMap
+      assert(counts == buildJobBudget)
+    } finally sc.removeSparkListener(listener)
+  }
 
   test("all gate queries: no global window, no trivially-true join predicate") {
     val bad = scala.collection.mutable.ArrayBuffer.empty[String]

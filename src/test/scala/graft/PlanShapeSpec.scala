@@ -452,12 +452,34 @@ class PlanShapeSpec extends SparkSpec {
 
   test("prefixDups: windowless successor pairing, no cartesian, no re-sort") {
     val rows = (1 to 300).map(i => (i.toLong, s"text body number $i")).toDF("doc_id", "text")
-    val p = finalPlan(graft.operators.Dedup.prefixDups(rows, col("text"), partitions = 4))
+    // the distributed route (this frame is small enough to route local)
+    val p = finalPlan(graft.operators.Relational.withLocalRoute(local = false)(
+      graft.operators.Dedup.prefixDups(rows, col("text"), partitions = 4)))
     assert(!p.contains("Cartesian"))
     // successor pairing is a narrow mapPartitions over the checkpointed
     // range-sorted layout — a Window here would re-shuffle AND re-sort
     assert(!p.contains("Window"))
     assert(!p.linesIterator.exists(_.matches(""".*(\+-|:-) (\*\(\d+\) )?Sort .*""")))
+    graft.core.CacheRegistry.unpersistAll()
+  }
+
+  test("prefixDups local route: one lazy single-partition sort, no exchange before the pairing") {
+    val rows = (1 to 300).map(i => (i.toLong, s"text body number $i")).toDF("doc_id", "text")
+    val df = graft.operators.Relational.withLocalRoute(local = true)(
+      graft.operators.Dedup.prefixDups(rows, col("text")))
+    // lazy: no checkpointed RDD scan, no range partitioning, no repair
+    // join — the whole route is in the plan
+    val built = df.queryExecution.executedPlan.toString
+    assert(!built.contains("ExistingRDD") && !built.contains("rangepartitioning"))
+    val p = finalPlan(df)
+    assert(!p.contains("Window") && !p.contains("Cartesian"))
+    // the rows are sorted by text in ONE partition: Coalesce 1 feeds
+    // exactly one Sort, and no aggregate or join follows it
+    assert(p.contains("Coalesce 1"))
+    val sorts = p.linesIterator.count(_.matches(""".*(\+-|:-) (\*\(\d+\) )?Sort .*"""))
+    assert(sorts == 1, p)
+    assert(!p.contains("Exchange hashpartitioning"), p)
+    assert(!p.contains("HashAggregate") && !p.contains("Join"), p)
   }
 
   test("gini ranks without any window node (globalIndex, not row_number)") {

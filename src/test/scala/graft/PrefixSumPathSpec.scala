@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 /** Relational.prefixSums routes by size: one round-robin partition at
   * or under its plan-stats threshold, range-partitioned offsets above.
-  * This spec forces BOTH routes (through `Relational.withPrefixSumRoute`)
+  * This spec forces BOTH routes (through `Relational.withLocalRoute`)
   * over the same input and pins identical output — for prefixSums and
   * for the operators built on it — the same forced-both-ways
   * discipline every size-gated switch in the repo carries.
@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
 class PrefixSumPathSpec extends SparkSpec {
   /** Builds `f` on the forced route, collects it, releases its cache. */
   private def onRoute(local: Boolean)(f: => DataFrame): Array[Row] = {
-    val rows = Relational.withPrefixSumRoute(local)(f).collect()
+    val rows = Relational.withLocalRoute(local)(f).collect()
     CacheRegistry.unpersistAll()
     rows
   }

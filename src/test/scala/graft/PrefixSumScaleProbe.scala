@@ -23,7 +23,7 @@ object PrefixSumScaleProbe {
     for (i <- 1 to 4) {
       val t0 = System.nanoTime()
       // force the distributed path regardless of estimate
-      val out = Relational.withPrefixSumRoute(local = false)(
+      val out = Relational.withLocalRoute(local = false)(
         Relational.prefixSums(df, Seq(col("k"), col("id")),
           Seq(col("v") -> "cum", lit(1L) -> "rk")))
       val c = out.agg(sum(col("cum")), sum(col("rk"))).collect()(0)

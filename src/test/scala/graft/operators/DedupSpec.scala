@@ -367,10 +367,13 @@ class DedupSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     // partitions > distinct texts: forces empty range partitions, so the
     // boundary-repair path (next NON-EMPTY partition's first) is exercised
-    for (p <- Seq(1, 4, 16)) {
-      val got = Dedup.prefixDups(corpus, col("text"), partitions = p)
+    // — on the distributed route, which this small corpus would not take
+    // unforced; the one-partition route must give the same answer
+    for (local <- Seq(false, true); p <- Seq(1, 4, 16)) {
+      val got = Relational.withLocalRoute(local)(
+          Dedup.prefixDups(corpus, col("text"), partitions = p))
         .select("doc_id").as[Long].collect().toSet
-      assert(got == Set(2L, 3L), s"partitions=$p")
+      assert(got == Set(2L, 3L), s"local=$local partitions=$p")
     }
   }
 

@@ -6,6 +6,12 @@ import org.apache.spark.sql.functions._
 class TrainingDataSpec extends SparkSpec {
   import spark.implicits._
 
+  /** `f` with every size-gated route forced local (the pickers on the
+    * driver) or distributed.
+    */
+  private def onRoute[A](local: Boolean)(f: => A): A =
+    Relational.withLocalRoute(local)(f)
+
   test("hashSample is deterministic and close to the requested fraction") {
     val df = spark.range(10000).toDF("id")
     val s1 = TrainingData.hashSample(df, col("id"), 0.3).select("id").as[Long].collect().toSet
@@ -611,17 +617,19 @@ class TrainingDataSpec extends SparkSpec {
     val pts = Seq((1L, 0.0f, 100L), (2L, 0.1f, 90L), (3L, 1.0f, 10L))
       .map { case (id, x, r) => (id, Array(x), r) }
       .toDF("vec_id", "embedding", "rel")
-    val out = TrainingData.mmrRerank(pts, "vec_id", "embedding", "rel", m = 3)
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
-    assert(out == Seq((1, 1L, 100L, 0L), (2, 3L, 10L, 1000000L),
-      (3, 2L, 90L, 10000L)))
-    graft.core.CacheRegistry.unpersistAll()
-    // λ = 1: pure relevance order regardless of geometry
-    val pure = TrainingData.mmrRerank(pts, "vec_id", "embedding", "rel",
-        m = 3, lamPpm = 1000000L)
-      .collect().map(r => r.getLong(1)).toSeq
-    assert(pure == Seq(1L, 2L, 3L))
-    graft.core.CacheRegistry.unpersistAll()
+    for (local <- Seq(true, false)) onRoute(local) {
+      val out = TrainingData.mmrRerank(pts, "vec_id", "embedding", "rel", m = 3)
+        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+      assert(out == Seq((1, 1L, 100L, 0L), (2, 3L, 10L, 1000000L),
+        (3, 2L, 90L, 10000L)), s"local=$local")
+      graft.core.CacheRegistry.unpersistAll()
+      // λ = 1: pure relevance order regardless of geometry
+      val pure = TrainingData.mmrRerank(pts, "vec_id", "embedding", "rel",
+          m = 3, lamPpm = 1000000L)
+        .collect().map(r => r.getLong(1)).toSeq
+      assert(pure == Seq(1L, 2L, 3L), s"local=$local")
+      graft.core.CacheRegistry.unpersistAll()
+    }
   }
 
   test("kcenterSelect: farthest-point picks in closed form; ties to smaller id") {
@@ -630,23 +638,26 @@ class TrainingDataSpec extends SparkSpec {
     // milli-unit squared distances
     val pts = Seq(1L -> 0.0f, 2L -> 1.0f, 3L -> 0.4f, 4L -> 0.6f, 5L -> 0.9f)
       .map { case (id, x) => (id, Array(x, 0.0f)) }.toDF("vec_id", "embedding")
-    val out = TrainingData.kcenterSelect(pts, "vec_id", "embedding", k = 4)
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(out == Seq((1, 4L, 0L), (2, 1L, 360000L),
-      (3, 2L, 160000L), (4, 3L, 40000L)))
-    graft.core.CacheRegistry.unpersistAll()
     // equidistant candidates: md5 starts at id 11 (x=1); ids 10 and 12
     // both sit at d² = 10⁶ — the tie goes to the smaller id
     val tie = Seq(10L -> 0.0f, 11L -> 1.0f, 12L -> 2.0f)
       .map { case (id, x) => (id, Array(x)) }.toDF("vec_id", "embedding")
-    val t2 = TrainingData.kcenterSelect(tie, "vec_id", "embedding", k = 3)
-      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(t2 == Seq((1, 11L, 0L), (2, 10L, 1000000L), (3, 12L, 1000000L)))
-    graft.core.CacheRegistry.unpersistAll()
-    // k beyond the candidate count: the realized prefix, not a crash
-    val ex = TrainingData.kcenterSelect(tie, "vec_id", "embedding", k = 10)
-      .collect()
-    assert(ex.length == 3)
-    graft.core.CacheRegistry.unpersistAll()
+    for (local <- Seq(true, false)) onRoute(local) {
+      val out = TrainingData.kcenterSelect(pts, "vec_id", "embedding", k = 4)
+        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
+      assert(out == Seq((1, 4L, 0L), (2, 1L, 360000L),
+        (3, 2L, 160000L), (4, 3L, 40000L)), s"local=$local")
+      graft.core.CacheRegistry.unpersistAll()
+      val t2 = TrainingData.kcenterSelect(tie, "vec_id", "embedding", k = 3)
+        .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq
+      assert(t2 == Seq((1, 11L, 0L), (2, 10L, 1000000L), (3, 12L, 1000000L)),
+        s"local=$local")
+      graft.core.CacheRegistry.unpersistAll()
+      // k beyond the candidate count: the realized prefix, not a crash
+      val ex = TrainingData.kcenterSelect(tie, "vec_id", "embedding", k = 10)
+        .collect()
+      assert(ex.length == 3, s"local=$local")
+      graft.core.CacheRegistry.unpersistAll()
+    }
   }
 }
