@@ -4,7 +4,7 @@ import graft.core.{CacheRegistry, Composite}
 import graft.operators._
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
-import graft.sources.Source
+import graft.sources.{ParquetTables, Source}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
@@ -25,17 +25,26 @@ import org.apache.spark.sql.types._
   */
 object SparkEntry {
 
+  /** Opens table `name` of the scale-factor directory `dir`
+    * (`$dir/$name.parquet`) through the parquet schema catalog
+    * ([[graft.sources.ParquetTables]]): the first open of a file in a JVM
+    * infers its schema in one Spark job, and later opens of the same file
+    * (same qualified path, length and modification time, same inference
+    * settings) run none. On top of the catalog's read it normalizes
+    * `events.ts` and repartitions `documents`/`embeddings`, as below.
+    */
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/$name.parquet")
+    val df = ParquetTables.open(s, s"$dir/$name.parquet")
     // events.ts has shipped under two physical parquet types across
     // testdata generations: INT64 TIMESTAMP(NANOS) (reads as a raw long
     // under spark.sql.legacy.parquet.nanosAsLong=true) and
     // TIMESTAMP(MICROS, isAdjustedToUTC=false) (reads as TIMESTAMP_NTZ).
-    // Branch on the dtype Spark actually inferred and normalize both to a
-    // µs-precision UTC TimestampType — the session TZ is pinned to UTC, so
-    // the NTZ→TZ cast preserves the exact epoch micros DuckDB sees when it
-    // reads the same naive-µs column. Queries downstream always see the
-    // same column type regardless of which generation is on disk.
+    // Branch on the dtype Spark inferred (the catalog keeps the inferred
+    // schema) and normalize both to a µs-precision UTC TimestampType —
+    // the session TZ is pinned to UTC, so the NTZ→TZ cast preserves the
+    // exact epoch micros DuckDB sees when it reads the same naive-µs
+    // column. Queries downstream always see the same column type
+    // regardless of which generation is on disk.
     if (name == "events") df.schema("ts").dataType match {
       case LongType         => // nanos-as-long: µs-aligned, division lossless
         df.withColumn("ts", timestamp_micros(expr("ts div 1000L")))
@@ -47,14 +56,14 @@ object SparkEntry {
     // them (shingling, hashing, pairwise cosine) are compute-bound. A
     // round-robin repartition costs one tiny shuffle (data is small by
     // construction whenever scan parallelism is this low) and lets the
-    // heavy expressions use every core. At real scale the scan already
-    // yields thousands of splits and this would be skipped.
+    // heavy expressions use every core. No code skips it at real scale,
+    // where the scan already yields many splits (see SCALE.md).
     else if (name == "documents" || name == "embeddings")
       // hash-repartition on the dense unique id instead of round-robin:
-      // same even 32-way spread, but skips round-robin's
-      // sort-before-repartition (a local sort of the full text/vector
-      // payload on the single scan task — pure overhead here since
-      // every downstream result is partitioning-independent)
+      // the same even spread over defaultParallelism partitions, but it
+      // skips round-robin's sort-before-repartition (a local sort of the
+      // full text/vector payload on the single scan task — pure overhead
+      // here since every downstream result is partitioning-independent)
       df.repartition(s.sparkContext.defaultParallelism,
         col(if (name == "documents") "doc_id" else "vec_id"))
     // MEASURED AND REJECTED (r16): repartitioning the single-row-group
@@ -1010,7 +1019,7 @@ object SparkEntry {
       // exact feeds 3 readout legs and found 2 — both tiny id-pair sets
       // checkpoint so the n²/2 sweep and the LSH pipeline run once
       val found = Dedup.embeddingCosinePairs(e, "vec_id", "embedding", 0.35, tables = 4,
-        knownCount = Some(s.read.parquet(s"$d/embeddings.parquet").count()))
+        knownCount = Some(ParquetTables.open(s, s"$d/embeddings.parquet").count()))
         .select(col("id_a"), col("id_b")).transform(CacheRegistry.checkpoint(_))
       exact.agg(count(lit(1)).as("n_exact"))
         .crossJoin(found.join(exact, key, "left_anti").agg(count(lit(1)).as("_extra")))

@@ -29,9 +29,16 @@ object Source {
     * pushed into the scan by Catalyst (verify via `PushedFilters` in
     * `.explain("formatted")`) — at 100 TB this is the difference between
     * reading a column slice and reading everything.
+    *
+    * Opens through the parquet schema catalog ([[ParquetTables]]): a
+    * plain file's schema is inferred once per JVM and reused while its
+    * qualified path, length and modification time (and the session's
+    * inference settings) stay the same; an equal path, length and
+    * modification time over rewritten bytes reads a stale schema.
+    * Directories and globs infer on every open, as `spark.read.parquet`.
     */
   def parquet(name: String, path: String): Source =
-    Source(name, _.read.parquet(path))
+    Source(name, ParquetTables.open(_, path))
 
   def csv(name: String, path: String, schema: StructType, header: Boolean = false): Source =
     Source(name, _.read.schema(schema).option("header", header.toString).csv(path))

@@ -4,7 +4,10 @@ package graft
   * overrides without touching the bench contract. Overrides come from
   * env `PROBE_CONF` as "key=value;key=value". Runs each named query
   * `PROBE_RUNS` (default 4) times, reports every run + the median of
-  * the post-warmup runs. Dev tool only — never wired into Bench.
+  * the post-warmup runs, and the last run's job count split into build
+  * jobs (launched while the query builder runs; by then the parquet
+  * schema catalog holds the query's tables, so opens add none) and
+  * action jobs. Dev tool only — never wired into Bench.
   */
 object TimeQC {
   def main(args: Array[String]): Unit = {
@@ -21,14 +24,19 @@ object TimeQC {
     // Deterministic per-query work profile: jobs/stages/tasks counted
     // off the listener bus — box-noise-free signals of scheduling
     // overhead (seconds alone swing ±30% between invocations here).
-    val jobs = new java.util.concurrent.atomic.AtomicLong
+    // Jobs launched inside `queries(q)(spark, d)` carry the `buildTag`
+    // local property and count as build jobs; the rest are the action's.
+    val buildTag = "graft.probe.build"
+    val buildJobs = new java.util.concurrent.atomic.AtomicLong
+    val actionJobs = new java.util.concurrent.atomic.AtomicLong
     val stages = new java.util.concurrent.atomic.AtomicLong
     val tasks = new java.util.concurrent.atomic.AtomicLong
     spark.sparkContext.addSparkListener(
       new org.apache.spark.scheduler.SparkListener {
         override def onJobStart(
             j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
+          val build = Option(j.properties).exists(_.getProperty(buildTag) != null)
+          (if (build) buildJobs else actionJobs).incrementAndGet(); ()
         }
         override def onStageCompleted(
             s: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
@@ -50,10 +58,13 @@ object TimeQC {
         if (i == runs) { // profile the LAST run only (post-warmup)
           org.apache.spark.GraftListenerBridge.waitUntilEmpty(
             spark.sparkContext, 10000L)
-          jobs.set(0); stages.set(0); tasks.set(0)
+          buildJobs.set(0); actionJobs.set(0); stages.set(0); tasks.set(0)
         }
         val t0 = System.nanoTime()
-        val n = SparkEntry.queries(q)(spark, d).count()
+        spark.sparkContext.setLocalProperty(buildTag, q)
+        val df = try SparkEntry.queries(q)(spark, d)
+          finally spark.sparkContext.setLocalProperty(buildTag, null)
+        val n = df.count()
         graft.core.CacheRegistry.unpersistAll(blocking = true)
         spark.catalog.clearCache()
         val dt = (System.nanoTime() - t0) / 1e9
@@ -63,7 +74,8 @@ object TimeQC {
         spark.sparkContext, 10000L)
       val ts = times.map(_._1)
       val med = ts.drop(1).sorted.apply((runs - 1) / 2)
-      println(f"$q%-24s med=${med}%.3f jobs=${jobs.get} stages=${stages.get} " +
+      println(f"$q%-24s med=${med}%.3f build_jobs=${buildJobs.get} " +
+        f"action_jobs=${actionJobs.get} stages=${stages.get} " +
         f"tasks=${tasks.get} runs=${ts.map(t => f"$t%.2f").mkString(",")} rows=${times.head._2}")
     }
     spark.stop()
