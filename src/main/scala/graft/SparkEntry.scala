@@ -112,6 +112,27 @@ object SparkEntry {
       .where(col("n_name") === "NATION_7")
       .select((col("s_suppkey") * 2L + 1L).as("seed"))
 
+  /** The ANN recall gate: `ann(q, e)`'s top-5 for the first 10
+    * embeddings against their exact brute-force top-5 — `n_brute`, and
+    * `recall_ok` when at least `minRecall` of those pairs are found. The
+    * brute set feeds both readout legs, so it is checkpointed and the
+    * exact sweep runs once (no cross-subtree reuse otherwise).
+    */
+  private def annRecallGate(s: SparkSession, d: String, minRecall: Double)(
+      ann: (DataFrame, DataFrame) => DataFrame): DataFrame = {
+    val e = t(s, d, "embeddings")
+    val q = e.where(col("vec_id") < 10)
+    val key = Seq("query_id", "neighbor_id")
+    val brute = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", 5)
+      .select(key.map(col): _*).transform(CacheRegistry.checkpoint(_))
+    val found = ann(q, e).select(key.map(col): _*)
+    brute.agg(count(lit(1)).as("n_brute"))
+      .crossJoin(brute.join(found, key, "left_semi").agg(count(lit(1)).as("_hit")))
+      .select(
+        col("n_brute"),
+        (col("_hit") >= col("n_brute").cast("double") * minRecall).as("recall_ok"))
+  }
+
   /** Exact decimal sum rendered as double — accumulation-order-proof. */
   private def moneySum(c: Column): Column =
     sum(c.cast("decimal(18,2)")).cast("double")
@@ -1099,92 +1120,34 @@ object SparkEntry {
       Similarity.bruteForceTopK(e.where(col("vec_id") < 10), e, "vec_id", "embedding", 5)
     }),
 
-    // ANN recall gates: approximate top-5 vs the oracle-checked brute
-    // force top-5 (q_sim_brute), overall recall >= 0.6 pinned by the
-    // oracle. LSH: bits=3/tables=8 measured 0.80/0.86; IVF with the
-    // sampled quantizer and nprobe=6 measured 0.78/0.74.
-    "q_sim_lsh" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
-      val q = e.where(col("vec_id") < 10)
-      val key = Seq("query_id", "neighbor_id")
-      // brute feeds both readout legs — checkpoint the tiny top-k set
-      // so the exact sweep runs once (no cross-subtree reuse otherwise)
-      val brute = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", 5)
-        .select(col("query_id"), col("neighbor_id")).transform(CacheRegistry.checkpoint(_))
-      val lsh = Similarity.lshTopK(q, e, "vec_id", "embedding", 5, bits = 3, tables = 8)
-        .select(col("query_id"), col("neighbor_id"))
-      brute.agg(count(lit(1)).as("n_brute"))
-        .crossJoin(brute.join(lsh, key, "left_semi").agg(count(lit(1)).as("_hit")))
-        .select(
-          col("n_brute"),
-          (col("_hit") >= col("n_brute").cast("double") * 0.6).as("recall_ok"))
-    }),
+    // ANN recall gates (annRecallGate): approximate top-5 vs the
+    // oracle-checked brute force top-5 (q_sim_brute), overall recall
+    // pinned by the oracle. LSH: bits=3/tables=8 measured 0.80/0.86.
+    "q_sim_lsh" -> ((s, d) => annRecallGate(s, d, 0.6)((q, e) =>
+      Similarity.lshTopK(q, e, "vec_id", "embedding", 5, bits = 3, tables = 8))),
 
-    "q_sim_ivf" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
-      val q = e.where(col("vec_id") < 10)
-      val key = Seq("query_id", "neighbor_id")
-      // brute feeds both readout legs — checkpoint the tiny top-k set
-      // so the exact sweep runs once (no cross-subtree reuse otherwise)
-      val brute = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", 5)
-        .select(col("query_id"), col("neighbor_id")).transform(CacheRegistry.checkpoint(_))
-      // nprobe 10/16: the 0.6 recall pin must hold at BOTH gate scales
-      // (the quantizer trains on a deterministic layout-INVARIANT
-      // content-hash sample since round 13, so the recall level is a
-      // property of the data + seed alone; 6/16 sat at 0.68/0.58
-      // historically — 10/16 keeps honest margin)
-      val ivf = Similarity.ivfTopK(q, e, "vec_id", "embedding", 5, nlist = 16, nprobe = 10)
-        .select(col("query_id"), col("neighbor_id"))
-      brute.agg(count(lit(1)).as("n_brute"))
-        .crossJoin(brute.join(ivf, key, "left_semi").agg(count(lit(1)).as("_hit")))
-        .select(
-          col("n_brute"),
-          (col("_hit") >= col("n_brute").cast("double") * 0.6).as("recall_ok"))
-    }),
+    // nprobe 10/16: the 0.6 recall pin must hold at BOTH gate scales
+    // (the quantizer trains on a deterministic layout-INVARIANT
+    // content-hash sample since round 13, so the recall level is a
+    // property of the data + seed alone; 6/16 sat at 0.68/0.58
+    // historically — 10/16 keeps honest margin)
+    "q_sim_ivf" -> ((s, d) => annRecallGate(s, d, 0.6)((q, e) =>
+      Similarity.ivfTopK(q, e, "vec_id", "embedding", 5, nlist = 16, nprobe = 10))),
 
     // IVF-PQ recall gate (FAISS IndexIVFPQ shape): coarse probe of
     // 8/16 cells, 16×64 PQ ADC shortlist of 25, exact-cosine rerank to
     // top-5 — recall >= 0.5 pinned vs the brute-force top-5 (both
     // pruning axes lose recall; nprobe and rerank are the dials).
-    "q_sim_ivfpq" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
-      val q = e.where(col("vec_id") < 10)
-      val key = Seq("query_id", "neighbor_id")
-      // brute feeds both readout legs — checkpoint the tiny top-k set
-      // so the exact sweep runs once (no cross-subtree reuse otherwise)
-      val brute = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", 5)
-        .select(col("query_id"), col("neighbor_id")).transform(CacheRegistry.checkpoint(_))
-      val ivfpq = Similarity.ivfPqTopK(q, e, "vec_id", "embedding", 5,
-        nlist = 16, nprobe = 8, m = 16, kSub = 64, rerank = 25)
-        .select(col("query_id"), col("neighbor_id"))
-      brute.agg(count(lit(1)).as("n_brute"))
-        .crossJoin(brute.join(ivfpq, key, "left_semi").agg(count(lit(1)).as("_hit")))
-        .select(
-          col("n_brute"),
-          (col("_hit") >= col("n_brute").cast("double") * 0.5).as("recall_ok"))
-    }),
+    "q_sim_ivfpq" -> ((s, d) => annRecallGate(s, d, 0.5)((q, e) =>
+      Similarity.ivfPqTopK(q, e, "vec_id", "embedding", 5,
+        nlist = 16, nprobe = 8, m = 16, kSub = 64, rerank = 25))),
 
     // PQ recall gate: 16×64 product quantization, ADC shortlist of 25,
     // exact-cosine rerank to top-5 (the production PQ search shape) vs
     // the oracle-checked brute-force top-5 — recall >= 0.6 pinned
     // (measured 0.98 at sf0.01, 0.82 at sf0.1).
-    "q_sim_pq" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
-      val q = e.where(col("vec_id") < 10)
-      val key = Seq("query_id", "neighbor_id")
-      // brute feeds both readout legs — checkpoint the tiny top-k set
-      // so the exact sweep runs once (no cross-subtree reuse otherwise)
-      val brute = Similarity.bruteForceTopK(q, e, "vec_id", "embedding", 5)
-        .select(col("query_id"), col("neighbor_id")).transform(CacheRegistry.checkpoint(_))
-      val pq = Similarity.pqTopK(q, e, "vec_id", "embedding", 5,
-        m = 16, kSub = 64, rerank = 25)
-        .select(col("query_id"), col("neighbor_id"))
-      brute.agg(count(lit(1)).as("n_brute"))
-        .crossJoin(brute.join(pq, key, "left_semi").agg(count(lit(1)).as("_hit")))
-        .select(
-          col("n_brute"),
-          (col("_hit") >= col("n_brute").cast("double") * 0.6).as("recall_ok"))
-    }),
+    "q_sim_pq" -> ((s, d) => annRecallGate(s, d, 0.6)((q, e) =>
+      Similarity.pqTopK(q, e, "vec_id", "embedding", 5, m = 16, kSub = 64, rerank = 25))),
 
     // -- text analysis ---------------------------------------------- //
     "q_text_stats" -> ((s, d) =>

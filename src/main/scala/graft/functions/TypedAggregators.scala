@@ -189,21 +189,6 @@ object TypedAggregators {
     if (n == out.length) out else java.util.Arrays.copyOf(out, n)
   }
 
-  /** KMV (k-minimum-values) distinct sketch (Beyer et al., SIGMOD'07):
-    * keep the `k` smallest distinct hash values seen. Unlike HLL it
-    * supports INTERSECTION (and difference) estimation — the k
-    * smallest of A ∪ B form a uniform sample of the union, and the
-    * fraction of that sample present in both sketches estimates the
-    * Jaccard — which is what audience-overlap / cross-corpus-leakage
-    * questions need; see [[graft.operators.Sketches
-    * .kmvIntersectEstimate]]. Buffer is a sorted long array capped at
-    * `k` (mergeable, so map-side partials carry ≤ k values per
-    * partition and the shuffle payload is bounded). Input must be a
-    * 64-bit hash (e.g. `xxhash64`); values are stored sign-flipped
-    * (`h ^ Long.MinValue`) so signed array order equals unsigned hash
-    * order. When fewer than `k` distinct values exist the sketch IS
-    * the exact distinct hash set.
-    */
   /** The kmv single-value insert, shared with the streaming twin
     * ([[graft.streaming.StreamDistinct]]) so the cap/dup handling can
     * never diverge between the batch and streaming sketches. Stores
@@ -227,6 +212,21 @@ object TypedAggregators {
     }
   }
 
+  /** KMV (k-minimum-values) distinct sketch (Beyer et al., SIGMOD'07):
+    * keep the `k` smallest distinct hash values seen. Unlike HLL it
+    * supports INTERSECTION (and difference) estimation — the k
+    * smallest of A ∪ B form a uniform sample of the union, and the
+    * fraction of that sample present in both sketches estimates the
+    * Jaccard — which is what audience-overlap / cross-corpus-leakage
+    * questions need; see [[graft.operators.Sketches
+    * .kmvIntersectEstimate]]. Buffer is a sorted long array capped at
+    * `k` (mergeable, so map-side partials carry ≤ k values per
+    * partition and the shuffle payload is bounded). Input must be a
+    * 64-bit hash (e.g. `xxhash64`); values are stored sign-flipped
+    * (`h ^ Long.MinValue`) so signed array order equals unsigned hash
+    * order. When fewer than `k` distinct values exist the sketch IS
+    * the exact distinct hash set.
+    */
   def kmv(k: Int): Aggregator[Long, Array[Long], Array[Long]] = {
     require(k >= 16, s"kmv: k must be >= 16, got $k")
     new Aggregator[Long, Array[Long], Array[Long]] {

@@ -2502,19 +2502,6 @@ object Analytics {
         expr("sum_dev div n").as("avg_dev"))
   }
 
-  /** Theil-Sen robust trend: per group, the MEDIAN of all pairwise
-    * slopes over the daily series — one wild outlier day can drag an
-    * OLS fit anywhere, but moves the slope median not at all (the
-    * estimator tolerates ~29% contamination). Slopes are exact
-    * integer ppm (`Δcents·10⁶ div Δday`); the median comes from
-    * [[groupedExactQuantiles]], so the whole path is
-    * integer-deterministic.
-    *
-    * Scale note: pairs are per-group day², bounded by the calendar
-    * span squared (≈ 10⁵ pairs per group for a year of days — flat
-    * work, not data-scale work); the raw stream only feeds the
-    * per-day aggregate. Output: (group, n_pairs, slope_ppm).
-    */
   /** Single change-point scan (max-CUSUM) — "WHERE did this series
     * break", the location the running [[cusum]] alarm doesn't give:
     * for each key's day-ordered series the statistic
@@ -2776,6 +2763,19 @@ object Analytics {
             sqrt(col("var18").cast("double") / lit(18.0d))).cast("long")))
   }
 
+  /** Theil-Sen robust trend: per group, the MEDIAN of all pairwise
+    * slopes over the daily series — one wild outlier day can drag an
+    * OLS fit anywhere, but moves the slope median not at all (the
+    * estimator tolerates ~29% contamination). Slopes are exact
+    * integer ppm (`Δcents·10⁶ div Δday`); the median comes from
+    * [[groupedExactQuantiles]], so the whole path is
+    * integer-deterministic.
+    *
+    * Scale note: pairs are per-group day², bounded by the calendar
+    * span squared (≈ 10⁵ pairs per group for a year of days — flat
+    * work, not data-scale work); the raw stream only feeds the
+    * per-day aggregate. Output: (group, n_pairs, slope_ppm).
+    */
   def theilSen(df: DataFrame, groupCol: Column, dayCol: Column,
       centsCol: Column): DataFrame = {
     val daily = df.select(groupCol.as("_g"), dayCol.cast("long").as("_d"),

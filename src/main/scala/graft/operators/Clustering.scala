@@ -85,22 +85,6 @@ object Clustering {
   def assign(df: DataFrame, vecCol: String, centroids: Array[Array[Double]]): DataFrame =
     df.withColumn("cell", VectorFunctions.nearestCentroid(col(vecCol), centroids))
 
-  /** Calinski-Harabasz index (variance-ratio criterion) — the
-    * clustering-quality scalar that picks k and audits a labeling:
-    * CH = (B/(k−1)) / (W/(n−k)), between- over within-cluster scatter.
-    * It is exactly multi-dimensional ANOVA, so it reuses
-    * [[Analytics.anovaF]]'s identity per dimension: with per-(cluster,
-    * dim) sums S, W = Q − Σ S²/n_c and B = Σ S²/n_c − ‖ΣS‖²/N — no
-    * centroid subtraction pass over the data at all.
-    *
-    * Exactness: vector elements (and their squares) are rounded to
-    * 10dp DECIMAL before summing ([[graft.operators.Linalg]]'s matvec
-    * convention), the two k·dim-bounded Σ S²/n reductions use 6dp
-    * DECIMAL terms, and CH is one fixed IEEE shape over five scalars.
-    * Shape: one explode + hash-agg to the (k × dim) frame, everything
-    * after is dimension-bounded. Output one row: (k, n, ch); null when
-    * k < 2, n ≤ k, or W = 0.
-    */
   /** Davies-Bouldin index — the lower-is-better partner of
     * [[calinskiHarabasz]] (CH rewards separation globally; DB charges
     * each cluster its WORST neighbor): with the original paper's
@@ -175,6 +159,22 @@ object Clustering {
           .as("db"))
   }
 
+  /** Calinski-Harabasz index (variance-ratio criterion) — the
+    * clustering-quality scalar that picks k and audits a labeling:
+    * CH = (B/(k−1)) / (W/(n−k)), between- over within-cluster scatter.
+    * It is exactly multi-dimensional ANOVA, so it reuses
+    * [[Analytics.anovaF]]'s identity per dimension: with per-(cluster,
+    * dim) sums S, W = Q − Σ S²/n_c and B = Σ S²/n_c − ‖ΣS‖²/N — no
+    * centroid subtraction pass over the data at all.
+    *
+    * Exactness: vector elements (and their squares) are rounded to
+    * 10dp DECIMAL before summing ([[graft.operators.Linalg]]'s matvec
+    * convention), the two k·dim-bounded Σ S²/n reductions use 6dp
+    * DECIMAL terms, and CH is one fixed IEEE shape over five scalars.
+    * Shape: one explode + hash-agg to the (k × dim) frame, everything
+    * after is dimension-bounded. Output one row: (k, n, ch); null when
+    * k < 2, n ≤ k, or W = 0.
+    */
   def calinskiHarabasz(df: DataFrame, labelCol: Column, vecCol: Column): DataFrame = {
     val ev = df.where(labelCol.isNotNull && vecCol.isNotNull)
       .select(labelCol.as("_c"), posexplode(vecCol).as(Seq("_i", "_e")))

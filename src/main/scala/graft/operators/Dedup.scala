@@ -876,12 +876,6 @@ object Dedup {
         sum(col("_d")).as("sum_dist"))
   }
 
-  /** One-call near-duplicate removal: n-gram Jaccard pair generation →
-    * connected components → keep each cluster's representative (the
-    * smallest id). The composition every dedup user actually wants;
-    * the staged forms remain available for pipelines that need the
-    * pairs or labels themselves.
-    */
   /** Component labels for the nodes INCIDENT to a pair edge, with the
     * (typically expensive) pair plan materialized exactly once — both
     * the node set and the propagation edges derive from the same
@@ -903,6 +897,12 @@ object Dedup {
     connectedComponents(nodes, "id", p, aCol, bCol)
   }
 
+  /** One-call near-duplicate removal: n-gram Jaccard pair generation →
+    * connected components → keep each cluster's representative (the
+    * smallest id). The composition every dedup user actually wants;
+    * the staged forms remain available for pipelines that need the
+    * pairs or labels themselves.
+    */
   def dropNearDuplicates(
       df: DataFrame,
       idCol: String,
@@ -1029,29 +1029,14 @@ object Dedup {
       probes: Int = 2,
       trainSample: Int = 4096,
       seed: Long = 42L): DataFrame = {
-    import graft.functions.VectorFunctions._
+    import graft.functions.VectorFunctions.nearestCentroids
     val cents = Similarity.trainCentroids(df, vecCol, nlist, trainSample, seed)
     val assigned = CacheRegistry.persist(
       df.select(
         col(idCol).as("id"), col(vecCol).as("v"),
         explode(nearestCentroids(col(vecCol), cents, math.min(probes, cents.length)))
           .as("cell")))
-    val a = assigned.select(col("cell"), col("id").as("id_a"), col("v").as("v_a"))
-    val b = assigned.select(col("cell"), col("id").as("id_b"), col("v").as("v_b"))
-    // verify-THEN-dedup: cosine is deterministic per (id_a, id_b), so
-    // filtering before dropDuplicates returns the identical pair set —
-    // but the dedup exchange then carries only the few above-threshold
-    // (id_a, id_b, cosine) rows instead of every candidate pair
-    // decorated with BOTH dense vectors (measured ~300 MB/run → KBs on
-    // the gate corpus; a pair straddling `probes` shared cells pays the
-    // fused cosine kernel at most `probes` extra times, which is noise
-    // next to shuffling its two vectors)
-    a.join(b, Seq("cell"))
-      .where(col("id_a") < col("id_b"))
-      .withColumn("cosine", cosine(col("v_a"), col("v_b")))
-      .where(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
-      .dropDuplicates("id_a", "id_b")
+    Similarity.verifiedCosinePairs(assigned, Seq("cell"), threshold)
   }
 
   /** One-call semantic dedup: [[semanticPairs]], then drop every row
@@ -1167,7 +1152,6 @@ object Dedup {
       bits: Int = -1,
       tables: Int = 2,
       knownCount: Option[Long] = None): DataFrame = {
-    import graft.functions.VectorFunctions._
     val effectiveBits =
       if (bits > 0) bits
       else {
@@ -1184,28 +1168,9 @@ object Dedup {
         }
         math.max(4, math.ceil(math.log(math.max(n, 1L).toDouble / 128.0) / math.log(2.0)).toInt)
       }
-    val bucketed = df.select(
-      col(idCol).as("id"),
-      col(vecCol).as("v"),
-      explode(array((0 until tables).map { t =>
-        struct(
-          lit(t).as("tbl"),
-          hyperplaneBucket(col(vecCol), effectiveBits, seed = 42L + t).as("bucket"))
-      }: _*)).as("tb"))
-      .select(col("id"), col("v"), col("tb.tbl"), col("tb.bucket"))
-    val a = bucketed.select(col("tbl"), col("bucket"), col("id").as("id_a"), col("v").as("v_a"))
-    val b = bucketed.select(col("tbl"), col("bucket"), col("id").as("id_b"), col("v").as("v_b"))
-    // verify-THEN-dedup (the semanticPairs discipline): identical pair
-    // set, but the dedup exchange carries only above-threshold
-    // (id_a, id_b, cosine) rows — never candidate pairs decorated with
-    // both dense vectors; a pair colliding in several tables pays the
-    // fused cosine at most `tables` times instead of shuffling vectors
-    a.join(b, Seq("tbl", "bucket"))
-      .where(col("id_a") < col("id_b"))
-      .withColumn("cosine", cosine(col("v_a"), col("v_b")))
-      .where(col("cosine") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
-      .dropDuplicates("id_a", "id_b")
+    Similarity.verifiedCosinePairs(
+      Similarity.lshTables(df, idCol, vecCol, "id", "v", effectiveBits, tables, 42L),
+      Seq("tbl", "bucket"), threshold)
   }
 
   /** MinHash-LSH parameter plan: given a signature budget and a

@@ -329,24 +329,40 @@ object Graph {
     * node) order — a reproducible uniform draw with no RNG, the
     * [[graft.operators.TrainingData]] hash discipline.
     *
-    * One TAGGED multi-source BFS: the frontier is (seed, node) keyed,
-    * so all seeds advance in the SAME superstep joins — s seeds cost
-    * s× edge traffic per round, not s sequential BFS loops. Per
-    * round: one hash join frontier⋈edges, one distinct, one anti-join
-    * against visited, one materializing localCheckpoint (the
-    * [[hopDistance]] discipline — lineage stays O(rounds) and
-    * shallow). The score is the exact integer floor sum
-    * Σ 10⁶ div d over reached (seed ≠ node) pairs; output is the
-    * global top-`k` by (score, node) via TakeOrdered. Output:
-    * (node, n_reached, harmonic_ppm).
+    * One [[taggedBfs]]: the frontier is (seed, node) keyed, so all
+    * seeds advance in the SAME superstep joins — s seeds cost s× edge
+    * traffic per round, not s sequential BFS loops, and each round's
+    * one materializing localCheckpoint (the [[hopDistance]]
+    * discipline) keeps lineage O(rounds) and shallow. The score is
+    * the exact integer floor sum Σ 10⁶ div d over reached
+    * (seed ≠ node) pairs; output is the global top-`k` by (score,
+    * node) via TakeOrdered. Output: (node, n_reached, harmonic_ppm).
     */
   def harmonicCentrality(edges: DataFrame, srcCol: Column, dstCol: Column,
       nSeeds: Int = 8, maxHops: Int = 3, k: Int = 50): DataFrame = {
     require(nSeeds >= 1 && maxHops >= 1 && k >= 1,
       s"harmonicCentrality: nSeeds/maxHops/k must be >= 1")
+    taggedBfs(edges, srcCol, dstCol, nSeeds, maxHops)
+      .where(col("dist") > 0)
+      .groupBy(col("node"))
+      .agg(count(lit(1)).as("n_reached"),
+        sum(expr("1000000 div dist")).as("harmonic_ppm"))
+      .orderBy(col("harmonic_ppm").desc, col("node").asc)
+      .limit(k)
+  }
+
+  /** The seeded TAGGED multi-source BFS behind [[harmonicCentrality]]
+    * and [[distanceSummary]]: the `nSeeds` [[md5Seeds]] each start at
+    * distance 0, and the (seed, node)-keyed frontier advances all seeds
+    * in the SAME superstep joins for `maxHops` rounds. Each round is one
+    * hash join frontier⋈edges, one distinct, one anti-join against
+    * visited and one materializing checkpoint. Output (seed, node, dist)
+    * for every pair reached, the seeds themselves at dist 0.
+    */
+  private def taggedBfs(edges: DataFrame, srcCol: Column, dstCol: Column,
+      nSeeds: Int, maxHops: Int): DataFrame = {
     val e = bfsEdges(edges, srcCol, dstCol)
-    val seeds = md5Seeds(e, nSeeds)
-    var dist = seeds
+    var dist = md5Seeds(e, nSeeds)
       .select(col("node").as("seed"), col("node"), lit(0).as("dist"))
       .transform(CacheRegistry.checkpoint(_))
     var frontier = dist
@@ -363,44 +379,9 @@ object Graph {
       dist = dist.union(next)
       frontier = next
     }
-    dist.where(col("dist") > 0)
-      .groupBy(col("node"))
-      .agg(count(lit(1)).as("n_reached"),
-        sum(expr("1000000 div dist")).as("harmonic_ppm"))
-      .orderBy(col("harmonic_ppm").desc, col("node").asc)
-      .limit(k)
+    dist
   }
 
-  /** Per-node triangle counts and local clustering coefficient over an
-    * undirected edge list (duplicates, reversed duplicates, and
-    * self-loops tolerated — edges canonicalize to distinct u<v pairs).
-    * Triangle density separates organic link neighborhoods from link
-    * farms (spam rings are near-bipartite: high degree, no closure),
-    * so it sits next to [[pageRank]] in the corpus-quality toolbox.
-    *
-    * Algorithm: degree-ordered edge orientation (Schank–Wagner /
-    * compact-forward) — orient each edge from its (degree, id)-smaller
-    * endpoint to the larger, which caps every node's out-degree at
-    * O(√m) on ANY graph, then count closed wedges with two equi-joins:
-    * (s→b)⋈(b→c) forms the wedge, a semi-check against (s→c) closes
-    * it. Each triangle is found exactly once (its (deg,id)-minimum
-    * vertex is the unique pivot). Without the orientation a hub with
-    * degree d contributes d² wedges; with it, the worst case is m^1.5
-    * total wedge rows — the difference between a feasible and an
-    * impossible plan on a power-law co-purchase graph.
-    *
-    * Scale shape: the canonical and oriented edge frames are each
-    * materialized ONCE via eager `localCheckpoint` — e feeds three
-    * consumers and ori three self-join legs, so without it the
-    * (possibly expensive) upstream edge pipeline replays per consumer;
-    * checkpointing also hands AQE the true |E| so the tiny deg/count
-    * joins broadcast (measured ~2× over a columnar persist of the same
-    * frames — the same superstep discipline as [[pageRank]]). Every
-    * join is an equi-join on node keys shuffling (s, t) pairs only.
-    * Output: `node, degree, n_tri, clustering` for every node in >= 1
-    * triangle, where clustering = 2·n_tri / (degree·(degree−1)) as one
-    * IEEE division of exact bigints (cross-engine exact).
-    */
   /** k-core of an undirected graph: the maximal subgraph where every
     * node keeps degree >= k, found by iterated peeling (remove
     * under-degree nodes, recompute, repeat to fixpoint). Coreness
@@ -757,6 +738,36 @@ object Graph {
           expr("_wmin * 1000000 div w_total")).as("recip_w_ppm"))
   }
 
+  /** Per-node triangle counts and local clustering coefficient over an
+    * undirected edge list (duplicates, reversed duplicates, and
+    * self-loops tolerated — edges canonicalize to distinct u<v pairs).
+    * Triangle density separates organic link neighborhoods from link
+    * farms (spam rings are near-bipartite: high degree, no closure),
+    * so it sits next to [[pageRank]] in the corpus-quality toolbox.
+    *
+    * Algorithm: degree-ordered edge orientation (Schank–Wagner /
+    * compact-forward) — orient each edge from its (degree, id)-smaller
+    * endpoint to the larger, which caps every node's out-degree at
+    * O(√m) on ANY graph, then count closed wedges with two equi-joins:
+    * (s→b)⋈(b→c) forms the wedge, a semi-check against (s→c) closes
+    * it. Each triangle is found exactly once (its (deg,id)-minimum
+    * vertex is the unique pivot). Without the orientation a hub with
+    * degree d contributes d² wedges; with it, the worst case is m^1.5
+    * total wedge rows — the difference between a feasible and an
+    * impossible plan on a power-law co-purchase graph.
+    *
+    * Scale shape: the canonical and oriented edge frames are each
+    * materialized ONCE via eager `localCheckpoint` — e feeds three
+    * consumers and ori three self-join legs, so without it the
+    * (possibly expensive) upstream edge pipeline replays per consumer;
+    * checkpointing also hands AQE the true |E| so the tiny deg/count
+    * joins broadcast (measured ~2× over a columnar persist of the same
+    * frames — the same superstep discipline as [[pageRank]]). Every
+    * join is an equi-join on node keys shuffling (s, t) pairs only.
+    * Output: `node, degree, n_tri, clustering` for every node in >= 1
+    * triangle, where clustering = 2·n_tri / (degree·(degree−1)) as one
+    * IEEE division of exact bigints (cross-engine exact).
+    */
   def triangleCounts(edges: DataFrame, srcCol: Column, dstCol: Column): DataFrame = {
     // least/greatest skip nulls: a null endpoint collapses to u==v and
     // the strict < drops it, like a self-loop
@@ -1037,19 +1048,6 @@ object Graph {
           .as("modularity"))
   }
 
-  /** Degree distribution — the first thing to look at on any graph
-    * (hub structure, power-law tail, skew that will break a
-    * superstep's shuffle): per-degree node counts plus each bucket's
-    * share of total degree (ppm), so "the top-degree bucket carries
-    * X% of the edges" reads straight off the result.
-    *
-    * Two hash-aggs on narrow longs: node → degree (|E| rows in,
-    * map-side combined), then degree → node count (|V| rows in). The
-    * totals row is a 1-row broadcast. Degree is OUT-degree of the
-    * edge list as given — pass a symmetrized list (both directions)
-    * for undirected total degree. Output: (degree, n_nodes,
-    * degree_share_ppm) — exact integers only.
-    */
   /** Deterministic hash-guided walks — the DeepWalk/node2vec corpus
     * generator with the RNG replaced by a hash argmin so the walks
     * are reproducible and oracle-checkable: at step i from node cur,
@@ -1087,6 +1085,19 @@ object Graph {
     walk.select(col("start"), col("cur").as("final"), col("path"))
   }
 
+  /** Degree distribution — the first thing to look at on any graph
+    * (hub structure, power-law tail, skew that will break a
+    * superstep's shuffle): per-degree node counts plus each bucket's
+    * share of total degree (ppm), so "the top-degree bucket carries
+    * X% of the edges" reads straight off the result.
+    *
+    * Two hash-aggs on narrow longs: node → degree (|E| rows in,
+    * map-side combined), then degree → node count (|V| rows in). The
+    * totals row is a 1-row broadcast. Degree is OUT-degree of the
+    * edge list as given — pass a symmetrized list (both directions)
+    * for undirected total degree. Output: (degree, n_nodes,
+    * degree_share_ppm) — exact integers only.
+    */
   def degreeDistribution(edges: DataFrame, srcCol: Column): DataFrame = {
     val deg = edges.where(srcCol.isNotNull)
       .groupBy(srcCol.as("_n")).agg(count(lit(1)).as("degree"))
@@ -1233,8 +1244,8 @@ object Graph {
     *    9·total`, no percentile float)
     *  - `mean_dist_ppm` — exact `10⁶·Σd div pairs`
     *
-    * Scale shape: the BFS is the [[harmonicCentrality]] superstep
-    * loop verbatim; the readout aggregates a ≤`maxHops`-row
+    * Scale shape: the BFS is [[taggedBfs]], as in
+    * [[harmonicCentrality]]; the readout aggregates a ≤`maxHops`-row
     * distance histogram with a tiny self-join CDF (NO global-order
     * window — the histogram is the shuffle, hops rows total).
     */
@@ -1242,21 +1253,7 @@ object Graph {
       nSeeds: Int = 8, maxHops: Int = 3): DataFrame = {
     require(nSeeds >= 1 && maxHops >= 1,
       s"distanceSummary: nSeeds/maxHops must be >= 1, got $nSeeds/$maxHops")
-    val e = bfsEdges(edges, srcCol, dstCol)
-    val seeds = md5Seeds(e, nSeeds)
-    var dist = seeds
-      .select(col("node").as("seed"), col("node"), lit(0).as("dist"))
-      .transform(CacheRegistry.checkpoint(_))
-    var frontier = dist
-    for (hop <- 1 to maxHops) {
-      val next = e.join(frontier, col("src") === col("node"))
-        .select(col("seed"), col("dst").as("node")).distinct()
-        .join(dist.select("seed", "node"), Seq("seed", "node"), "left_anti")
-        .select(col("seed"), col("node"), lit(hop).as("dist"))
-        .transform(CacheRegistry.checkpoint(_)) // the round's one materializing action
-      dist = dist.union(next)
-      frontier = next
-    }
+    val dist = taggedBfs(edges, srcCol, dstCol, nSeeds, maxHops)
     // ONE scan of the BFS output: the ≤maxHops-row distance histogram
     // is checkpointed and every readout (totals, CDF, quantile
     // compares) derives from it — totals as Σc / max / Σ dist·c, not

@@ -18,31 +18,6 @@ import org.apache.spark.sql.types._
   */
 object Linalg {
 
-  /** Top right-singular direction of the (uncentered) data matrix X —
-    * power iteration on the Gram matrix Xᵀ X without ever forming it:
-    *
-    *   w = X·v   (per-row fold — one codegen'd pass, no shuffle)
-    *   u = Xᵀ·w  (posexplode → groupBy(dim) → DECIMAL sum: the ONLY
-    *              shuffle, and it carries dim×partitions rows)
-    *   v ← u/‖u‖ (driver: dim doubles — bounded)
-    *
-    * Starting vector = 1/√dim on every coordinate (deterministic sign
-    * and phase); after `iters` rounds the dominant eigendirection of
-    * Xᵀ X has converged at rate (λ₂/λ₁)^iters. λ̂ = ‖u‖ of the last
-    * round (the Rayleigh-quotient estimate for a unit input).
-    *
-    * Scale shape: per iteration ONE scan of the (persisted, pruned)
-    * vector column, one |partitions|·dim-row partial-agg shuffle, one
-    * dim-row collect. No driver-side matrix, no n×n or dim×dim
-    * intermediate anywhere — this is exactly how you get a principal
-    * direction out of a 100 TB embedding table.
-    *
-    * Vectors whose length differs from the first row's dimension are
-    * dropped (the IVF/kmeans ragged-input contract). Returns one row
-    * per dimension: (dim, coord, lambda) — coord the unit
-    * eigenvector entry (6 dp), lambda the shared eigenvalue estimate
-    * (6 dp).
-    */
   /** The power loop over a prepared `(_x: array<double>)` frame:
     * returns (unit eigenvector, λ̂). Shared verbatim by
     * [[powerIteration]] and [[topComponents]] so the deflated pass
@@ -91,6 +66,31 @@ object Linalg {
     (x, dim)
   }
 
+  /** Top right-singular direction of the (uncentered) data matrix X —
+    * power iteration on the Gram matrix Xᵀ X without ever forming it:
+    *
+    *   w = X·v   (per-row fold — one codegen'd pass, no shuffle)
+    *   u = Xᵀ·w  (posexplode → groupBy(dim) → DECIMAL sum: the ONLY
+    *              shuffle, and it carries dim×partitions rows)
+    *   v ← u/‖u‖ (driver: dim doubles — bounded)
+    *
+    * Starting vector = 1/√dim on every coordinate (deterministic sign
+    * and phase); after `iters` rounds the dominant eigendirection of
+    * Xᵀ X has converged at rate (λ₂/λ₁)^iters. λ̂ = ‖u‖ of the last
+    * round (the Rayleigh-quotient estimate for a unit input).
+    *
+    * Scale shape: per iteration ONE scan of the (persisted, pruned)
+    * vector column, one |partitions|·dim-row partial-agg shuffle, one
+    * dim-row collect. No driver-side matrix, no n×n or dim×dim
+    * intermediate anywhere — this is exactly how you get a principal
+    * direction out of a 100 TB embedding table.
+    *
+    * Vectors whose length differs from the first row's dimension are
+    * dropped (the IVF/kmeans ragged-input contract). Returns one row
+    * per dimension: (dim, coord, lambda) — coord the unit
+    * eigenvector entry (6 dp), lambda the shared eigenvalue estimate
+    * (6 dp).
+    */
   def powerIteration(df: DataFrame, vecCol: String, iters: Int = 2): DataFrame = {
     require(iters >= 1 && iters <= 16,
       s"powerIteration: iters must be in [1,16], got $iters")

@@ -457,22 +457,6 @@ object Multimodal {
     }(enc)
   }
 
-  /** Per-frame REAL audio features → per-payload pool — the audio
-    * counterpart of [[frameFeatures]] with the md5 "energy" stub
-    * replaced by actual DSP over decoded samples: the payload's PCM is
-    * chunked into `frameLen`-sample frames (last frame partial) and
-    * each frame's exact energy Σ s² and peak are computed from the
-    * decoded values, then pooled per payload (frame count, payload
-    * peak, max and total frame energy).
-    *
-    * Scale shape: unlike the video stub (whose frames are byte SLICES
-    * that must explode to rows for the signature hash), every audio
-    * frame of one payload lives in that payload's blob — so featurize
-    * + pool fuse into ONE narrow per-partition map, zero shuffle, and
-    * the stage scales with total payload bytes exactly like
-    * [[decodeBmpStats]]. The md5 stub stays [[frameFeatures]]'s
-    * default; this is the proof the slot takes a genuine extractor.
-    */
   /** Exact per-frame energies Σ s² of a decoded PCM signal chunked
     * into `frameLen`-sample frames (last frame partial) — the one
     * shared inner scan of [[audioFrameFeatures]] / [[audioSceneCuts]],
@@ -495,6 +479,22 @@ object Multimodal {
     out
   }
 
+  /** Per-frame REAL audio features → per-payload pool — the audio
+    * counterpart of [[frameFeatures]] with the md5 "energy" stub
+    * replaced by actual DSP over decoded samples: the payload's PCM is
+    * chunked into `frameLen`-sample frames (last frame partial) and
+    * each frame's exact energy Σ s² and peak are computed from the
+    * decoded values, then pooled per payload (frame count, payload
+    * peak, max and total frame energy).
+    *
+    * Scale shape: unlike the video stub (whose frames are byte SLICES
+    * that must explode to rows for the signature hash), every audio
+    * frame of one payload lives in that payload's blob — so featurize
+    * + pool fuse into ONE narrow per-partition map, zero shuffle, and
+    * the stage scales with total payload bytes exactly like
+    * [[decodeBmpStats]]. The md5 stub stays [[frameFeatures]]'s
+    * default; this is the proof the slot takes a genuine extractor.
+    */
   def audioFrameFeatures(df: DataFrame, idCol: String, binCol: String,
       frameLen: Int): DataFrame = {
     require(frameLen >= 1,

@@ -350,16 +350,6 @@ object Quality {
       .agg(sum(col("_t")).cast("double").as("js"))
   }
 
-  /** k-anonymity audit — the release-gate for any dataset leaving the
-    * training enclave: group by the quasi-identifier columns and
-    * count equivalence classes smaller than `k`; every row in such a
-    * class is re-identifiable by an attacker who knows its QI tuple.
-    * One map-combinable aggregate to the class frame (bounded by
-    * distinct QI combinations) + a count-of-counts summary row:
-    * (n_rows, n_classes, n_violating_classes, rows_at_risk,
-    * at_risk_ppm). NULL QI values form their own class, as an
-    * attacker would treat them.
-    */
   /** l-diversity audit — [[kAnonymity]]'s stronger sibling: a class
     * can be large yet still leak if everyone in it shares the same
     * SENSITIVE value (k-anonymous, zero-diverse). Per QI class, the
@@ -445,6 +435,16 @@ object Quality {
       max(col("t_ppm")).as("max_t_ppm"))
   }
 
+  /** k-anonymity audit — the release-gate for any dataset leaving the
+    * training enclave: group by the quasi-identifier columns and
+    * count equivalence classes smaller than `k`; every row in such a
+    * class is re-identifiable by an attacker who knows its QI tuple.
+    * One map-combinable aggregate to the class frame (bounded by
+    * distinct QI combinations) + a count-of-counts summary row:
+    * (n_rows, n_classes, n_violating_classes, rows_at_risk,
+    * at_risk_ppm). NULL QI values form their own class, as an
+    * attacker would treat them.
+    */
   def kAnonymity(df: DataFrame, quasiIds: Seq[Column], k: Long): DataFrame = {
     require(quasiIds.nonEmpty, "kAnonymity: need at least one quasi-identifier")
     require(k >= 2, s"kAnonymity: k must be >= 2, got $k")

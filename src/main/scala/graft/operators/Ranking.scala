@@ -521,15 +521,6 @@ object Ranking {
         expr("n_types * 1000000 div n_tokens").as("ttr_ppm"),
         col("hapax"), expr("hapax * 1000000 div n_types").as("hapax_ppm"))
 
-  /** Zipf slope of the corpus frequency spectrum: OLS fit of
-    * ln(freq) on ln(rank) over the top-`k` vocabulary — natural text
-    * sits near −1; template spam and synthetic word soup drift
-    * shallow. The rank frame is the top-k ONLY (orderBy+limit — k
-    * rows, driver-bounded), per-term log terms are rounded to 6dp
-    * DECIMAL before summing (the entropy/mutual-info order-proof
-    * discipline), and the closed-form slope/intercept is one fixed
-    * IEEE expression. Output: (k, slope, intercept).
-    */
   /** Chao1 vocabulary-richness estimate + Good-Turing coverage — the
     * "how much vocabulary HAVEN'T we crawled yet" pair [[heapsFit]]'s
     * growth curve extrapolates toward: Chao1 estimates the true
@@ -601,6 +592,15 @@ object Ranking {
                  |  AS BIGINT)""".stripMargin)).as("yule_k_milli"))
   }
 
+  /** Zipf slope of the corpus frequency spectrum: OLS fit of
+    * ln(freq) on ln(rank) over the top-`k` vocabulary — natural text
+    * sits near −1; template spam and synthetic word soup drift
+    * shallow. The rank frame is the top-k ONLY (orderBy+limit — k
+    * rows, driver-bounded), per-term log terms are rounded to 6dp
+    * DECIMAL before summing (the entropy/mutual-info order-proof
+    * discipline), and the closed-form slope/intercept is one fixed
+    * IEEE expression. Output: (k, slope, intercept).
+    */
   def zipfFit(df: DataFrame, textCol: Column, k: Int = 100): DataFrame = {
     require(k >= 2, s"zipfFit: k must be >= 2, got $k")
     val counts = df
@@ -833,22 +833,6 @@ object Ranking {
           expr("2 * precision_ppm * recall_ppm div (precision_ppm + recall_ppm)")))
   }
 
-  /** Chance-corrected agreement between two labelings — Cohen's κ and
-    * the multiclass Matthews correlation (Gorodkin's R_K), the two
-    * scalars an LLM-eval pipeline reports beside [[confusionStats]]'
-    * per-class table (raw percent agreement flatters any skewed label
-    * distribution; κ and MCC discount what chance alone would match).
-    *
-    * From the same (gold, pred) cell frame: with N rows, A agreements,
-    * class margins t_c (gold) and p_c (pred), S = Σ_c t_c·p_c —
-    * κ = (A·N − S)/(N² − S) emitted as an EXACT integer ppm (both
-    * engines truncate integral division identically), and
-    * MCC = (A·N − S)/√(N²−Σp_c²)/√(N²−Σt_c²) as the one 6dp double
-    * (exact DECIMAL radicands, one fixed IEEE shape). Margins are
-    * |classes|-bounded: two tiny aggs over the cell frame. Output one
-    * row: (n, n_classes, po_ppm, pe_ppm, kappa_ppm, mcc); κ/MCC null
-    * when the denominators degenerate (single class / constant side).
-    */
   /** Quadratic-weighted kappa — [[agreementStats]]'s ordinal upgrade
     * and the competition-standard metric for graded labels: plain κ
     * scores a 1-vs-2 confusion as harshly as 1-vs-5, κ_w penalizes
@@ -892,6 +876,22 @@ object Ranking {
               .cast("long")).as("kappa_w_ppm"))
   }
 
+  /** Chance-corrected agreement between two labelings — Cohen's κ and
+    * the multiclass Matthews correlation (Gorodkin's R_K), the two
+    * scalars an LLM-eval pipeline reports beside [[confusionStats]]'
+    * per-class table (raw percent agreement flatters any skewed label
+    * distribution; κ and MCC discount what chance alone would match).
+    *
+    * From the same (gold, pred) cell frame: with N rows, A agreements,
+    * class margins t_c (gold) and p_c (pred), S = Σ_c t_c·p_c —
+    * κ = (A·N − S)/(N² − S) emitted as an EXACT integer ppm (both
+    * engines truncate integral division identically), and
+    * MCC = (A·N − S)/√(N²−Σp_c²)/√(N²−Σt_c²) as the one 6dp double
+    * (exact DECIMAL radicands, one fixed IEEE shape). Margins are
+    * |classes|-bounded: two tiny aggs over the cell frame. Output one
+    * row: (n, n_classes, po_ppm, pe_ppm, kappa_ppm, mcc); κ/MCC null
+    * when the denominators degenerate (single class / constant side).
+    */
   def agreementStats(df: DataFrame, goldCol: Column, predCol: Column): DataFrame = {
     val cells = CacheRegistry.persist(
       df.where(goldCol.isNotNull && predCol.isNotNull)
@@ -925,31 +925,6 @@ object Ranking {
             sqrt((n2 - col("_st2")).cast("double"))), 6)).as("mcc"))
   }
 
-  /** Fleiss' kappa — [[agreementStats]] handles exactly TWO raters in
-    * fixed roles (gold vs pred); Fleiss generalizes to n
-    * interchangeable raters per item (annotation panels, n-way model
-    * ensembles, replicate labelers): do the n raters agree beyond
-    * the chance their pooled category mix implies?
-    *
-    * Exact rational core: with o_ij the per-(item, category) rating
-    * counts over the N items rated by exactly `raters` = n raters,
-    * P̄_o = Σ o_ij(o_ij−1) / (N·n(n−1)) and P̄_e = Σ_j C_j² / (N·n)²
-    * — κ reduces (the common N·n factor cancelled, keeping products
-    * inside decimal(38,0) to N ≈ 10¹² items) to
-    * (A·N·n − B·(n−1)) / ((n−1)·(N²n² − B)) with A = Σo(o−1) and
-    * B = ΣC_j², all exact; the single ppm floor is sign-split (κ < 0
-    * is real — agreement below chance), keeping the `div` numerator
-    * non-negative (the Spark-`div`/DuckDB-`//` parity rule). κ null
-    * when every rating is one category (P̄_e = 1). Items not rated
-    * exactly n times drop and are COUNTED (`n_dropped`) — panel
-    * incompleteness is never silent.
-    *
-    * Shape: one (item, category) aggregate, a per-item window over
-    * ≤ k rows, a k-row category aggregate, one summary row — the
-    * [[Analytics.friedman]] complete-block discipline. Output one
-    * row: (n_items, n_dropped, n_raters, k, po_ppm, pe_ppm,
-    * kappa_ppm).
-    */
   /** Krippendorff's alpha (nominal) — [[fleissKappa]] requires every
     * item rated by EXACTLY n raters; α is the missing-data-tolerant
     * agreement coefficient real annotation projects need (raters come
@@ -1076,6 +1051,31 @@ object Ranking {
                  |END AS BIGINT)""".stripMargin)).as("ac1_ppm"))
   }
 
+  /** Fleiss' kappa — [[agreementStats]] handles exactly TWO raters in
+    * fixed roles (gold vs pred); Fleiss generalizes to n
+    * interchangeable raters per item (annotation panels, n-way model
+    * ensembles, replicate labelers): do the n raters agree beyond
+    * the chance their pooled category mix implies?
+    *
+    * Exact rational core: with o_ij the per-(item, category) rating
+    * counts over the N items rated by exactly `raters` = n raters,
+    * P̄_o = Σ o_ij(o_ij−1) / (N·n(n−1)) and P̄_e = Σ_j C_j² / (N·n)²
+    * — κ reduces (the common N·n factor cancelled, keeping products
+    * inside decimal(38,0) to N ≈ 10¹² items) to
+    * (A·N·n − B·(n−1)) / ((n−1)·(N²n² − B)) with A = Σo(o−1) and
+    * B = ΣC_j², all exact; the single ppm floor is sign-split (κ < 0
+    * is real — agreement below chance), keeping the `div` numerator
+    * non-negative (the Spark-`div`/DuckDB-`//` parity rule). κ null
+    * when every rating is one category (P̄_e = 1). Items not rated
+    * exactly n times drop and are COUNTED (`n_dropped`) — panel
+    * incompleteness is never silent.
+    *
+    * Shape: one (item, category) aggregate, a per-item window over
+    * ≤ k rows, a k-row category aggregate, one summary row — the
+    * [[Analytics.friedman]] complete-block discipline. Output one
+    * row: (n_items, n_dropped, n_raters, k, po_ppm, pe_ppm,
+    * kappa_ppm).
+    */
   def fleissKappa(df: DataFrame, itemCol: Column, categoryCol: Column,
       raters: Int): DataFrame = {
     require(raters >= 2, s"fleissKappa: raters must be >= 2, got $raters")

@@ -29,14 +29,24 @@ object Similarity {
       k: Int): DataFrame = {
     val q = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec")))
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-    val scored = c.join(q, col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("q_vec"), col("c_vec")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 4).as("cosine"), col("rank"))
+    cosineTopK(c.join(q, col("query_id") =!= col("neighbor_id")), k)
   }
+
+  /** The per-query top-k cut every ranked search here shares: each
+    * query's rows ranked by `score` descending, ties to the smaller
+    * `neighbor_id`, `rank <= k` kept (adds `rank`).
+    */
+  private def topKPerQuery(scored: DataFrame, score: String, k: Int): DataFrame =
+    Relational.topKPerGroup(scored, Seq(col("query_id")),
+      Seq(col(score).desc, col("neighbor_id")), k)
+
+  /** Exact-cosine top-k over (query_id, neighbor_id, q_vec, c_vec)
+    * candidate rows: one fused cosine per row, [[topKPerQuery]], output
+    * (query_id, neighbor_id, cosine rounded to 4dp, rank).
+    */
+  private def cosineTopK(pairs: DataFrame, k: Int): DataFrame =
+    topKPerQuery(pairs.withColumn("cosine", cosine(col("q_vec"), col("c_vec"))), "cosine", k)
+      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 4).as("cosine"), col("rank"))
 
   /** Matryoshka prefix-dimension retrieval eval — how much of the
     * top-k neighborhood survives truncating embeddings to their first
@@ -114,12 +124,20 @@ object Similarity {
     */
   def mutualKnnGraph(vectors: DataFrame, idCol: String, vecCol: String,
       k: Int): DataFrame = {
-    val topk = bruteForceTopK(vectors, vectors, idCol, vecCol, k)
-      .transform(CacheRegistry.checkpoint(_))
-    val lo = topk.where(col("query_id") < col("neighbor_id"))
+    mutualEdges(bruteForceTopK(vectors, vectors, idCol, vecCol, k))
+  }
+
+  /** The mutual filter over a directed top-k frame (query_id,
+    * neighbor_id, cosine, rank): checkpointed once, then the a < b
+    * half joined to the reversed a > b half on the pair. Output
+    * (a, b, cosine, rank_a, rank_b).
+    */
+  private def mutualEdges(topk: DataFrame): DataFrame = {
+    val cp = CacheRegistry.checkpoint(topk)
+    val lo = cp.where(col("query_id") < col("neighbor_id"))
       .select(col("query_id").as("a"), col("neighbor_id").as("b"),
         col("cosine"), col("rank").as("rank_a"))
-    val hi = topk.where(col("query_id") > col("neighbor_id"))
+    val hi = cp.where(col("query_id") > col("neighbor_id"))
       .select(col("neighbor_id").as("a"), col("query_id").as("b"),
         col("rank").as("rank_b"))
     lo.join(hi, Seq("a", "b"))
@@ -157,18 +175,7 @@ object Similarity {
     val topk = ivfKnnRaw(vectors, idCol, vecCol, k, nlist, nprobe, seed)
       .select(col("query_id"), col("neighbor_id"),
         round(col("cosine"), 4).as("cosine"), col("rank"))
-    if (!mutual) topk
-    else {
-      val cp = CacheRegistry.checkpoint(topk)
-      val lo = cp.where(col("query_id") < col("neighbor_id"))
-        .select(col("query_id").as("a"), col("neighbor_id").as("b"),
-          col("cosine"), col("rank").as("rank_a"))
-      val hi = cp.where(col("query_id") > col("neighbor_id"))
-        .select(col("neighbor_id").as("a"), col("query_id").as("b"),
-          col("rank").as("rank_b"))
-      lo.join(hi, Seq("a", "b"))
-        .select(col("a"), col("b"), col("cosine"), col("rank_a"), col("rank_b"))
-    }
+    if (mutual) mutualEdges(topk) else topk
   }
 
   /** [[ivfKnnGraph]]'s candidate core with the UNROUNDED cosine — the
@@ -193,30 +200,37 @@ object Similarity {
     require(nprobe >= 1 && nprobe <= nlist,
       s"ivfKnnGraph: nprobe must be in [1, nlist], got $nprobe")
     val index = buildIvfIndex(vectors, idCol, vecCol, nlist, seed = seed)
-    // nprobe best cells per vector via hash-agg (sortable struct keeps
-    // the smallest negated-similarity first), never a window here —
-    // the aggregate combines map-side, the window would shuffle raw
-    // nlist-fold rows
-    val cells = vectors
-      .select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))
-      .crossJoin(broadcast(index.centroids))
-      .withColumn("_nd",
-        cosine(col("q_vec").cast("array<double>"), col("centroid")) * lit(-1.0d))
-      .groupBy(col("query_id"))
-      .agg(first(col("q_vec")).as("q_vec"),
-        slice(sort_array(collect_list(struct(col("_nd"), col("cell")))),
-          1, nprobe).as("_best"))
-      .select(col("query_id"), col("q_vec"),
-        explode(col("_best.cell")).as("cell"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    index.assigned.join(cells, Seq("cell"))
+    val cells = probeCells(
+      vectors.select(col(idCol).as("query_id"), col(vecCol).as("q_vec")),
+      "query_id", "q_vec", index.centroids, nprobe, Seq("q_vec"))
+    val scored = index.assigned.join(cells, Seq("cell"))
       .where(col("query_id") =!= col("neighbor_id"))
       .withColumn("cosine", cosine(col("q_vec"), col("c_vec")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+    topKPerQuery(scored, "cosine", k)
       .select(col("query_id"), col("neighbor_id"), col("cosine"), col("rank"))
   }
+
+  /** The IVF cell probe: each query row (`qid`, `qvec`, plus the
+    * `carry` columns) becomes one row per its `nprobe` nearest cells by
+    * centroid cosine, ties to the lower cell — (qid, carry…, cell).
+    * Centroids broadcast; the pick is a hash aggregate over a sortable
+    * struct (negated cosine, cell), never a window: the aggregate
+    * combines map-side, a window would shuffle raw nlist-fold rows.
+    * (−cos asc, cell asc) is (cos desc, cell asc), and a query's
+    * cosines are all null together (wrong dimension, null element),
+    * which then picks the lowest cells. One row per `qid` is the
+    * contract: `carry` keeps the group's first value.
+    */
+  private[operators] def probeCells(queries: DataFrame, qid: String, qvec: String,
+      centroids: DataFrame, nprobe: Int, carry: Seq[String]): DataFrame =
+    queries.crossJoin(broadcast(centroids))
+      .withColumn("_nd",
+        cosine(col(qvec).cast("array<double>"), col("centroid")) * lit(-1.0d))
+      .groupBy(col(qid))
+      .agg(slice(sort_array(collect_list(struct(col("_nd"), col("cell")))),
+        1, nprobe).as("_best"), carry.map(c => first(col(c)).as(c)): _*)
+      .select((col(qid) +: carry.map(col)) :+
+        explode(col("_best.cell")).as("cell"): _*)
 
   /** HARD-NEGATIVE MINING for contrastive training: per query, the
     * `k` most-similar corpus vectors whose LABEL DIFFERS — the
@@ -246,11 +260,7 @@ object Similarity {
         col("query_id") =!= col("neighbor_id") &&
           col("q_label") =!= col("neg_label"))
       .withColumn("cosine", cosine(col("q_vec"), col("c_vec")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id"))
-    scored
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+    topKPerQuery(scored, "cosine", k)
       .select(col("query_id"), col("neighbor_id"), col("neg_label"),
         round(col("cosine"), 4).as("cosine"), col("rank"))
   }
@@ -283,11 +293,8 @@ object Similarity {
       .join(labels, Seq("neighbor_id"))
       .groupBy(col("query_id"), col("_nl"))
       .agg(count(lit(1)).as("votes"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("votes").desc, col("_nl").asc)
-    votes
-      .withColumn("_rk", row_number().over(w))
-      .where(col("_rk") === 1)
+    Relational.topKPerGroup(votes, Seq(col("query_id")),
+        Seq(col("votes").desc, col("_nl").asc), 1)
       .join(truth, Seq("query_id"))
       .select(col("query_id"), col("true_label"),
         col("_nl").as("predicted_label"), col("votes"),
@@ -339,23 +346,44 @@ object Similarity {
       k: Int,
       topN: Int = 50): DataFrame = {
     require(k >= 1, s"knnShapley: k must be >= 1, got $k")
-    val dim = graft.core.VecDim.probe(train, vecCol, "knnShapley")
-    def fixed(df: DataFrame, id: String, v: String, y: String) =
+    val in = ShapleyInput(idCol, vecCol, labelCol,
+      graft.core.VecDim.probe(train, vecCol, "knnShapley"))
+    shapleyExact(in, train, test, k, topN)
+  }
+
+  /** KNN-Shapley's input contract — a vector of the probed `dim`, a
+    * non-null id and a non-null label — and its fixed-point rows.
+    */
+  private final case class ShapleyInput(
+      idCol: String, vecCol: String, labelCol: String, dim: Int) {
+    def valid(df: DataFrame): DataFrame =
       df.where(size(col(vecCol)) === dim &&
-          col(idCol).isNotNull && col(labelCol).isNotNull)
-        .select(col(idCol).cast("long").as(id),
-          transform(col(vecCol).cast("array<double>"),
-            e => floor(e * lit(1000.0))).as(v),
-          col(labelCol).as(y))
-    val tr = fixed(train, "_tid", "_tv", "_ty")
-    val te = broadcast(fixed(test, "_qid", "_qv", "_qy"))
-    val pairs = tr.crossJoin(te)
-      .select(col("_qid"), col("_tid"),
-        aggregate(zip_with(col("_tv"), col("_qv"),
-          (a, b) => (a - b) * (a - b)), lit(0L), (acc, x) => acc + x)
-          .as("_d2"),
-        when(col("_ty") === col("_qy"), 1L).otherwise(0L).as("_m"))
-    shapleyKernel(pairs, k, topN)
+        col(idCol).isNotNull && col(labelCol).isNotNull)
+
+    /** Valid rows as (long id, milli-unit fixed-point vector, label). */
+    def fixed(df: DataFrame, id: String, v: String, y: String): DataFrame =
+      valid(df).select(col(idCol).cast("long").as(id),
+        transform(col(vecCol).cast("array<double>"),
+          e => floor(e * lit(1000.0))).as(v),
+        col(labelCol).as(y))
+  }
+
+  /** (test, train) rows carrying both fixed-point sides → the kernel's
+    * (_qid, _tid, exact integer d², label match) pair frame.
+    */
+  private def shapleyPairs(joined: DataFrame): DataFrame =
+    joined.select(col("_qid"), col("_tid"),
+      aggregate(zip_with(col("_tv"), col("_qv"),
+        (a, b) => (a - b) * (a - b)), lit(0L), (acc, x) => acc + x)
+        .as("_d2"),
+      when(col("_ty") === col("_qy"), 1L).otherwise(0L).as("_m"))
+
+  /** The exact form: every valid train row against the broadcast test side. */
+  private def shapleyExact(in: ShapleyInput, train: DataFrame, test: DataFrame,
+      k: Int, topN: Int): DataFrame = {
+    val tr = in.fixed(train, "_tid", "_tv", "_ty")
+    val te = broadcast(in.fixed(test, "_qid", "_qv", "_qy"))
+    shapleyKernel(shapleyPairs(tr.crossJoin(te)), k, topN)
   }
 
   /** The closed-form KNN-Shapley readout over a (test, train, d²,
@@ -398,6 +426,26 @@ object Similarity {
       .limit(topN)
   }
 
+  /** The IVF index [[knnShapleyAnn]] builds internally (same validity
+    * filter, same build), exposed so callers running SEVERAL probe
+    * widths over one train corpus — the equivalence-pin + working-probe
+    * gate shape — share one sample/train/assign pass via `sharedIndex`
+    * instead of paying it once per width. Requires a non-empty filtered
+    * train side (buildIvfIndex throws otherwise, which is the signal to
+    * fall back to the no-index path).
+    */
+  def shapleyAnnIndex(
+      train: DataFrame,
+      idCol: String,
+      vecCol: String,
+      labelCol: String,
+      nlist: Int = 16,
+      seed: Long = 42L): IvfIndex = {
+    val dim = graft.core.VecDim.probe(train, vecCol, "knnShapleyAnn")
+    buildIvfIndex(ShapleyInput(idCol, vecCol, labelCol, dim).valid(train),
+      idCol, vecCol, nlist, seed = seed)
+  }
+
   /** [[knnShapley]] over IVF-candidate pairs — the corpus-scale
     * composition the exact form's scaladoc promises: each test point
     * ranks only the train vectors in its `nprobe` best IVF cells
@@ -415,28 +463,6 @@ object Similarity {
     * plain hash join on the cell key, and the kernel's two windows
     * share one exchange — no all-pairs stage anywhere.
     */
-  /** The IVF index [[knnShapleyAnn]] builds internally (same validity
-    * filter, same build), exposed so callers running SEVERAL probe
-    * widths over one train corpus — the equivalence-pin + working-probe
-    * gate shape — share one sample/train/assign pass via `sharedIndex`
-    * instead of paying it once per width. Requires a non-empty filtered
-    * train side (buildIvfIndex throws otherwise, which is the signal to
-    * fall back to the no-index path).
-    */
-  def shapleyAnnIndex(
-      train: DataFrame,
-      idCol: String,
-      vecCol: String,
-      labelCol: String,
-      nlist: Int = 16,
-      seed: Long = 42L): IvfIndex = {
-    val dim = graft.core.VecDim.probe(train, vecCol, "knnShapleyAnn")
-    buildIvfIndex(
-      train.where(size(col(vecCol)) === dim &&
-        col(idCol).isNotNull && col(labelCol).isNotNull),
-      idCol, vecCol, nlist, seed = seed)
-  }
-
   def knnShapleyAnn(
       train: DataFrame,
       test: DataFrame,
@@ -452,48 +478,26 @@ object Similarity {
     require(k >= 1, s"knnShapleyAnn: k must be >= 1, got $k")
     require(nprobe >= 1 && nprobe <= nlist,
       s"knnShapleyAnn: nprobe must be in [1, nlist], got $nprobe")
-    val dim = graft.core.VecDim.probe(train, vecCol, "knnShapleyAnn")
-    def fixed(df: DataFrame, id: String, v: String, y: String) =
-      df.where(size(col(vecCol)) === dim &&
-          col(idCol).isNotNull && col(labelCol).isNotNull)
-        .select(col(idCol).cast("long").as(id),
-          transform(col(vecCol).cast("array<double>"),
-            e => floor(e * lit(1000.0))).as(v),
-          col(labelCol).as(y))
-    val trainValid = train.where(size(col(vecCol)) === dim &&
-      col(idCol).isNotNull && col(labelCol).isNotNull)
-    // Empty-after-filters train: the exact twin returns an empty frame
-    // (its cross product is empty) — match it rather than failing
-    // inside buildIvfIndex with a generic centroid-training error; the
-    // twins are documented exactly equivalent at nprobe = nlist,
-    // including this edge. (bounded: isEmpty is a limit(1) probe.
+    val in = ShapleyInput(idCol, vecCol, labelCol,
+      graft.core.VecDim.probe(train, vecCol, "knnShapleyAnn"))
+    val trainValid = in.valid(train)
+    // Empty-after-filters train: run the exact twin (an empty cross
+    // product, so an empty frame) rather than failing inside
+    // buildIvfIndex with a generic centroid-training error; the twins
+    // are documented exactly equivalent at nprobe = nlist, including
+    // this edge. (bounded: isEmpty is a limit(1) probe.
     // Skipped when the caller hands a prebuilt index — building one
     // certifies the train side was non-empty, and the probe plus a
     // duplicate sample/train/assign pass is exactly what sharedIndex
     // exists to avoid when several probe widths run over one corpus.)
-    if (sharedIndex.isEmpty && trainValid.isEmpty) {
-      val te0 = broadcast(fixed(test, "_qid", "_qv", "_qy"))
-      return shapleyKernel(
-        fixed(trainValid, "_tid", "_tv", "_ty").crossJoin(te0)
-          .select(col("_qid"), col("_tid"),
-            lit(0L).as("_d2"), lit(0L).as("_m")),
-        k, topN)
-    }
+    if (sharedIndex.isEmpty && trainValid.isEmpty)
+      return shapleyExact(in, trainValid, test, k, topN)
     val index = sharedIndex.getOrElse(
       buildIvfIndex(trainValid, idCol, vecCol, nlist, seed = seed))
-    // nprobe best cells per TEST point — the ivfKnnGraph probe shape
-    // (hash-agg with a sortable struct, never a window)
-    val cells = test
-      .where(size(col(vecCol)) === dim &&
-        col(idCol).isNotNull && col(labelCol).isNotNull)
-      .select(col(idCol).cast("long").as("_qid"), col(vecCol).as("_qraw"))
-      .crossJoin(broadcast(index.centroids))
-      .withColumn("_nd",
-        cosine(col("_qraw").cast("array<double>"), col("centroid")) * lit(-1.0d))
-      .groupBy(col("_qid"))
-      .agg(slice(sort_array(collect_list(struct(col("_nd"), col("cell")))),
-        1, nprobe).as("_best"))
-      .select(col("_qid"), explode(col("_best.cell")).as("cell"))
+    // nprobe best cells per TEST point
+    val cells = probeCells(
+      in.valid(test).select(col(idCol).cast("long").as("_qid"), col(vecCol).as("_qraw")),
+      "_qid", "_qraw", index.centroids, nprobe, Nil)
     // distinct (_qid, _tid): duplicate train ids (rows sharing an id,
     // or ids colliding after the long cast) appear once per assigned
     // row AND once per matching tr row — without the dedup the join
@@ -505,17 +509,9 @@ object Similarity {
       .join(broadcast(cells), Seq("cell"))
       .select(col("_qid"), col("neighbor_id").cast("long").as("_tid"))
       .distinct()
-    val tr = fixed(trainValid, "_tid", "_tv", "_ty")
-    val te = broadcast(fixed(test, "_qid", "_qv", "_qy"))
-    val pairs = cand
-      .join(tr, Seq("_tid"))
-      .join(te, Seq("_qid"))
-      .select(col("_qid"), col("_tid"),
-        aggregate(zip_with(col("_tv"), col("_qv"),
-          (a, b) => (a - b) * (a - b)), lit(0L), (acc, x) => acc + x)
-          .as("_d2"),
-        when(col("_ty") === col("_qy"), 1L).otherwise(0L).as("_m"))
-    shapleyKernel(pairs, k, topN)
+    val tr = in.fixed(trainValid, "_tid", "_tv", "_ty")
+    val te = broadcast(in.fixed(test, "_qid", "_qv", "_qy"))
+    shapleyKernel(shapleyPairs(cand.join(tr, Seq("_tid")).join(te, Seq("_qid"))), k, topN)
   }
 
   /** LSH-bucketed ANN: both sides keyed by sign-random-projection
@@ -531,17 +527,8 @@ object Similarity {
       k: Int,
       bits: Int = 8,
       tables: Int = 4): DataFrame = {
-    def bucketize(df: DataFrame, id: String, vec: String) =
-      df.select(
-        col(idCol).as(id),
-        col(vecCol).as(vec),
-        explode(array((0 until tables).map { t =>
-          struct(lit(t).as("tbl"), hyperplaneBucket(col(vecCol), bits, seed = 7L + t).as("bucket"))
-        }: _*)).as("tb"))
-        .select(col(id), col(vec), col("tb.tbl"), col("tb.bucket"))
-
-    val q = broadcast(bucketize(queries, "query_id", "q_vec"))
-    val c = bucketize(corpus, "neighbor_id", "c_vec")
+    val q = broadcast(lshTables(queries, idCol, vecCol, "query_id", "q_vec", bits, tables, 7L))
+    val c = lshTables(corpus, idCol, vecCol, "neighbor_id", "c_vec", bits, tables, 7L)
     // score-THEN-dedup: cosine is deterministic per (query, neighbor)
     // pair, so computing it while the vectors are still join-co-located
     // and projecting to (ids, cosine) BEFORE dropDuplicates leaves the
@@ -553,11 +540,50 @@ object Similarity {
       .withColumn("cosine", cosine(col("q_vec"), col("c_vec")))
       .select(col("query_id"), col("neighbor_id"), col("cosine"))
       .dropDuplicates("query_id", "neighbor_id")
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    cand
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
+    topKPerQuery(cand, "cosine", k)
       .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 4).as("cosine"), col("rank"))
+  }
+
+  /** Multi-table sign-random-projection keys: each row, projected to
+    * (`id`, `vec`), once per table `t` in `0 until tables` with its
+    * `bits`-bit hyperplane bucket under seed `seedBase + t` — rows
+    * (id, vec, tbl, bucket). Callers keep their own `seedBase`.
+    */
+  private[operators] def lshTables(df: DataFrame, idCol: String, vecCol: String,
+      id: String, vec: String, bits: Int, tables: Int, seedBase: Long): DataFrame =
+    df.select(
+      col(idCol).as(id),
+      col(vecCol).as(vec),
+      explode(array((0 until tables).map { t =>
+        struct(lit(t).as("tbl"),
+          hyperplaneBucket(col(vecCol), bits, seed = seedBase + t).as("bucket"))
+      }: _*)).as("tb"))
+      .select(col(id), col(vec), col("tb.tbl"), col("tb.bucket"))
+
+  /** Verified near-duplicate pairs among rows sharing every `keys`
+    * value (an IVF cell, an LSH table + bucket): `keyed` rows are
+    * (keys…, id, v); output (id_a < id_b, cosine ≥ `threshold`
+    * rounded to 4dp), each pair once.
+    *
+    * Verify-THEN-dedup: cosine is deterministic per (id_a, id_b), so
+    * filtering before dropDuplicates returns the identical pair set,
+    * but the dedup exchange then carries only the few above-threshold
+    * (id_a, id_b, cosine) rows instead of every candidate pair
+    * decorated with BOTH dense vectors (measured ~300 MB/run → KBs on
+    * the gate corpus). A pair sharing several keys pays the fused
+    * cosine once per shared key, which is noise next to shuffling its
+    * two vectors.
+    */
+  private[operators] def verifiedCosinePairs(
+      keyed: DataFrame, keys: Seq[String], threshold: Double): DataFrame = {
+    def side(s: String) =
+      keyed.select(keys.map(col) :+ col("id").as(s"id_$s") :+ col("v").as(s"v_$s"): _*)
+    side("a").join(side("b"), keys)
+      .where(col("id_a") < col("id_b"))
+      .withColumn("cosine", cosine(col("v_a"), col("v_b")))
+      .where(col("cosine") >= threshold)
+      .select(col("id_a"), col("id_b"), round(col("cosine"), 4).as("cosine"))
+      .dropDuplicates("id_a", "id_b")
   }
 
   /** Reusable IVF (inverted-file) index: coarse-quantizer centroids
@@ -580,16 +606,6 @@ object Similarity {
     }
   }
 
-  /** Add a batch to a SAVED index in place — the FAISS train/add split's
-    * "add" leg: the coarse quantizer stays FROZEN (same centroids, so
-    * existing cell assignments and probe routing remain valid) and the
-    * new vectors' assignments append as new files under their cell
-    * directories. One distributed projection + one partitioned append;
-    * the standing assignments are never read, let alone rewritten —
-    * day-2 ingestion cost is O(batch), not O(index). Centroid drift
-    * under a shifting distribution is the caller's retrain signal
-    * (rebuild + save, as FAISS re-trains).
-    */
   /** Pin a batch id column to a standing index's id type, allowing
     * only LOSSLESS widening (`Cast.canUpCast`): ids are identities, so
     * a narrowing cast (long batch under an int-id index) silently
@@ -610,6 +626,16 @@ object Similarity {
       s"$op: batch id type $b cannot be losslessly cast to standing index id type $standing")
   }
 
+  /** Add a batch to a SAVED index in place — the FAISS train/add split's
+    * "add" leg: the coarse quantizer stays FROZEN (same centroids, so
+    * existing cell assignments and probe routing remain valid) and the
+    * new vectors' assignments append as new files under their cell
+    * directories. One distributed projection + one partitioned append;
+    * the standing assignments are never read, let alone rewritten —
+    * day-2 ingestion cost is O(batch), not O(index). Centroid drift
+    * under a shifting distribution is the caller's retrain signal
+    * (rebuild + save, as FAISS re-trains).
+    */
   def addToIvfIndex(
       spark: org.apache.spark.sql.SparkSession,
       path: String,
@@ -752,17 +778,22 @@ object Similarity {
       seed: Long): Array[Array[Double]] = {
     require(nlist >= 1, s"nlist must be >= 1, got $nlist")
     require(sampleRaw.nonEmpty, "trainCentroids: corpus is empty")
-    // Mixed-dimension corpora: train on the MAJORITY dimension of the
-    // sample (lloydLocal assumes one dim; a truncated partial distance
-    // would silently mis-train, and keying on the first sampled vector
-    // could canonicalize a 1% minority dim). Ties break to the lowest
-    // dim for determinism. Assignment stays consistent: NearestCentroid
-    // gives other-dimension vectors a NULL cell, so they simply never
-    // match a probe.
+    val sample = majorityDimSample(sampleRaw)
+    Similarity.lloydLocal(sample, math.min(nlist, sample.length), 10, seed)
+  }
+
+  /** The vectors of a non-empty sample's MAJORITY dimension, ties to
+    * the lowest dim for determinism. Mixed-dimension corpora train on
+    * it: lloydLocal assumes one dim (a truncated partial distance would
+    * silently mis-train), and keying on the first sampled vector could
+    * canonicalize a 1% minority dim. Assignment stays consistent:
+    * NearestCentroid and PqEncode give other-dimension vectors a NULL
+    * cell / code, so they simply never match a probe.
+    */
+  private def majorityDimSample(sampleRaw: Array[Array[Double]]): Array[Array[Double]] = {
     val majorityDim = sampleRaw.groupBy(_.length).view.mapValues(_.length)
       .toSeq.maxBy { case (dim, n) => (n, -dim) }._1
-    val sample = sampleRaw.filter(_.length == majorityDim)
-    Similarity.lloydLocal(sample, math.min(nlist, sample.length), 10, seed)
+    sampleRaw.filter(_.length == majorityDim)
   }
 
   def buildIvfIndex(
@@ -875,7 +906,8 @@ object Similarity {
     * centroids (broadcast × broadcast, driver-cheap), candidates are an
     * equi-join on cell id — the shuffle carries each probed corpus
     * vector once. Recall < 1 by construction; raise `nprobe` to trade
-    * compute for recall.
+    * compute for recall. Query ids must be unique ([[probeCells]]: a
+    * repeated id probes with one of its vectors).
     */
   def ivfQuery(
       index: IvfIndex,
@@ -884,21 +916,11 @@ object Similarity {
       vecCol: String,
       k: Int,
       nprobe: Int = 4): DataFrame = {
-    val probed = broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec")))
-      .crossJoin(broadcast(index.centroids))
-      .withColumn("c_dist", cosine(col("q_vec").cast("array<double>"), col("centroid")))
-      .withColumn("c_rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("c_dist").desc, col("cell"))))
-      .where(col("c_rank") <= nprobe)
-      .select(col("query_id"), col("q_vec"), col("cell"))
-
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-    index.assigned.join(broadcast(probed), Seq("cell"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cosine", cosine(col("q_vec"), col("c_vec")))
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 4).as("cosine"), col("rank"))
+    val probed = probeCells(
+      broadcast(queries.select(col(idCol).as("query_id"), col(vecCol).as("q_vec"))),
+      "query_id", "q_vec", index.centroids, nprobe, Seq("q_vec"))
+    cosineTopK(index.assigned.join(broadcast(probed), Seq("cell"))
+      .where(col("query_id") =!= col("neighbor_id")), k)
   }
 
   /** One-shot IVF ANN: build (sampled training) + probe. Prefer
@@ -961,15 +983,25 @@ object Similarity {
       batch: DataFrame,
       idCol: String,
       vecCol: String): Unit = {
-    import graft.functions.VectorFunctions._
     val ix = loadPqIndex(spark, path) // codebooks are a few KB; codes stay lazy
-    val normLut = ix.codebooks.flatMap(_.map(cw => cw.map(x => x * x).sum)).toSeq
     val idC = pinIdType("addToPqIndex", ix.codes.schema("neighbor_id").dataType, batch, idCol)
-    batch.select(
-      idC.as("neighbor_id"),
-      pqEncode(col(vecCol), ix.codebooks).as("codes"))
-      .withColumn("c_norm", sqrt(codeLookupSum(col("codes"), typedLit(normLut), ix.kSub)))
+    pqCodes(batch, Seq(idC.as("neighbor_id")), col(vecCol), ix.codebooks)
       .write.mode("append").parquet(s"$path/codes")
+  }
+
+  /** `df`'s `keep` columns plus its `vec` PQ-encoded through
+    * `codebooks` with the fused [[graft.functions.PqEncode]] kernel
+    * (`codes`), and `c_norm`: the exact norm of each vector's
+    * RECONSTRUCTION (subspaces are disjoint, so ‖x̂‖² = Σ_j
+    * ‖codeword_{j,code_j}‖² — a lookup-sum against the codeword-norm
+    * table), which turns ADC dots into approximate cosines.
+    */
+  private def pqCodes(df: DataFrame, keep: Seq[Column], vec: Column,
+      codebooks: Array[Array[Array[Double]]]): DataFrame = {
+    val normLut = codebooks.flatMap(_.map(cw => cw.map(x => x * x).sum)).toSeq
+    df.select(keep :+ pqEncode(vec, codebooks).as("codes"): _*)
+      .withColumn("c_norm",
+        sqrt(codeLookupSum(col("codes"), typedLit(normLut), codebooks(0).length)))
   }
 
   /** Reload a saved [[PqIndex]]. */
@@ -987,15 +1019,6 @@ object Similarity {
     PqIndex(codebooks, spark.read.parquet(s"$path/codes"), m, kSub)
   }
 
-  /** Train per-subspace codebooks on a bounded driver-side sample
-    * (the same train/add split as [[buildIvfIndex]] — m tiny local
-    * k-means runs), then encode the whole corpus distributed with the
-    * fused [[graft.functions.PqEncode]] kernel. `c_norm` is the exact
-    * norm of each vector's RECONSTRUCTION (subspaces are disjoint, so
-    * ‖x̂‖² = Σ_j ‖codeword_{j,code_j}‖² — a lookup-sum against the
-    * codeword-norm table), used to turn ADC dots into approximate
-    * cosines.
-    */
   /** Per-subspace PQ codebook training on a bounded driver-side sample
     * — shared by [[buildPqIndex]] and [[buildIvfPqIndex]] (m tiny local
     * k-means runs over subvector slices).
@@ -1021,18 +1044,22 @@ object Similarity {
     require(m >= 1, s"m must be >= 1, got $m")
     require(kSub >= 1, s"kSub must be >= 1, got $kSub")
     require(sampleRaw.nonEmpty, "trainPqCodebooks: corpus is empty")
-    val majorityDim = sampleRaw.groupBy(_.length).view.mapValues(_.length)
-      .toSeq.maxBy { case (dim, n) => (n, -dim) }._1
-    require(majorityDim % m == 0,
-      s"trainPqCodebooks: dimension $majorityDim is not divisible into $m subspaces")
-    val subDim = majorityDim / m
-    val sample = sampleRaw.filter(_.length == majorityDim)
+    val sample = majorityDimSample(sampleRaw)
+    val dim = sample.head.length
+    require(dim % m == 0,
+      s"trainPqCodebooks: dimension $dim is not divisible into $m subspaces")
+    val subDim = dim / m
     Array.tabulate(m) { j =>
       val sub = sample.map(v => java.util.Arrays.copyOfRange(v, j * subDim, (j + 1) * subDim))
       Similarity.lloydLocal(sub, math.min(kSub, sub.length), 10, seed + j)
     }
   }
 
+  /** Train per-subspace codebooks on a bounded driver-side sample
+    * (the same train/add split as [[buildIvfIndex]] — m tiny local
+    * k-means runs), then encode the whole corpus distributed
+    * ([[pqCodes]]: codes plus the reconstruction norm `c_norm`).
+    */
   def buildPqIndex(
       corpus: DataFrame,
       idCol: String,
@@ -1041,20 +1068,13 @@ object Similarity {
       kSub: Int = 32,
       trainSample: Int = 4096,
       seed: Long = 42L): PqIndex = {
-    import graft.functions.VectorFunctions._
     val codebooks = trainPqCodebooks(corpus, vecCol, m, kSub, trainSample, seed)
+    val codes = CacheRegistry.persist(
+      pqCodes(corpus, Seq(col(idCol).as("neighbor_id")), col(vecCol), codebooks))
     // fixed-width codebooks: pad empty-cluster slots never happen
     // (lloydLocal keeps previous centroids), but k may clamp below kSub
     // on tiny corpora — rebuild kSub from what training produced.
-    val kEff = codebooks(0).length
-    val normLut = codebooks.flatMap(_.map(cw => cw.map(x => x * x).sum)).toSeq
-    val codes = CacheRegistry.persist(
-      corpus.select(
-        col(idCol).as("neighbor_id"),
-        pqEncode(col(vecCol), codebooks).as("codes"))
-        .withColumn("c_norm",
-          sqrt(codeLookupSum(col("codes"), typedLit(normLut), kEff))))
-    PqIndex(codebooks, codes, m, kEff)
+    PqIndex(codebooks, codes, m, codebooks(0).length)
   }
 
   /** ADC top-k over a [[PqIndex]]: each (tiny, broadcast) query builds
@@ -1073,42 +1093,45 @@ object Similarity {
       k: Int,
       rerank: Int = 0,
       rerankWith: Option[DataFrame] = None): DataFrame = {
-    import graft.functions.VectorFunctions._
     require(rerank == 0 || rerankWith.nonEmpty,
       "pqQuery: rerank > 0 needs rerankWith (id + original vectors)")
     val q = broadcast(queries.select(
       col(idCol).as("query_id"),
       pqLut(col(vecCol), index.codebooks).as("lut"),
       l2Norm(col(vecCol)).as("q_norm")))
-    val scored = index.codes.crossJoin(q)
+    adcTopK(index.codes.crossJoin(q), index.kSub, queries, idCol, vecCol, k,
+      rerank, rerankWith)
+  }
+
+  /** ADC scoring and cut shared by [[pqQuery]] and [[ivfPqQuery]]:
+    * `cand` rows pair a query (query_id, lut, q_norm) with a coded
+    * vector (neighbor_id, codes, c_norm); self pairs drop, each scores
+    * m table lookups ÷ both norms (0 when either norm is 0), and each
+    * query keeps its top k — or its top max(rerank, k) when
+    * `rerank > 0`, re-scored by exact cosine against `rerankWith` and
+    * cut to k. Output (query_id, neighbor_id, adc | cosine, rank).
+    */
+  private def adcTopK(cand: DataFrame, kSub: Int, queries: DataFrame, idCol: String,
+      vecCol: String, k: Int, rerank: Int, rerankWith: Option[DataFrame]): DataFrame = {
+    val scored = cand
       .where(col("query_id") =!= col("neighbor_id"))
       .withColumn("adc",
         when(col("q_norm") === 0.0 || col("c_norm") === 0.0, lit(0.0))
           .otherwise(
-            codeLookupSum(col("codes"), col("lut"), index.kSub) /
+            codeLookupSum(col("codes"), col("lut"), kSub) /
               (col("q_norm") * col("c_norm"))))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("adc").desc, col("neighbor_id"))
-    val cut = if (rerank > 0) math.max(rerank, k) else k
-    val top = scored
-      .withColumn("rank", row_number().over(w))
-      .where(col("rank") <= cut)
+    val top = topKPerQuery(scored, "adc", if (rerank > 0) math.max(rerank, k) else k)
     if (rerank == 0) {
-      top.select(
-        col("query_id"), col("neighbor_id"),
+      top.select(col("query_id"), col("neighbor_id"),
         round(col("adc"), 4).as("adc"), col("rank"))
     } else {
       val corpus = rerankWith.get
         .select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
       val queriesV = broadcast(queries
         .select(col(idCol).as("query_id"), col(vecCol).as("q_vec")))
-      val w2 = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-      top.select(col("query_id"), col("neighbor_id"))
+      cosineTopK(top.select(col("query_id"), col("neighbor_id"))
         .join(corpus, Seq("neighbor_id"))
-        .join(queriesV, Seq("query_id"))
-        .withColumn("cosine", cosine(col("q_vec"), col("c_vec")))
-        .withColumn("rank", row_number().over(w2))
-        .where(col("rank") <= k)
-        .select(col("query_id"), col("neighbor_id"), round(col("cosine"), 4).as("cosine"), col("rank"))
+        .join(queriesV, Seq("query_id")), k)
     }
   }
 
@@ -1159,7 +1182,6 @@ object Similarity {
       kSub: Int = 32,
       trainSample: Int = 4096,
       seed: Long = 42L): IvfPqIndex = {
-    import graft.functions.VectorFunctions._
     require(trainSample >= nlist,
       s"trainSample ($trainSample) must be >= nlist ($nlist)")
     // ONE sampling pass feeds both quantizers: the coarse centroids
@@ -1171,20 +1193,15 @@ object Similarity {
     val ivf = buildIvfIndexFromCentroids(corpus, idCol, vecCol,
       trainCentroidsFromSample(sampleRaw, nlist, seed))
     val codebooks = trainPqCodebooksFromSample(sampleRaw, m, kSub, seed)
-    val kEff = codebooks(0).length
-    val normLut = codebooks.flatMap(_.map(cw => cw.map(x => x * x).sum)).toSeq
     val codes = CacheRegistry.persist(
-      ivf.assigned.select(
-        col("cell"), col("neighbor_id"),
-        pqEncode(col("c_vec"), codebooks).as("codes"))
-        .withColumn("c_norm", sqrt(codeLookupSum(col("codes"), typedLit(normLut), kEff))))
+      pqCodes(ivf.assigned, Seq(col("cell"), col("neighbor_id")), col("c_vec"), codebooks))
     // Materialize the codes once, then release the full-float assigned
     // cache: IVF-PQ exists to avoid holding raw vectors, so keeping
     // `assigned` resident for the run would negate the compression
     // memory-wise.
     codes.count()
     CacheRegistry.release(ivf.assigned)
-    IvfPqIndex(ivf.centroids, codebooks, codes, ivf.nlist, m, kEff)
+    IvfPqIndex(ivf.centroids, codebooks, codes, ivf.nlist, m, codebooks(0).length)
   }
 
   /** Probe an [[IvfPqIndex]]: each query picks its `nprobe` nearest
@@ -1192,7 +1209,8 @@ object Similarity {
     * broadcast, driver-cheap); candidates are an equi-join on cell id
     * scored by m table lookups — no float-vector reads. `rerank > 0`
     * re-scores the top ADC candidates with exact cosine against
-    * `rerankWith` before cutting to k, as in [[pqQuery]].
+    * `rerankWith` before cutting to k, as in [[pqQuery]]. Query ids
+    * must be unique, as for [[ivfQuery]].
     */
   def ivfPqQuery(
       index: IvfPqIndex,
@@ -1203,48 +1221,17 @@ object Similarity {
       nprobe: Int = 4,
       rerank: Int = 0,
       rerankWith: Option[DataFrame] = None): DataFrame = {
-    import graft.functions.VectorFunctions._
     require(rerank == 0 || rerankWith.nonEmpty,
       "ivfPqQuery: rerank > 0 needs rerankWith (id + original vectors)")
-    val probed = broadcast(queries.select(
-      col(idCol).as("query_id"),
-      pqLut(col(vecCol), index.codebooks).as("lut"),
-      l2Norm(col(vecCol)).as("q_norm"),
-      col(vecCol).as("q_vec")))
-      .crossJoin(broadcast(index.centroids))
-      .withColumn("c_dist", cosine(col("q_vec").cast("array<double>"), col("centroid")))
-      .withColumn("c_rank", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("c_dist").desc, col("cell"))))
-      .where(col("c_rank") <= nprobe)
-      .select(col("query_id"), col("lut"), col("q_norm"), col("cell"))
-    val scored = index.codes.join(broadcast(probed), Seq("cell"))
-      .where(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adc",
-        when(col("q_norm") === 0.0 || col("c_norm") === 0.0, lit(0.0))
-          .otherwise(
-            codeLookupSum(col("codes"), col("lut"), index.kSub) /
-              (col("q_norm") * col("c_norm"))))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("adc").desc, col("neighbor_id"))
-    val cut = if (rerank > 0) math.max(rerank, k) else k
-    val top = scored.withColumn("rank", row_number().over(w)).where(col("rank") <= cut)
-    if (rerank == 0) {
-      top.select(col("query_id"), col("neighbor_id"),
-        round(col("adc"), 4).as("adc"), col("rank"))
-    } else {
-      val corpus = rerankWith.get
-        .select(col(idCol).as("neighbor_id"), col(vecCol).as("c_vec"))
-      val queriesV = broadcast(queries
-        .select(col(idCol).as("query_id"), col(vecCol).as("q_vec")))
-      val w2 = Window.partitionBy(col("query_id")).orderBy(col("cosine").desc, col("neighbor_id"))
-      top.select(col("query_id"), col("neighbor_id"))
-        .join(corpus, Seq("neighbor_id"))
-        .join(queriesV, Seq("query_id"))
-        .withColumn("cosine", cosine(col("q_vec"), col("c_vec")))
-        .withColumn("rank", row_number().over(w2))
-        .where(col("rank") <= k)
-        .select(col("query_id"), col("neighbor_id"),
-          round(col("cosine"), 4).as("cosine"), col("rank"))
-    }
+    val probed = probeCells(
+      broadcast(queries.select(
+        col(idCol).as("query_id"),
+        pqLut(col(vecCol), index.codebooks).as("lut"),
+        l2Norm(col(vecCol)).as("q_norm"),
+        col(vecCol).as("q_vec"))),
+      "query_id", "q_vec", index.centroids, nprobe, Seq("lut", "q_norm"))
+    adcTopK(index.codes.join(broadcast(probed), Seq("cell")), index.kSub,
+      queries, idCol, vecCol, k, rerank, rerankWith)
   }
 
   /** One-shot IVF-PQ ANN: train both quantizers + encode + probe. */

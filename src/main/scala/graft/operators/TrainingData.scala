@@ -193,15 +193,6 @@ object TrainingData {
       defaultFraction = 0.0, seed = seed)
   }
 
-  /** Robust (MAD) outlier flagging: per group, median and median
-    * absolute deviation, then `|x - med| > k * 1.4826 * mad` — the
-    * robust z-score every quality pipeline uses where mean/stddev
-    * would be dragged by the outliers themselves. Two grouped exact
-    * percentiles + a broadcast join of the per-group stats (|groups|
-    * rows); the corpus shuffles once per percentile pass. 1.4826
-    * rescales MAD to σ under normality. Constant-valued groups
-    * (mad = 0) flag any deviation from the median.
-    */
   /** Source-concentration readout — Herfindahl-Hirschman index over a
     * key's share of the corpus: the one-number answer to "is this
     * training mix dominated by a handful of sources" that a top-N
@@ -229,6 +220,15 @@ object TrainingData {
         when(col("hhi_ppm") > 0L, expr("1000000000L div hhi_ppm")))
   }
 
+  /** Robust (MAD) outlier flagging: per group, median and median
+    * absolute deviation, then `|x - med| > k * 1.4826 * mad` — the
+    * robust z-score every quality pipeline uses where mean/stddev
+    * would be dragged by the outliers themselves. Two grouped exact
+    * percentiles + a broadcast join of the per-group stats (|groups|
+    * rows); the corpus shuffles once per percentile pass. 1.4826
+    * rescales MAD to σ under normality. Constant-valued groups
+    * (mad = 0) flag any deviation from the median.
+    */
   def madOutliers(
       df: DataFrame,
       groupBy: Seq[Column],
@@ -1024,19 +1024,6 @@ object TrainingData {
       .drop("_tick", "_t0", "_rel")
   }
 
-  /** Length-bucket padding audit — the batch-efficiency readout of
-    * LLM batching: documents are bucketed by `width`-wide length
-    * ranges (bucket = len div width; same-bucket sequences batch
-    * together and pad to the bucket's max), and each bucket reports
-    * how many tokens that padding wastes. `waste_ppm` ≫ 0 in a hot
-    * bucket says "split this bucket" — the knob that decides real
-    * training-throughput dollars.
-    *
-    * One map-side-combinable aggregate over the corpus (count / sum /
-    * max per bucket), exact integers end-to-end, output bounded by
-    * max-length/width. Output: (bucket, n_docs, total_len, pad_target,
-    * waste, waste_ppm).
-    */
   /** Kish effective sample size — what a set of importance weights
     * actually buys: n_eff = (Σw)²/Σw². DSIR-style reweighting that
     * concentrates on a few documents quietly shrinks the corpus —
@@ -1158,6 +1145,19 @@ object TrainingData {
       .orderBy(col("key"))
   }
 
+  /** Length-bucket padding audit — the batch-efficiency readout of
+    * LLM batching: documents are bucketed by `width`-wide length
+    * ranges (bucket = len div width; same-bucket sequences batch
+    * together and pad to the bucket's max), and each bucket reports
+    * how many tokens that padding wastes. `waste_ppm` ≫ 0 in a hot
+    * bucket says "split this bucket" — the knob that decides real
+    * training-throughput dollars.
+    *
+    * One map-side-combinable aggregate over the corpus (count / sum /
+    * max per bucket), exact integers end-to-end, output bounded by
+    * max-length/width. Output: (bucket, n_docs, total_len, pad_target,
+    * waste, waste_ppm).
+    */
   def lengthBuckets(df: DataFrame, lenCol: Column, width: Long): DataFrame = {
     require(width >= 1, s"lengthBuckets: width must be >= 1, got $width")
     df.select(lenCol.cast("long").as("_len"))

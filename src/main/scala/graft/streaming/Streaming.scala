@@ -581,7 +581,7 @@ object HotSwap {
   /** A [[StreamSink]] whose per-batch transform is `handle.current` at
     * the moment each micro-batch fires. `write(transformed, batchId)`
     * persists the result (compose with
-    * [[StreamSink.foreachBatchExactlyOnce]]'s marker protocol via the
+    * [[StreamSink.idempotentForeachBatch]]'s marker protocol via the
     * `write` body when the target store is non-transactional).
     */
   def sink(

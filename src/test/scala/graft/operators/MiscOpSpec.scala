@@ -335,6 +335,51 @@ class MiscOpSpec extends SparkSpec {
     assert(routed == direct && routed.nonEmpty)
   }
 
+  test("Similarity.probeCells picks each query's nprobe nearest cells, cosine desc then cell asc") {
+    // cell 1 is cell 0 scaled by 2: every query's cosine against them
+    // ties bit-for-bit, so the tie-break to the lower cell is exercised
+    val cents = Seq(
+      Array(1.0, 0.0, 0.0), Array(2.0, 0.0, 0.0), Array(0.0, 1.0, 0.0),
+      Array(0.0, 0.0, 1.0), Array(-1.0, 0.0, 0.0), Array(1.0, 1.0, 0.0))
+    val centroids = cents.zipWithIndex.map { case (c, i) => (i, c) }.toDF("cell", "centroid")
+    val queries = Seq(
+      (1L, Array(1.0f, 0.5f, 0.0f)),
+      (2L, Array(0.0f, 0.0f, 1.0f)),
+      (3L, Array(1.0f, 1.0f)), // wrong dimension: every cosine is null
+      (4L, Array(0.0f, 0.0f, 0.0f)), // all-zero: every cosine is 0.0
+      (5L, Array(-1.0f, 0.2f, 0.1f)))
+    val nprobe = 3
+    // plain-Scala reference: the fused kernel's accumulation order
+    def cos(q: Array[Float], c: Array[Double]): Option[Double] =
+      if (q.length != c.length) None
+      else {
+        var (dot, na, nb) = (0.0, 0.0, 0.0)
+        q.indices.foreach { i =>
+          val x = q(i).toDouble; val y = c(i)
+          dot += x * y; na += x * x; nb += y * y
+        }
+        val denom = math.sqrt(na) * math.sqrt(nb)
+        Some(if (denom == 0.0) 0.0 else dot / denom)
+      }
+    val expected = queries.map { case (id, q) =>
+      val scored = cents.indices.map(c => (cos(q, cents(c)), c))
+      val order =
+        if (scored.forall(_._1.isEmpty)) scored.map(_._2)
+        else scored.sortBy { case (s, c) => (-s.get, c) }.map(_._2)
+      id -> order.take(nprobe)
+    }.toMap
+    val out = Similarity.probeCells(queries.toDF("query_id", "q_vec"),
+        "query_id", "q_vec", centroids, nprobe, Seq("q_vec"))
+      .select("query_id", "q_vec", "cell").as[(Long, Seq[Float], Int)].collect()
+    val got = out.groupBy(_._1).map { case (id, rows) => id -> rows.map(_._3).toSeq }
+    assert(got == expected)
+    assert(expected(3L) == Seq(0, 1, 2) && expected(4L) == Seq(0, 1, 2))
+    assert(expected(1L).take(2) == Seq(5, 0)) // then the 0/1 tie, lower cell wins
+    // the carried column rides along unchanged
+    val vecOf = queries.toMap
+    assert(out.forall { case (id, v, _) => v == vecOf(id).toSeq })
+  }
+
   test("Similarity.ivfTopK finds exact duplicates through the probed cells") {
     val rnd = new scala.util.Random(7)
     val base = (0L until 60L).map(i => (i, Array.fill(8)(rnd.nextFloat() * 2 - 1)))
@@ -528,6 +573,17 @@ class MiscOpSpec extends SparkSpec {
       nlist = 4, nprobe = 1, m = 4, kSub = 16)
       .orderBy("rank").select("neighbor_id").as[Long].collect().toSeq
     assert(pruned.head == 999L)
+    // ivfPqQuery(rerank = 0) probing every cell scores exactly what a
+    // plain ADC scan over the same codes does
+    val idx = Similarity.buildIvfPqIndex(corpus, "id", "v", nlist = 4, m = 4, kSub = 16)
+    val adc = Similarity.ivfPqQuery(idx, q, "id", "v", k = 3, nprobe = 4, rerank = 0)
+      .as[(Long, Long, Double, Int)].collect().toSet
+    val scan = Similarity.pqQuery(
+        Similarity.PqIndex(idx.codebooks, idx.codes.drop("cell"), idx.m, idx.kSub),
+        q, "id", "v", k = 3)
+      .as[(Long, Long, Double, Int)].collect().toSet
+    assert(adc.size == 3 && adc == scan)
+    assert(adc.exists { case (_, n, _, r) => n == 999L && r == 1 })
     graft.core.CacheRegistry.unpersistAll()
   }
 

@@ -24,9 +24,10 @@ import graft.SparkSpec
   *    monotone non-decreasing in nprobe (probe sets are nested by
   *    construction), and nprobe = nlist reproduces brute force
   *    EXACTLY (identical scoring + tie-break order).
-  *  - **IVF/PQ clustered recall floor**: on separated planted
-  *    clusters — the regime ANN indexes are FOR — partial-probe IVF
-  *    and ADC-scanned PQ retrieve same-cluster neighbors.
+  *  - **IVF/LSH/PQ clustered recall floor**: on separated planted
+  *    clusters — the regime ANN indexes are FOR — partial-probe IVF,
+  *    multi-table LSH and ADC-scanned PQ retrieve same-cluster
+  *    neighbors.
   *  - **SemDeDup soundness + planted-dup completeness**: everything
   *    dropped has a genuinely above-threshold smaller-id partner
   *    (verification is exact), and planted exact-duplicate vectors
@@ -212,6 +213,11 @@ class RecallLawsSpec extends SparkSpec {
     val ivf = Similarity.ivfTopK(qdf, corpus, "id", "vec", k = 5,
       nlist = 8, nprobe = 2)
     assert(sameClusterTop1(ivf) >= 0.9, "IVF clustered top-1 floor")
+    // multi-table LSH: a same-cluster neighbor shares a 4-bit bucket
+    // with the query in at least one of 8 tables
+    val lsh = Similarity.lshTopK(qdf, corpus, "id", "vec", k = 5,
+      bits = 4, tables = 8)
+    assert(sameClusterTop1(lsh) >= 0.9, "LSH clustered top-1 floor")
     // PQ ADC scan: quantization error ≪ the cluster separation
     val pq = Similarity.pqTopK(qdf, corpus, "id", "vec", k = 5,
       m = 8, kSub = 16)
